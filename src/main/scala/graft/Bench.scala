@@ -87,11 +87,11 @@ object Bench {
     val (stripeSamples, stripeDir, stripeRes, stripe1kSamples) =
       if (stripeRuns <= 0) (Seq.empty[Double], '-', -1L, Seq.empty[Double])
       else {
-        val dir = SpatialJoins.chooseStripeAxis(pts, p0, ext, 10000)
+        val dir = SpatialJoins.chooseStripeAxis(SpatialJoins.evidenceOf(pts, p0), ext, 10000)
         def schemeOf(n: Int) = if (dir == 'x') CellScheme.stripesX(ext, n)
                                else CellScheme.stripesY(ext, n)
         // stripes hold ~n/10000 rows each — far over the declarative plan's
-        // dense-cell break-even, so run the cogroup PLANE-SWEEP inner loop
+        // dense-cell break-even, so run the keyed PLANE-SWEEP inner loop
         // (what the reference's 1d_stripes.hpp does; the declarative SMJ
         // loop is quadratic per stripe: measured 18.8 s vs ~2 s)
         val scheme = schemeOf(10000)
@@ -171,7 +171,7 @@ object Bench {
       SpatialJoins.gridJoinAdaptive(a, b, scheme, budgetPairs = 1L << 22,
         planSampleFraction = 0.02).count()
     }
-    sweep() // warm (codegen + JIT for the shared cogroup body)
+    sweep() // warm (codegen + JIT for the shared keyed reduce body)
     // min-of-3 sweep samples INTERLEAVED with the other families (r3 verdict:
     // min-of-2 let a single neighbour-load spike sink the OSM-PP-class
     // number — the one metric that round missed its bar on a polluted run);
@@ -427,7 +427,7 @@ object Bench {
   }
 
   /** Dense-cell evidence (reference J2): the declarative grid join's
-    * per-cell loop is quadratic in cell population, the cogroup path's
+    * per-cell loop is quadratic in cell population, the keyed reduce's
     * STR-indexed loop is not — measured at targetPerCell=2048 where the two
     * plans diverge (they agree at the flagship's tpc=16).
     */

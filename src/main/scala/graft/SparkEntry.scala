@@ -36,7 +36,7 @@ object SparkEntry {
     // replication, no ownership filter; same pair set as gridJoin)
     "spatial_grid_join_pip" -> ((s, dir) =>
       SpatialJoins.gridJoinPIP(customerPoints.load(s, dir), partRects.load(s, dir), grid)),
-    // strategy selector: broadcast below threshold, grid/cogroup above —
+    // strategy selector: broadcast below threshold, grid/sweep above —
     // picks per-SF (sf0.01 broadcasts the 2k-row side; sf0.1 goes grid)
     "spatial_auto_join" -> ((s, dir) =>
       SpatialJoins.intersectJoin(partRects.load(s, dir), ordersRects.load(s, dir))),
@@ -51,7 +51,7 @@ object SparkEntry {
     // J5: 1-D stripes plan (n×1 grid), same semantics
     "spatial_stripes_join" -> ((s, dir) =>
       SpatialJoins.stripesJoin(supplierRects.load(s, dir), partRects.load(s, dir), mapExtent, 256)),
-    // J6 with the cogroup + plane-sweep inner loop
+    // J6 with the keyed reduce + plane-sweep inner loop
     "spatial_sweep_join" -> ((s, dir) =>
       SpatialJoins.gridJoinSweep(partRects.load(s, dir), ordersRects.load(s, dir), grid)),
     // J12: broadcast nested-loop join (small build side)

@@ -1,6 +1,6 @@
 package graft.cells
 
-import graft.geom.{Extent, Geom}
+import graft.geom.{Extent, Geom, SqlOrder}
 import org.apache.spark.sql.Dataset
 
 /** Binary-split partitioning (the reference's SpatialSpark BSP method,
@@ -22,28 +22,31 @@ final case class BinarySplitScheme(extent: Extent, depth: Int,
 
   def numLeaves: Int = 1 << depth
 
-  /** Unique owning leaf of a point (half-open: >= split goes right). */
+  /** Unique owning leaf of a point (half-open: >= split in SQL order goes right). */
   def cellOf(x: Double, y: Double): Long = {
     var node = 0
     var level = 0
     while (level < depth) {
-      val right = if (splitAxisX(node)) x >= splitAt(node) else y >= splitAt(node)
+      val right = SqlOrder.le(splitAt(node), if (splitAxisX(node)) x else y)
       node = 2 * node + 1 + (if (right) 1 else 0)
       level += 1
     }
     (node - (numLeaves - 1)).toLong
   }
 
-  /** All leaves overlapped by an MBR — stack descent pruning by the split. */
+  /** All leaves overlapped by an MBR — stack descent pruning by the split.
+    * An inverted MBR spans the leaves between its two ends.
+    */
   def cellsOf(g: Geom): Seq[Long] = {
     val out = scala.collection.mutable.ArrayBuffer.empty[Long]
     def walk(node: Int, level: Int): Unit =
       if (level == depth) out += (node - (numLeaves - 1)).toLong
       else {
         val s = splitAt(node)
-        val (lo, hi) = if (splitAxisX(node)) (g.xmin, g.xmax) else (g.ymin, g.ymax)
-        if (lo < s) walk(2 * node + 1, level + 1)
-        if (hi >= s) walk(2 * node + 2, level + 1)
+        val (v0, v1) = if (splitAxisX(node)) (g.xmin, g.xmax) else (g.ymin, g.ymax)
+        val (lo, hi) = if (SqlOrder.le(v0, v1)) (v0, v1) else (v1, v0)
+        if (!SqlOrder.le(s, lo)) walk(2 * node + 1, level + 1)
+        if (SqlOrder.le(s, hi)) walk(2 * node + 2, level + 1)
       }
     walk(0, 0)
     out.toSeq

@@ -1,6 +1,8 @@
 package graft.cells
 
 import graft.geom.{Extent, Geom}
+import org.apache.spark.sql.catalyst.expressions.{Add, Divide, Expression, Floor,
+  Greatest, Least, Literal, Multiply, NaNvl, Subtract}
 
 /** Uniform `nx × ny` grid over an extent — the engine's deterministic cell
   * index (the planar analogue of an H3/S2 cell scheme). Every MBR is
@@ -28,23 +30,33 @@ final case class CellScheme(extent: Extent, nx: Int, ny: Int) {
 
   def numCells: Long = nx.toLong * ny.toLong
 
-  @inline def clampX(i: Long): Int = math.max(0L, math.min(i, nx - 1L)).toInt
-  @inline def clampY(i: Long): Int = math.max(0L, math.min(i, ny - 1L)).toInt
-
-  @inline def cellX(x: Double): Int =
-    clampX(math.floor((x - extent.xmin) / cellW).toLong)
-  @inline def cellY(y: Double): Int =
-    clampY(math.floor((y - extent.ymin) / cellH).toLong)
+  @inline def cellX(x: Double): Int = CellScheme.coord(x, extent.xmin, cellW, nx)
+  @inline def cellY(y: Double): Int = CellScheme.coord(y, extent.ymin, cellH, ny)
 
   @inline def cellId(cx: Int, cy: Int): Long = cy.toLong * nx + cx
 
   /** The unique owning cell of a point (clamped into the grid). */
   @inline def cellOf(x: Double, y: Double): Long = cellId(cellX(x), cellY(y))
 
-  /** All cells overlapped by an MBR — the replication set. */
+  /** [[cellX]], [[cellY]] and [[cellOf]] as Catalyst expressions — the ONE
+    * copy of the clamped floor arithmetic that every plan is built from: the
+    * SQL rule (`graft.plans.SpatialJoinRule`) uses them directly, the
+    * DataFrame plans wrap them in Columns (`SpatialJoins.cellOfCol`,
+    * `SpatialJoins.withCells`). They compute exactly what the Scala forms
+    * above compute, which the reduce-side ownership tests rely on.
+    */
+  def cellXExpr(x: Expression): Expression = CellScheme.cellCoord(x, extent.xmin, cellW, nx)
+  def cellYExpr(y: Expression): Expression = CellScheme.cellCoord(y, extent.ymin, cellH, ny)
+  def cellOfExpr(x: Expression, y: Expression): Expression =
+    Add(Multiply(cellYExpr(y), Literal(nx.toLong)), cellXExpr(x))
+
+  /** All cells overlapped by an MBR — the replication set. An inverted MBR
+    * (max < min) spans the cells between its two ends, as the declarative
+    * `sequence` replication does.
+    */
   def cellsOf(g: Geom): Seq[Long] = {
-    val cx0 = cellX(g.xmin); val cx1 = cellX(g.xmax)
-    val cy0 = cellY(g.ymin); val cy1 = cellY(g.ymax)
+    val (cx0, cx1) = CellScheme.span(cellX(g.xmin), cellX(g.xmax))
+    val (cy0, cy1) = CellScheme.span(cellY(g.ymin), cellY(g.ymax))
     val out = new scala.collection.mutable.ArrayBuffer[Long]((cx1 - cx0 + 1) * (cy1 - cy0 + 1))
     var cy = cy0
     while (cy <= cy1) {
@@ -83,6 +95,27 @@ final case class CellScheme(extent: Extent, nx: Int, ny: Int) {
 }
 
 object CellScheme {
+  /** The clamped cell coordinate `clamp(floor((v - lo) / len), 0, n - 1)`.
+    * NaN orders above every value in Spark SQL, so it clamps to the last
+    * cell like +∞. That keeps the map monotone in SQL order, which
+    * replication and ownership need to agree with the SQL predicate.
+    */
+  @inline private[graft] def coord(v: Double, lo: Double, len: Double, n: Int): Int = {
+    val d = (v - lo) / len
+    if (d != d) n - 1 else math.max(0L, math.min(math.floor(d).toLong, n - 1L)).toInt
+  }
+
+  /** The cell range between two ends, in either order. */
+  private[graft] def span(i: Int, j: Int): (Int, Int) = (math.min(i, j), math.max(i, j))
+
+  /** [[coord]] as a Catalyst expression: `nanvl` sends NaN past the last
+    * cell before the clamp (`floor` of a double is a long; the outer
+    * `least` over a literal keeps the cell id non-nullable).
+    */
+  private def cellCoord(v: Expression, lo: Double, len: Double, n: Int): Expression =
+    Least(Seq(Greatest(Seq(Floor(NaNvl(Divide(Subtract(v, Literal(lo)), Literal(len)),
+      Literal(n.toDouble))), Literal(0L))), Literal(n - 1L)))
+
   /** Morton (Z-order) interleave of two 16-bit cell coordinates — the
     * storage-layout key: sorting a spatial table by z-order clusters
     * spatially-near cells into the same files/row-groups, so cell-range

@@ -1,6 +1,6 @@
 package graft.cells
 
-import graft.geom.{Extent, Geom}
+import graft.geom.{Extent, Geom, SqlOrder}
 import org.apache.spark.sql.Dataset
 
 /** Sort-tile partitioning (the reference's SpatialSpark STP method,
@@ -27,14 +27,14 @@ final case class SortTileScheme(extent: Extent, xBounds: Array[Double],
   val sx: Int = xBounds.length + 1
   val sy: Int = yBounds(0).length + 1
 
-  /** Index of v in a sorted boundary array: #bounds ≤ v (half-open cells,
-    * clamped by construction — index ∈ [0, bounds.length]).
+  /** Index of v in a sorted boundary array: #bounds ≤ v in SQL order
+    * (half-open cells, clamped by construction — index ∈ [0, bounds.length]).
     */
   @inline private def slot(bounds: Array[Double], v: Double): Int = {
     var lo = 0; var hi = bounds.length
     while (lo < hi) {
       val mid = (lo + hi) >>> 1
-      if (bounds(mid) <= v) lo = mid + 1 else hi = mid
+      if (SqlOrder.le(bounds(mid), v)) lo = mid + 1 else hi = mid
     }
     lo
   }
@@ -49,14 +49,15 @@ final case class SortTileScheme(extent: Extent, xBounds: Array[Double],
   }
 
   /** All tiles overlapped by an MBR (per-slab y-ranges differ — the
-    * replication loop is per slab, unlike the uniform grid's rectangle).
+    * replication loop is per slab, unlike the uniform grid's rectangle). An
+    * inverted MBR spans the tiles between its two ends.
     */
   def cellsOf(g: Geom): Seq[Long] = {
-    val s0 = slabOf(g.xmin); val s1 = slabOf(g.xmax)
+    val (s0, s1) = CellScheme.span(slabOf(g.xmin), slabOf(g.xmax))
     val out = scala.collection.mutable.ArrayBuffer.empty[Long]
     var s = s0
     while (s <= s1) {
-      val t0 = tileOf(s, g.ymin); val t1 = tileOf(s, g.ymax)
+      val (t0, t1) = CellScheme.span(tileOf(s, g.ymin), tileOf(s, g.ymax))
       var t = t0
       while (t <= t1) { out += s.toLong * sy + t; t += 1 }
       s += 1

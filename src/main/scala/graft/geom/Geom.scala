@@ -45,6 +45,15 @@ object Geom {
   def point(id: Long, x: Double, y: Double): Geom = Geom(id, x, x, y, y)
 }
 
+/** Double comparison in Spark SQL's order, where NaN sits above every other
+  * value and equals itself. The Scala-side cell lookups and join loops
+  * compare with it, so their pair sets match the SQL intersect predicate's
+  * (and `broadcastNL`'s) on NaN coordinates.
+  */
+object SqlOrder {
+  @inline def le(x: Double, y: Double): Boolean = x <= y || y != y
+}
+
 /** Global bounding box of a dataset (the reference tracks this inline during
   * the scan, `cpp/singlethread.cpp:68-87`; we compute it with a min/max agg).
   */

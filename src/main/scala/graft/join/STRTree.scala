@@ -1,9 +1,11 @@
 package graft.join
 
+import graft.geom.SqlOrder.le
+
 /** Array-packed STR R-tree over one cell's rectangles — the Spark-side
   * re-expression of the reference's per-partition index (STR packing
   * `spatial-join-baseline/cpp/Tree_generation.hpp:595-641`, query traversal
-  * `cpp/RTree.h:114-165`). Built per cogroup cell over the SMALLER side and
+  * `cpp/RTree.h:114-165`). Built per cell over the SMALLER side and
   * probed with the other side's rectangles; `gridJoinSweep` switches to it
   * when a cell is dense enough that the plane sweep's y-overlap runs
   * degenerate toward |A|·|B|.
@@ -20,7 +22,7 @@ final class STRTree private (
     childStart: Array[Int], childEnd: Array[Int], leafNode: Array[Boolean],
     root: Int) {
 
-  // reusable traversal stack: trees are task-local (built per cogroup cell),
+  // reusable traversal stack: trees are task-local (built per cell),
   // so probe calls are single-threaded — one buffer serves every probe with
   // zero per-call allocation. NOT safe to share one tree across threads.
   private var stack = new Array[Int](32)
@@ -34,7 +36,9 @@ final class STRTree private (
       Array[Double], Array[Int], Array[Int], Array[Boolean], Int) =
     (nx0, nx1, ny0, ny1, childStart, childEnd, leafNode, root)
 
-  /** Visit every item whose MBR intersects the (inclusive) query rect. */
+  /** Visit every item whose MBR intersects the (inclusive) query rect,
+    * compared in SQL order ([[graft.geom.SqlOrder]]).
+    */
   def foreachIntersecting(qx0: Double, qx1: Double, qy0: Double, qy1: Double)
                          (f: CellGeom => Unit): Unit = {
     if (items.isEmpty) return
@@ -43,13 +47,13 @@ final class STRTree private (
     while (top > 0) {
       top -= 1
       val n = stack(top)
-      if (qx0 <= nx1(n) && qx1 >= nx0(n) && qy0 <= ny1(n) && qy1 >= ny0(n)) {
+      if (le(qx0, nx1(n)) && le(nx0(n), qx1) && le(qy0, ny1(n)) && le(ny0(n), qy1)) {
         var i = childStart(n)
         val end = childEnd(n)
         if (leafNode(n)) {
           while (i < end) {
             val g = items(i)
-            if (qx0 <= g.xmax && qx1 >= g.xmin && qy0 <= g.ymax && qy1 >= g.ymin) f(g)
+            if (le(qx0, g.xmax) && le(g.xmin, qx1) && le(qy0, g.ymax) && le(g.ymin, qy1)) f(g)
             i += 1
           }
         } else {
@@ -102,7 +106,8 @@ object STRTree {
     val cs = scala.collection.mutable.ArrayBuffer.empty[Int]
     val ce = scala.collection.mutable.ArrayBuffer.empty[Int]
     val lf = scala.collection.mutable.ArrayBuffer.empty[Boolean]
-    // leaf level over items
+    // leaf level over items. A NaN max must reach its node's bound (NaN tops
+    // SQL order), hence `!le`; a skipped NaN min only widens the bound.
     var i = 0
     while (i < n) {
       val end = math.min(i + leafSize, n)
@@ -111,8 +116,8 @@ object STRTree {
       var j = i
       while (j < end) {
         val g = items(j)
-        if (g.xmin < ax0) ax0 = g.xmin; if (g.xmax > ax1) ax1 = g.xmax
-        if (g.ymin < ay0) ay0 = g.ymin; if (g.ymax > ay1) ay1 = g.ymax
+        if (g.xmin < ax0) ax0 = g.xmin; if (!le(g.xmax, ax1)) ax1 = g.xmax
+        if (g.ymin < ay0) ay0 = g.ymin; if (!le(g.ymax, ay1)) ay1 = g.ymax
         j += 1
       }
       x0 += ax0; x1 += ax1; y0 += ay0; y1 += ay1; cs += i; ce += end; lf += true
@@ -129,8 +134,8 @@ object STRTree {
         var ay0 = Double.MaxValue; var ay1 = Double.MinValue
         var j = c
         while (j < end) {
-          if (x0(j) < ax0) ax0 = x0(j); if (x1(j) > ax1) ax1 = x1(j)
-          if (y0(j) < ay0) ay0 = y0(j); if (y1(j) > ay1) ay1 = y1(j)
+          if (x0(j) < ax0) ax0 = x0(j); if (!le(x1(j), ax1)) ax1 = x1(j)
+          if (y0(j) < ay0) ay0 = y0(j); if (!le(y1(j), ay1)) ay1 = y1(j)
           j += 1
         }
         x0 += ax0; x1 += ax1; y0 += ay0; y1 += ay1; cs += c; ce += end; lf += false

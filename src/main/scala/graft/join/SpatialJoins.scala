@@ -2,8 +2,11 @@ package graft.join
 
 import graft.cells.CellScheme
 import graft.geom.{Extent, Geom}
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import graft.geom.SqlOrder.le
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.catalyst.expressions.{Abs, Expression, Greatest, Subtract}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Result pair — the reference's `std::pair<int,int>` / FPGA `result_t`
   * (`cpp/RTree.h:114`, `designs/pbsm/dynamic/16/src/types.hpp:27-31`).
@@ -23,6 +26,59 @@ private[graft] final case class KeyedGeom(key: Long, side: Int, id: Long,
                                           xmin: Double, xmax: Double,
                                           ymin: Double, ymax: Double)
 
+/** What ONE planning aggregation ([[SpatialJoins.evidenceOf]]) measures
+  * about a join's two inputs; route and stripe-axis choice read nothing else.
+  *
+  *  - `extent`: the joint extent, None when both inputs are empty (the
+  *    min/max aggregates return nulls).
+  *  - `aMaxEdge` / `bMaxEdge`: `max(|xmax − xmin|, |ymax − ymin|)` over the
+  *    side's rows; NaN for an empty side. A side whose max edge is 0 is a
+  *    POINT side. abs() so an INVERTED row (xmax < xmin — it meets only
+  *    rows that span its whole inverted interval) cannot hide behind a zero
+  *    other edge and smuggle its side into the point plan, which would treat
+  *    it as its (xmin, ymin) corner and emit pairs the generic plan never
+  *    would.
+  *  - `meanW` / `meanH`: mean signed edge per axis over both sides (0 when
+  *    both are empty).
+  */
+final case class JoinEvidence(extent: Option[Extent], countA: Long, countB: Long,
+                              aMaxEdge: Double, bMaxEdge: Double,
+                              meanW: Double, meanH: Double) {
+  def aPoints: Boolean = aMaxEdge == 0.0
+  def bPoints: Boolean = bMaxEdge == 0.0
+  /** Rows of the larger side per cell of `s`. */
+  def rowsPerCell(s: CellScheme): Double = math.max(countA, countB).toDouble / s.numCells
+}
+
+object JoinEvidence {
+  /** A row's edge, `max(|xmax − xmin|, |ymax − ymin|)`, as the Catalyst
+    * expression the evidence aggregation takes its per-side max over.
+    */
+  def edge(xmin: Expression, xmax: Expression, ymin: Expression, ymax: Expression): Expression =
+    Greatest(Seq(Abs(Subtract(xmax, xmin)), Abs(Subtract(ymax, ymin))))
+}
+
+/** The physical plan of one cell-partitioned join, chosen from the evidence
+  * by [[SpatialJoins.route]]. Every route emits the identical pair set.
+  */
+sealed trait Route
+
+object Route {
+  /** Both inputs empty: the broadcast nested loop, trivially correct. */
+  case object Broadcast extends Route
+  /** The declarative cell equi-join ([[SpatialJoins.gridJoin]]). */
+  case object Grid extends Route
+  /** The a side is all points: [[SpatialJoins.gridJoinPIP]]. */
+  case object PointsA extends Route
+  /** The b side is all points: [[SpatialJoins.gridJoinPIP]] with the sides swapped. */
+  case object PointsB extends Route
+  /** Dense cells: the keyed repartition+sort reduce with the sweep/STR inner
+    * loop ([[SpatialJoins.gridJoinSweep]]); a point side maps as a plain
+    * projection instead of a generator pair.
+    */
+  final case class Sweep(aPoints: Boolean, bPoints: Boolean) extends Route
+}
+
 /** Spatial θ-join (inclusive rectangle-intersect) with several physical
   * strategies, all producing the identical pair set:
   *
@@ -35,12 +91,17 @@ private[graft] final case class KeyedGeom(key: Long, side: Int, id: Long,
   *                      reference-point ownership filter. Catalyst plans a
   *                      shuffled hash/sort-merge join, AQE handles residual
   *                      skew; the whole pipeline is whole-stage-codegen'd.
-  *  - `gridJoinSweep` — same logical plan but the per-cell inner loop is a
-  *                      typed `cogroup` running a plane sweep over y-sorted
-  *                      arrays (reference J5/J6 inner loop,
-  *                      `cpp/1d_stripes.hpp:16-68`), cutting per-cell work from
+  *  - `gridJoinSweep` — the same replication, but the per-cell inner loop is
+  *                      a plane sweep over y-sorted arrays (reference J5/J6
+  *                      inner loop, `cpp/1d_stripes.hpp:16-68`) in the keyed
+  *                      repartition+sort reduce, cutting per-cell work from
   *                      |A|·|B| to sorted-overlap. Used when cells are dense.
   *  - `stripesJoin`   — 1-D stripes = `n × 1` grid (reference J5).
+  *
+  * Planning is evidence → route → plan: ONE fused aggregation
+  * ([[evidenceOf]]), a pure route choice ([[route]]) and one planner per
+  * route ([[planRoute]]). There are two join bodies: the declarative cell
+  * equi-join ([[cellJoin]]) and the keyed reduce ([[keyedPartitionJoin]]).
   *
   * Exactly-once semantics: a pair is emitted only in the cell that contains
   * the bottom-left corner of its intersection (`join.hpp:56-71`), so no
@@ -75,17 +136,12 @@ object SpatialJoins {
   val containsSql =
     "b.xmin >= a.xmin AND b.xmax <= a.xmax AND b.ymin >= a.ymin AND b.ymax <= a.ymax"
 
-  /** Global extent via a single min/max aggregation (reference A2). */
-  def extentOf(ds: Dataset[Geom]): Extent = {
-    val r = ds.agg(min("xmin"), max("xmax"), min("ymin"), max("ymax")).head()
-    Extent(r.getDouble(0), r.getDouble(1), r.getDouble(2), r.getDouble(3))
-  }
-
-  def jointExtent(a: Dataset[Geom], b: Dataset[Geom]): Extent =
-    extentOf(a.unionByName(b))
-
   private def prefixed(ds: Dataset[Geom], p: String): DataFrame =
     ds.toDF(s"${p}_id", s"${p}_xmin", s"${p}_xmax", s"${p}_ymin", s"${p}_ymax")
+
+  /** A join's pairs with the a/b roles swapped back (for plans run b-first). */
+  private def swapSides(df: DataFrame): DataFrame =
+    df.select(col("b_id").as("a_id"), col("a_id").as("b_id"))
 
   /** Broadcast nested-loop join — correct for any input, efficient when one
     * side fits in memory (reference J12 / oracle J1).
@@ -109,16 +165,73 @@ object SpatialJoins {
   private[graft] def estRowsFromStats(d: Dataset[Geom]): Double =
     d.queryExecution.optimizedPlan.stats.sizeInBytes.toDouble / GeomRowBytes
 
+  // ---- evidence → route → plan ----------------------------------------------
+
+  /** Above this many rows of the larger side per cell, the declarative
+    * join's per-cell nested loop (inside the SMJ group) loses to the
+    * sweep/STR inner loop of the keyed reduce.
+    */
+  private[graft] val DenseCellRows = 256.0
+
+  /** The ONE planning aggregation: extent, per-side counts, per-side max
+    * edge and per-axis mean edge of both inputs, fused into a single job.
+    */
+  def evidenceOf(a: Dataset[Geom], b: Dataset[Geom]): JoinEvidence = {
+    val u = a.toDF().withColumn("s", lit(0L))
+      .unionByName(b.toDF().withColumn("s", lit(1L)))
+    val Seq(x0, x1, y0, y1) =
+      Seq("xmin", "xmax", "ymin", "ymax").map(c => Bridge.expression(col(c)))
+    val edge = Bridge.column(JoinEvidence.edge(x0, x1, y0, y1))
+    val r = u.agg(min("xmin"), max("xmax"), min("ymin"), max("ymax"),
+      count(when(col("s") === 0L, lit(1))), count(lit(1)),
+      max(when(col("s") === 0L, edge)), max(when(col("s") === 1L, edge)),
+      avg(col("xmax") - col("xmin")), avg(col("ymax") - col("ymin"))).head()
+    def orElse(i: Int, d: Double): Double = if (r.isNullAt(i)) d else r.getDouble(i)
+    val ca = r.getLong(4)
+    JoinEvidence(
+      if (r.isNullAt(0)) None
+      else Some(Extent(r.getDouble(0), r.getDouble(1), r.getDouble(2), r.getDouble(3))),
+      ca, r.getLong(5) - ca, orElse(6, Double.NaN), orElse(7, Double.NaN),
+      orElse(8, 0.0), orElse(9, 0.0))
+  }
+
+  /** [[evidenceOf]] for inputs of ≳1M estimated rows (Catalyst stats, no
+    * job); None below, where the pass would cost more than the point and
+    * dense routes save, so small inputs keep the generic plan with zero
+    * extra jobs.
+    */
+  private def evidenceIfLarge(a: Dataset[Geom], b: Dataset[Geom]): Option[JoinEvidence] =
+    if (math.max(estRowsFromStats(a), estRowsFromStats(b)) < 1e6) None
+    else Some(evidenceOf(a, b))
+
+  /** Route choice — a pure function of the evidence and the cell scheme. */
+  def route(ev: JoinEvidence, s: CellScheme): Route =
+    if (ev.extent.isEmpty) Route.Broadcast
+    else if (ev.rowsPerCell(s) > DenseCellRows) Route.Sweep(ev.aPoints, ev.bPoints)
+    else if (ev.aPoints) Route.PointsA
+    else if (ev.bPoints) Route.PointsB
+    else Route.Grid
+
+  /** The plan of one route over scheme `s`. */
+  private def planRoute(a: Dataset[Geom], b: Dataset[Geom], s: CellScheme,
+                        r: Route): DataFrame = r match {
+    case Route.Broadcast => broadcastNL(a, b)
+    case Route.Grid => gridJoin(a, b, s)
+    case Route.PointsA => gridJoinPIP(a, b, s)
+    case Route.PointsB => swapSides(gridJoinPIP(b, a, s))
+    case Route.Sweep(aPts, bPts) => gridJoinSweepHinted(a, b, s, aPts, bPts)
+  }
+
   /** Single entry point with automatic physical-strategy choice (the
     * reference's join-direction / index-side heuristics, SURVEY §4): tiny
-    * side → broadcast nested loop (built on the smaller side); otherwise the
-    * cell-partitioned grid join sized from the larger side's row count.
+    * side → broadcast nested loop (built on the smaller side); otherwise
+    * [[route]] over a grid sized from the larger side's row count.
     *
     * Planning cost (the r2 verdict flagged an eager `a.count(); b.count()`
     * here — two full input passes before any join work): the broadcast
-    * decision now reads Catalyst statistics (no job at all); only the grid
-    * path runs ONE fused aggregation computing the joint extent (needed to
-    * build the grid anyway) together with both exact row counts.
+    * decision reads Catalyst statistics (no job at all); only the grid
+    * path runs the ONE evidence aggregation, which also gives the joint
+    * extent the grid needs.
     */
   def intersectJoin(a: Dataset[Geom], b: Dataset[Geom],
                     broadcastThreshold: Long = 10000L): DataFrame = {
@@ -132,72 +245,35 @@ object SpatialJoins {
       estRowsFromStats(d) <= broadcastThreshold &&
         d.limit((broadcastThreshold + 1).toInt).count() <= broadcastThreshold
     if (small(b)) broadcastNL(a, b)
-    else if (small(a))
-      broadcastNL(b, a).select(col("b_id").as("a_id"), col("a_id").as("b_id"))
+    else if (small(a)) swapSides(broadcastNL(b, a))
     else {
-      val u = a.toDF().withColumn("s", lit(0L))
-        .unionByName(b.toDF().withColumn("s", lit(1L)))
-      // the same single planning aggregation also measures each side's max
-      // MBR edge: an all-zero side is a POINT side, which routes to the
-      // cheaper no-replication / no-ownership PIP plan below — detection
-      // costs zero extra jobs. abs() so an INVERTED row (xmax < xmin — never
-      // intersects anything under the inclusive predicate) cannot hide
-      // behind a zero other edge and smuggle the side into the PIP plan,
-      // which would treat it as its (xmin, ymin) corner and emit pairs the
-      // generic plan never would.
-      val edge = greatest(abs(col("xmax") - col("xmin")),
-                          abs(col("ymax") - col("ymin")))
-      val r = u.agg(min("xmin"), max("xmax"), min("ymin"), max("ymax"),
-        count(when(col("s") === 0L, lit(1))), count(lit(1)),
-        max(when(col("s") === 0L, edge)),
-        max(when(col("s") === 1L, edge))).head()
-      // both inputs empty → the min/max agg returns nulls (stats can
-      // OVER-estimate filtered scans, so small() above may be false even for
-      // an empty input); broadcastNL is trivially correct on empty frames
-      if (r.isNullAt(0)) return broadcastNL(a, b)
-      val ext = Extent(r.getDouble(0), r.getDouble(1), r.getDouble(2), r.getDouble(3))
-      val ca = r.getLong(4); val cb = r.getLong(5) - ca
-      val aPts = !r.isNullAt(6) && r.getDouble(6) == 0.0
-      val bPts = !r.isNullAt(7) && r.getDouble(7) == 0.0
-      val s = CellScheme.forSize(ext, math.max(ca, cb),
-        targetPerCell = 16, maxN = 8192)
-      // when the grid cap binds (rows ≫ 16·maxN²), cells run dense and the
-      // declarative join's per-cell nested loop inside the SMJ group loses to
-      // the cogroup path with its sweep/STR-indexed inner loop
-      val perCellEst = math.max(ca, cb).toDouble / s.numCells.toDouble
-      // the dense route reuses THIS aggregation's point evidence — calling
-      // the public gridJoinSweep would re-measure it in a second job
-      if (perCellEst > 256.0) gridJoinSweepHinted(a, b, s, aPts, bPts)
-      else if (aPts) gridJoinPIP(a, b, s)
-      else if (bPts)
-        gridJoinPIP(b, a, s).select(col("b_id").as("a_id"), col("a_id").as("b_id"))
-      else gridJoin(a, b, s)
+      // stats can OVER-estimate filtered scans, so both inputs may be empty
+      // here: the evidence then has no extent and routes to broadcastNL
+      val ev = evidenceOf(a, b)
+      // when the grid cap binds (rows ≫ 16·maxN²) cells run dense and the
+      // route turns to the sweep
+      val s = CellScheme.forSize(ev.extent.getOrElse(Extent(0, 0, 0, 0)),
+        math.max(ev.countA, ev.countB), targetPerCell = 16, maxN = 8192)
+      planRoute(a, b, s, route(ev, s))
     }
   }
 
   // ---- declarative grid PBSM ------------------------------------------------
 
-  /** Clamped cell coordinate of `v` along one axis, as a column. */
-  private def cellCoord(v: Column, lo: Double, len: Double, n: Int): Column =
-    least(greatest(floor((v - lit(lo)) / lit(len)).cast("long"), lit(0L)), lit(n - 1L))
-
-  /** Owning cell id of a point `(x, y)` as a column — must match
-    * `CellScheme.cellOf` exactly.
-    */
+  /** Owning cell id of a point `(x, y)` as a column: [[CellScheme.cellOfExpr]]. */
   def cellOfCol(s: CellScheme, x: Column, y: Column): Column =
-    cellCoord(y, s.extent.ymin, s.cellH, s.ny) * lit(s.nx.toLong) +
-      cellCoord(x, s.extent.xmin, s.cellW, s.nx)
+    Bridge.column(s.cellOfExpr(Bridge.expression(x), Bridge.expression(y)))
 
   /** Replicate rows into every overlapped cell (declarative `flatMap`:
     * two `explode(sequence(...))` generators, fully codegen-friendly).
     */
   def withCells(df: DataFrame, s: CellScheme, p: String): DataFrame = {
-    val cx0 = cellCoord(col(s"${p}_xmin"), s.extent.xmin, s.cellW, s.nx)
-    val cx1 = cellCoord(col(s"${p}_xmax"), s.extent.xmin, s.cellW, s.nx)
-    val cy0 = cellCoord(col(s"${p}_ymin"), s.extent.ymin, s.cellH, s.ny)
-    val cy1 = cellCoord(col(s"${p}_ymax"), s.extent.ymin, s.cellH, s.ny)
-    df.withColumn("cy", explode(sequence(cy0, cy1)))
-      .withColumn("cx", explode(sequence(cx0, cx1)))
+    def cellCoord(axis: Expression => Expression, c: String): Column =
+      Bridge.column(axis(Bridge.expression(col(s"${p}_$c"))))
+    df.withColumn("cy", explode(sequence(cellCoord(s.cellYExpr, "ymin"),
+                                         cellCoord(s.cellYExpr, "ymax"))))
+      .withColumn("cx", explode(sequence(cellCoord(s.cellXExpr, "xmin"),
+                                         cellCoord(s.cellXExpr, "xmax"))))
       .withColumn("cell", col("cy") * lit(s.nx.toLong) + col("cx"))
       .drop("cx", "cy")
   }
@@ -209,6 +285,22 @@ object SpatialJoins {
     cellOfCol(s, greatest(col("a_xmin"), col("b_xmin")),
                  greatest(col("a_ymin"), col("b_ymin"))) === cell
 
+  /** The b side replicated to its cells, keyed `b_cell` — split out so
+    * iterating callers ([[knnJoinWithRounds]]) can build it ONCE per scheme,
+    * pre-partition it on the join key and cache it across rounds.
+    */
+  private[graft] def bReplicated(b: Dataset[Geom], s: CellScheme): DataFrame =
+    withCells(prefixed(b, "b"), s, "b").withColumnRenamed("cell", "b_cell")
+
+  /** The ONE declarative cell-join body: replicate the `a_`-prefixed side,
+    * equi-join it on `cell === b_cell` with the replicated b side `bc`, keep
+    * intersecting candidates owned by the joined cell. Every column of both
+    * sides survives, so callers select, filter or hint on top.
+    */
+  private def cellJoin(ap: DataFrame, bc: DataFrame, s: CellScheme): DataFrame =
+    withCells(ap, s, "a").join(bc,
+      col("cell") === col("b_cell") && intersectPred && ownsPred(s, col("cell")))
+
   /** PBSM grid join as a pure Catalyst plan (equi-join on cell). */
   def gridJoin(a: Dataset[Geom], b: Dataset[Geom], s: CellScheme): DataFrame =
     gridJoinWithCell(a, b, s).select(col("a_id"), col("b_id"))
@@ -217,12 +309,9 @@ object SpatialJoins {
     * result-pair metrics (each pair appears exactly once, in its owner cell,
     * so per-cell counts need no dedup).
     */
-  def gridJoinWithCell(a: Dataset[Geom], b: Dataset[Geom], s: CellScheme): DataFrame = {
-    val ac = withCells(prefixed(a, "a"), s, "a")
-    val bc = withCells(prefixed(b, "b"), s, "b").withColumnRenamed("cell", "b_cell")
-    ac.join(bc, col("cell") === col("b_cell") && intersectPred && ownsPred(s, col("cell")))
+  def gridJoinWithCell(a: Dataset[Geom], b: Dataset[Geom], s: CellScheme): DataFrame =
+    cellJoin(prefixed(a, "a"), bReplicated(b, s), s)
       .select(col("a_id"), col("b_id"), col("cell"))
-  }
 
   /** Per-cell result-pair counts (the north rule's per-cell result metrics —
     * the candidate-side counterpart is `spatial_cell_stats`).
@@ -251,8 +340,7 @@ object SpatialJoins {
     val a = pts.toDF().select(col("id").as("a_id"),
       col("xmin").as("a_x"), col("ymin").as("a_y"),
       cellOfCol(s, col("xmin"), col("ymin")).as("cell"))
-    val bc = withCells(prefixed(polys, "b"), s, "b").withColumnRenamed("cell", "b_cell")
-    a.join(bc, col("cell") === col("b_cell") &&
+    a.join(bReplicated(polys, s), col("cell") === col("b_cell") &&
         col("a_x") >= col("b_xmin") && col("a_x") <= col("b_xmax") &&
         col("a_y") >= col("b_ymin") && col("a_y") <= col("b_ymax"))
       .select(col("a_id"), col("b_id"))
@@ -263,21 +351,39 @@ object SpatialJoins {
     * entirely when b's replicated form fits in memory — the J12 path).
     */
   def gridJoinHinted(a: Dataset[Geom], b: Dataset[Geom], s: CellScheme,
-                     hintName: String): DataFrame = {
+                     hintName: String): DataFrame =
+    cellJoin(prefixed(a, "a"), bReplicated(b, s).hint(hintName), s)
+      .select(col("a_id"), col("b_id"))
+
+  /** [[gridJoin]] restricted by an additional predicate variant (within /
+    * contains / overlaps). The candidate phase and dedup are those of the
+    * intersect join; the variant is a refinement filter.
+    */
+  def gridJoinPred(a: Dataset[Geom], b: Dataset[Geom], s: CellScheme,
+                   pred: Column): DataFrame =
+    cellJoin(prefixed(a, "a"), bReplicated(b, s), s).filter(pred)
+      .select(col("a_id"), col("b_id"))
+
+  /** Salted grid join for degenerate hot cells (e.g. many identical points):
+    * the a-side of every cell is hashed into `salt` buckets; the b-side is
+    * replicated into all buckets. Each (a, b) candidate pair meets in exactly
+    * one (cell, bucket), so reference-point dedup is unchanged. One shuffle,
+    * `salt`× more b-side rows, `salt`× more parallelism inside hot cells.
+    */
+  def gridJoinSalted(a: Dataset[Geom], b: Dataset[Geom], s: CellScheme,
+                     salt: Int): DataFrame = {
+    require(salt >= 1)
     val ac = withCells(prefixed(a, "a"), s, "a")
-    val bc = withCells(prefixed(b, "b"), s, "b").withColumnRenamed("cell", "b_cell").hint(hintName)
-    ac.join(bc, col("cell") === col("b_cell") && intersectPred && ownsPred(s, col("cell")))
+      .withColumn("skey", col("cell") * salt + pmod(xxhash64(col("a_id")), lit(salt.toLong)))
+    val bc = bReplicated(b, s)
+      .withColumn("bucket", explode(sequence(lit(0L), lit(salt - 1L))))
+      .withColumn("b_skey", col("b_cell") * salt + col("bucket"))
+    ac.join(bc, col("skey") === col("b_skey") && intersectPred && ownsPred(s, col("cell")))
       .select(col("a_id"), col("b_id"))
   }
 
-  // ---- cogroup + plane-sweep grid PBSM -------------------------------------
+  // ---- keyed repartition+sort reduce with the sweep/STR inner loop ----------
 
-  /** Per-cell plane sweep over ymin-sorted arrays: each intersecting pair is
-    * found exactly once (anchored at the rectangle with the smaller ymin),
-    * checked for x-overlap and cell ownership. O(n log n + overlaps) per cell
-    * instead of |A|·|B| (reference sweep `cpp/1d_stripes.hpp:16-68`, event
-    * order `cpp/Event.h:37-45`).
-    */
   /** Per-cell inner-loop switch: plane sweep for ordinary cells; for DENSE
     * cells (≥ `IndexMinRows` on each side) an STR-packed R-tree over the
     * smaller side, probed by the larger (the reference's J2 sync-traversal
@@ -305,7 +411,7 @@ object SpatialJoins {
     val probes = if (buildA) bs else as
     // STREAMING over probes: materializing the whole per-cell pair set would
     // buffer O(result) Pairs in one task — the per-probe buffer is bounded by
-    // the build side, and the cogroup consumer pulls pairs lazily.
+    // the build side, and the reduce consumer pulls pairs lazily.
     // ONE buffer + ONE sink closure reused across all probes (the r6 form
     // allocated an ArrayBuffer and a capturing closure PER PROBE — 10M+
     // allocations in a dense-stripe task). Safe: Iterator.flatMap exhausts
@@ -325,8 +431,14 @@ object SpatialJoins {
     }
   }
 
-  /** Plane sweep with a pluggable reference-point ownership test (shared by
-    * the plain grid and the adaptive two-level scheme).
+  /** Per-cell plane sweep over ymin-sorted arrays with a pluggable
+    * reference-point ownership test: each intersecting pair is found exactly
+    * once, anchored at the rectangle with the smaller ymin. O(n log n +
+    * overlaps) per cell instead of |A|·|B| (reference sweep
+    * `cpp/1d_stripes.hpp:16-68`, event order `cpp/Event.h:37-45`). All
+    * comparisons are in SQL order ([[graft.geom.SqlOrder]]), and a candidate is checked
+    * on both axes, so NaN coordinates and inverted rows give the SQL
+    * predicate's pairs.
     */
   private[graft] def sweepOwned(as: Array[CellGeom], bs: Array[CellGeom],
                                 ownsRef: (Double, Double) => Boolean): Iterator[Pair] = {
@@ -343,26 +455,26 @@ object SpatialJoins {
       private var anchorA = true          // which side the current anchor is on
       private var k = 0                    // scan cursor on the opposite side
       private var pending: Pair = null
-      private def xOverlapOwned(a: CellGeom, b: CellGeom): Boolean =
-        a.xmin <= b.xmax && a.xmax >= b.xmin &&
+      private def hitOwned(a: CellGeom, b: CellGeom): Boolean =
+        le(a.xmin, b.xmax) && le(b.xmin, a.xmax) && le(a.ymin, b.ymax) && le(b.ymin, a.ymax) &&
           ownsRef(math.max(a.xmin, b.xmin), math.max(a.ymin, b.ymin))
       private def advance(): Unit = {
         while (pending == null && i < as.length && j < bs.length) {
-          if (anchorA && as(i).ymin <= bs(j).ymin) {
+          if (anchorA && le(as(i).ymin, bs(j).ymin)) {
             // anchor = as(i); scan bs from k while bs(k).ymin <= anchor.ymax
             if (k < j) k = j
             var found = false
-            while (!found && k < bs.length && bs(k).ymin <= as(i).ymax) {
-              if (xOverlapOwned(as(i), bs(k))) { pending = Pair(as(i).id, bs(k).id); found = true }
+            while (!found && k < bs.length && le(bs(k).ymin, as(i).ymax)) {
+              if (hitOwned(as(i), bs(k))) { pending = Pair(as(i).id, bs(k).id); found = true }
               k += 1
             }
             if (!found) { i += 1; k = 0; anchorA = true } else return
-          } else if (!anchorA || as(i).ymin > bs(j).ymin) {
+          } else {
             anchorA = false
             if (k < i) k = i
             var found = false
-            while (!found && k < as.length && as(k).ymin <= bs(j).ymax) {
-              if (xOverlapOwned(as(k), bs(j))) { pending = Pair(as(k).id, bs(j).id); found = true }
+            while (!found && k < as.length && le(as(k).ymin, bs(j).ymax)) {
+              if (hitOwned(as(k), bs(j))) { pending = Pair(as(k).id, bs(j).id); found = true }
               k += 1
             }
             if (!found) { j += 1; k = 0; anchorA = true } else return
@@ -374,99 +486,24 @@ object SpatialJoins {
     }
   }
 
-  /** The ONE cogroup join body shared by every partitioning scheme: replicate
-    * both sides with the scheme's `cellsOf`, cogroup on the cell key, run the
-    * sweep/STR inner loop, keep a pair iff the scheme's `ownerOf` maps its
-    * reference point to this key (exactly-once for any correct scheme).
+  /** The ONE reduce body, shared by the sweep, adaptive, sort-tile and
+    * binary-split joins. `aKeyed` / `bKeyed` are the two sides' replicas: a
+    * `key` column plus the `a_`/`b_`-prefixed MBR columns. Their union is
+    * hash-partitioned on the key, sorted partition-locally, and consumed by a
+    * run-grouping iterator that feeds each key's two sides to the sweep/STR
+    * inner loop. `ownerOf` maps a reference point to its owning key — pairs
+    * are kept exactly once, in their owner key's run.
     */
-  private[graft] def cogroupSchemeJoin(a: Dataset[Geom], b: Dataset[Geom],
-                                       cellsOf: Geom => Seq[Long],
-                                       ownerOf: (Double, Double) => Long): DataFrame = {
-    val spark = a.sparkSession
-    import spark.implicits._
-    def rep(ds: Dataset[Geom]): Dataset[CellGeom] =
-      ds.flatMap(g => cellsOf(g).map(c => CellGeom(c, g.id, g.xmin, g.xmax, g.ymin, g.ymax)))
-    rep(a).groupByKey(_.cell).cogroup(rep(b).groupByKey(_.cell)) { (key, as, bs) =>
-      joinCellOwned(as.toArray, bs.toArray, (rx, ry) => ownerOf(rx, ry) == key)
-    }.toDF("a_id", "b_id")
-  }
-
-  /** PBSM grid join with the plane-sweep/STR inner loop. For a plain
-    * [[CellScheme]] the replication phase is DECLARATIVE (the same codegen'd
-    * `explode(sequence)` generators as [[gridJoin]]) followed by one
-    * `repartition(cell)` + partition-local sort + a run-grouping
-    * `mapPartitions` — object construction happens ONCE per row on the
-    * reduce side. The typed-cogroup body paid a per-row
-    * decode→Seq→CellGeom→re-encode round on the MAP side, which dominated
-    * the stripes/output-heavy benches (tune-measured: the two replication
-    * stages cost 2.5-6 s each at 10M rows vs ~1 s for the codegen'd form).
-    * Emits exactly the pair set of [[cogroupSchemeJoin]] (spec-asserted).
-    */
-  def gridJoinSweep(a: Dataset[Geom], b: Dataset[Geom], s: CellScheme): DataFrame = {
-    // POINT-side specialization (the stripes/dense twin of [[gridJoinPIP]]):
-    // a zero-extent side overlaps exactly one cell, so its map side is a
-    // plain PROJECTION (no explode(sequence) generator pair) — the same
-    // max-edge evidence intersectJoin computes, measured here by one fused
-    // aggregation over both inputs. The aggregation is a data pass, so it is
-    // GATED on Catalyst stats (≳1M estimated rows): small inputs keep the
-    // r6 plan shape with zero extra jobs, large ones amortize the pass
-    // against the generator+shuffle work it removes. Every branch emits the
-    // identical pair set (ownership arithmetic is untouched; a point's pair
-    // can only meet in the point's own cell, where the reference point — the
-    // intersection's bottom-left corner = the point itself — trivially owns).
-    val est = math.max(estRowsFromStats(a), estRowsFromStats(b))
-    val (aPts, bPts) =
-      if (est < 1e6) (false, false)
-      else {
-        val u = a.toDF().withColumn("s", lit(0L))
-          .unionByName(b.toDF().withColumn("s", lit(1L)))
-        // abs(): an INVERTED row must not smuggle a side into the point plan
-        // (see intersectJoin's planning aggregation)
-        val edge = greatest(abs(col("xmax") - col("xmin")),
-                            abs(col("ymax") - col("ymin")))
-        val r = u.agg(max(when(col("s") === 0L, edge)),
-                      max(when(col("s") === 1L, edge))).head()
-        (!r.isNullAt(0) && r.getDouble(0) == 0.0,
-         !r.isNullAt(1) && r.getDouble(1) == 0.0)
-      }
-    gridJoinSweepHinted(a, b, s, aPts, bPts)
-  }
-
-  /** [[gridJoinSweep]] with the point-side evidence supplied by the caller
-    * (or the detection aggregation above) — routes the point side to the
-    * projection-only map form.
-    */
-  private[graft] def gridJoinSweepHinted(a: Dataset[Geom], b: Dataset[Geom],
-                                         s: CellScheme, aPts: Boolean,
-                                         bPts: Boolean): DataFrame = {
-    def rep(ds: Dataset[Geom], p: String, side: Int, pts: Boolean): DataFrame =
-      if (pts)
-        // a point (xmin==xmax, ymin==ymax) replicates to exactly its own
-        // cell: the generator pair degenerates to a projection
-        ds.toDF().select(cellOfCol(s, col("xmin"), col("ymin")).as("key"),
-          lit(side).as("side"), col("id"),
-          col("xmin"), col("xmax"), col("ymin"), col("ymax"))
-      else
-        withCells(prefixed(ds, p), s, p)
-          .select(col("cell").as("key"), lit(side).as("side"), col(s"${p}_id").as("id"),
-            col(s"${p}_xmin").as("xmin"), col(s"${p}_xmax").as("xmax"),
-            col(s"${p}_ymin").as("ymin"), col(s"${p}_ymax").as("ymax"))
-    keyedPartitionJoin(rep(a, "a", 0, aPts).unionByName(rep(b, "b", 1, bPts)),
-      (rx, ry) => s.cellOf(rx, ry))
-  }
-
-  /** Reduce side of the repartition+sort join: the pre-keyed union frame
-    * `(key, side, id, xmin, xmax, ymin, ymax)` is hash-partitioned on the
-    * key, sorted partition-locally, and consumed by a run-grouping iterator
-    * that feeds each key's two sides to the sweep/STR inner loop. `ownerOf`
-    * maps a reference point to its owning key — pairs are kept exactly once,
-    * in their owner key's run.
-    */
-  private def keyedPartitionJoin(u0: DataFrame,
+  private def keyedPartitionJoin(aKeyed: DataFrame, bKeyed: DataFrame,
                                  ownerOf: (Double, Double) => Long): DataFrame = {
-    val spark = u0.sparkSession
+    val spark = aKeyed.sparkSession
     import spark.implicits._
-    val u = u0.repartition(col("key")).sortWithinPartitions("key", "side")
+    def side(df: DataFrame, p: String, i: Int): DataFrame =
+      df.select(col("key"), lit(i).as("side"), col(s"${p}_id").as("id"),
+        col(s"${p}_xmin").as("xmin"), col(s"${p}_xmax").as("xmax"),
+        col(s"${p}_ymin").as("ymin"), col(s"${p}_ymax").as("ymax"))
+    val u = side(aKeyed, "a", 0).unionByName(side(bKeyed, "b", 1))
+      .repartition(col("key")).sortWithinPartitions("key", "side")
       .as[KeyedGeom]
     u.mapPartitions { rows =>
       new Iterator[Pair] {
@@ -494,107 +531,89 @@ object SpatialJoins {
     }.toDF("a_id", "b_id")
   }
 
-  /** 1-D stripes plan (reference J5): an `n × 1` grid. */
-  def stripesJoin(a: Dataset[Geom], b: Dataset[Geom], extent: Extent, n: Int): DataFrame =
-    stripesRouted(a, b, CellScheme.stripesX(extent, n))
-
-  /** Physical-plan routing for a stripe scheme (r6 verdict item 2: stripes
-    * never reached the point specialization — the reference's tuned
-    * 1,000-stripe Uniform PIP best was 2.05× ours). Small inputs (Catalyst
-    * stats, no job) keep the r6 declarative grid plan unchanged; large ones
-    * pay ONE fused planning aggregation (the intersectJoin evidence: per-side
-    * max MBR edge) and route a point side to [[gridJoinPIP]], or — when
-    * stripes run dense, where the declarative per-stripe SMJ loop is
-    * quadratic — to the sweep/STR cogroup body with the projection-only
-    * point form ([[gridJoinSweepHinted]]). Identical pair set on every path.
+  /** PBSM grid join with the plane-sweep/STR inner loop. The replication is
+    * DECLARATIVE (the same codegen'd `explode(sequence)` generators as
+    * [[gridJoin]]), followed by the keyed reduce — object construction
+    * happens ONCE per row, on the reduce side.
+    *
+    * A POINT side (the stripes/dense twin of [[gridJoinPIP]]) overlaps
+    * exactly one cell, so its map side is a plain projection with no
+    * generator pair. Point evidence costs a data pass, so it is measured
+    * only for inputs of ≳1M estimated rows ([[evidenceIfLarge]]). Every
+    * branch emits the identical pair set: a point's pair can only meet in
+    * the point's own cell, where its reference point — the point itself —
+    * trivially owns.
     */
-  private def stripesRouted(a: Dataset[Geom], b: Dataset[Geom], s: CellScheme): DataFrame = {
-    val est = math.max(estRowsFromStats(a), estRowsFromStats(b))
-    if (est < 1e6) return gridJoin(a, b, s)
-    val u = a.toDF().withColumn("s", lit(0L))
-      .unionByName(b.toDF().withColumn("s", lit(1L)))
-    val edge = greatest(abs(col("xmax") - col("xmin")),
-                        abs(col("ymax") - col("ymin")))
-    val r = u.agg(max(when(col("s") === 0L, edge)),
-                  max(when(col("s") === 1L, edge)), count(lit(1))).head()
-    val aPts = !r.isNullAt(0) && r.getDouble(0) == 0.0
-    val bPts = !r.isNullAt(1) && r.getDouble(1) == 0.0
-    val perCellEst = r.getLong(2).toDouble / (2.0 * s.numCells)
-    if (perCellEst > 256.0) gridJoinSweepHinted(a, b, s, aPts, bPts)
-    else if (aPts) gridJoinPIP(a, b, s)
-    else if (bPts)
-      gridJoinPIP(b, a, s).select(col("b_id").as("a_id"), col("a_id").as("b_id"))
-    else gridJoin(a, b, s)
+  def gridJoinSweep(a: Dataset[Geom], b: Dataset[Geom], s: CellScheme): DataFrame = {
+    val ev = evidenceIfLarge(a, b)
+    gridJoinSweepHinted(a, b, s, ev.exists(_.aPoints), ev.exists(_.bPoints))
+  }
+
+  /** [[gridJoinSweep]] with the point-side evidence supplied by the caller. */
+  private[graft] def gridJoinSweepHinted(a: Dataset[Geom], b: Dataset[Geom],
+                                         s: CellScheme, aPts: Boolean,
+                                         bPts: Boolean): DataFrame = {
+    def keyed(ds: Dataset[Geom], p: String, pts: Boolean): DataFrame =
+      if (pts) prefixed(ds, p).withColumn("key", cellOfCol(s, col(s"${p}_xmin"), col(s"${p}_ymin")))
+      else withCells(prefixed(ds, p), s, p).withColumnRenamed("cell", "key")
+    keyedPartitionJoin(keyed(a, "a", aPts), keyed(b, "b", bPts), s.cellOf)
+  }
+
+  /** 1-D stripes plan (reference J5): an `n × 1` grid. Small inputs (Catalyst
+    * stats, no job) keep the declarative grid plan; large ones pay the ONE
+    * evidence aggregation and take its [[route]] — the point plan, or the
+    * sweep when stripes run dense.
+    */
+  def stripesJoin(a: Dataset[Geom], b: Dataset[Geom], extent: Extent, n: Int): DataFrame = {
+    val s = CellScheme.stripesX(extent, n)
+    evidenceIfLarge(a, b).fold(gridJoin(a, b, s))(ev => planRoute(a, b, s, route(ev, s)))
   }
 
   /** Stripe-direction choice (the reference records `best_join_direction` per
     * workload and picks the better of partition-dim0 vs the transpose,
-    * `cpp/1d_multithread.cpp:168-174`): pick the axis with the smaller
-    * expected replication factor, `1 + avg(edge) / stripeWidth`, estimated
-    * from a sampled aggregate over both inputs. Cost: one tiny agg job;
-    * returns the direction so callers/benchmarks can log it.
+    * `cpp/1d_multithread.cpp:168-174`): the axis with the smaller expected
+    * replication factor, `1 + mean edge / stripe width`, read off the
+    * evidence.
     */
-  def chooseStripeAxis(a: Dataset[Geom], b: Dataset[Geom], extent: Extent, n: Int,
-                       sampleFraction: Double = 0.1): Char = {
-    val u = a.unionByName(b)
-    val s = (if (sampleFraction < 1.0) u.sample(sampleFraction, 42L) else u)
-      .agg(avg(col("xmax") - col("xmin")), avg(col("ymax") - col("ymin"))).head()
-    val avgW = if (s.isNullAt(0)) 0.0 else s.getDouble(0)
-    val avgH = if (s.isNullAt(1)) 0.0 else s.getDouble(1)
-    val repX = avgW / math.max(extent.width / n, 1e-12)
-    val repY = avgH / math.max(extent.height / n, 1e-12)
+  def chooseStripeAxis(ev: JoinEvidence, extent: Extent, n: Int): Char = {
+    val repX = ev.meanW / math.max(extent.width / n, 1e-12)
+    val repY = ev.meanH / math.max(extent.height / n, 1e-12)
     if (repX <= repY) 'x' else 'y'
   }
 
-  /** [[stripesJoin]] with the axis chosen by [[chooseStripeAxis]]. */
+  /** [[stripesJoin]] with the axis chosen by [[chooseStripeAxis]]; the one
+    * evidence aggregation serves both the axis and the route.
+    */
   def stripesJoinAuto(a: Dataset[Geom], b: Dataset[Geom], extent: Extent, n: Int): DataFrame = {
-    val scheme =
-      if (chooseStripeAxis(a, b, extent, n) == 'x') CellScheme.stripesX(extent, n)
+    val ev = evidenceOf(a, b)
+    val s =
+      if (chooseStripeAxis(ev, extent, n) == 'x') CellScheme.stripesX(extent, n)
       else CellScheme.stripesY(extent, n)
-    stripesRouted(a, b, scheme)
+    planRoute(a, b, s, route(ev, s))
   }
 
-  /** [[gridJoin]] restricted by an additional predicate variant (within /
-    * contains / overlaps). The candidate phase and dedup are those of the
-    * intersect join; the variant is a refinement filter.
+  /** A data-driven scheme's join: its `cellsOf` replicates each side into
+    * the keyed form, its `cellOf` owns the pairs in the keyed reduce.
     */
-  def gridJoinPred(a: Dataset[Geom], b: Dataset[Geom], s: CellScheme,
-                   pred: Column): DataFrame = {
-    val ac = withCells(prefixed(a, "a"), s, "a")
-    val bc = withCells(prefixed(b, "b"), s, "b").withColumnRenamed("cell", "b_cell")
-    ac.join(bc, col("cell") === col("b_cell") && intersectPred && ownsPred(s, col("cell")))
-      .filter(pred)
-      .select(col("a_id"), col("b_id"))
-  }
-
-  /** Salted grid join for degenerate hot cells (e.g. many identical points):
-    * the a-side of every cell is hashed into `salt` buckets; the b-side is
-    * replicated into all buckets. Each (a, b) candidate pair meets in exactly
-    * one (cell, bucket), so reference-point dedup is unchanged. One shuffle,
-    * `salt`× more b-side rows, `salt`× more parallelism inside hot cells.
-    */
-  def gridJoinSalted(a: Dataset[Geom], b: Dataset[Geom], s: CellScheme,
-                     salt: Int): DataFrame = {
-    require(salt >= 1)
-    val ac = withCells(prefixed(a, "a"), s, "a")
-      .withColumn("skey", col("cell") * salt + pmod(xxhash64(col("a_id")), lit(salt.toLong)))
-    val bc = withCells(prefixed(b, "b"), s, "b").withColumnRenamed("cell", "b_cell")
-      .withColumn("bucket", explode(sequence(lit(0L), lit(salt - 1L))))
-      .withColumn("b_skey", col("b_cell") * salt + col("bucket"))
-    ac.join(bc, col("skey") === col("b_skey") && intersectPred && ownsPred(s, col("cell")))
-      .select(col("a_id"), col("b_id"))
+  private def schemeJoin(a: Dataset[Geom], b: Dataset[Geom], cellsOf: Geom => Seq[Long],
+                         cellOf: (Double, Double) => Long): DataFrame = {
+    import a.sparkSession.implicits._
+    def keyed(ds: Dataset[Geom], p: String): DataFrame =
+      ds.flatMap(g => cellsOf(g).map(c => CellGeom(c, g.id, g.xmin, g.xmax, g.ymin, g.ymax)))
+        .toDF("key", s"${p}_id", s"${p}_xmin", s"${p}_xmax", s"${p}_ymin", s"${p}_ymax")
+    keyedPartitionJoin(keyed(a, "a"), keyed(b, "b"), cellOf)
   }
 
   /** Sort-tile-partitioned join (the reference's SpatialSpark STP method,
     * `PartitionedSpatialJoin.scala:151-165`): data-quantile tile boundaries
     * ([[graft.cells.SortTileScheme]]) instead of a uniform lattice — equal
     * per-tile load under skew by construction rather than by reactive
-    * splitting. Same cogroup + sweep/STR inner loop, same reference-point
-    * exactly-once rule, so the pair set is identical to every other scheme.
+    * splitting. Same keyed reduce and reference-point exactly-once rule, so
+    * the pair set is identical to every other scheme.
     */
   def sortTileJoin(a: Dataset[Geom], b: Dataset[Geom],
                    scheme: graft.cells.SortTileScheme): DataFrame =
-    cogroupSchemeJoin(a, b, scheme.cellsOf, scheme.cellOf)
+    schemeJoin(a, b, scheme.cellsOf, scheme.cellOf)
 
   /** Convenience: build the scheme from a sample, then join. For benchmarks
     * or repeated joins build once and call the scheme overload.
@@ -605,11 +624,11 @@ object SpatialJoins {
 
   /** Binary-split-partitioned join (the reference's SpatialSpark BSP method):
     * kd-tree leaves from sampled medians ([[graft.cells.BinarySplitScheme]]);
-    * same cogroup inner loop and exactly-once rule as every scheme.
+    * same keyed reduce and exactly-once rule as every scheme.
     */
   def binarySplitJoin(a: Dataset[Geom], b: Dataset[Geom],
                       scheme: graft.cells.BinarySplitScheme): DataFrame =
-    cogroupSchemeJoin(a, b, scheme.cellsOf, scheme.cellOf)
+    schemeJoin(a, b, scheme.cellsOf, scheme.cellOf)
 
   def binarySplitJoin(a: Dataset[Geom], b: Dataset[Geom], extent: Extent,
                       depth: Int): DataFrame =
@@ -617,7 +636,7 @@ object SpatialJoins {
 
   /** PBSM with adaptive hot-cell refinement (reference J6's quadtree budget
     * rule, see [[graft.skew.AdaptiveCells]]): plan splits from per-cell
-    * counts, then one cogroup on the packed two-level key.
+    * counts, then one keyed reduce on the packed two-level key.
     */
   def gridJoinAdaptive(a: Dataset[Geom], b: Dataset[Geom], base: CellScheme,
                        budgetPairs: Long = 4L * 1024 * 1024,
@@ -630,29 +649,22 @@ object SpatialJoins {
       sampleFraction = planSampleFraction)
     if (scheme.splits.isEmpty) {
       // zero hot cells → the two-level key degenerates to the plain grid, so
-      // return the plain-grid PLAN instead of paying the typed-cogroup
-      // serialization for nothing (on even density the insurance premium is
-      // now just the one sampled planning pass). Inner-loop routing uses the
+      // return the plain-grid PLAN (on even density the insurance premium is
+      // just the one sampled planning pass). Inner-loop routing uses the
       // MEASURED occupied-cell mean the planning aggregation already
       // computed (the Catalyst byte-stats estimate sits exactly on the
-      // 256 boundary for the bench workloads and routes dense cells into the
-      // quadratic SMJ loop); stats remain the fallback when the planner ran
-      // without counts. Every branch emits the identical pair set.
+      // dense-cell boundary for the bench workloads and routes dense cells
+      // into the quadratic SMJ loop); stats remain the fallback when the
+      // planner ran without counts. Every branch emits the identical pair set.
       val perCellEst =
         if (scheme.perCellMean >= 0.0) scheme.perCellMean
         else math.max(estRowsFromStats(a), estRowsFromStats(b)) / base.numCells.toDouble
-      if (perCellEst > 256.0) gridJoinSweep(a, b, base) else gridJoin(a, b, base)
+      if (perCellEst > DenseCellRows) gridJoinSweep(a, b, base) else gridJoin(a, b, base)
     } else {
-      // declarative two-level replication + the same repartition+sort reduce
-      // as gridJoinSweep — the map side stays in whole-stage codegen instead
-      // of paying the typed-cogroup decode/alloc/encode per replica
-      def rep(ds: Dataset[Geom], p: String, side: Int): DataFrame =
-        withAdaptiveKeys(prefixed(ds, p), scheme, p)
-          .select(col("key"), lit(side).as("side"), col(s"${p}_id").as("id"),
-            col(s"${p}_xmin").as("xmin"), col(s"${p}_xmax").as("xmax"),
-            col(s"${p}_ymin").as("ymin"), col(s"${p}_ymax").as("ymax"))
-      keyedPartitionJoin(rep(a, "a", 0).unionByName(rep(b, "b", 1)),
-        scheme.ownerKey)
+      // declarative two-level replication + the keyed reduce — the map side
+      // stays in whole-stage codegen
+      keyedPartitionJoin(withAdaptiveKeys(prefixed(a, "a"), scheme, "a"),
+        withAdaptiveKeys(prefixed(b, "b"), scheme, "b"), scheme.ownerKey)
     }
   }
 
@@ -688,8 +700,9 @@ object SpatialJoins {
     val loy = lit(base.extent.ymin) + cy * lit(base.cellH)
     val subW = lit(base.cellW) / s.cast("double")
     val subH = lit(base.cellH) / s.cast("double")
+    // the base grid's clamped arithmetic, NaN to the last sub-cell included
     def sub(v: Column, lo: Column, len: Column): Column =
-      least(greatest(floor((v - lo) / len).cast("long"), lit(0L)),
+      least(greatest(floor(nanvl((v - lo) / len, s.cast("double"))).cast("long"), lit(0L)),
         (s - 1).cast("long"))
     withCells(df, base, p)
       .withColumn("s", coalesce(try_element_at(splitMap, col("cell")), lit(0)))
@@ -720,13 +733,6 @@ object SpatialJoins {
   def distanceJoin(a: Dataset[Geom], b: Dataset[Geom], s: CellScheme, r: Double): DataFrame =
     distanceJoinPre(a, bReplicated(b, s), s, r)
 
-  /** The b-side of a distance/kNN join replicated to its cells — split out so
-    * iterating callers ([[knnJoinWithRounds]]) can build it ONCE per scheme,
-    * pre-partition it on the join key and cache it across rounds.
-    */
-  private[graft] def bReplicated(b: Dataset[Geom], s: CellScheme): DataFrame =
-    withCells(prefixed(b, "b"), s, "b").withColumnRenamed("cell", "b_cell")
-
   private[graft] def distanceJoinPre(a: Dataset[Geom], bc: DataFrame,
                                      s: CellScheme, r: Double): DataFrame = {
     // expand the a-side MBR only for the candidate phase; the ORIGINAL
@@ -738,9 +744,8 @@ object SpatialJoins {
       .withColumn("a_oymin", col("a_ymin")).withColumn("a_oymax", col("a_ymax"))
       .withColumn("a_xmin", col("a_xmin") - lit(r)).withColumn("a_xmax", col("a_xmax") + lit(r))
       .withColumn("a_ymin", col("a_ymin") - lit(r)).withColumn("a_ymax", col("a_ymax") + lit(r))
-    val ac = withCells(ac0, s, "a")
     // candidate = expanded-MBR intersect; dedup by ownership on the expanded pair
-    ac.join(bc, col("cell") === col("b_cell") && intersectPred && ownsPred(s, col("cell")))
+    cellJoin(ac0, bc, s)
       .withColumn("a_xmin", col("a_oxmin")).withColumn("a_xmax", col("a_oxmax"))
       .withColumn("a_ymin", col("a_oymin")).withColumn("a_ymax", col("a_oymax"))
       .withColumn("dist", minDistCol)

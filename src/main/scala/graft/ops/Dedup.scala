@@ -19,6 +19,16 @@ object Dedup {
       .groupBy(col("h")).agg(min(col(idCol)).as(idCol))
       .select(idCol)
 
+  /** `df` repartitioned to the default parallelism when it has fewer than
+    * half that many partitions (a small parquet corpus scans as ONE
+    * partition, which would serialize the per-row work); otherwise `df`
+    * itself, at no cost.
+    */
+  private[ops] def spreadOverCores(df: DataFrame): DataFrame = {
+    val par = df.sparkSession.sparkContext.defaultParallelism
+    if (df.rdd.getNumPartitions >= par / 2) df else df.repartition(par)
+  }
+
   def exactDedupSql: String =
     "SELECT min(doc_id) AS doc_id FROM documents GROUP BY md5(text)"
 
@@ -93,11 +103,7 @@ object Dedup {
     // sigFrame gate): a small parquet corpus scans as ONE partition and the
     // tokenize+shingle+hash work — the dominant per-doc cost — would run
     // single-threaded (profiled: a 1.3 s single-task stage at sf0.1)
-    val spark = docs.sparkSession
-    val in =
-      if (docs.rdd.getNumPartitions >= spark.sparkContext.defaultParallelism / 2) docs
-      else docs.repartition(spark.sparkContext.defaultParallelism)
-    val shArr = shingleFrame(in, k, idCol, textCol)
+    val shArr = shingleFrame(spreadOverCores(docs), k, idCol, textCol)
     val sh = shArr.select(col("id"), size(col("shs")).as("n"), explode(col("shs")).as("sh"))
     val a = sh.toDF("a_id", "a_n", "sh")
     val b = sh.toDF("b_id", "b_n", "sh_b")
@@ -170,7 +176,6 @@ object Dedup {
     // PERSIST the shingle frame: it feeds the freq count, the prefix
     // aggregation AND the verify phase — consumers that would each re-run
     // the shingle pass (measured 18.7 s → 3.5 s at sf0.1).
-    val spark = docs.sparkSession
     // below the router threshold the broadcast-gate count AND the persist
     // pair are skipped (see the verify phase / shArr) — the repartition
     // stays: even a 5k-doc corpus pays for parallelizing the shingle pass
@@ -193,9 +198,7 @@ object Dedup {
           (r.isNullAt(1) || r.getLong(1) <= (64L << 20))
       }
     }
-    val in =
-      if (docs.rdd.getNumPartitions >= spark.sparkContext.defaultParallelism / 2) docs
-      else docs.repartition(spark.sparkContext.defaultParallelism)
+    val in = spreadOverCores(docs)
     // shArr feeds 3 distinct consumer shapes (freq, the prefix join base,
     // verify) whose exchanges differ, so without this cache each would
     // re-run the shingle pass — and the final verified plan holds the
@@ -495,10 +498,7 @@ object Dedup {
     // repartition before the shingle+signature pass (see jaccardPairsPrefix:
     // a small parquet corpus scans as one partition and the per-doc work
     // would serialize); no-op cost when the input is already parallel
-    val in =
-      if (docs.rdd.getNumPartitions >= docs.sparkSession.sparkContext.defaultParallelism / 2) docs
-      else docs.repartition(docs.sparkSession.sparkContext.defaultParallelism)
-    shingleFrame(in, k, idCol, textCol, useHash60 = true)
+    shingleFrame(spreadOverCores(docs), k, idCol, textCol, useHash60 = true)
       .filter(size(col("shs")) > 0)
       .select(col("id"), col("shs"),
         MinHashSig(col("shs"), perms.map(_._1), perms.map(_._2), MinHashP).as("sig"))

@@ -503,10 +503,7 @@ object Similarity {
     // ONE partition, so the n² loop — the entire cost of this route — ran
     // single-threaded (profiled 7.4 s at 2.4k vectors where the parallel
     // form takes well under 1 s); no-op when the input is already parallel
-    val spark = embs.sparkSession
-    val in =
-      if (embs.rdd.getNumPartitions >= spark.sparkContext.defaultParallelism / 2) embs
-      else embs.repartition(spark.sparkContext.defaultParallelism)
+    val in = Dedup.spreadOverCores(embs)
     val withNorm = in.select(col("vec_id"), col("embedding"),
       qdot(col("embedding"), col("embedding")).as("n2"))
     val a = withNorm.toDF("a_id", "a_q", "a_n2")

@@ -37,17 +37,6 @@ object SpatialJoinRule extends Rule[LogicalPlan] with PredicateHelper {
   }
 
   private def lit(d: Double): Expression = Literal(d)
-  private def litL(l: Long): Expression = Literal(l)
-
-  /** least(greatest(floor((v - lo) / len), 0), n-1) — must mirror
-    * `SpatialJoins.cellCoord` / `CellScheme.cellX`.
-    */
-  private def cellCoord(v: Expression, lo: Double, len: Double, n: Int): Expression =
-    Least(Seq(Greatest(Seq(Floor(Divide(Subtract(v, lit(lo)), lit(len))), litL(0L))), litL(n - 1L)))
-
-  private def cellOf(s: CellScheme, x: Expression, y: Expression): Expression =
-    Add(Multiply(cellCoord(y, s.extent.ymin, s.cellH, s.ny), litL(s.nx.toLong)),
-        cellCoord(x, s.extent.xmin, s.cellW, s.nx))
 
   /** Explode a side into its overlapped cells; returns (plan, cellAttr). */
   private def withCells(s: CellScheme, child: LogicalPlan,
@@ -57,14 +46,12 @@ object SpatialJoinRule extends Rule[LogicalPlan] with PredicateHelper {
     val cx = AttributeReference("__graft_cx", LongType)()
     val tz = Some(conf.sessionLocalTimeZone)
     val genY = Generate(
-      Explode(Sequence(cellCoord(y0, s.extent.ymin, s.cellH, s.ny),
-                       cellCoord(y1, s.extent.ymin, s.cellH, s.ny), None, tz)),
+      Explode(Sequence(s.cellYExpr(y0), s.cellYExpr(y1), None, tz)),
       Nil, outer = false, None, Seq(cy), child)
     val genX = Generate(
-      Explode(Sequence(cellCoord(x0, s.extent.xmin, s.cellW, s.nx),
-                       cellCoord(x1, s.extent.xmin, s.cellW, s.nx), None, tz)),
+      Explode(Sequence(s.cellXExpr(x0), s.cellXExpr(x1), None, tz)),
       Nil, outer = false, None, Seq(cx), genY)
-    val cell = Alias(Add(Multiply(cy, litL(s.nx.toLong)), cx), "__graft_cell")()
+    val cell = Alias(Add(Multiply(cy, Literal(s.nx.toLong)), cx), "__graft_cell")()
     (Project(child.output :+ cell, genX), cell.toAttribute)
   }
 
@@ -74,7 +61,7 @@ object SpatialJoinRule extends Rule[LogicalPlan] with PredicateHelper {
     */
   private def withCellPoint(s: CellScheme, child: LogicalPlan,
                             x: Expression, y: Expression): (LogicalPlan, Attribute) = {
-    val cell = Alias(cellOf(s, x, y), "__graft_cell")()
+    val cell = Alias(s.cellOfExpr(x, y), "__graft_cell")()
     (Project(child.output :+ cell, child), cell.toAttribute)
   }
 
@@ -179,7 +166,7 @@ object SpatialJoinRule extends Rule[LogicalPlan] with PredicateHelper {
             val owns =
               if (lPt || rPt) Nil
               else Seq(EqualTo(
-                cellOf(s, Greatest(Seq(ax0, bx0)), Greatest(Seq(ay0, by0))), lcell))
+                s.cellOfExpr(Greatest(Seq(ax0, bx0)), Greatest(Seq(ay0, by0))), lcell))
             val newCond = (Seq(EqualTo(lcell, rcell), intersect) ++ owns ++
               refinement(st, pa, pb, r) ++ rest).reduce(And)
             Project(j.output, Join(lp, rp, Inner, Some(newCond), hint))

@@ -1,6 +1,7 @@
 package graft.skew
 
 import graft.cells.CellScheme
+import graft.cells.CellScheme.{coord, span}
 import graft.geom.Geom
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
@@ -13,7 +14,7 @@ import org.apache.spark.sql.functions._
   * exceeds the budget are split into an `s × s` local subgrid (one-shot,
   * `s` sized so the expected per-subcell product lands under budget). The
   * final join key packs (base cell, subcell) into one Long, so the downstream
-  * plan is still a single equi-join/cogroup — skew handling never adds a
+  * plan is still a single equi-join/keyed reduce — skew handling never adds a
   * shuffle. Min subcell size is clamped to the sampled median object extent
   * (`partition_utils.hpp:226-277` semantics) to bound replication blow-up.
   */
@@ -46,11 +47,6 @@ final case class AdaptiveScheme(base: CellScheme, splits: Map[Long, Int],
     if (i >= 0) splitFactors(i) else 0
   }
 
-  @inline private def subCoord(v: Double, lo: Double, len: Double, s: Int): Int = {
-    val i = math.floor((v - lo) / len).toInt
-    math.max(0, math.min(i, s - 1))
-  }
-
   def ownerKey(x: Double, y: Double): Long = {
     val c = base.cellOf(x, y)
     splitOf(c) match {
@@ -59,8 +55,8 @@ final case class AdaptiveScheme(base: CellScheme, splits: Map[Long, Int],
         val cx = (c % base.nx).toInt; val cy = (c / base.nx).toInt
         val lox = base.extent.xmin + cx * base.cellW
         val loy = base.extent.ymin + cy * base.cellH
-        val sx = subCoord(x, lox, base.cellW / s, s)
-        val sy = subCoord(y, loy, base.cellH / s, s)
+        val sx = coord(x, lox, base.cellW / s, s)
+        val sy = coord(y, loy, base.cellH / s, s)
         (c << SubBits) | (1L + sy.toLong * s + sx)
     }
   }
@@ -76,8 +72,8 @@ final case class AdaptiveScheme(base: CellScheme, splits: Map[Long, Int],
           val lox = base.extent.xmin + cx * base.cellW
           val loy = base.extent.ymin + cy * base.cellH
           val subW = base.cellW / s; val subH = base.cellH / s
-          val sx0 = subCoord(g.xmin, lox, subW, s); val sx1 = subCoord(g.xmax, lox, subW, s)
-          val sy0 = subCoord(g.ymin, loy, subH, s); val sy1 = subCoord(g.ymax, loy, subH, s)
+          val (sx0, sx1) = span(coord(g.xmin, lox, subW, s), coord(g.xmax, lox, subW, s))
+          val (sy0, sy1) = span(coord(g.ymin, loy, subH, s), coord(g.ymax, loy, subH, s))
           var sy = sy0
           while (sy <= sy1) {
             var sx = sx0

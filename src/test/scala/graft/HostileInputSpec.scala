@@ -1,0 +1,135 @@
+package graft
+
+import graft.cells.CellScheme
+import graft.geom.{Extent, Geom}
+import graft.join.SpatialJoins
+import org.apache.spark.sql.{DataFrame, Dataset}
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Hostile inputs through every join route, each checked against the
+  * broadcast nested loop (`broadcastNL`, the oracle): NaN and ±∞
+  * coordinates, inverted rectangles, an empty side, every row in one cell,
+  * and points exactly on cell edges. `intersectJoin` runs with
+  * `broadcastThreshold = 0`, so it always takes its evidence → route path.
+  */
+class HostileInputSpec extends AnyFunSuite {
+  lazy val spark = TestSpark.spark
+  import SpatialJoins._
+
+  private val ext = Extent(0, 100, 0, 100)
+
+  private def ds(gs: Seq[Geom]): Dataset[Geom] = {
+    import spark.implicits._
+    gs.toDS().repartition(3)
+  }
+
+  private def rects(seed: Int, n: Int, off: Long, maxEdge: Double): Seq[Geom] = {
+    val rnd = new scala.util.Random(seed)
+    (0 until n).map { i =>
+      val x = rnd.nextDouble() * 95; val y = rnd.nextDouble() * 95
+      Geom(off + i, x, x + rnd.nextDouble() * maxEdge, y, y + rnd.nextDouble() * maxEdge)
+    }
+  }
+
+  private def pairs(df: DataFrame): Set[(Long, Long)] =
+    df.select("a_id", "b_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+
+  /** Every route's pair set equals the oracle's; returns the oracle size. */
+  private def allRoutesMatch(a: Dataset[Geom], b: Dataset[Geom]): Int = {
+    val want = pairs(broadcastNL(a, b))
+    val routes: Seq[(String, () => DataFrame)] = Seq(
+      "intersectJoin" -> (() => intersectJoin(a, b, broadcastThreshold = 0L)),
+      "gridJoinSweep" -> (() => gridJoinSweep(a, b, CellScheme(ext, 10, 10))),
+      "stripesJoin" -> (() => stripesJoin(a, b, ext, 10)),
+      "sortTileJoin" -> (() => sortTileJoin(a, b, ext, 3, 3)),
+      "binarySplitJoin" -> (() => binarySplitJoin(a, b, ext, 3)),
+      // a 16-pair budget splits the hot cells of these inputs into sub-cells
+      "gridJoinAdaptive" -> (() => gridJoinAdaptive(a, b, CellScheme(ext, 4, 4),
+        budgetPairs = 16, planSampleFraction = 1.0)))
+    routes.foreach { case (name, run) =>
+      val got = pairs(run())
+      assert(got == want, s"$name: ${(got -- want).take(5)} extra, " +
+        s"${(want -- got).take(5)} missing of ${want.size}")
+    }
+    want.size
+  }
+
+  test("NaN coordinates in any position match the oracle on every route") {
+    val nan = Double.NaN
+    val bad = Seq(Geom(900, nan, 50, 40, 60), Geom(901, 40, nan, 40, 60),
+                  Geom(902, 40, 60, nan, 60), Geom(903, 40, 60, 40, nan))
+    val a = ds(rects(1, 300, 0, 8.0) ++ bad)
+    val b = ds(rects(2, 300, 1000, 8.0))
+    assert(graft.skew.AdaptiveCells.plan(a, b, CellScheme(ext, 4, 4), budgetPairs = 16)
+      .splits.nonEmpty)
+    assert(allRoutesMatch(a, b) > 0)
+    assert(allRoutesMatch(b, a) > 0)
+  }
+
+  test("±∞ coordinates match the oracle on every route") {
+    val inf = Double.PositiveInfinity
+    val bad = Seq(Geom(900, -inf, 10, 40, 45), Geom(901, 40, inf, 40, 45),
+                  Geom(902, 40, 45, -inf, 10), Geom(903, 40, 45, 40, inf),
+                  Geom(904, -inf, inf, -inf, inf))
+    val a = ds(rects(3, 300, 0, 8.0) ++ bad)
+    val b = ds(rects(4, 300, 1000, 8.0))
+    assert(allRoutesMatch(a, b) > 0)
+    assert(allRoutesMatch(b, a) > 0)
+  }
+
+  test("inverted rectangles match the oracle on every route") {
+    // an inverted row intersects exactly the rows whose interval spans its
+    // inverted one: (xmin 50, xmax 45) meets b iff b.xmin <= 45 and b.xmax >= 50
+    val bad = Seq(Geom(900, 50, 45, 40, 60), Geom(901, 40, 60, 50, 45),
+                  Geom(902, 50, 45, 50, 45), Geom(903, 30, 29.5, 30, 30))
+    val a = ds(rects(5, 300, 0, 8.0) ++ bad)
+    val b = ds(rects(6, 300, 1000, 8.0) :+ Geom(1900, 0, 100, 0, 100))
+    assert(allRoutesMatch(a, b) > 0)
+    assert(allRoutesMatch(b, a) > 0)
+  }
+
+  test("an empty side matches the oracle (no pairs) on every route") {
+    val full = ds(rects(7, 200, 0, 8.0))
+    val empty = ds(Seq.empty)
+    assert(allRoutesMatch(full, empty) == 0)
+    assert(allRoutesMatch(empty, full) == 0)
+    assert(allRoutesMatch(empty, empty) == 0)
+  }
+
+  test("every row in one cell matches the oracle on every route") {
+    // 600 rows a side in one grid cell: the sweep route's cell takes the
+    // STR-indexed loop (≥ IndexMinRows on both sides)
+    val rnd = new scala.util.Random(8)
+    def tiny(off: Long) = (0 until 600).map { i =>
+      val x = 51 + rnd.nextDouble() * 3; val y = 51 + rnd.nextDouble() * 3
+      Geom(off + i, x, x + rnd.nextDouble() * 2, y, y + rnd.nextDouble() * 2)
+    }
+    assert(allRoutesMatch(ds(tiny(0)), ds(tiny(1000))) > 0)
+  }
+
+  test("the STR-indexed cell loop matches the oracle on NaN, ±∞ and inverted rows") {
+    val nan = Double.NaN; val inf = Double.PositiveInfinity
+    val bad = Seq(Geom(900, nan, 50, 40, 60), Geom(901, 40, nan, 40, 60),
+                  Geom(902, 40, 60, nan, 60), Geom(903, 40, 60, 40, nan),
+                  Geom(904, -inf, 10, 40, 45), Geom(905, 40, 45, 40, inf),
+                  Geom(906, 50, 45, 40, 60), Geom(907, 40, 60, 50, 45))
+    val as = rects(9, 600, 0, 10.0) ++ bad
+    val bs = rects(10, 600, 1000, 10.0) ++ bad.map(g => g.copy(id = g.id + 1000))
+    assert(math.min(as.size, bs.size) >= IndexMinRows)
+    def cells(gs: Seq[Geom]) =
+      gs.map(g => graft.join.CellGeom(0L, g.id, g.xmin, g.xmax, g.ymin, g.ymax)).toArray
+    val got = joinCellOwned(cells(as), cells(bs), (_, _) => true)
+      .map(p => (p.a_id, p.b_id)).toSet
+    val want = pairs(broadcastNL(ds(as), ds(bs)))
+    assert(got == want, s"${(got -- want).take(5)} extra, ${(want -- got).take(5)} missing")
+  }
+
+  test("points and rectangles exactly on cell edges match the oracle on every route") {
+    val pts = for (i <- 0 to 10; j <- 0 to 10) yield Geom.point(i * 11 + j, i * 10.0, j * 10.0)
+    val boxes = for (i <- 0 until 5; j <- 0 until 5)
+      yield Geom(1000 + i * 5 + j, i * 20.0, i * 20.0 + 10, j * 20.0, j * 20.0 + 10)
+    assert(allRoutesMatch(ds(pts), ds(boxes)) > 0)
+    assert(allRoutesMatch(ds(boxes), ds(pts)) > 0)
+    assert(allRoutesMatch(ds(boxes), ds(boxes)) > 0)
+  }
+}

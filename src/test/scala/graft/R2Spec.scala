@@ -270,7 +270,7 @@ class R2OpsSpec extends AnyFunSuite {
     val y = SpatialJoins.gridJoin(a, b, graft.cells.CellScheme.stripesY(ext, 16)).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(x == y && auto == x)
-    assert(Set('x', 'y').contains(SpatialJoins.chooseStripeAxis(a, b, ext, 16)))
+    assert(Set('x', 'y').contains(SpatialJoins.chooseStripeAxis(SpatialJoins.evidenceOf(a, b), ext, 16)))
   }
 
   test("parentCell nests children exactly (coarsen == cellOf on the coarse grid)") {

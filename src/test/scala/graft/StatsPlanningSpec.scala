@@ -3,6 +3,7 @@ package graft
 import graft.geom.Geom
 import graft.join.SpatialJoins
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.functions.{col, lit, pmod}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Strategy choice must not pay data passes (r2 verdict: `intersectJoin`
@@ -116,6 +117,34 @@ class StatsPlanningSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val want = SpatialJoins.broadcastNL(a, b)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(got == want && want.nonEmpty)
+  }
+
+  test("stripesJoinAuto on a large estimate measures ONCE for both axis and route") {
+    import spark.implicits._
+    // a Filter keeps its child's sizeInBytes: millions of estimated rows,
+    // 400 real ones — past the stats gate that turns on route evidence
+    def big(off: Long, mx: Long, my: Long): org.apache.spark.sql.Dataset[Geom] =
+      spark.range(0L, 10000000L, 1L, 4).filter(col("id") < 400)
+        .select((col("id") + off).as("id"),
+          pmod(col("id") * mx, lit(90L)).cast("double").as("xmin"),
+          (pmod(col("id") * mx, lit(90L)) + 5).cast("double").as("xmax"),
+          pmod(col("id") * my, lit(90L)).cast("double").as("ymin"),
+          (pmod(col("id") * my, lit(90L)) + 5).cast("double").as("ymax"))
+        .as[Geom]
+    val a = big(0, 37, 53); val b = big(1000, 29, 61)
+    assert(SpatialJoins.estRowsFromStats(a) >= 1e6)
+    val oneAggregation = jobsDuring { SpatialJoins.evidenceOf(a, b) }
+    var planned: org.apache.spark.sql.DataFrame = null
+    val jobs = jobsDuring {
+      planned = SpatialJoins.stripesJoinAuto(a, b, graft.geom.Extent(0, 100, 0, 100), 16)
+    }
+    // the axis choice and the route read the same single aggregation
+    assert(oneAggregation >= 1 && jobs == oneAggregation,
+      s"stripesJoinAuto planning ran $jobs job(s); one aggregation is $oneAggregation")
+    val want = SpatialJoins.broadcastNL(a, b)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val got = planned.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got == want && want.nonEmpty)
   }
 
