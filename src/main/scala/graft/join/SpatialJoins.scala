@@ -4,6 +4,7 @@ import graft.cells.CellScheme
 import graft.geom.{Extent, Geom}
 import graft.geom.SqlOrder.le
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Abs, Expression, Greatest, Subtract}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
@@ -26,11 +27,11 @@ private[graft] final case class KeyedGeom(key: Long, side: Int, id: Long,
                                           xmin: Double, xmax: Double,
                                           ymin: Double, ymax: Double)
 
-/** What ONE planning aggregation ([[SpatialJoins.evidenceOf]]) measures
+/** What the ONE planning job ([[SpatialJoins.evidenceOf]]) measures
   * about a join's two inputs; route and stripe-axis choice read nothing else.
   *
-  *  - `extent`: the joint extent, None when both inputs are empty (the
-  *    min/max aggregates return nulls).
+  *  - `extent`: the joint extent, None when both inputs are empty (no
+  *    non-null coordinate to take a min or max of).
   *  - `aMaxEdge` / `bMaxEdge`: `max(|xmax − xmin|, |ymax − ymin|)` over the
   *    side's rows; NaN for an empty side. A side whose max edge is 0 is a
   *    POINT side. abs() so an INVERTED row (xmax < xmin — it meets only
@@ -40,10 +41,15 @@ private[graft] final case class KeyedGeom(key: Long, side: Int, id: Long,
   *    would.
   *  - `meanW` / `meanH`: mean signed edge per axis over both sides (0 when
   *    both are empty).
+  *  - `occupiedA` / `occupiedB`: the side's occupied cells ([[Occupancy]]:
+  *    size and fill of its bitmap F), when the pass was asked to rasterize
+  *    that side and every row of it is finite.
   */
 final case class JoinEvidence(extent: Option[Extent], countA: Long, countB: Long,
                               aMaxEdge: Double, bMaxEdge: Double,
-                              meanW: Double, meanH: Double) {
+                              meanW: Double, meanH: Double,
+                              occupiedA: Option[Occupancy] = None,
+                              occupiedB: Option[Occupancy] = None) {
   def aPoints: Boolean = aMaxEdge == 0.0
   def bPoints: Boolean = bMaxEdge == 0.0
   /** Rows of the larger side per cell of `s`. */
@@ -51,6 +57,57 @@ final case class JoinEvidence(extent: Option[Extent], countA: Long, countB: Long
 }
 
 object JoinEvidence {
+  /** A share of the evidence — one partition's, or merged — with SQL
+    * aggregate semantics: nulls are skipped, and NaN orders above every
+    * value ([[graft.geom.SqlOrder]]). `raster` holds the partition's
+    * occupied cells when its side was asked to rasterize them and all its
+    * coordinates are finite.
+    */
+  private[join] final class Part(val side: Int) extends Serializable {
+    var rows = 0L
+    /** min xmin, max xmax, min ymin, max ymax, max edge; and whether each was seen. */
+    val ext = new Array[Double](5)
+    val seen = new Array[Boolean](5)
+    var sumW = 0.0; var nW = 0L
+    var sumH = 0.0; var nH = 0L
+    var raster: Option[Raster] = None
+
+    def extend(i: Int, v: Double): Unit = {
+      if (!seen(i) || (if (i == 0 || i == 2) le(v, ext(i)) else le(ext(i), v))) ext(i) = v
+      seen(i) = true
+    }
+
+    def absorb(o: Part): Unit = {
+      rows += o.rows
+      for (i <- 0 until 5 if o.seen(i)) extend(i, o.ext(i))
+      sumW += o.sumW; nW += o.nW; sumH += o.sumH; nH += o.nH
+    }
+
+    def maxEdge: Double = if (seen(4)) ext(4) else Double.NaN
+  }
+
+  private[join] object Part {
+    /** Reads rows `xmin, xmax, ymin, ymax, edge`; `rasterOf > 0` also
+      * rasterizes this partition as one of `rasterOf` partitions.
+      */
+    def of(rows: Iterator[InternalRow], side: Int, rasterOf: Int): Part = {
+      val p = new Part(side)
+      val raster = if (rasterOf > 0) new Rasterizer(rasterOf) else null
+      rows.foreach { r =>
+        p.rows += 1
+        var i = 0
+        while (i < 5) { if (!r.isNullAt(i)) p.extend(i, r.getDouble(i)); i += 1 }
+        if (!r.isNullAt(0) && !r.isNullAt(1)) { p.sumW += r.getDouble(1) - r.getDouble(0); p.nW += 1 }
+        if (!r.isNullAt(2) && !r.isNullAt(3)) { p.sumH += r.getDouble(3) - r.getDouble(2); p.nH += 1 }
+        // a row with a null coordinate meets no row, so S's occupancy skips it
+        if (raster != null && !r.isNullAt(0) && !r.isNullAt(1) && !r.isNullAt(2) && !r.isNullAt(3))
+          raster.add(r.getDouble(0), r.getDouble(1), r.getDouble(2), r.getDouble(3))
+      }
+      if (raster != null) p.raster = raster.result()
+      p
+    }
+  }
+
   /** A row's edge, `max(|xmax − xmin|, |ymax − ymin|)`, as the Catalyst
     * expression the evidence aggregation takes its per-side max over.
     */
@@ -109,6 +166,8 @@ object Route {
   * baseline's `.distinct()`, `PartitionedSpatialJoin.scala:258-264`).
   */
 object SpatialJoins {
+
+  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass.getName.stripSuffix("$"))
 
   val intersectPred: Column =
     col("a_xmin") <= col("b_xmax") && col("a_xmax") >= col("b_xmin") &&
@@ -173,26 +232,48 @@ object SpatialJoins {
     */
   private[graft] val DenseCellRows = 256.0
 
-  /** The ONE planning aggregation: extent, per-side counts, per-side max
-    * edge and per-axis mean edge of both inputs, fused into a single job.
+  /** The ONE planning job: extent, per-side counts, per-side max edge and
+    * per-axis mean edge of both inputs. Each input partition folds its rows
+    * into a [[JoinEvidence.Part]] and the driver merges them — one stage,
+    * no exchange.
     */
-  def evidenceOf(a: Dataset[Geom], b: Dataset[Geom]): JoinEvidence = {
-    val u = a.toDF().withColumn("s", lit(0L))
-      .unionByName(b.toDF().withColumn("s", lit(1L)))
+  def evidenceOf(a: Dataset[Geom], b: Dataset[Geom]): JoinEvidence =
+    measure(a, b, rasterA = false, rasterB = false)
+
+  /** [[evidenceOf]] that also maps the occupied cells ([[Occupancy]]) of
+    * the side Catalyst stats estimate smaller, in the same job.
+    */
+  private[graft] def evidenceWithOccupancy(a: Dataset[Geom], b: Dataset[Geom]): JoinEvidence = {
+    val aSmaller = estRowsFromStats(a) <= estRowsFromStats(b)
+    measure(a, b, rasterA = aSmaller, rasterB = !aSmaller)
+  }
+
+  private def measure(a: Dataset[Geom], b: Dataset[Geom], rasterA: Boolean,
+                      rasterB: Boolean): JoinEvidence = {
     val Seq(x0, x1, y0, y1) =
       Seq("xmin", "xmax", "ymin", "ymax").map(c => Bridge.expression(col(c)))
-    val edge = Bridge.column(JoinEvidence.edge(x0, x1, y0, y1))
-    val r = u.agg(min("xmin"), max("xmax"), min("ymin"), max("ymax"),
-      count(when(col("s") === 0L, lit(1))), count(lit(1)),
-      max(when(col("s") === 0L, edge)), max(when(col("s") === 1L, edge)),
-      avg(col("xmax") - col("xmin")), avg(col("ymax") - col("ymin"))).head()
-    def orElse(i: Int, d: Double): Double = if (r.isNullAt(i)) d else r.getDouble(i)
-    val ca = r.getLong(4)
+    def parts(d: Dataset[Geom], side: Int, raster: Boolean) = {
+      val rows = d.toDF().select(col("xmin"), col("xmax"), col("ymin"), col("ymax"),
+        Bridge.column(JoinEvidence.edge(x0, x1, y0, y1))).queryExecution.toRdd
+      val n = if (raster) rows.getNumPartitions else 0
+      rows.mapPartitions(it => Iterator(JoinEvidence.Part.of(it, side, n)))
+    }
+    val ps = parts(a, 0, rasterA).union(parts(b, 1, rasterB)).collect()
+    def merged(f: JoinEvidence.Part => Boolean) = {
+      val m = new JoinEvidence.Part(-1)
+      ps.filter(f).foreach(m.absorb)
+      m
+    }
+    val (pa, pb, all) = (merged(_.side == 0), merged(_.side == 1), merged(_ => true))
+    def occupied(side: Int, asked: Boolean) =
+      if (asked) Occupancy.merge(ps.filter(_.side == side).map(_.raster).toSeq) else None
     JoinEvidence(
-      if (r.isNullAt(0)) None
-      else Some(Extent(r.getDouble(0), r.getDouble(1), r.getDouble(2), r.getDouble(3))),
-      ca, r.getLong(5) - ca, orElse(6, Double.NaN), orElse(7, Double.NaN),
-      orElse(8, 0.0), orElse(9, 0.0))
+      if (all.seen.take(4).contains(false)) None
+      else Some(Extent(all.ext(0), all.ext(1), all.ext(2), all.ext(3))),
+      pa.rows, pb.rows, pa.maxEdge, pb.maxEdge,
+      if (all.nW == 0) 0.0 else all.sumW / all.nW,
+      if (all.nH == 0) 0.0 else all.sumH / all.nH,
+      occupied(0, rasterA), occupied(1, rasterB))
   }
 
   /** [[evidenceOf]] for inputs of ≳1M estimated rows (Catalyst stats, no
@@ -230,8 +311,12 @@ object SpatialJoins {
     * Planning cost (the r2 verdict flagged an eager `a.count(); b.count()`
     * here — two full input passes before any join work): the broadcast
     * decision reads Catalyst statistics (no job at all); only the grid
-    * path runs the ONE evidence aggregation, which also gives the joint
-    * extent the grid needs.
+    * path runs the ONE evidence job, which also gives the joint extent the
+    * grid needs and maps the occupied cells of the side stats estimate
+    * smaller. The other side then drops its rows that touch none
+    * ([[dropUnoccupied]]) before any route replicates or shuffles it; the
+    * pair set is unchanged. One INFO line logs the route, the counts and
+    * the occupancy.
     */
   def intersectJoin(a: Dataset[Geom], b: Dataset[Geom],
                     broadcastThreshold: Long = 10000L): DataFrame = {
@@ -249,14 +334,36 @@ object SpatialJoins {
     else {
       // stats can OVER-estimate filtered scans, so both inputs may be empty
       // here: the evidence then has no extent and routes to broadcastNL
-      val ev = evidenceOf(a, b)
+      val ev = evidenceWithOccupancy(a, b)
       // when the grid cap binds (rows ≫ 16·maxN²) cells run dense and the
       // route turns to the sweep
       val s = CellScheme.forSize(ev.extent.getOrElse(Extent(0, 0, 0, 0)),
         math.max(ev.countA, ev.countB), targetPerCell = 16, maxN = 8192)
-      planRoute(a, b, s, route(ev, s))
+      val r = route(ev, s)
+      if (log.isInfoEnabled) {
+        val occ = Seq("a" -> ev.occupiedA, "b" -> ev.occupiedB).collectFirst {
+          case (side, Some(o)) =>
+            f"occupancy of $side ${o.cells} cells, fill ${o.fill}%.4f, filter ${if (o.selective) "on" else "off"}"
+        }
+        log.info(s"intersectJoin: route $r, rows ${ev.countA} x ${ev.countB}, " +
+          occ.getOrElse("no occupancy, filter off"))
+      }
+      planRoute(dropUnoccupied(a, ev.occupiedB, ev.aPoints),
+        dropUnoccupied(b, ev.occupiedA, ev.bPoints), s, r)
     }
   }
+
+  /** The rows of `d` that touch some occupied cell of the other side; all
+    * of `d` when there is no selective occupancy. A point side is probed
+    * at `(xmin, ymin)`, the point every route takes it for, so the scan
+    * reads no `xmax`/`ymax`.
+    */
+  private[graft] def dropUnoccupied(d: Dataset[Geom], occ: Option[Occupancy],
+                                    points: Boolean): Dataset[Geom] =
+    occ.filter(_.selective).fold(d) { o =>
+      val cols = if (points) Seq("xmin", "xmin", "ymin", "ymin") else Seq("xmin", "xmax", "ymin", "ymax")
+      d.filter(Bridge.column(OccupancyProbe(o, cols.map(c => Bridge.expression(col(c))))))
+    }
 
   // ---- declarative grid PBSM ------------------------------------------------
 
@@ -404,30 +511,46 @@ object SpatialJoins {
     * larger; emits the same (intersect ∧ owns) pair set as [[sweepOwned]].
     */
   private[graft] def strOwned(as: Array[CellGeom], bs: Array[CellGeom],
-                              ownsRef: (Double, Double) => Boolean): Iterator[Pair] = {
-    if (as.isEmpty || bs.isEmpty) return Iterator.empty
-    val buildA = as.length <= bs.length
-    val tree = STRTree.build(if (buildA) as else bs)
-    val probes = if (buildA) bs else as
-    // STREAMING over probes: materializing the whole per-cell pair set would
-    // buffer O(result) Pairs in one task — the per-probe buffer is bounded by
-    // the build side, and the reduce consumer pulls pairs lazily.
-    // ONE buffer + ONE sink closure reused across all probes (the r6 form
-    // allocated an ArrayBuffer and a capturing closure PER PROBE — 10M+
-    // allocations in a dense-stripe task). Safe: Iterator.flatMap exhausts
-    // the returned buffer before the next probe's lambda call refills it.
-    val buf = scala.collection.mutable.ArrayBuffer.empty[Pair]
-    var probe: CellGeom = null
-    val sink: CellGeom => Unit = { g =>
+                              ownsRef: (Double, Double) => Boolean): Iterator[Pair] =
+    if (as.isEmpty || bs.isEmpty) Iterator.empty else new StrProbes(as, bs, ownsRef)
+
+  /** [[strOwned]]'s pairs, STREAMED probe by probe: materializing the whole
+    * per-cell pair set would buffer O(result) Pairs in one task, while one
+    * probe's pairs are bounded by the build side. The iterator owns one
+    * buffer and one sink closure, reused across probes (per-probe ones cost
+    * 10M+ allocations in a dense-stripe task), and refills the buffer only
+    * after handing out every pair in it, so no consumer can see it reused.
+    */
+  private final class StrProbes(as: Array[CellGeom], bs: Array[CellGeom],
+                                ownsRef: (Double, Double) => Boolean) extends Iterator[Pair] {
+    private val buildA = as.length <= bs.length
+    private val tree = STRTree.build(if (buildA) as else bs)
+    private val probes = if (buildA) bs else as
+    private var nextProbe = 0
+    private var probe: CellGeom = null
+    private var buf = new Array[Pair](16)
+    private var n = 0
+    private var i = 0
+    private val sink: CellGeom => Unit = { g =>
       val p = probe
-      if (ownsRef(math.max(p.xmin, g.xmin), math.max(p.ymin, g.ymin)))
-        buf += (if (buildA) Pair(g.id, p.id) else Pair(p.id, g.id))
+      if (ownsRef(math.max(p.xmin, g.xmin), math.max(p.ymin, g.ymin))) {
+        if (n == buf.length) buf = java.util.Arrays.copyOf(buf, 2 * n)
+        buf(n) = if (buildA) Pair(g.id, p.id) else Pair(p.id, g.id)
+        n += 1
+      }
     }
-    probes.iterator.flatMap { p =>
-      buf.clear()
-      probe = p
-      tree.foreachIntersecting(p.xmin, p.xmax, p.ymin, p.ymax)(sink)
-      buf
+    def hasNext: Boolean = {
+      while (i == n && nextProbe < probes.length) {
+        i = 0; n = 0
+        probe = probes(nextProbe); nextProbe += 1
+        tree.foreachIntersecting(probe.xmin, probe.xmax, probe.ymin, probe.ymax)(sink)
+      }
+      i < n
+    }
+    def next(): Pair = {
+      if (!hasNext) throw new NoSuchElementException
+      i += 1
+      buf(i - 1)
     }
   }
 

@@ -7,10 +7,13 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Hostile inputs through every join route, each checked against the
-  * broadcast nested loop (`broadcastNL`, the oracle): NaN and ±∞
-  * coordinates, inverted rectangles, an empty side, every row in one cell,
-  * and points exactly on cell edges. `intersectJoin` runs with
-  * `broadcastThreshold = 0`, so it always takes its evidence → route path.
+  * broadcast nested loop (`broadcastNL`, the oracle) as a multiset of
+  * pairs: NaN and ±∞ coordinates, inverted rectangles, an empty side, every
+  * row in one cell, points exactly on cell edges, duplicate rows, rows
+  * straddling the extent, sparse squares over dense points and one far
+  * outlier. `intersectJoin` runs with `broadcastThreshold = 0`, so it
+  * always takes its evidence → route path, and with it the occupancy
+  * filter.
   */
 class HostileInputSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -31,8 +34,12 @@ class HostileInputSpec extends AnyFunSuite {
     }
   }
 
-  private def pairs(df: DataFrame): Set[(Long, Long)] =
-    df.select("a_id", "b_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+  /** A join's pairs as a multiset (sorted), so a pair emitted twice shows. */
+  private def pairs(df: DataFrame): Vector[(Long, Long)] =
+    df.select("a_id", "b_id").collect().map(r => (r.getLong(0), r.getLong(1))).toVector.sorted
+
+  private def diff(got: Vector[(Long, Long)], want: Vector[(Long, Long)]): String =
+    s"${got.diff(want).take(5)} extra, ${want.diff(got).take(5)} missing of ${want.size}"
 
   /** Every route's pair set equals the oracle's; returns the oracle size. */
   private def allRoutesMatch(a: Dataset[Geom], b: Dataset[Geom]): Int = {
@@ -48,8 +55,7 @@ class HostileInputSpec extends AnyFunSuite {
         budgetPairs = 16, planSampleFraction = 1.0)))
     routes.foreach { case (name, run) =>
       val got = pairs(run())
-      assert(got == want, s"$name: ${(got -- want).take(5)} extra, " +
-        s"${(want -- got).take(5)} missing of ${want.size}")
+      assert(got == want, s"$name: ${diff(got, want)}")
     }
     want.size
   }
@@ -119,9 +125,55 @@ class HostileInputSpec extends AnyFunSuite {
     def cells(gs: Seq[Geom]) =
       gs.map(g => graft.join.CellGeom(0L, g.id, g.xmin, g.xmax, g.ymin, g.ymax)).toArray
     val got = joinCellOwned(cells(as), cells(bs), (_, _) => true)
-      .map(p => (p.a_id, p.b_id)).toSet
+      .map(p => (p.a_id, p.b_id)).toVector.sorted
     val want = pairs(broadcastNL(ds(as), ds(bs)))
-    assert(got == want, s"${(got -- want).take(5)} extra, ${(want -- got).take(5)} missing")
+    assert(got == want, diff(got, want))
+  }
+
+  test("duplicate rows match the oracle on every route") {
+    // the same rows twice (same ids: every pair twice), and copies of them
+    // under new ids
+    val base = rects(11, 200, 0, 8.0)
+    val a = ds(base ++ base ++ base.take(50).map(g => g.copy(id = g.id + 500)))
+    val b = ds(rects(12, 200, 1000, 8.0) ++ base.take(30).map(g => g.copy(id = g.id + 2000)))
+    assert(allRoutesMatch(a, b) > 0)
+    assert(allRoutesMatch(b, a) > 0)
+  }
+
+  test("rows straddling the extent match the oracle on every route") {
+    // the fixed-extent routes clamp these into their edge cells; the
+    // others see a wider extent than the rows inside
+    val straddle = Seq(Geom(900, -5, 5, 40, 45), Geom(901, 95, 105, 40, 45),
+      Geom(902, 40, 45, -5, 5), Geom(903, 40, 45, 95, 130), Geom(904, -20, 120, -20, 120),
+      Geom(905, 110, 115, 110, 115), Geom(906, -30, -25, 50, 52), Geom(907, 99, 100, 99, 100))
+    val a = ds(rects(13, 300, 0, 8.0) ++ straddle)
+    val b = ds(rects(14, 300, 1000, 8.0) ++ straddle.map(g => g.copy(id = g.id + 1000)))
+    assert(allRoutesMatch(a, b) > 0)
+    assert(allRoutesMatch(b, a) > 0)
+  }
+
+  test("sparse squares over dense points match the oracle; the filter drops ≥ 90% of points") {
+    val rnd = new scala.util.Random(15)
+    val pts = ds((0 until 20000).map(i => Geom.point(i, rnd.nextDouble() * 100, rnd.nextDouble() * 100)))
+    val squares = ds(rects(16, 30, 100000, 0.0).map(g => g.copy(xmax = g.xmin + 1, ymax = g.ymin + 1)))
+    assert(allRoutesMatch(pts, squares) > 0)
+    assert(allRoutesMatch(squares, pts) > 0)
+    for ((a, b) <- Seq((pts, squares), (squares, pts))) {
+      val ev = evidenceWithOccupancy(a, b)
+      val occ = ev.occupiedA.orElse(ev.occupiedB)
+      assert(occ.exists(_.selective), s"squares' occupancy: $occ")
+      val kept = dropUnoccupied(pts, occ, points = true).count()
+      assert(kept <= 2000, s"the filter kept $kept of 20000 points ($occ)")
+    }
+  }
+
+  test("one far outlier in the smaller side matches the oracle on every route") {
+    val a = ds(rects(17, 1000, 0, 8.0))
+    val b = ds(rects(18, 100, 1000, 8.0) :+ Geom(1900, 1e12, 1e12 + 1, 1e12, 1e12 + 1))
+    val ev = evidenceWithOccupancy(a, b)
+    assert(ev.occupiedB.isDefined, "b is the side estimated smaller")
+    assert(allRoutesMatch(a, b) > 0)
+    assert(allRoutesMatch(b, a) > 0)
   }
 
   test("points and rectangles exactly on cell edges match the oracle on every route") {

@@ -1,7 +1,8 @@
 package graft
 
+import graft.cells.CellScheme
 import graft.geom.Geom
-import graft.join.SpatialJoins
+import graft.join.{Route, SpatialJoins}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions.{col, lit, pmod}
 import org.scalatest.funsuite.AnyFunSuite
@@ -9,8 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Strategy choice must not pay data passes (r2 verdict: `intersectJoin`
   * eagerly ran `a.count(); b.count()` — two full input scans before any join
   * work). The broadcast decision now reads Catalyst plan statistics (ZERO
-  * Spark jobs); only the grid path runs ONE fused aggregation that computes
-  * the joint extent (needed to size the grid anyway) together with both row
+  * Spark jobs); only the grid path runs ONE evidence job that computes the
+  * joint extent (needed to size the grid anyway) together with both row
   * counts. This spec counts actual jobs via a SparkListener.
   */
 class StatsPlanningSpec extends AnyFunSuite {
@@ -60,22 +61,41 @@ class StatsPlanningSpec extends AnyFunSuite {
     assert(phys.contains("BroadcastNestedLoopJoin"), phys)
   }
 
-  test("grid path runs exactly ONE fused extent+count job, result unchanged") {
-    val a = mk(400, 0); val b = mk(400, 1000)
+  /** intersectJoin's planning on the evidence path runs exactly one job. */
+  private def onePlanningJob(a: org.apache.spark.sql.Dataset[Geom],
+                             b: org.apache.spark.sql.Dataset[Geom]): Unit = {
     var planned: org.apache.spark.sql.DataFrame = null
     val jobs = jobsDuring {
       planned = SpatialJoins.intersectJoin(a, b, broadcastThreshold = 0L)
     }
-    // ONE aggregation action = one pass over each input (AQE materializes
-    // the partial-agg stage as its own job) plus up to two BOUNDED
-    // limit-confirm jobs — the r2-era version ran 3 separate FULL-scan
-    // actions (count, count, extent agg)
-    assert(jobs >= 1 && jobs <= 4,
-      s"grid planning must fuse extent+counts into one action, got $jobs jobs")
+    // the evidence (extent, counts, edges, the smaller side's occupied
+    // cells) is ONE job with one stage and no exchange; a zero threshold
+    // skips the bounded limit-confirm jobs — the r2-era version ran 3
+    // separate FULL-scan actions (count, count, extent agg)
+    assert(jobs == 1, s"planning must run exactly one job, got $jobs jobs")
     val want = SpatialJoins.broadcastNL(a, b)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val got = planned.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got == want && want.nonEmpty)
+  }
+
+  test("grid path runs exactly ONE fused extent+count job, result unchanged") {
+    val a = mk(400, 0); val b = mk(400, 1000)
+    val ev = SpatialJoins.evidenceOf(a, b)
+    assert(SpatialJoins.route(ev, CellScheme.forSize(ev.extent.get, 400, 16, maxN = 8192)) ==
+      Route.Grid)
+    onePlanningJob(a, b)
+  }
+
+  test("point path runs exactly ONE planning job, result unchanged") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(5)
+    val pts = (0 until 2000).map(i => Geom.point(i, rnd.nextDouble() * 95, rnd.nextDouble() * 95)).toDS()
+    val rects = mk(400, 10000)
+    val ev = SpatialJoins.evidenceOf(pts, rects)
+    assert(SpatialJoins.route(ev, CellScheme.forSize(ev.extent.get, 2000, 16, maxN = 8192)) ==
+      Route.PointsA)
+    onePlanningJob(pts, rects)
   }
 
   test("scheme sampling plans from stats: no full count() pass before the sample") {

@@ -4,7 +4,8 @@ import org.scalacheck.{Gen, Prop, Properties, Test}
 
 /** STR-packed per-cell index vs brute force, and the STR-indexed owned join
   * vs the plane sweep (they must emit identical pair sets — the cogroup
-  * switch between them is purely a cost decision).
+  * switch between them is purely a cost decision), also when two STR
+  * iterators are read in alternation.
   */
 object STRProps extends Properties("str") {
 
@@ -38,5 +39,21 @@ object STRProps extends Properties("str") {
       val str = SpatialJoins.strOwned(as.toArray, bs.toArray, owns)
         .map(p => (p.a_id, p.b_id)).toVector.sorted
       str == sweep
+    }
+
+  property("two strOwned iterators read in alternation == sweepOwned") =
+    Prop.forAll(Gen.listOfN(100, geomGen), Gen.listOfN(100, geomGen), Gen.listOfN(100, geomGen)) {
+      (as, bs, cs) =>
+        val owns = (rx: Double, ry: Double) => (rx + ry) % 2.0 < 1.0
+        def sweep(xs: List[CellGeom], ys: List[CellGeom]) =
+          SpatialJoins.sweepOwned(xs.toArray, ys.toArray, owns).map(p => (p.a_id, p.b_id)).toVector.sorted
+        val (i1, i2) = (SpatialJoins.strOwned(as.toArray, bs.toArray, owns),
+                        SpatialJoins.strOwned(as.toArray, cs.toArray, owns))
+        val (o1, o2) = (Vector.newBuilder[(Long, Long)], Vector.newBuilder[(Long, Long)])
+        while (i1.hasNext || i2.hasNext) {
+          if (i1.hasNext) { val p = i1.next(); o1 += ((p.a_id, p.b_id)) }
+          if (i2.hasNext) { val p = i2.next(); o2 += ((p.a_id, p.b_id)) }
+        }
+        o1.result().sorted == sweep(as, bs) && o2.result().sorted == sweep(as, cs)
     }
 }
