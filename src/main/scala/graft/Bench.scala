@@ -160,7 +160,7 @@ object Bench {
     def bsp()   = time { SpatialJoins.binarySplitJoin(a, b, ext, 9).count() }
     // SAME base grid as the sweep row (a different base grid would conflate
     // the gate with grid choice). The concentration gate limits splits to
-    // the few dominant gaussian-center cells (Tune adaptplan: 43 of ~19.6k
+    // the few dominant gaussian-center cells (measured: 43 of ~19.6k
     // occupied at 10M — each holding > 4·parallelism× the balanced share;
     // the r6 per-cell median clamp re-enables these, where r5's global
     // clamp vetoed them), so the row's premium over the sweep is the

@@ -777,12 +777,9 @@ object SpatialJoins {
       // MEASURED occupied-cell mean the planning aggregation already
       // computed (the Catalyst byte-stats estimate sits exactly on the
       // dense-cell boundary for the bench workloads and routes dense cells
-      // into the quadratic SMJ loop); stats remain the fallback when the
-      // planner ran without counts. Every branch emits the identical pair set.
-      val perCellEst =
-        if (scheme.perCellMean >= 0.0) scheme.perCellMean
-        else math.max(estRowsFromStats(a), estRowsFromStats(b)) / base.numCells.toDouble
-      if (perCellEst > DenseCellRows) gridJoinSweep(a, b, base) else gridJoin(a, b, base)
+      // into the quadratic SMJ loop). Every branch emits the identical pair set.
+      if (scheme.perCellMean > DenseCellRows) gridJoinSweep(a, b, base)
+      else gridJoin(a, b, base)
     } else {
       // declarative two-level replication + the keyed reduce — the map side
       // stays in whole-stage codegen
@@ -893,8 +890,7 @@ object SpatialJoins {
     * in O(log(extent/r0)) rounds with bounded driver work.
     */
   def knnJoinWithRounds(a: Dataset[Geom], b: Dataset[Geom], extent: Extent, k: Int,
-                        bCountHint: Long = -1L,
-                        reuseBRep: Boolean = true): (DataFrame, Int) = {
+                        bCountHint: Long = -1L): (DataFrame, Int) = {
     val spark = a.sparkSession
     import org.apache.spark.sql.expressions.Window
     // the static b side is scanned in every ring-expansion round — persist it.
@@ -912,26 +908,24 @@ object SpatialJoins {
     // same scheme (schemes repeat as soon as the ring-driven maxN cap stops
     // binding) reads the b side exchange-FREE — without this each round
     // re-replicated AND re-shuffled the full static corpus (the dominant
-    // per-round cost at scale; the a-side `remaining` shrinks geometrically).
-    // `reuseBRep = false` restores the per-round rebuild for A/B evidence
-    // (Tune `knn` mode reports shuffle bytes both ways). Only the CURRENT
-    // scheme's replica is kept: r doubles monotonically, so once the
-    // ring-driven maxN cap binds, every later round's scheme is new and a
-    // changed scheme can never recur — caching them all would accumulate a
-    // dead full-corpus replica per tail round (48-round worst case).
+    // per-round cost at scale; the a-side `remaining` shrinks geometrically;
+    // the per-round rebuild shuffled 145 MB on a run where this shuffles
+    // 91 MB). Only the CURRENT scheme's replica is kept: r doubles
+    // monotonically, so once the ring-driven maxN cap binds, every later
+    // round's scheme is new and a changed scheme can never recur — caching
+    // them all would accumulate a dead full-corpus replica per tail round
+    // (48-round worst case).
     var bRepScheme: CellScheme = null
     var bRepCached: DataFrame = null
-    def bRep(s: CellScheme): DataFrame =
-      if (!reuseBRep) bReplicated(bCached, s)
-      else {
-        if (s != bRepScheme) {
-          if (bRepCached != null) bRepCached.unpersist(blocking = false)
-          bRepScheme = s
-          bRepCached = bReplicated(bCached, s).repartition(col("b_cell"))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        }
-        bRepCached
+    def bRep(s: CellScheme): DataFrame = {
+      if (s != bRepScheme) {
+        if (bRepCached != null) bRepCached.unpersist(blocking = false)
+        bRepScheme = s
+        bRepCached = bReplicated(bCached, s).repartition(col("b_cell"))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       }
+      bRepCached
+    }
     // counting the persisted side is one cheap action and primes the cache —
     // callers should NOT pre-count with a second scan of the source
     val bCount = if (bCountHint >= 0) bCountHint else bCached.count()

@@ -1,7 +1,7 @@
 package graft.plans
 
 import graft.cells.CellScheme
-import graft.functions.STIntersects
+import graft.functions.{STContains, STDWithin, STIntersects, STWithin, SimHash64}
 import graft.geom.Extent
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
@@ -83,9 +83,9 @@ object SpatialJoinRule extends Rule[LogicalPlan] with PredicateHelper {
   private def matchSpatial(e: Expression): Option[(Expression, Seq[Expression], Double)] =
     e match {
       case st: STIntersects => Some((st, st.children, 0.0))
-      case st: graft.functions.STWithin => Some((st, st.children, 0.0))
-      case st: graft.functions.STContains => Some((st, st.children, 0.0))
-      case st: graft.functions.STDWithin if st.children(8).foldable =>
+      case st: STWithin => Some((st, st.children, 0.0))
+      case st: STContains => Some((st, st.children, 0.0))
+      case st: STDWithin if st.children(8).foldable =>
         val r = st.children(8).eval(null) match {
           case d: Double => d
           case f: Float => f.toDouble
@@ -103,13 +103,13 @@ object SpatialJoinRule extends Rule[LogicalPlan] with PredicateHelper {
   private def refinement(st: Expression, a: Seq[Expression], b: Seq[Expression],
                          r: Double): Option[Expression] = st match {
     case _: STIntersects => None
-    case _: graft.functions.STWithin =>
+    case _: STWithin =>
       Some(Seq(GreaterThanOrEqual(a(0), b(0)), LessThanOrEqual(a(1), b(1)),
                GreaterThanOrEqual(a(2), b(2)), LessThanOrEqual(a(3), b(3))).reduce(And))
-    case _: graft.functions.STContains =>
+    case _: STContains =>
       Some(Seq(GreaterThanOrEqual(b(0), a(0)), LessThanOrEqual(b(1), a(1)),
                GreaterThanOrEqual(b(2), a(2)), LessThanOrEqual(b(3), a(3))).reduce(And))
-    case _: graft.functions.STDWithin =>
+    case _: STDWithin =>
       val dx = Greatest(Seq(Subtract(b(0), a(1)), Subtract(a(0), b(1)), lit(0.0)))
       val dy = Greatest(Seq(Subtract(b(2), a(3)), Subtract(a(2), b(3)), lit(0.0)))
       // sqrt form, bit-identical to SpatialJoins.minDistCol / the oracle SQL
@@ -177,21 +177,24 @@ object SpatialJoinRule extends Rule[LogicalPlan] with PredicateHelper {
 }
 
 /** Installs the graft SQL surface on an existing session (idempotent):
-  * `st_intersects` + the spatial-join rewrite rule. Also usable through
+  * the SQL functions + the spatial-join rewrite rule. Also usable through
   * `SparkSessionExtensions` at session build time via [[GraftExtensions]].
   */
 object GraftSql {
+  /** The ONE table of SQL functions (name, expression class, builder) that
+    * both [[install]] and [[GraftExtensions]] register.
+    */
+  private[plans] val functions: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
+    ("st_intersects", classOf[STIntersects], STIntersects(_)),
+    ("st_within", classOf[STWithin], STWithin(_)),
+    ("st_contains", classOf[STContains], STContains(_)),
+    ("st_dwithin", classOf[STDWithin], STDWithin(_)),
+    ("simhash64", classOf[SimHash64], exprs => SimHash64(exprs.head)))
+
   def install(spark: SparkSession): SparkSession = {
-    org.apache.spark.sql.graftbridge.Bridge.registerFunction(
-      spark, "st_intersects", exprs => STIntersects(exprs))
-    org.apache.spark.sql.graftbridge.Bridge.registerFunction(
-      spark, "st_within", exprs => graft.functions.STWithin(exprs))
-    org.apache.spark.sql.graftbridge.Bridge.registerFunction(
-      spark, "st_contains", exprs => graft.functions.STContains(exprs))
-    org.apache.spark.sql.graftbridge.Bridge.registerFunction(
-      spark, "st_dwithin", exprs => graft.functions.STDWithin(exprs))
-    org.apache.spark.sql.graftbridge.Bridge.registerFunction(
-      spark, "simhash64", exprs => graft.functions.SimHash64(exprs.head))
+    functions.foreach { case (name, _, build) =>
+      org.apache.spark.sql.graftbridge.Bridge.registerFunction(spark, name, build)
+    }
     val extra = spark.experimental.extraOptimizations
     if (!extra.contains(SpatialJoinRule))
       spark.experimental.extraOptimizations = extra :+ SpatialJoinRule
@@ -206,25 +209,9 @@ object GraftSql {
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit = {
     e.injectOptimizerRule(_ => SpatialJoinRule)
-    e.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("st_intersects"),
-      new ExpressionInfo(classOf[STIntersects].getName, "st_intersects"),
-      (exprs: Seq[Expression]) => STIntersects(exprs)))
-    e.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("st_within"),
-      new ExpressionInfo(classOf[graft.functions.STWithin].getName, "st_within"),
-      (exprs: Seq[Expression]) => graft.functions.STWithin(exprs)))
-    e.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("st_contains"),
-      new ExpressionInfo(classOf[graft.functions.STContains].getName, "st_contains"),
-      (exprs: Seq[Expression]) => graft.functions.STContains(exprs)))
-    e.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("st_dwithin"),
-      new ExpressionInfo(classOf[graft.functions.STDWithin].getName, "st_dwithin"),
-      (exprs: Seq[Expression]) => graft.functions.STDWithin(exprs)))
-    e.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("simhash64"),
-      new ExpressionInfo(classOf[graft.functions.SimHash64].getName, "simhash64"),
-      (exprs: Seq[Expression]) => graft.functions.SimHash64(exprs.head)))
+    GraftSql.functions.foreach { case (name, cls, build) =>
+      e.injectFunction((org.apache.spark.sql.catalyst.FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name), build))
+    }
   }
 }

@@ -18,11 +18,12 @@ import org.apache.spark.sql.functions._
   * shuffle. Min subcell size is clamped to the sampled median object extent
   * (`partition_utils.hpp:226-277` semantics) to bound replication blow-up.
   */
-/** `perCellMean` (optional, set by [[AdaptiveCells.plan]]): mean occupied-cell
-  * population per side, measured by the planning aggregation — the zero-splits
-  * fallthrough routes its inner loop on it (sweep/STR for dense cells,
-  * declarative SMJ otherwise) instead of re-deriving a borderline estimate
-  * from Catalyst byte statistics.
+/** `perCellMean`: mean occupied-cell population of the larger side,
+  * measured by the planning aggregation. [[AdaptiveCells.plan]] always sets
+  * it (≥ 0); the zero-splits fallthrough of `gridJoinAdaptive` routes its
+  * inner loop on it (sweep/STR for dense cells, declarative SMJ otherwise),
+  * never on Catalyst statistics. Schemes built by hand keep the unused
+  * default.
   */
 final case class AdaptiveScheme(base: CellScheme, splits: Map[Long, Int],
                                 perCellMean: Double = -1.0) {
@@ -91,6 +92,14 @@ final case class AdaptiveScheme(base: CellScheme, splits: Map[Long, Int],
 
 object AdaptiveCells {
 
+  /** Upper bound on a hot cell's split factor `s` (an s×s subgrid). */
+  private val MaxSplit = 32
+
+  /** A cell is hot when its pair product exceeds 1/(SpreadFactor ·
+    * parallelism) of the total (see [[plan]]).
+    */
+  private val SpreadFactor = 4.0
+
   /** Plan splits from per-cell counts: a hot cell gets an s×s subgrid with
     * s ≈ (|A|·|B| / budget)^(1/4) (each side shrinks ~s², the product ~s⁴
     * under uniformity), clamped by the cell's own MEDIAN object size so a
@@ -99,7 +108,7 @@ object AdaptiveCells {
     *
     * "Hot" is a CONCENTRATION criterion, not an absolute one: a cell is
     * split only when its pair product exceeds
-    * `sumProd / (spreadFactor · parallelism)` — i.e. the cell alone holds
+    * `sumProd / (SpreadFactor · parallelism)` — i.e. the cell alone holds
     * more work than a balanced schedule would hand one worker, so leaving it
     * whole serializes the join (the reference splits to fix *skew*,
     * `partition_multi.hpp:106-189`, not density). On evenly dense inputs many
@@ -116,8 +125,8 @@ object AdaptiveCells {
     * local arithmetic).
     */
   def plan(a: Dataset[Geom], b: Dataset[Geom], base: CellScheme,
-           budgetPairs: Long = 4L * 1024 * 1024, maxSplit: Int = 32,
-           sampleFraction: Double = 1.0, spreadFactor: Double = 4.0): AdaptiveScheme = {
+           budgetPairs: Long = 4L * 1024 * 1024,
+           sampleFraction: Double = 1.0): AdaptiveScheme = {
     import a.sparkSession.implicits._
     // ONE fused planning aggregation: both (sampled) inputs are tagged with
     // a side bit, replicated to their cells, and counted conditionally in a
@@ -126,7 +135,7 @@ object AdaptiveCells {
     // pays both planning aggregations" verdict note). The replication is the
     // DECLARATIVE withCells explode (whole-stage codegen) — the r4 typed
     // flatMap decoded/re-encoded every row and made the planning pass cost
-    // ~2 s of the zero-splits path's 5.3 s at 10M (Tune-measured; the gate's
+    // ~2 s of the zero-splits path's 5.3 s at 10M (measured; the gate's
     // whole point is that this pass is the only premium on even density).
     // The aggregation carries COUNTS ONLY; the object-size split clamp reads
     // per-cell extent MEDIANS from a second bounded pass that runs only when
@@ -235,7 +244,7 @@ object AdaptiveCells {
     // per-worker share of total candidate work — a cell below the share can
     // never be the straggler, so splitting it buys nothing
     val splitThreshold =
-      math.max(budgetPairs.toDouble, sumProd / (spreadFactor * parallelism))
+      math.max(budgetPairs.toDouble, sumProd / (SpreadFactor * parallelism))
     val counts = overThreshold(splitThreshold)
     if (counts.isEmpty) return AdaptiveScheme(base, Map.empty, perCellMean)
     // split clamp: a subcell must stay ≥ ~2 MEDIAN object extents OF THE
@@ -249,7 +258,7 @@ object AdaptiveCells {
     // (cap 1 — split vetoed) while the majority is tiny and splits fine; the
     // median tracks the majority and only vetoes when most residents really
     // span the cell. Computed in ONE extra bounded aggregation filtered to
-    // the over-threshold cells (≲ spreadFactor·parallelism of them by
+    // the over-threshold cells (≲ SpreadFactor·parallelism of them by
     // construction) — the zero-splits path never reaches this job.
     // sCap < 2 means the cell is already ~2 median extents: no split at all.
     val hotCells = counts.map(_.getLong(0)).toSeq
@@ -263,7 +272,7 @@ object AdaptiveCells {
       val (mw, mh) = med.getOrElse(r.getLong(0), (1e-12, 1e-12))
       val sCapW = math.max(1, (base.cellW / (2 * math.max(mw, 1e-12))).toInt)
       val sCapH = math.max(1, (base.cellH / (2 * math.max(mh, 1e-12))).toInt)
-      val sCap = math.min(maxSplit, math.min(sCapW, sCapH))
+      val sCap = math.min(MaxSplit, math.min(sCapW, sCapH))
       val prod = r.getLong(1) * scaleA * (r.getLong(2) * scaleB)
       val s = math.ceil(math.pow(prod / budgetPairs, 0.25)).toInt + 1
       r.getLong(0) -> math.min(s, sCap)

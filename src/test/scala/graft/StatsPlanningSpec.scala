@@ -4,6 +4,7 @@ import graft.cells.CellScheme
 import graft.geom.Geom
 import graft.join.{Route, SpatialJoins}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions.{col, lit, pmod}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -61,17 +62,18 @@ class StatsPlanningSpec extends AnyFunSuite {
     assert(phys.contains("BroadcastNestedLoopJoin"), phys)
   }
 
-  /** intersectJoin's planning on the evidence path runs exactly one job. */
-  private def onePlanningJob(a: org.apache.spark.sql.Dataset[Geom],
-                             b: org.apache.spark.sql.Dataset[Geom]): Unit = {
-    var planned: org.apache.spark.sql.DataFrame = null
-    val jobs = jobsDuring {
-      planned = SpatialJoins.intersectJoin(a, b, broadcastThreshold = 0L)
-    }
+  /** Planning `join` (by default intersectJoin on the evidence path) runs
+    * exactly one job, and the plan returns broadcastNL's pair set.
+    */
+  private def onePlanningJob(a: Dataset[Geom], b: Dataset[Geom],
+                             join: (Dataset[Geom], Dataset[Geom]) => DataFrame =
+                               SpatialJoins.intersectJoin(_, _, broadcastThreshold = 0L)): Unit = {
+    var planned: DataFrame = null
+    val jobs = jobsDuring { planned = join(a, b) }
     // the evidence (extent, counts, edges, the smaller side's occupied
     // cells) is ONE job with one stage and no exchange; a zero threshold
-    // skips the bounded limit-confirm jobs — the r2-era version ran 3
-    // separate FULL-scan actions (count, count, extent agg)
+    // skips intersectJoin's bounded limit-confirm jobs — the r2-era version
+    // ran 3 separate FULL-scan actions (count, count, extent agg)
     assert(jobs == 1, s"planning must run exactly one job, got $jobs jobs")
     val want = SpatialJoins.broadcastNL(a, b)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -140,18 +142,21 @@ class StatsPlanningSpec extends AnyFunSuite {
     assert(got == want && want.nonEmpty)
   }
 
-  test("stripesJoinAuto on a large estimate measures ONCE for both axis and route") {
+  /** A Filter keeps its child's sizeInBytes: millions of estimated rows,
+    * 400 real ones — past the stats gate that turns on route evidence.
+    */
+  private def big(off: Long, mx: Long, my: Long): Dataset[Geom] = {
     import spark.implicits._
-    // a Filter keeps its child's sizeInBytes: millions of estimated rows,
-    // 400 real ones — past the stats gate that turns on route evidence
-    def big(off: Long, mx: Long, my: Long): org.apache.spark.sql.Dataset[Geom] =
-      spark.range(0L, 10000000L, 1L, 4).filter(col("id") < 400)
-        .select((col("id") + off).as("id"),
-          pmod(col("id") * mx, lit(90L)).cast("double").as("xmin"),
-          (pmod(col("id") * mx, lit(90L)) + 5).cast("double").as("xmax"),
-          pmod(col("id") * my, lit(90L)).cast("double").as("ymin"),
-          (pmod(col("id") * my, lit(90L)) + 5).cast("double").as("ymax"))
-        .as[Geom]
+    spark.range(0L, 10000000L, 1L, 4).filter(col("id") < 400)
+      .select((col("id") + off).as("id"),
+        pmod(col("id") * mx, lit(90L)).cast("double").as("xmin"),
+        (pmod(col("id") * mx, lit(90L)) + 5).cast("double").as("xmax"),
+        pmod(col("id") * my, lit(90L)).cast("double").as("ymin"),
+        (pmod(col("id") * my, lit(90L)) + 5).cast("double").as("ymax"))
+      .as[Geom]
+  }
+
+  test("stripesJoinAuto on a large estimate measures ONCE for both axis and route") {
     val a = big(0, 37, 53); val b = big(1000, 29, 61)
     assert(SpatialJoins.estRowsFromStats(a) >= 1e6)
     val oneAggregation = jobsDuring { SpatialJoins.evidenceOf(a, b) }
@@ -166,6 +171,14 @@ class StatsPlanningSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val got = planned.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got == want && want.nonEmpty)
+  }
+
+  test("gridJoinSweep on a large estimate runs exactly ONE planning job") {
+    val a = big(0, 37, 53); val b = big(1000, 29, 61)
+    assert(SpatialJoins.estRowsFromStats(a) >= 1e6)
+    // the point-side detection reads the one evidence job, nothing else
+    onePlanningJob(a, b,
+      SpatialJoins.gridJoinSweep(_, _, CellScheme(graft.geom.Extent(0, 100, 0, 100), 8, 8)))
   }
 
   test("grid path forced onto EMPTY inputs returns empty, no NPE") {
