@@ -164,12 +164,12 @@ object Bench {
     // occupied at 10M — each holding > 4·parallelism× the balanced share;
     // the r6 per-cell median clamp re-enables these, where r5's global
     // clamp vetoed them), so the row's premium over the sweep is the
-    // sampled planning pass plus a ~neutral split route. A 2% planning
-    // sample suffices at 10M rows (hot cells hold 10⁴-10⁵ rows — hundreds
-    // of samples each) and shrinks the planning shuffle 5×.
+    // planning sample plus a ~neutral split route. The planner reads the
+    // one bounded sample the STP/BSP planners also take (~120K rows of both
+    // inputs whatever their size): at 10M rows the hot cells hold 10⁴-10⁵
+    // rows, tens to hundreds of them sampled.
     def adaptive() = time {
-      SpatialJoins.gridJoinAdaptive(a, b, scheme, budgetPairs = 1L << 22,
-        planSampleFraction = 0.02).count()
+      SpatialJoins.gridJoinAdaptive(a, b, scheme, budgetPairs = 1L << 22).count()
     }
     sweep() // warm (codegen + JIT for the shared keyed reduce body)
     // min-of-3 sweep samples INTERLEAVED with the other families (r3 verdict:
@@ -402,7 +402,7 @@ object Bench {
     * |A|·|B|/salt comparisons; adaptive splits BOTH sides s×s ways, so
     * per-task work drops ~s⁴ and the emission spreads over s² tasks.
     * Adaptive/grid: warm + interleaved min-of-2; salted runs ONCE (it is 10×+
-    * slower here — tune-measured 60 s vs adaptive's 5 s — and a second
+    * slower here — measured 60 s vs adaptive's 5 s — and a second
     * sample of a 60 s loser buys nothing). All three must agree on the count.
     */
   private def headlineHotspot(spark: SparkSession, n: Long)

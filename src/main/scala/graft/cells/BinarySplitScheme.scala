@@ -54,34 +54,36 @@ final case class BinarySplitScheme(extent: Extent, depth: Int,
 }
 
 object BinarySplitScheme {
+  private val Seed = 19L
+
   /** Build from a bounded sample of both inputs' centers: at each node split
     * the current point set at the median of its wider spread axis.
     */
   def build(a: Dataset[Geom], b: Dataset[Geom], extent: Extent, depth: Int,
-            maxSample: Int = 100000, seed: Long = 19L): BinarySplitScheme = {
-    val pts = SchemeSampling.centers(a, b, maxSample, seed)
+            maxSample: Int = SchemeSampling.MaxSample): BinarySplitScheme = {
+    val (sa, sb, _) = SchemeSampling.sample(a, b, maxSample, Seed)
     val nNodes = (1 << depth) - 1
     val axisX = new Array[Boolean](nNodes)
     val at = new Array[Double](nNodes)
     def median(vs: Array[Double]): Double = {
       val s = vs.sorted; s(s.length / 2)
     }
-    def fill(node: Int, level: Int, ps: Array[(Double, Double)],
+    def fill(node: Int, level: Int, ps: Array[Geom],
              ext: Extent): Unit = if (level < depth) {
       val useX = ext.width >= ext.height
       axisX(node) = useX
       val s =
         if (ps.isEmpty) (if (useX) (ext.xmin + ext.xmax) else (ext.ymin + ext.ymax)) / 2
-        else median(ps.map(p => if (useX) p._1 else p._2))
+        else median(ps.map(p => if (useX) p.centerX else p.centerY))
       at(node) = s
-      val (l, r) = ps.partition(p => (if (useX) p._1 else p._2) < s)
+      val (l, r) = ps.partition(p => (if (useX) p.centerX else p.centerY) < s)
       val (le, re) =
         if (useX) (Extent(ext.xmin, s, ext.ymin, ext.ymax), Extent(s, ext.xmax, ext.ymin, ext.ymax))
         else (Extent(ext.xmin, ext.xmax, ext.ymin, s), Extent(ext.xmin, ext.xmax, s, ext.ymax))
       fill(2 * node + 1, level + 1, l, le)
       fill(2 * node + 2, level + 1, r, re)
     }
-    fill(0, 0, pts, extent)
+    fill(0, 0, sa ++ sb, extent)
     BinarySplitScheme(extent, depth, axisX, at)
   }
 }

@@ -2,6 +2,7 @@ package graft.cells
 
 import graft.geom.{Extent, Geom, SqlOrder}
 import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.functions.lit
 
 /** Sort-tile partitioning (the reference's SpatialSpark STP method,
   * `spark_scripts/PartitionedSpatialJoin.scala:151-165`): tile boundaries
@@ -66,26 +67,33 @@ final case class SortTileScheme(extent: Extent, xBounds: Array[Double],
   }
 }
 
-/** Shared bounded-uniform center sampling for the data-driven schemes: the
+/** The shared bounded-uniform sample of both inputs, for every planner that
+  * plans from a sample (STP, BSP, [[graft.skew.AdaptiveCells]]): the
   * fraction is sized from a count so the expected sample fits `maxSample` —
   * `sample(f).head(max)` would keep the FIRST partitions' rows and bias the
-  * boundaries spatially on range-partitioned/clustered inputs (exactly the
-  * skew these schemes exist to absorb).
+  * plan spatially on range-partitioned/clustered inputs (exactly the skew
+  * these planners exist to absorb).
   */
-private[cells] object SchemeSampling {
-  def centers(a: Dataset[Geom], b: Dataset[Geom], maxSample: Int,
-              seed: Long): Array[(Double, Double)] = {
+private[graft] object SchemeSampling {
+  /** The default `maxSample`: rows the sample aims for. */
+  val MaxSample = 100000
+
+  /** Each side's sampled rows and the fraction both were sampled at. */
+  def sample(a: Dataset[Geom], b: Dataset[Geom], maxSample: Int,
+             seed: Long): (Array[Geom], Array[Geom], Double) = {
     import a.sparkSession.implicits._
-    val u = a.unionByName(b)
+    def tagged(d: Dataset[Geom], side: Int) =
+      d.select($"id", $"xmin", $"xmax", $"ymin", $"ymax", lit(side).as("side"))
+    val u = tagged(a, 0).unionByName(tagged(b, 1))
     // Row count from Catalyst plan statistics — ZERO jobs (the r4 version ran
     // a full `u.count()` before sampling: a complete read of both inputs at
     // 100× scale just to size a boundary sample). A small estimate is
     // CONFIRMED by a bounded count (`limit(4·maxSample+1).count()` reads at
     // most that many rows however large the input — the intersectJoin
     // pattern); a large estimate only needs to be large, not exact: the
-    // fraction is a sampling heuristic and the boundaries are a performance
+    // fraction is a sampling heuristic and the plan is a performance
     // choice, never a correctness input (reference-point ownership dedups
-    // identically under any boundaries).
+    // identically under any boundaries or splits).
     val est = math.max(1.0, graft.join.SpatialJoins.estRowsFromStats(a) +
       graft.join.SpatialJoins.estRowsFromStats(b))
     val cap = 4L * maxSample + 1
@@ -105,14 +113,17 @@ private[cells] object SchemeSampling {
     // head() keeps 4× headroom over the expected sample so a stats
     // UNDER-estimate (compressed column-pruned scans) must be off by >3× of
     // the 1.2× margin before the first-partitions bias can appear; a bigger
-    // sample than maxSample only sharpens the quantile cuts.
-    u.sample(fraction, seed)
-      .select((($"xmin" + $"xmax") / 2).as[Double], (($"ymin" + $"ymax") / 2).as[Double])
+    // sample than maxSample only sharpens the plan.
+    val rows = u.sample(fraction, seed).as[(Long, Double, Double, Double, Double, Int)]
       .head(4 * maxSample)
+    def side(s: Int) = rows.collect { case (id, x0, x1, y0, y1, `s`) => Geom(id, x0, x1, y0, y1) }
+    (side(0), side(1), fraction)
   }
 }
 
 object SortTileScheme {
+  private val Seed = 17L
+
   /** Build boundaries from a bounded uniform sample of both inputs: sort the
     * sampled x centers, cut into sx equal-count slabs; within each slab sort
     * the y centers and cut into sy tiles (`SortTilePartition`'s shape). The
@@ -120,13 +131,14 @@ object SortTileScheme {
     * a broadcastable value anyway.
     */
   def build(a: Dataset[Geom], b: Dataset[Geom], extent: Extent, sx: Int, sy: Int,
-            maxSample: Int = 100000, seed: Long = 17L): SortTileScheme = {
-    val pts = SchemeSampling.centers(a, b, maxSample, seed)
+            maxSample: Int = SchemeSampling.MaxSample): SortTileScheme = {
+    val (sa, sb, _) = SchemeSampling.sample(a, b, maxSample, Seed)
+    val pts = sa ++ sb
     if (pts.isEmpty)
       return SortTileScheme(extent, Array.tabulate(sx - 1)(i =>
           extent.xmin + (i + 1) * extent.width / sx),
         Array.fill(sx)(Array.tabulate(sy - 1)(j => extent.ymin + (j + 1) * extent.height / sy)))
-    val xs = pts.map(_._1).sorted
+    val xs = pts.map(_.centerX).sorted
     def cuts(sorted: Array[Double], n: Int): Array[Double] =
       Array.tabulate(n - 1) { i =>
         sorted(math.min(sorted.length - 1, ((i + 1).toLong * sorted.length / n).toInt))
@@ -135,7 +147,7 @@ object SortTileScheme {
     // per-slab y cuts from the same sample
     val bySlab = Array.fill(sx)(scala.collection.mutable.ArrayBuffer.empty[Double])
     val probe = SortTileScheme(extent, xb, Array.fill(sx)(Array.empty[Double]))
-    pts.foreach { case (x, y) => bySlab(probe.slabOf(x)) += y }
+    pts.foreach(g => bySlab(probe.slabOf(g.centerX)) += g.centerY)
     val yb = bySlab.map { ys =>
       if (ys.isEmpty) Array.tabulate(sy - 1)(j => extent.ymin + (j + 1) * extent.height / sy)
       else cuts(ys.toArray.sorted, sy)

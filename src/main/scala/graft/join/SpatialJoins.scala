@@ -759,25 +759,20 @@ object SpatialJoins {
 
   /** PBSM with adaptive hot-cell refinement (reference J6's quadtree budget
     * rule, see [[graft.skew.AdaptiveCells]]): plan splits from per-cell
-    * counts, then one keyed reduce on the packed two-level key.
+    * counts of one bounded sample, then one keyed reduce on the packed
+    * two-level key.
     */
   def gridJoinAdaptive(a: Dataset[Geom], b: Dataset[Geom], base: CellScheme,
-                       budgetPairs: Long = 4L * 1024 * 1024,
-                       planSampleFraction: Double = 0.1): DataFrame = {
-    // split planning reads a Bernoulli SAMPLE (scaled-up per-cell counts):
-    // the estimate only picks split factors — exactly-once ownership is
-    // local arithmetic, so results are identical for any plan — and at
-    // petabyte scale the planning pass must not be a full input read
-    val scheme = graft.skew.AdaptiveCells.plan(a, b, base, budgetPairs,
-      sampleFraction = planSampleFraction)
+                       budgetPairs: Long = 4L * 1024 * 1024): DataFrame = {
+    val scheme = graft.skew.AdaptiveCells.plan(a, b, base, budgetPairs)
     if (scheme.splits.isEmpty) {
       // zero hot cells → the two-level key degenerates to the plain grid, so
       // return the plain-grid PLAN (on even density the insurance premium is
-      // just the one sampled planning pass). Inner-loop routing uses the
-      // MEASURED occupied-cell mean the planning aggregation already
-      // computed (the Catalyst byte-stats estimate sits exactly on the
-      // dense-cell boundary for the bench workloads and routes dense cells
-      // into the quadratic SMJ loop). Every branch emits the identical pair set.
+      // just the bounded planning sample). Inner-loop routing uses the
+      // occupied-cell mean the split rule MEASURED from that sample (the
+      // Catalyst byte-stats estimate sits exactly on the dense-cell boundary
+      // for the bench workloads and routes dense cells into the quadratic
+      // SMJ loop). Every branch emits the identical pair set.
       if (scheme.perCellMean > DenseCellRows) gridJoinSweep(a, b, base)
       else gridJoin(a, b, base)
     } else {

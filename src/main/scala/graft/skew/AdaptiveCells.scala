@@ -1,10 +1,9 @@
 package graft.skew
 
-import graft.cells.CellScheme
+import graft.cells.{CellScheme, SchemeSampling}
 import graft.cells.CellScheme.{coord, span}
 import graft.geom.Geom
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.functions._
 
 /** Adaptive refinement of hot cells — the Spark re-expression of the
   * reference's quadtree cell splitting under a comparison budget
@@ -19,7 +18,7 @@ import org.apache.spark.sql.functions._
   * (`partition_utils.hpp:226-277` semantics) to bound replication blow-up.
   */
 /** `perCellMean`: mean occupied-cell population of the larger side,
-  * measured by the planning aggregation. [[AdaptiveCells.plan]] always sets
+  * measured by the split rule. [[AdaptiveCells.plan]] always sets
   * it (≥ 0); the zero-splits fallthrough of `gridJoinAdaptive` routes its
   * inner loop on it (sweep/STR for dense cells, declarative SMJ otherwise),
   * never on Catalyst statistics. Schemes built by hand keep the unused
@@ -96,15 +95,34 @@ object AdaptiveCells {
   private val MaxSplit = 32
 
   /** A cell is hot when its pair product exceeds 1/(SpreadFactor ·
-    * parallelism) of the total (see [[plan]]).
+    * parallelism) of the total (see [[splitsOf]]).
     */
   private val SpreadFactor = 4.0
 
-  /** Plan splits from per-cell counts: a hot cell gets an s×s subgrid with
+  /** The planning sample's seed. */
+  private val Seed = 42L
+
+  /** Plan splits from the one bounded sample of both inputs that the STP
+    * and BSP planners also take (`SchemeSampling.sample`): inputs of up to
+    * 1.2·`SchemeSampling.MaxSample` rows are read whole, so their counts are
+    * exact; larger ones are Bernoulli-sampled and scaled back up. Splits are
+    * a performance heuristic only; exactly-once correctness never depends
+    * on the estimate (reference-point ownership is local arithmetic).
+    */
+  def plan(a: Dataset[Geom], b: Dataset[Geom], base: CellScheme,
+           budgetPairs: Long = 4L * 1024 * 1024): AdaptiveScheme = {
+    val (sa, sb, fraction) = SchemeSampling.sample(a, b, SchemeSampling.MaxSample, Seed)
+    splitsOf(base, sa, sb, 1.0 / fraction,
+      math.max(1, a.sparkSession.sparkContext.defaultParallelism), budgetPairs)
+  }
+
+  /** The split rule, on the driver: a hot cell gets an s×s subgrid with
     * s ≈ (|A|·|B| / budget)^(1/4) (each side shrinks ~s², the product ~s⁴
     * under uniformity), clamped by the cell's own MEDIAN object size so a
     * subcell never drops below ~2 typical object extents (replication
-    * bound robust to an oversized minority inside the cell).
+    * bound robust to an oversized minority inside the cell). Each sampled
+    * row counts `scale` times in every base cell it overlaps
+    * (`CellScheme.cellsOf`).
     *
     * "Hot" is a CONCENTRATION criterion, not an absolute one: a cell is
     * split only when its pair product exceeds
@@ -117,136 +135,47 @@ object AdaptiveCells {
     * (measured 8× slower than the plain sweep on a gaussian 197×197-cell
     * workload where the old `|A|·|B| > budget` rule fired everywhere).
     * `budgetPairs` remains the floor of the threshold and sizes `s`.
+    *
+    * Memory is O(sample + base cells), whatever the rows' extents.
     */
-  /** `sampleFraction < 1` estimates per-cell counts from a Bernoulli sample
-    * (scaled back up) — at petabyte scale the planning pass must not read the
-    * full input. Splits are a performance heuristic only; exactly-once
-    * correctness never depends on the estimate (reference-point ownership is
-    * local arithmetic).
-    */
-  def plan(a: Dataset[Geom], b: Dataset[Geom], base: CellScheme,
-           budgetPairs: Long = 4L * 1024 * 1024,
-           sampleFraction: Double = 1.0): AdaptiveScheme = {
-    import a.sparkSession.implicits._
-    // ONE fused planning aggregation: both (sampled) inputs are tagged with
-    // a side bit, replicated to their cells, and counted conditionally in a
-    // single groupBy — one pass over each input and one job, where the r3
-    // version paid one aggregation job PER SIDE plus a join (the "adaptive
-    // pays both planning aggregations" verdict note). The replication is the
-    // DECLARATIVE withCells explode (whole-stage codegen) — the r4 typed
-    // flatMap decoded/re-encoded every row and made the planning pass cost
-    // ~2 s of the zero-splits path's 5.3 s at 10M (measured; the gate's
-    // whole point is that this pass is the only premium on even density).
-    // The aggregation carries COUNTS ONLY; the object-size split clamp reads
-    // per-cell extent MEDIANS from a second bounded pass that runs only when
-    // over-threshold cells exist — the even-density zero-splits path (the
-    // one whose planning premium the concentration gate exists to protect)
-    // pays nothing for the clamp at all. The r5 version persisted the
-    // Bernoulli samples and ran a separate global-percentile pass
-    // unconditionally, ~40% of the whole planning premium on the
-    // even-density bench workload.
-    val sampled = sampleFraction < 1.0
-    // PARTITION-level sampling (r6 verdict item 3): a Bernoulli `sample()`
-    // still SCANS every input row — the dominant residual share of the
-    // planning premium once the aggregation itself is fused. Keeping whole
-    // partitions (a deterministic stride over the partition index) reads
-    // only the kept partitions' rows; skipped partitions' task iterators
-    // are never consumed, so their cache blocks / row groups never
-    // decompress. Bias guard: at least 4 partitions are kept, they are
-    // stride-SPREAD across the input (not a contiguous range, so an
-    // id-ordered or file-ordered layout contributes from its whole span),
-    // and inputs with < 16 partitions fall back to the Bernoulli sample.
-    // The estimate only picks split factors — exactly-once ownership is
-    // local arithmetic, so a biased sample costs plan quality, never
-    // correctness (SkewSpec asserts oracle equality on sampled plans).
-    def sampleSide(ds: Dataset[Geom], seed: Long): (Dataset[Geom], Double) =
-      if (!sampled) (ds, 1.0)
-      else {
-        val p = ds.rdd.getNumPartitions
-        val want = math.max(4, math.round(p * sampleFraction).toInt)
-        if (p < 16 || want >= p) (ds.sample(sampleFraction, seed), 1.0 / sampleFraction)
-        else {
-          val stride = p / want
-          val kept = (p + stride - 1) / stride // #{i : i % stride == 0}
-          val rdd = ds.rdd.mapPartitionsWithIndex(
-            (i, it) => if (i % stride == 0) it else Iterator.empty,
-            preservesPartitioning = true)
-          // narrow-coalesce away the skipped (empty) partitions: the two
-          // planning stages otherwise dispatch p mostly-no-op tasks each —
-          // measurable fixed cost at p=64-128 against a sub-second plan
-          (ds.sparkSession.createDataset(rdd.coalesce(kept)), p.toDouble / kept)
-        }
-      }
-    val (sa, scaleA) = sampleSide(a, 42L)
-    val (sb, scaleB) = sampleSide(b, 43L)
-    def tagged(ds: Dataset[Geom], side: Int) =
-      graft.join.SpatialJoins.withCells(
-          ds.toDF("p_id", "p_xmin", "p_xmax", "p_ymin", "p_ymax"), base, "p")
-        .select(col("cell"), lit(side).as("side"),
-          (col("p_xmax") - col("p_xmin")).as("w"),
-          (col("p_ymax") - col("p_ymin")).as("h"))
-    // The tagged (replicated, NARROW — 4 columns) sample is read twice when
-    // splits are planned: once for counts, once for the hot-cell medians. A
-    // Bernoulli sample still SCANS every input row, so before r6 the median
-    // pass re-paid two full input scans — the dominant share of the planning
-    // premium once splits exist. Persisting the sampled tagged frame (~f·n·
-    // replication narrow rows, materialized for free during the counts scan)
-    // makes the median pass a cache read. Never persisted on the unsampled
-    // path, where this frame is the full replicated input.
-    val taggedAll = {
-      val t = tagged(sa, 0).unionByName(tagged(sb, 1))
-      if (sampled) t.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else t
+  def splitsOf(base: CellScheme, sampleA: Array[Geom], sampleB: Array[Geom],
+               scale: Double, parallelism: Int, budgetPairs: Long): AdaptiveScheme = {
+    val nx = base.nx; val ny = base.ny
+    val rows = sampleA ++ sampleB
+    // each row's clamped cell rectangle (cx0, cx1, cy0, cy1), as cellsOf
+    val boxes = rows.map { g =>
+      val (x0, x1) = span(base.cellX(g.xmin), base.cellX(g.xmax))
+      val (y0, y1) = span(base.cellY(g.ymin), base.cellY(g.ymax))
+      (x0, x1, y0, y1)
     }
-    try {
-    // raw (unscaled) per-cell counts; callers scale at use
-    val counts0 = taggedAll
-      .groupBy("cell")
-      .agg(count(when(col("side") === 0, lit(1))).as("cna"),
-           count(when(col("side") === 1, lit(1))).as("cnb"))
-    // Grids bounded enough to hold per-cell counts on the driver (every
-    // realistic base grid — the planner's own forSize caps at maxN²) take
-    // ONE job: collect the aggregated rows and derive totals, the work
-    // distribution, the over-threshold cells AND the extent clamp locally.
-    // Unbounded grids fall back to persist + two distributed aggregations.
-    // Per-cell count PRODUCTS are compared in double: at petabyte scale (and
-    // sample scale-up) they overflow int64 and would silently skip hot
-    // cells. The split clamp (below) reads each over-threshold cell's OWN
-    // extent medians, so no global statistic is computed here.
-    val (totalA, totalB, sumProd, occupiedCells, overThreshold) =
-      if (base.numCells <= (1L << 20)) {
-        val all = counts0.collect() // ≤ numCells rows of (cell, cna, cnb)
-        val sumP = all.iterator.map(r =>
-          r.getLong(1) * scaleA * (r.getLong(2) * scaleB)).sum
-        (all.iterator.map(_.getLong(1)).sum * scaleA,
-         all.iterator.map(_.getLong(2)).sum * scaleB,
-         sumP, math.max(1L, all.length.toLong),
-         (threshold: Double) =>
-           all.filter(r => r.getLong(1) * scaleA *
-             (r.getLong(2) * scaleB) > threshold))
-      } else {
-        val cached = counts0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val prod = col("cna").cast("double") * lit(scaleA) *
-          col("cnb").cast("double") * lit(scaleB)
-        val tot = cached.agg(coalesce(sum("cna"), lit(0L)), coalesce(sum("cnb"), lit(0L)),
-          coalesce(sum(prod), lit(0.0)), count(lit(1))).head()
-        ((tot.getLong(0) * scaleA, tot.getLong(1) * scaleB, tot.getDouble(2),
-          math.max(1L, tot.getLong(3)),
-          (threshold: Double) => {
-            val rows = cached.filter(prod > threshold).collect()
-            cached.unpersist()
-            rows
-          }))
+    // per-cell row counts of one side: a 2-D difference array, prefix-summed,
+    // so a map-spanning row costs O(1), not O(its cells)
+    def counts(from: Int, until: Int): Array[Int] = {
+      val d = new Array[Int](Math.toIntExact(base.numCells))
+      def add(cx: Int, cy: Int, v: Int): Unit = if (cx < nx && cy < ny) d(cy * nx + cx) += v
+      boxes.slice(from, until).foreach { case (x0, x1, y0, y1) =>
+        add(x0, y0, 1); add(x1 + 1, y0, -1); add(x0, y1 + 1, -1); add(x1 + 1, y1 + 1, 1)
       }
-    val perCellMean = math.max(totalA, totalB) / occupiedCells
-    val parallelism = math.max(1, a.sparkSession.sparkContext.defaultParallelism)
+      for (cy <- 0 until ny; cx <- 1 until nx) d(cy * nx + cx) += d(cy * nx + cx - 1)
+      for (cy <- 1 until ny; cx <- 0 until nx) d(cy * nx + cx) += d((cy - 1) * nx + cx)
+      d
+    }
+    val ca = counts(0, sampleA.length); val cb = counts(sampleA.length, rows.length)
+    // products in double: at scale they overflow int64 and would silently
+    // skip hot cells
+    def prod(c: Int): Double = ca(c) * scale * (cb(c) * scale)
+    var totA, totB, sumProd = 0.0
+    var occupied = 0
+    for (c <- ca.indices) {
+      totA += ca(c); totB += cb(c); sumProd += prod(c)
+      if (ca(c) + cb(c) > 0) occupied += 1
+    }
+    val perCellMean = math.max(totA, totB) * scale / math.max(1, occupied)
     // split threshold: the larger of the absolute budget and the balanced
     // per-worker share of total candidate work — a cell below the share can
-    // never be the straggler, so splitting it buys nothing
-    val splitThreshold =
-      math.max(budgetPairs.toDouble, sumProd / (SpreadFactor * parallelism))
-    val counts = overThreshold(splitThreshold)
-    if (counts.isEmpty) return AdaptiveScheme(base, Map.empty, perCellMean)
+    // never be the straggler, so splitting it buys nothing. At most
+    // SpreadFactor·parallelism cells can exceed the share.
+    val threshold = math.max(budgetPairs.toDouble, sumProd / (SpreadFactor * parallelism))
     // split clamp: a subcell must stay ≥ ~2 MEDIAN object extents OF THE
     // CELL BEING SPLIT (reference stop rule `partition_utils.hpp:226-277`
     // samples a global median; per-cell is strictly more targeted). Per-cell
@@ -257,27 +186,23 @@ object AdaptiveCells {
     // minority of cell-sized residents pulls the mean to ~0.3 cell widths
     // (cap 1 — split vetoed) while the majority is tiny and splits fine; the
     // median tracks the majority and only vetoes when most residents really
-    // span the cell. Computed in ONE extra bounded aggregation filtered to
-    // the over-threshold cells (≲ SpreadFactor·parallelism of them by
-    // construction) — the zero-splits path never reaches this job.
-    // sCap < 2 means the cell is already ~2 median extents: no split at all.
-    val hotCells = counts.map(_.getLong(0)).toSeq
-    val med = taggedAll
-      .filter(col("cell").isInCollection(hotCells))
-      .groupBy("cell")
-      .agg(percentile_approx(col("w"), lit(0.5), lit(10000)).as("mw"),
-           percentile_approx(col("h"), lit(0.5), lit(10000)).as("mh"))
-      .collect().map(r => r.getLong(0) -> (r.getDouble(1), r.getDouble(2))).toMap
-    val splits = counts.map { r =>
-      val (mw, mh) = med.getOrElse(r.getLong(0), (1e-12, 1e-12))
+    // span the cell. sCap < 2 means the cell is already ~2 median extents:
+    // no split at all.
+    def median(vs: Array[Double]): Double = vs.sorted.apply((vs.length - 1) / 2)
+    val splits = ca.indices.filter(c => prod(c) > threshold).map { c =>
+      val (cx, cy) = (c % nx, c / nx)
+      val residents = rows.indices.filter { i =>
+        val (x0, x1, y0, y1) = boxes(i)
+        x0 <= cx && cx <= x1 && y0 <= cy && cy <= y1
+      }.map(rows).toArray
+      val mw = median(residents.map(_.width))
+      val mh = median(residents.map(_.height))
       val sCapW = math.max(1, (base.cellW / (2 * math.max(mw, 1e-12))).toInt)
       val sCapH = math.max(1, (base.cellH / (2 * math.max(mh, 1e-12))).toInt)
       val sCap = math.min(MaxSplit, math.min(sCapW, sCapH))
-      val prod = r.getLong(1) * scaleA * (r.getLong(2) * scaleB)
-      val s = math.ceil(math.pow(prod / budgetPairs, 0.25)).toInt + 1
-      r.getLong(0) -> math.min(s, sCap)
+      val s = math.ceil(math.pow(prod(c) / budgetPairs, 0.25)).toInt + 1
+      c.toLong -> math.min(s, sCap)
     }.filter(_._2 >= 2).toMap
     AdaptiveScheme(base, splits, perCellMean)
-    } finally { if (sampled) taggedAll.unpersist() }
   }
 }

@@ -52,7 +52,7 @@ class HostileInputSpec extends AnyFunSuite {
       "binarySplitJoin" -> (() => binarySplitJoin(a, b, ext, 3)),
       // a 16-pair budget splits the hot cells of these inputs into sub-cells
       "gridJoinAdaptive" -> (() => gridJoinAdaptive(a, b, CellScheme(ext, 4, 4),
-        budgetPairs = 16, planSampleFraction = 1.0)))
+        budgetPairs = 16)))
     routes.foreach { case (name, run) =>
       val got = pairs(run())
       assert(got == want, s"$name: ${diff(got, want)}")

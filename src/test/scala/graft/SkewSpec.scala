@@ -44,40 +44,6 @@ class SkewSpec extends AnyFunSuite {
     assert(want.nonEmpty)
   }
 
-  test("sample-based split planning stays oracle-equal (correctness never depends on estimates)") {
-    val a = Workloads.gaussianPolygons(spark, 3000, seed = 5, mapEdge = 1000.0, meanEdge = 8.0)
-    val b = Workloads.gaussianPolygons(spark, 3000, seed = 6, mapEdge = 1000.0, meanEdge = 8.0)
-    val base = CellScheme(Extent(0, 1012, 0, 1012), 8, 8)
-    val scheme = AdaptiveCells.plan(a, b, base, budgetPairs = 10000, sampleFraction = 0.1)
-    import spark.implicits._
-    import org.apache.spark.sql.functions.col
-    def rep(ds: org.apache.spark.sql.Dataset[Geom]) =
-      ds.flatMap(g => scheme.keysOf(g).map(k => (k, g)))
-    val got = rep(a).toDF("k", "a").join(rep(b).toDF("k2", "b"), col("k") === col("k2"))
-      .as[(Long, Geom, Long, Geom)]
-      .flatMap { case (k, ga, _, gb) =>
-        if (ga.intersects(gb) && scheme.owns(k, ga, gb)) Some((ga.id, gb.id)) else None }
-      .collect().toSet
-    val want = pairs(SpatialJoins.broadcastNL(a, b))
-    assert(got == want)
-  }
-
-  test("partition-stride sampled planning stays oracle-equal (≥16-partition inputs skip the Bernoulli scan)") {
-    // 32-partition inputs at sampleFraction 0.1 take the partition-stride
-    // sample (keep = max(4, 3) of 32); the plan may differ from the
-    // Bernoulli estimate's, but the JOIN result never can
-    val a = Workloads.gaussianPolygons(spark, 3000, seed = 5, mapEdge = 1000.0,
-      meanEdge = 8.0).repartition(32)
-    val b = Workloads.gaussianPolygons(spark, 3000, seed = 6, mapEdge = 1000.0,
-      meanEdge = 8.0).repartition(32)
-    val base = CellScheme(Extent(0, 1012, 0, 1012), 8, 8)
-    val got = pairs(SpatialJoins.gridJoinAdaptive(a, b, base, budgetPairs = 10000,
-      planSampleFraction = 0.1))
-    val want = pairs(SpatialJoins.broadcastNL(a, b))
-    assert(got == want)
-    assert(want.nonEmpty)
-  }
-
   test("hot-corner regime: adaptive == grid-sweep == salted, splits trigger") {
     val a = Workloads.hotspotPolygons(spark, 20000, seed = 11, mapEdge = 1000.0,
       hotFrac = 0.5, hotX = 100, hotY = 100, hotW = 2.0, meanEdge = 0.05)
@@ -191,21 +157,19 @@ class SkewSpec extends AnyFunSuite {
     assert(want.nonEmpty)
   }
 
-  test("planner's distributed fallback (numCells > 2^20) agrees with the collect path") {
-    // grids too large to collect per-cell counts on the driver take the
-    // persist + two-aggregation path — same totals, same threshold, same
-    // split decisions, oracle-equal join
+  test("large grids (numCells > 2^20) still split the hot corner, join exact") {
+    // the split rule keeps one count per base cell on the driver: a grid
+    // past 2^20 cells must still find the hot corner and join oracle-equal
     val a = Workloads.hotspotPolygons(spark, 8000, seed = 41, mapEdge = 1000.0,
       hotFrac = 0.5, hotX = 100, hotY = 100, hotW = 1.0, meanEdge = 0.05)
     val b = Workloads.hotspotPolygons(spark, 8000, seed = 42, mapEdge = 1000.0,
       hotFrac = 0.5, hotX = 100, hotY = 100, hotW = 1.0, meanEdge = 0.05)
     val ext = Extent(0, 1001, 0, 1001)
-    val small = CellScheme(ext, 1024, 1024)       // = 2^20 → collect path
-    val large = CellScheme(ext, 2048, 1024)       // > 2^20 → distributed path
+    val small = CellScheme(ext, 1024, 1024)       // = 2^20 cells
+    val large = CellScheme(ext, 2048, 1024)       // > 2^20 cells
     val ps = AdaptiveCells.plan(a, b, small, budgetPairs = 100000)
     val pl = AdaptiveCells.plan(a, b, large, budgetPairs = 100000)
-    // both paths must find the hot corner (it sits inside one cell on both
-    // grids) and produce an exact join
+    // both grids must find the hot corner (it sits inside one cell on both)
     assert(ps.splits.nonEmpty && pl.splits.nonEmpty)
     val want = pairs(SpatialJoins.broadcastNL(a, b))
     assert(pairs(SpatialJoins.gridJoinAdaptive(a, b, large, budgetPairs = 100000)) == want)

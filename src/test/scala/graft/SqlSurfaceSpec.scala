@@ -113,4 +113,45 @@ class SqlSurfaceSpec extends AnyFunSuite {
     import org.apache.spark.unsafe.types.UTF8String
     assert(r == graft.functions.SimHash.hash64(UTF8String.fromString("hello world")))
   }
+
+  test("a session built withExtensions(new GraftExtensions) has the functions and the rewrite") {
+    import org.apache.spark.sql.SparkSession
+    GraftSql.install(spark)
+    // st_within holds, st_contains does not, st_dwithin holds at 0.5 apart
+    val fns = "SELECT st_intersects(0.0, 1.0, 0.0, 1.0, 1.0, 2.0, 1.0, 2.0), " +
+      "st_within(0.2, 0.8, 0.2, 0.8, 0.0, 1.0, 0.0, 1.0), " +
+      "st_contains(0.2, 0.8, 0.2, 0.8, 0.0, 1.0, 0.0, 1.0), " +
+      "st_dwithin(0.0, 1.0, 0.0, 1.0, 1.5, 2.0, 0.0, 1.0, 0.5D), simhash64('hello world')"
+    val want = spark.sql(fns).head()
+    assert(want.getBoolean(0) && want.getBoolean(1) && !want.getBoolean(2) && want.getBoolean(3))
+    // extensions apply only when a session is created: build a second one on
+    // the shared SparkContext, then hand the shared session back
+    SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
+    try {
+      val ext = SparkSession.builder().withExtensions(new graft.plans.GraftExtensions).getOrCreate()
+      assert(ext ne spark)
+      assert(ext.sql(fns).head() == want)
+      import ext.implicits._
+      val rnd = new scala.util.Random(21)
+      def side(idBase: Long) = (0 until 300).map { i =>
+        val x = rnd.nextDouble() * 95; val y = rnd.nextDouble() * 95
+        graft.geom.Geom(idBase + i, x, x + 5, y, y + 5)
+      }.toDS()
+      val (a, b) = (side(0L), side(1000L))
+      a.createOrReplaceTempView("ext_a"); b.createOrReplaceTempView("ext_b")
+      val df = ext.sql(
+        """SELECT a.id AS a_id, b.id AS b_id FROM ext_a a JOIN ext_b b
+          | ON st_intersects(a.xmin, a.xmax, a.ymin, a.ymax,
+          |                  b.xmin, b.xmax, b.ymin, b.ymax)""".stripMargin)
+      val phys = df.queryExecution.executedPlan.toString
+      assert(!phys.contains("BroadcastNestedLoopJoin") && !phys.contains("CartesianProduct"),
+        s"rewrite did not fire:\n$phys")
+      val got = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      val oracle = graft.join.SpatialJoins.broadcastNL(a, b)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(got == oracle && oracle.nonEmpty)
+    } finally {
+      SparkSession.setActiveSession(spark); SparkSession.setDefaultSession(spark)
+    }
+  }
 }

@@ -181,6 +181,28 @@ class StatsPlanningSpec extends AnyFunSuite {
       SpatialJoins.gridJoinSweep(_, _, CellScheme(graft.geom.Extent(0, 100, 0, 100), 8, 8)))
   }
 
+  test("gridJoinAdaptive on a large estimate plans from the bounded sample") {
+    val a = big(0, 37, 53); val b = big(1000, 29, 61)
+    assert(SpatialJoins.estRowsFromStats(a) >= 1e6)
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
+    var planned: DataFrame = null
+    val jobs = jobsDuring {
+      planned = SpatialJoins.gridJoinAdaptive(a, b,
+        CellScheme(graft.geom.Extent(0, 100, 0, 100), 8, 8), budgetPairs = 1000)
+    }
+    // a large estimate skips the bounded confirm, so planning is the
+    // sample's head(): three partition probes (1, 4, then the last 3 of the
+    // union's 8 partitions), then the split rule on the driver. The sparse
+    // sample plans no splits and a small cell mean, so the zero-splits route
+    // is the plain grid, which needs no evidence job. Nothing is persisted.
+    assert(jobs == 3, s"adaptive planning ran $jobs job(s)")
+    assert(spark.sparkContext.getPersistentRDDs.keySet == persisted)
+    val want = SpatialJoins.broadcastNL(a, b)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val got = planned.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(got == want && want.nonEmpty)
+  }
+
   test("grid path forced onto EMPTY inputs returns empty, no NPE") {
     // stats over-estimate filtered scans, so small() can be false for an
     // empty input — the min/max extent agg then returns nulls; the guard
