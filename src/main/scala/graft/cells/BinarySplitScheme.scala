@@ -17,7 +17,8 @@ import org.apache.spark.sql.Dataset
   * every other scheme — and that is exactly what the driver oracle checks.
   */
 final case class BinarySplitScheme(extent: Extent, depth: Int,
-                                   splitAxisX: Array[Boolean], splitAt: Array[Double]) {
+                                   splitAxisX: Array[Boolean], splitAt: Array[Double])
+    extends CellMapping {
   require(splitAxisX.length == (1 << depth) - 1 && splitAt.length == splitAxisX.length)
 
   def numLeaves: Int = 1 << depth
@@ -37,19 +38,19 @@ final case class BinarySplitScheme(extent: Extent, depth: Int,
   /** All leaves overlapped by an MBR — stack descent pruning by the split.
     * An inverted MBR spans the leaves between its two ends.
     */
-  def cellsOf(g: Geom): Seq[Long] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[Long]
+  def cellsOf(xmin: Double, xmax: Double, ymin: Double, ymax: Double): CellKeys = {
+    val out = new scala.collection.mutable.ArrayBuilder.ofLong
     def walk(node: Int, level: Int): Unit =
       if (level == depth) out += (node - (numLeaves - 1)).toLong
       else {
         val s = splitAt(node)
-        val (v0, v1) = if (splitAxisX(node)) (g.xmin, g.xmax) else (g.ymin, g.ymax)
+        val (v0, v1) = if (splitAxisX(node)) (xmin, xmax) else (ymin, ymax)
         val (lo, hi) = if (SqlOrder.le(v0, v1)) (v0, v1) else (v1, v0)
         if (!SqlOrder.le(s, lo)) walk(2 * node + 1, level + 1)
         if (SqlOrder.le(s, hi)) walk(2 * node + 2, level + 1)
       }
     walk(0, 0)
-    out.toSeq
+    new CellKeys.Listed(out.result())
   }
 }
 

@@ -1,8 +1,6 @@
 package graft.cells
 
-import graft.geom.{Extent, Geom}
-import org.apache.spark.sql.catalyst.expressions.{Add, Divide, Expression, Floor,
-  Greatest, Least, Literal, Multiply, NaNvl, Subtract}
+import graft.geom.Extent
 
 /** Uniform `nx × ny` grid over an extent — the engine's deterministic cell
   * index (the planar analogue of an H3/S2 cell scheme). Every MBR is
@@ -20,7 +18,7 @@ import org.apache.spark.sql.catalyst.expressions.{Add, Divide, Expression, Floor
   * i.e. half-open cells with the top/right global edge closed via clamping —
   * exactly-once *by construction*.
   */
-final case class CellScheme(extent: Extent, nx: Int, ny: Int) {
+final case class CellScheme(extent: Extent, nx: Int, ny: Int) extends CellMapping {
   require(nx > 0 && ny > 0, s"grid must be positive, got ${nx}x$ny")
 
   // degenerate extents (all points on a line) get unit cells: everything
@@ -33,38 +31,17 @@ final case class CellScheme(extent: Extent, nx: Int, ny: Int) {
   @inline def cellX(x: Double): Int = CellScheme.coord(x, extent.xmin, cellW, nx)
   @inline def cellY(y: Double): Int = CellScheme.coord(y, extent.ymin, cellH, ny)
 
-  @inline def cellId(cx: Int, cy: Int): Long = cy.toLong * nx + cx
-
   /** The unique owning cell of a point (clamped into the grid). */
-  @inline def cellOf(x: Double, y: Double): Long = cellId(cellX(x), cellY(y))
+  def cellOf(x: Double, y: Double): Long = cellY(y).toLong * nx + cellX(x)
 
-  /** [[cellX]], [[cellY]] and [[cellOf]] as Catalyst expressions — the ONE
-    * copy of the clamped floor arithmetic that every plan is built from: the
-    * SQL rule (`graft.plans.SpatialJoinRule`) uses them directly, the
-    * DataFrame plans wrap them in Columns (`SpatialJoins.cellOfCol`,
-    * `SpatialJoins.withCells`). They compute exactly what the Scala forms
-    * above compute, which the reduce-side ownership tests rely on.
+  /** All cells overlapped by an MBR — the replication set, a rectangle of
+    * cell ids computed on demand. An inverted MBR (max < min) spans the cells
+    * between its two ends.
     */
-  def cellXExpr(x: Expression): Expression = CellScheme.cellCoord(x, extent.xmin, cellW, nx)
-  def cellYExpr(y: Expression): Expression = CellScheme.cellCoord(y, extent.ymin, cellH, ny)
-  def cellOfExpr(x: Expression, y: Expression): Expression =
-    Add(Multiply(cellYExpr(y), Literal(nx.toLong)), cellXExpr(x))
-
-  /** All cells overlapped by an MBR — the replication set. An inverted MBR
-    * (max < min) spans the cells between its two ends, as the declarative
-    * `sequence` replication does.
-    */
-  def cellsOf(g: Geom): Seq[Long] = {
-    val (cx0, cx1) = CellScheme.span(cellX(g.xmin), cellX(g.xmax))
-    val (cy0, cy1) = CellScheme.span(cellY(g.ymin), cellY(g.ymax))
-    val out = new scala.collection.mutable.ArrayBuffer[Long]((cx1 - cx0 + 1) * (cy1 - cy0 + 1))
-    var cy = cy0
-    while (cy <= cy1) {
-      var cx = cx0
-      while (cx <= cx1) { out += cellId(cx, cy); cx += 1 }
-      cy += 1
-    }
-    out.toSeq
+  def cellsOf(xmin: Double, xmax: Double, ymin: Double, ymax: Double): CellKeys.Rect = {
+    val (x0, x1) = CellScheme.span(cellX(xmin), cellX(xmax))
+    val (y0, y1) = CellScheme.span(cellY(ymin), cellY(ymax))
+    CellKeys.Rect(0L, nx, 1L, x0, x1, y0, y1)
   }
 
   /** Parent cell id at a `factor`× coarser resolution (H3/S2-style
@@ -83,15 +60,6 @@ final case class CellScheme(extent: Extent, nx: Int, ny: Int) {
     require(nx % factor == 0 && ny % factor == 0, s"$factor must divide ${nx}x$ny")
     CellScheme(extent, nx / factor, ny / factor)
   }
-
-  /** Exactly-once ownership: pair (a, b) is emitted in `cell` iff the
-    * bottom-left corner of their intersection falls in `cell`.
-    */
-  @inline def owns(cell: Long, a: Geom, b: Geom): Boolean = {
-    val rx = math.max(a.xmin, b.xmin)
-    val ry = math.max(a.ymin, b.ymin)
-    cellOf(rx, ry) == cell
-  }
 }
 
 object CellScheme {
@@ -108,30 +76,6 @@ object CellScheme {
   /** The cell range between two ends, in either order. */
   private[graft] def span(i: Int, j: Int): (Int, Int) = (math.min(i, j), math.max(i, j))
 
-  /** [[coord]] as a Catalyst expression: `nanvl` sends NaN past the last
-    * cell before the clamp (`floor` of a double is a long; the outer
-    * `least` over a literal keeps the cell id non-nullable).
-    */
-  private def cellCoord(v: Expression, lo: Double, len: Double, n: Int): Expression =
-    Least(Seq(Greatest(Seq(Floor(NaNvl(Divide(Subtract(v, Literal(lo)), Literal(len)),
-      Literal(n.toDouble))), Literal(0L))), Literal(n - 1L)))
-
-  /** Morton (Z-order) interleave of two 16-bit cell coordinates — the
-    * storage-layout key: sorting a spatial table by z-order clusters
-    * spatially-near cells into the same files/row-groups, so cell-range
-    * scans prune (the standard lakehouse data-layout technique; pure bit
-    * arithmetic, replayable in any SQL engine).
-    */
-  def zOrder(cx: Long, cy: Long): Long = {
-    var z = 0L
-    var b = 0
-    while (b < 16) {
-      z |= ((cx >> b) & 1L) << (2 * b)
-      z |= ((cy >> b) & 1L) << (2 * b + 1)
-      b += 1
-    }
-    z
-  }
   /** Pick a grid so the average cell holds ~`targetPerCell` objects of the
     * larger side — the analogue of the reference's "BFS until ≥ 10×threads
     * tasks" granularity rule (`cpp/RTree.h:506-508`): #cells ≫ #cores.

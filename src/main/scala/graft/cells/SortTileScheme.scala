@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions.lit
   * Tile id layout: `slab * sy + tile` (row-major within slab).
   */
 final case class SortTileScheme(extent: Extent, xBounds: Array[Double],
-                                yBounds: Array[Array[Double]]) {
+                                yBounds: Array[Array[Double]]) extends CellMapping {
   require(yBounds.length == xBounds.length + 1, "one y-boundary vector per slab")
   require(yBounds.forall(_.length == yBounds(0).length),
     "ragged y-boundaries would collide tile ids across slabs (cell = slab*sy + tile)")
@@ -53,17 +53,17 @@ final case class SortTileScheme(extent: Extent, xBounds: Array[Double],
     * replication loop is per slab, unlike the uniform grid's rectangle). An
     * inverted MBR spans the tiles between its two ends.
     */
-  def cellsOf(g: Geom): Seq[Long] = {
-    val (s0, s1) = CellScheme.span(slabOf(g.xmin), slabOf(g.xmax))
-    val out = scala.collection.mutable.ArrayBuffer.empty[Long]
+  def cellsOf(xmin: Double, xmax: Double, ymin: Double, ymax: Double): CellKeys = {
+    val (s0, s1) = CellScheme.span(slabOf(xmin), slabOf(xmax))
+    val out = new scala.collection.mutable.ArrayBuilder.ofLong
     var s = s0
     while (s <= s1) {
-      val (t0, t1) = CellScheme.span(tileOf(s, g.ymin), tileOf(s, g.ymax))
+      val (t0, t1) = CellScheme.span(tileOf(s, ymin), tileOf(s, ymax))
       var t = t0
       while (t <= t1) { out += s.toLong * sy + t; t += 1 }
       s += 1
     }
-    out.toSeq
+    new CellKeys.Listed(out.result())
   }
 }
 
@@ -85,37 +85,40 @@ private[graft] object SchemeSampling {
     def tagged(d: Dataset[Geom], side: Int) =
       d.select($"id", $"xmin", $"xmax", $"ymin", $"ymax", lit(side).as("side"))
     val u = tagged(a, 0).unionByName(tagged(b, 1))
+      .as[(Long, Double, Double, Double, Double, Int)]
     // Row count from Catalyst plan statistics — ZERO jobs (the r4 version ran
     // a full `u.count()` before sampling: a complete read of both inputs at
     // 100× scale just to size a boundary sample). A small estimate is
-    // CONFIRMED by a bounded count (`limit(4·maxSample+1).count()` reads at
-    // most that many rows however large the input — the intersectJoin
-    // pattern); a large estimate only needs to be large, not exact: the
-    // fraction is a sampling heuristic and the plan is a performance
-    // choice, never a correctness input (reference-point ownership dedups
-    // identically under any boundaries or splits).
+    // CONFIRMED by a bounded read (`limit(4·maxSample+1)` reads at most that
+    // many rows however large the input — the intersectJoin pattern); when
+    // it does not saturate, that read IS both inputs, so it is subsampled
+    // here on the driver and nothing is read twice. A large estimate only
+    // needs to be large, not exact: the fraction is a sampling heuristic and
+    // the plan is a performance choice, never a correctness input
+    // (reference-point ownership dedups identically under any boundaries or
+    // splits).
     val est = math.max(1.0, graft.join.SpatialJoins.estRowsFromStats(a) +
       graft.join.SpatialJoins.estRowsFromStats(b))
-    val cap = 4L * maxSample + 1
-    val n =
-      if (est > 4.0 * maxSample) est
-      else {
-        val bounded = math.max(1L, u.limit(cap.toInt).count())
-        // a SATURATED bounded count means the stats estimate lied small and
-        // the true size is unknown — sizing the fraction from the cap would
-        // oversample and re-introduce the first-partitions head() bias (the
-        // exact failure mode this sampler exists to avoid). Only in that
-        // contradiction case pay one exact count; the common paths (stats
-        // large, or genuinely small input) never scan fully.
-        if (bounded >= cap) math.max(1L, u.count()).toDouble else bounded.toDouble
-      }
-    val fraction = math.min(1.0, 1.2 * maxSample / n)
-    // head() keeps 4× headroom over the expected sample so a stats
-    // UNDER-estimate (compressed column-pruned scans) must be off by >3× of
-    // the 1.2× margin before the first-partitions bias can appear; a bigger
-    // sample than maxSample only sharpens the plan.
-    val rows = u.sample(fraction, seed).as[(Long, Double, Double, Double, Double, Int)]
-      .head(4 * maxSample)
+    val cap = 4 * maxSample + 1
+    val large = est > 4.0 * maxSample
+    val all = if (large) None else Some(u.limit(cap).collect()).filter(_.length < cap)
+    // a SATURATED bounded read means the stats estimate lied small and the
+    // true size is unknown — sizing the fraction from the cap would
+    // oversample and re-introduce the first-partitions head() bias (the
+    // exact failure mode this sampler exists to avoid). Only in that
+    // contradiction case pay one exact count.
+    val n = all.fold(if (large) est else u.count().toDouble)(_.length.toDouble)
+    val fraction = math.min(1.0, 1.2 * maxSample / math.max(1.0, n))
+    val rows = all match {
+      case Some(rs) =>
+        val rnd = new scala.util.Random(seed)
+        if (fraction >= 1.0) rs else rs.filter(_ => rnd.nextDouble() < fraction)
+      // head() keeps 4× headroom over the expected sample so a stats
+      // UNDER-estimate (compressed column-pruned scans) must be off by >3× of
+      // the 1.2× margin before the first-partitions bias can appear; a bigger
+      // sample than maxSample only sharpens the plan.
+      case None => u.sample(fraction, seed).head(4 * maxSample)
+    }
     def side(s: Int) = rows.collect { case (id, x0, x1, y0, y1, `s`) => Geom(id, x0, x1, y0, y1) }
     (side(0), side(1), fraction)
   }

@@ -1,6 +1,6 @@
 package graft.join
 
-import graft.cells.CellScheme
+import graft.cells.{CellMapping, CellOf, CellScheme, CellsOf}
 import graft.geom.{Extent, Geom}
 import graft.geom.SqlOrder.le
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
@@ -131,7 +131,7 @@ object Route {
   case object PointsB extends Route
   /** Dense cells: the keyed repartition+sort reduce with the sweep/STR inner
     * loop ([[SpatialJoins.gridJoinSweep]]); a point side maps as a plain
-    * projection instead of a generator pair.
+    * projection instead of a generator.
     */
   final case class Sweep(aPoints: Boolean, bPoints: Boolean) extends Route
 }
@@ -143,7 +143,7 @@ object Route {
   *                      correctness oracle (reference J1,
   *                      `cpp/Tree_generation.hpp:707-718`).
   *  - `gridJoin`      — PBSM as a declarative Catalyst plan: replicate each MBR
-  *                      into overlapped grid cells (`explode(sequence)`), then a
+  *                      into overlapped grid cells (`explode(cells_of)`), then a
   *                      plain *equi-join on cell id* + intersect predicate +
   *                      reference-point ownership filter. Catalyst plans a
   *                      shuffled hash/sort-merge join, AQE handles residual
@@ -300,7 +300,7 @@ object SpatialJoins {
     case Route.Grid => gridJoin(a, b, s)
     case Route.PointsA => gridJoinPIP(a, b, s)
     case Route.PointsB => swapSides(gridJoinPIP(b, a, s))
-    case Route.Sweep(aPts, bPts) => gridJoinSweepHinted(a, b, s, aPts, bPts)
+    case Route.Sweep(aPts, bPts) => keyedPartitionJoin(a, b, s, aPts, bPts)
   }
 
   /** Single entry point with automatic physical-strategy choice (the
@@ -367,23 +367,17 @@ object SpatialJoins {
 
   // ---- declarative grid PBSM ------------------------------------------------
 
-  /** Owning cell id of a point `(x, y)` as a column: [[CellScheme.cellOfExpr]]. */
-  def cellOfCol(s: CellScheme, x: Column, y: Column): Column =
-    Bridge.column(s.cellOfExpr(Bridge.expression(x), Bridge.expression(y)))
+  /** Owning key of a point `(x, y)` under `m`, as a column ([[CellOf]]). */
+  def cellOfCol(m: CellMapping, x: Column, y: Column): Column =
+    Bridge.column(CellOf(m, Seq(x, y).map(Bridge.expression)))
 
-  /** Replicate rows into every overlapped cell (declarative `flatMap`:
-    * two `explode(sequence(...))` generators, fully codegen-friendly).
+  /** Replicate the `p`-prefixed rows into every key of `m` they overlap,
+    * keyed `cell`: one `explode` over [[CellsOf]], which streams a row's
+    * keys in generated code.
     */
-  def withCells(df: DataFrame, s: CellScheme, p: String): DataFrame = {
-    def cellCoord(axis: Expression => Expression, c: String): Column =
-      Bridge.column(axis(Bridge.expression(col(s"${p}_$c"))))
-    df.withColumn("cy", explode(sequence(cellCoord(s.cellYExpr, "ymin"),
-                                         cellCoord(s.cellYExpr, "ymax"))))
-      .withColumn("cx", explode(sequence(cellCoord(s.cellXExpr, "xmin"),
-                                         cellCoord(s.cellXExpr, "xmax"))))
-      .withColumn("cell", col("cy") * lit(s.nx.toLong) + col("cx"))
-      .drop("cx", "cy")
-  }
+  def withCells(df: DataFrame, m: CellMapping, p: String): DataFrame =
+    df.withColumn("cell", explode(Bridge.column(CellsOf(m,
+      Seq("xmin", "xmax", "ymin", "ymax").map(c => Bridge.expression(col(s"${p}_$c")))))))
 
   /** Reference-point dedup as a column predicate: the joined cell must be the
     * owner of the intersection's bottom-left corner.
@@ -410,21 +404,15 @@ object SpatialJoins {
 
   /** PBSM grid join as a pure Catalyst plan (equi-join on cell). */
   def gridJoin(a: Dataset[Geom], b: Dataset[Geom], s: CellScheme): DataFrame =
-    gridJoinWithCell(a, b, s).select(col("a_id"), col("b_id"))
-
-  /** [[gridJoin]] keeping the owning cell id — feeds the per-cell
-    * result-pair metrics (each pair appears exactly once, in its owner cell,
-    * so per-cell counts need no dedup).
-    */
-  def gridJoinWithCell(a: Dataset[Geom], b: Dataset[Geom], s: CellScheme): DataFrame =
-    cellJoin(prefixed(a, "a"), bReplicated(b, s), s)
-      .select(col("a_id"), col("b_id"), col("cell"))
+    cellJoin(prefixed(a, "a"), bReplicated(b, s), s).select(col("a_id"), col("b_id"))
 
   /** Per-cell result-pair counts (the north rule's per-cell result metrics —
-    * the candidate-side counterpart is `spatial_cell_stats`).
+    * the candidate-side counterpart is `spatial_cell_stats`): each pair
+    * appears exactly once, in its owner cell, so the counts need no dedup.
     */
   def cellResultStats(a: Dataset[Geom], b: Dataset[Geom], s: CellScheme): DataFrame =
-    gridJoinWithCell(a, b, s).groupBy(col("cell")).agg(count(lit(1)).as("n_pairs"))
+    cellJoin(prefixed(a, "a"), bReplicated(b, s), s)
+      .groupBy(col("cell")).agg(count(lit(1)).as("n_pairs"))
 
   /** Point-in-polygon specialization of [[gridJoin]] (the reference's PIP
     * workload reads its point side as native points, `cpp/join.hpp` /
@@ -435,8 +423,8 @@ object SpatialJoins {
     * generic plan:
     *
     *  - no a-side replication: a point overlaps exactly one cell, so the cell
-    *    id is a plain projection (`cellOfCol`) instead of an
-    *    `explode(sequence)` generator pair;
+    *    id is a plain projection (`cellOfCol`) instead of an `explode`
+    *    generator;
     *  - no reference-point ownership filter: a (point, polygon) pair can meet
     *    only in the point's own cell (cell coords are monotone in the
     *    coordinate, so a polygon containing the point always covers that
@@ -452,15 +440,6 @@ object SpatialJoins {
         col("a_y") >= col("b_ymin") && col("a_y") <= col("b_ymax"))
       .select(col("a_id"), col("b_id"))
   }
-
-  /** [[gridJoin]] with an explicit join-strategy hint on the b side
-    * ("shuffle_hash" avoids the SMJ sorts; "broadcast" removes the shuffle
-    * entirely when b's replicated form fits in memory — the J12 path).
-    */
-  def gridJoinHinted(a: Dataset[Geom], b: Dataset[Geom], s: CellScheme,
-                     hintName: String): DataFrame =
-    cellJoin(prefixed(a, "a"), bReplicated(b, s).hint(hintName), s)
-      .select(col("a_id"), col("b_id"))
 
   /** [[gridJoin]] restricted by an additional predicate variant (within /
     * contains / overlaps). The candidate phase and dedup are those of the
@@ -610,22 +589,27 @@ object SpatialJoins {
   }
 
   /** The ONE reduce body, shared by the sweep, adaptive, sort-tile and
-    * binary-split joins. `aKeyed` / `bKeyed` are the two sides' replicas: a
-    * `key` column plus the `a_`/`b_`-prefixed MBR columns. Their union is
+    * binary-split joins. Each side is keyed by `m` — replicated to its keys
+    * ([[withCells]]), or, for a POINT side, projected to its one key — and
+    * the union of the `key`ed `a_`/`b_`-prefixed MBR rows is
     * hash-partitioned on the key, sorted partition-locally, and consumed by a
     * run-grouping iterator that feeds each key's two sides to the sweep/STR
-    * inner loop. `ownerOf` maps a reference point to its owning key — pairs
+    * inner loop. `m.cellOf` maps a reference point to its owning key — pairs
     * are kept exactly once, in their owner key's run.
     */
-  private def keyedPartitionJoin(aKeyed: DataFrame, bKeyed: DataFrame,
-                                 ownerOf: (Double, Double) => Long): DataFrame = {
-    val spark = aKeyed.sparkSession
+  private[graft] def keyedPartitionJoin(a: Dataset[Geom], b: Dataset[Geom], m: CellMapping,
+                                         aPts: Boolean = false,
+                                         bPts: Boolean = false): DataFrame = {
+    val spark = a.sparkSession
     import spark.implicits._
+    def keyed(ds: Dataset[Geom], p: String, pts: Boolean): DataFrame =
+      if (pts) prefixed(ds, p).withColumn("key", cellOfCol(m, col(s"${p}_xmin"), col(s"${p}_ymin")))
+      else withCells(prefixed(ds, p), m, p).withColumnRenamed("cell", "key")
     def side(df: DataFrame, p: String, i: Int): DataFrame =
       df.select(col("key"), lit(i).as("side"), col(s"${p}_id").as("id"),
         col(s"${p}_xmin").as("xmin"), col(s"${p}_xmax").as("xmax"),
         col(s"${p}_ymin").as("ymin"), col(s"${p}_ymax").as("ymax"))
-    val u = side(aKeyed, "a", 0).unionByName(side(bKeyed, "b", 1))
+    val u = side(keyed(a, "a", aPts), "a", 0).unionByName(side(keyed(b, "b", bPts), "b", 1))
       .repartition(col("key")).sortWithinPartitions("key", "side")
       .as[KeyedGeom]
     u.mapPartitions { rows =>
@@ -645,7 +629,7 @@ object SpatialJoins {
               cur = if (rows.hasNext) rows.next() else null
             }
             inner = joinCellOwned(as.toArray, bs.toArray,
-              (rx, ry) => ownerOf(rx, ry) == cellKey)
+              (rx, ry) => m.cellOf(rx, ry) == cellKey)
           }
         }
         def hasNext: Boolean = { fill(); inner.hasNext }
@@ -655,13 +639,13 @@ object SpatialJoins {
   }
 
   /** PBSM grid join with the plane-sweep/STR inner loop. The replication is
-    * DECLARATIVE (the same codegen'd `explode(sequence)` generators as
-    * [[gridJoin]]), followed by the keyed reduce — object construction
-    * happens ONCE per row, on the reduce side.
+    * DECLARATIVE (the same codegen'd `explode` generator as [[gridJoin]]),
+    * followed by the keyed reduce — object construction happens ONCE per
+    * row, on the reduce side.
     *
     * A POINT side (the stripes/dense twin of [[gridJoinPIP]]) overlaps
     * exactly one cell, so its map side is a plain projection with no
-    * generator pair. Point evidence costs a data pass, so it is measured
+    * generator. Point evidence costs a data pass, so it is measured
     * only for inputs of ≳1M estimated rows ([[evidenceIfLarge]]). Every
     * branch emits the identical pair set: a point's pair can only meet in
     * the point's own cell, where its reference point — the point itself —
@@ -669,17 +653,7 @@ object SpatialJoins {
     */
   def gridJoinSweep(a: Dataset[Geom], b: Dataset[Geom], s: CellScheme): DataFrame = {
     val ev = evidenceIfLarge(a, b)
-    gridJoinSweepHinted(a, b, s, ev.exists(_.aPoints), ev.exists(_.bPoints))
-  }
-
-  /** [[gridJoinSweep]] with the point-side evidence supplied by the caller. */
-  private[graft] def gridJoinSweepHinted(a: Dataset[Geom], b: Dataset[Geom],
-                                         s: CellScheme, aPts: Boolean,
-                                         bPts: Boolean): DataFrame = {
-    def keyed(ds: Dataset[Geom], p: String, pts: Boolean): DataFrame =
-      if (pts) prefixed(ds, p).withColumn("key", cellOfCol(s, col(s"${p}_xmin"), col(s"${p}_ymin")))
-      else withCells(prefixed(ds, p), s, p).withColumnRenamed("cell", "key")
-    keyedPartitionJoin(keyed(a, "a", aPts), keyed(b, "b", bPts), s.cellOf)
+    keyedPartitionJoin(a, b, s, ev.exists(_.aPoints), ev.exists(_.bPoints))
   }
 
   /** 1-D stripes plan (reference J5): an `n × 1` grid. Small inputs (Catalyst
@@ -715,18 +689,6 @@ object SpatialJoins {
     planRoute(a, b, s, route(ev, s))
   }
 
-  /** A data-driven scheme's join: its `cellsOf` replicates each side into
-    * the keyed form, its `cellOf` owns the pairs in the keyed reduce.
-    */
-  private def schemeJoin(a: Dataset[Geom], b: Dataset[Geom], cellsOf: Geom => Seq[Long],
-                         cellOf: (Double, Double) => Long): DataFrame = {
-    import a.sparkSession.implicits._
-    def keyed(ds: Dataset[Geom], p: String): DataFrame =
-      ds.flatMap(g => cellsOf(g).map(c => CellGeom(c, g.id, g.xmin, g.xmax, g.ymin, g.ymax)))
-        .toDF("key", s"${p}_id", s"${p}_xmin", s"${p}_xmax", s"${p}_ymin", s"${p}_ymax")
-    keyedPartitionJoin(keyed(a, "a"), keyed(b, "b"), cellOf)
-  }
-
   /** Sort-tile-partitioned join (the reference's SpatialSpark STP method,
     * `PartitionedSpatialJoin.scala:151-165`): data-quantile tile boundaries
     * ([[graft.cells.SortTileScheme]]) instead of a uniform lattice — equal
@@ -736,7 +698,7 @@ object SpatialJoins {
     */
   def sortTileJoin(a: Dataset[Geom], b: Dataset[Geom],
                    scheme: graft.cells.SortTileScheme): DataFrame =
-    schemeJoin(a, b, scheme.cellsOf, scheme.cellOf)
+    keyedPartitionJoin(a, b, scheme)
 
   /** Convenience: build the scheme from a sample, then join. For benchmarks
     * or repeated joins build once and call the scheme overload.
@@ -751,7 +713,7 @@ object SpatialJoins {
     */
   def binarySplitJoin(a: Dataset[Geom], b: Dataset[Geom],
                       scheme: graft.cells.BinarySplitScheme): DataFrame =
-    schemeJoin(a, b, scheme.cellsOf, scheme.cellOf)
+    keyedPartitionJoin(a, b, scheme)
 
   def binarySplitJoin(a: Dataset[Geom], b: Dataset[Geom], extent: Extent,
                       depth: Int): DataFrame =
@@ -775,62 +737,7 @@ object SpatialJoins {
       // SMJ loop). Every branch emits the identical pair set.
       if (scheme.perCellMean > DenseCellRows) gridJoinSweep(a, b, base)
       else gridJoin(a, b, base)
-    } else {
-      // declarative two-level replication + the keyed reduce — the map side
-      // stays in whole-stage codegen
-      keyedPartitionJoin(withAdaptiveKeys(prefixed(a, "a"), scheme, "a"),
-        withAdaptiveKeys(prefixed(b, "b"), scheme, "b"), scheme.ownerKey)
-    }
-  }
-
-  /** Replicate rows onto the adaptive two-level `key` as PURE column
-    * expressions — the declarative twin of `AdaptiveScheme.keysOf`, kept in
-    * bit-exact lockstep with it (same base-cell clamping via [[withCells]],
-    * same `lo + cx·cellW` / `cellW / s` / `floor((v−lo)/len)` double
-    * arithmetic, same clamped sub-ranges, same `cell·4096 (+1+sy·s+sx)`
-    * packing). The split table rides as a literal map (splits are few by
-    * construction); unsplit cells take the slot-0 key without touching the
-    * division path.
-    */
-  private[graft] def withAdaptiveKeys(df: DataFrame,
-                                      scheme: graft.skew.AdaptiveScheme,
-                                      p: String): DataFrame = {
-    val base = scheme.base
-    // empty split table: map_from_arrays over two zero-length literals yields
-    // NullType keys and fails analysis in try_element_at — short-circuit to
-    // the slot-0 key (the helper must be total even though gridJoinAdaptive
-    // routes the no-splits case to the plain-grid plan before calling it)
-    if (scheme.splits.isEmpty)
-      return withCells(df, base, p)
-        .withColumn("key", col("cell") * lit(scheme.keyMultiplier))
-        .drop("cell")
-    val cells = scheme.splits.keys.toArray.sorted
-    val splitMap = map_from_arrays(
-      array(cells.map(lit(_)): _*),
-      array(cells.map(c => lit(scheme.splits(c))): _*))
-    val s = col("s")
-    val cx = (col("cell") % lit(base.nx.toLong)).cast("double")
-    val cy = floor(col("cell").cast("double") / lit(base.nx.toDouble))
-    val lox = lit(base.extent.xmin) + cx * lit(base.cellW)
-    val loy = lit(base.extent.ymin) + cy * lit(base.cellH)
-    val subW = lit(base.cellW) / s.cast("double")
-    val subH = lit(base.cellH) / s.cast("double")
-    // the base grid's clamped arithmetic, NaN to the last sub-cell included
-    def sub(v: Column, lo: Column, len: Column): Column =
-      least(greatest(floor(nanvl((v - lo) / len, s.cast("double"))).cast("long"), lit(0L)),
-        (s - 1).cast("long"))
-    withCells(df, base, p)
-      .withColumn("s", coalesce(try_element_at(splitMap, col("cell")), lit(0)))
-      .withColumn("sy", explode(when(s === 0, sequence(lit(0L), lit(0L)))
-        .otherwise(sequence(sub(col(s"${p}_ymin"), loy, subH),
-                            sub(col(s"${p}_ymax"), loy, subH)))))
-      .withColumn("sx", explode(when(s === 0, sequence(lit(0L), lit(0L)))
-        .otherwise(sequence(sub(col(s"${p}_xmin"), lox, subW),
-                            sub(col(s"${p}_xmax"), lox, subW)))))
-      .withColumn("key", when(s === 0, col("cell") * lit(scheme.keyMultiplier))
-        .otherwise(col("cell") * lit(scheme.keyMultiplier) + lit(1L) +
-          col("sy") * s.cast("long") + col("sx")))
-      .drop("s", "sy", "sx", "cell")
+    } else keyedPartitionJoin(a, b, scheme)
   }
 
   // ---- distance join --------------------------------------------------------

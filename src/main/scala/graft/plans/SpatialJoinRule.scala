@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.cells.CellScheme
+import graft.cells.{CellOf, CellScheme, CellsOf}
 import graft.functions.{STContains, STDWithin, STIntersects, STWithin, SimHash64}
 import graft.geom.Extent
 import org.apache.spark.sql.SparkSession
@@ -14,10 +14,11 @@ import org.apache.spark.sql.types.LongType
   * `a JOIN b ON st_intersects(ax0, ax1, ay0, ay1, bx0, bx1, by0, by1) [AND …]`
   * — which Catalyst would otherwise plan as a broadcast-nested-loop /
   * cartesian θ-join — into the PBSM cell plan: both sides are exploded into
-  * grid cells (`Generate(Explode(Sequence(...)))`), equi-joined on the cell
+  * grid cells (`Generate(Explode(CellsOf(...)))`), equi-joined on the cell
   * id, re-filtered with the intersect predicate, and deduplicated with the
-  * reference-point ownership test. Identical semantics, shuffle-partitioned
-  * execution.
+  * reference-point ownership test (`CellOf`) — the same two expressions over
+  * the same `CellScheme` arithmetic as the DataFrame plans. Identical
+  * semantics, shuffle-partitioned execution.
   *
   * The grid is a *fixed global scheme* (the H3/S2-style index of this engine)
   * read from session conf:
@@ -40,19 +41,9 @@ object SpatialJoinRule extends Rule[LogicalPlan] with PredicateHelper {
 
   /** Explode a side into its overlapped cells; returns (plan, cellAttr). */
   private def withCells(s: CellScheme, child: LogicalPlan,
-                        x0: Expression, x1: Expression,
-                        y0: Expression, y1: Expression): (LogicalPlan, Attribute) = {
-    val cy = AttributeReference("__graft_cy", LongType)()
-    val cx = AttributeReference("__graft_cx", LongType)()
-    val tz = Some(conf.sessionLocalTimeZone)
-    val genY = Generate(
-      Explode(Sequence(s.cellYExpr(y0), s.cellYExpr(y1), None, tz)),
-      Nil, outer = false, None, Seq(cy), child)
-    val genX = Generate(
-      Explode(Sequence(s.cellXExpr(x0), s.cellXExpr(x1), None, tz)),
-      Nil, outer = false, None, Seq(cx), genY)
-    val cell = Alias(Add(Multiply(cy, Literal(s.nx.toLong)), cx), "__graft_cell")()
-    (Project(child.output :+ cell, genX), cell.toAttribute)
+                        coords: Seq[Expression]): (LogicalPlan, Attribute) = {
+    val cell = AttributeReference("__graft_cell", LongType, nullable = false)()
+    (Generate(Explode(CellsOf(s, coords)), Nil, outer = false, None, Seq(cell), child), cell)
   }
 
   /** Point-side cell assignment: a single projection, no generators (the
@@ -61,7 +52,7 @@ object SpatialJoinRule extends Rule[LogicalPlan] with PredicateHelper {
     */
   private def withCellPoint(s: CellScheme, child: LogicalPlan,
                             x: Expression, y: Expression): (LogicalPlan, Attribute) = {
-    val cell = Alias(s.cellOfExpr(x, y), "__graft_cell")()
+    val cell = Alias(CellOf(s, Seq(x, y)), "__graft_cell")()
     (Project(child.output :+ cell, child), cell.toAttribute)
   }
 
@@ -157,16 +148,16 @@ object SpatialJoinRule extends Rule[LogicalPlan] with PredicateHelper {
             val rPt = isPointSide(ra)
             val (lp, lcell) =
               if (lPt) withCellPoint(s, left, ax0, ay0)
-              else withCells(s, left, ax0, ax1, ay0, ay1)
+              else withCells(s, left, la)
             val (rp, rcell) =
               if (rPt) withCellPoint(s, right, bx0, by0)
-              else withCells(s, right, bx0, bx1, by0, by1)
+              else withCells(s, right, ra)
             val intersect = And(And(LessThanOrEqual(ax0, bx1), GreaterThanOrEqual(ax1, bx0)),
                                 And(LessThanOrEqual(ay0, by1), GreaterThanOrEqual(ay1, by0)))
             val owns =
               if (lPt || rPt) Nil
               else Seq(EqualTo(
-                s.cellOfExpr(Greatest(Seq(ax0, bx0)), Greatest(Seq(ay0, by0))), lcell))
+                CellOf(s, Seq(Greatest(Seq(ax0, bx0)), Greatest(Seq(ay0, by0)))), lcell))
             val newCond = (Seq(EqualTo(lcell, rcell), intersect) ++ owns ++
               refinement(st, pa, pb, r) ++ rest).reduce(And)
             Project(j.output, Join(lp, rp, Inner, Some(newCond), hint))

@@ -1,6 +1,6 @@
 package graft.skew
 
-import graft.cells.{CellScheme, SchemeSampling}
+import graft.cells.{CellKeys, CellMapping, CellScheme, SchemeSampling}
 import graft.cells.CellScheme.{coord, span}
 import graft.geom.Geom
 import org.apache.spark.sql.Dataset
@@ -25,15 +25,9 @@ import org.apache.spark.sql.Dataset
   * default.
   */
 final case class AdaptiveScheme(base: CellScheme, splits: Map[Long, Int],
-                                perCellMean: Double = -1.0) {
-  // key layout: base cell id << 12 | (1 + subIdx); plain cells use subIdx slot 0
-  private final val SubBits = 12
+                                perCellMean: Double = -1.0) extends CellMapping {
+  import AdaptiveScheme.SubBits
   require(splits.values.forall(s => s * s < (1 << SubBits) - 1), "split factor too large")
-
-  /** `key = cell * keyMultiplier (+ 1 + subIdx)` — the packing the
-    * declarative replication (`SpatialJoins.withAdaptiveKeys`) must match.
-    */
-  def keyMultiplier: Long = 1L << SubBits
 
   // the split lookup sits on the PER-PAIR hot path (ownership test of every
   // emitted candidate): a scala Map[Long, Int] boxes the key on every get —
@@ -47,46 +41,56 @@ final case class AdaptiveScheme(base: CellScheme, splits: Map[Long, Int],
     if (i >= 0) splitFactors(i) else 0
   }
 
-  def ownerKey(x: Double, y: Double): Long = {
+  /** The clamped sub-cell coordinate of `v` in an `s`-way split of the base
+    * cell whose low edge is cell coordinate `cc` on an axis of `len`-wide cells.
+    */
+  @inline private def subCoord(v: Double, lo: Double, cc: Long, len: Double, s: Int): Int =
+    coord(v, lo + cc * len, len / s, s)
+
+  def cellOf(x: Double, y: Double): Long = {
     val c = base.cellOf(x, y)
     splitOf(c) match {
       case 0 => c << SubBits
       case s =>
-        val cx = (c % base.nx).toInt; val cy = (c / base.nx).toInt
-        val lox = base.extent.xmin + cx * base.cellW
-        val loy = base.extent.ymin + cy * base.cellH
-        val sx = coord(x, lox, base.cellW / s, s)
-        val sy = coord(y, loy, base.cellH / s, s)
+        val sx = subCoord(x, base.extent.xmin, c % base.nx, base.cellW, s)
+        val sy = subCoord(y, base.extent.ymin, c / base.nx, base.cellH, s)
         (c << SubBits) | (1L + sy.toLong * s + sx)
     }
   }
 
-  /** All final keys overlapped by an MBR. */
-  def keysOf(g: Geom): Seq[Long] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[Long]
-    base.cellsOf(g).foreach { c =>
+  /** The base cells' slot-0 keys, computed on demand; when the MBR meets a
+    * split cell, listed one by one with that cell's sub-cell keys instead.
+    */
+  def cellsOf(xmin: Double, xmax: Double, ymin: Double, ymax: Double): CellKeys = {
+    val cells = base.cellsOf(xmin, xmax, ymin, ymax)
+    // the first split cell at or after the rectangle's first cell in id
+    // order that lies in the rectangle's columns
+    val last = cells(cells.length - 1)
+    var i = java.util.Arrays.binarySearch(splitCells, cells(0))
+    if (i < 0) i = -i - 1
+    while (i < splitCells.length && splitCells(i) <= last &&
+           (splitCells(i) % base.nx < cells.x0 || splitCells(i) % base.nx > cells.x1)) i += 1
+    if (i == splitCells.length || splitCells(i) > last)
+      return cells.copy(stride = base.nx.toLong << SubBits, step = 1L << SubBits)
+    val out = new scala.collection.mutable.ArrayBuilder.ofLong
+    cells.foreach { c =>
       splitOf(c) match {
-        case 0 => out += (c << SubBits)
+        case 0 => out += c << SubBits
         case s =>
-          val cx = (c % base.nx).toInt; val cy = (c / base.nx).toInt
-          val lox = base.extent.xmin + cx * base.cellW
-          val loy = base.extent.ymin + cy * base.cellH
-          val subW = base.cellW / s; val subH = base.cellH / s
-          val (sx0, sx1) = span(coord(g.xmin, lox, subW, s), coord(g.xmax, lox, subW, s))
-          val (sy0, sy1) = span(coord(g.ymin, loy, subH, s), coord(g.ymax, loy, subH, s))
-          var sy = sy0
-          while (sy <= sy1) {
-            var sx = sx0
-            while (sx <= sx1) { out += ((c << SubBits) | (1L + sy.toLong * s + sx)); sx += 1 }
-            sy += 1
-          }
+          def sub(lo: Double, cc: Long, len: Double, v0: Double, v1: Double) =
+            span(subCoord(v0, lo, cc, len, s), subCoord(v1, lo, cc, len, s))
+          val (x0, x1) = sub(base.extent.xmin, c % base.nx, base.cellW, xmin, xmax)
+          val (y0, y1) = sub(base.extent.ymin, c / base.nx, base.cellH, ymin, ymax)
+          out ++= CellKeys.Rect((c << SubBits) + 1, s, 1L, x0, x1, y0, y1)
       }
     }
-    out.toSeq
+    new CellKeys.Listed(out.result())
   }
+}
 
-  def owns(key: Long, a: Geom, b: Geom): Boolean =
-    ownerKey(math.max(a.xmin, b.xmin), math.max(a.ymin, b.ymin)) == key
+object AdaptiveScheme {
+  /** Key layout: base cell id << SubBits | (1 + subIdx); plain cells use subIdx slot 0. */
+  private val SubBits = 12
 }
 
 object AdaptiveCells {
@@ -142,19 +146,15 @@ object AdaptiveCells {
                scale: Double, parallelism: Int, budgetPairs: Long): AdaptiveScheme = {
     val nx = base.nx; val ny = base.ny
     val rows = sampleA ++ sampleB
-    // each row's clamped cell rectangle (cx0, cx1, cy0, cy1), as cellsOf
-    val boxes = rows.map { g =>
-      val (x0, x1) = span(base.cellX(g.xmin), base.cellX(g.xmax))
-      val (y0, y1) = span(base.cellY(g.ymin), base.cellY(g.ymax))
-      (x0, x1, y0, y1)
-    }
+    // each row's clamped cell rectangle
+    val boxes = rows.map(g => base.cellsOf(g.xmin, g.xmax, g.ymin, g.ymax))
     // per-cell row counts of one side: a 2-D difference array, prefix-summed,
     // so a map-spanning row costs O(1), not O(its cells)
     def counts(from: Int, until: Int): Array[Int] = {
       val d = new Array[Int](Math.toIntExact(base.numCells))
       def add(cx: Int, cy: Int, v: Int): Unit = if (cx < nx && cy < ny) d(cy * nx + cx) += v
-      boxes.slice(from, until).foreach { case (x0, x1, y0, y1) =>
-        add(x0, y0, 1); add(x1 + 1, y0, -1); add(x0, y1 + 1, -1); add(x1 + 1, y1 + 1, 1)
+      boxes.slice(from, until).foreach { r =>
+        add(r.x0, r.y0, 1); add(r.x1 + 1, r.y0, -1); add(r.x0, r.y1 + 1, -1); add(r.x1 + 1, r.y1 + 1, 1)
       }
       for (cy <- 0 until ny; cx <- 1 until nx) d(cy * nx + cx) += d(cy * nx + cx - 1)
       for (cy <- 1 until ny; cx <- 0 until nx) d(cy * nx + cx) += d((cy - 1) * nx + cx)
@@ -192,8 +192,8 @@ object AdaptiveCells {
     val splits = ca.indices.filter(c => prod(c) > threshold).map { c =>
       val (cx, cy) = (c % nx, c / nx)
       val residents = rows.indices.filter { i =>
-        val (x0, x1, y0, y1) = boxes(i)
-        x0 <= cx && cx <= x1 && y0 <= cy && cy <= y1
+        val r = boxes(i)
+        r.x0 <= cx && cx <= r.x1 && r.y0 <= cy && cy <= r.y1
       }.map(rows).toArray
       val mw = median(residents.map(_.width))
       val mh = median(residents.map(_.height))

@@ -46,7 +46,7 @@ object CellProps extends Properties("cells") {
     Prop.forAll(geomGen, geomGen, splitsGen) { (a, b, splits) =>
       val scheme = AdaptiveScheme(CellScheme(Extent(0, 100, 0, 100), 5, 5), splits)
       !a.intersects(b) || {
-        val shared = scheme.keysOf(a).toSet intersect scheme.keysOf(b).toSet
+        val shared = scheme.cellsOf(a).toSet intersect scheme.cellsOf(b).toSet
         shared.count(k => scheme.owns(k, a, b)) == 1
       }
     }

@@ -24,7 +24,7 @@ class SkewSpec extends AnyFunSuite {
       }
       val a = g(); val b = g()
       if (a.intersects(b)) {
-        val owners = (scheme.keysOf(a).toSet intersect scheme.keysOf(b).toSet)
+        val owners = (scheme.cellsOf(a).toSet intersect scheme.cellsOf(b).toSet)
           .count(k => scheme.owns(k, a, b))
         assert(owners == 1, s"$a x $b")
       }
@@ -57,31 +57,6 @@ class SkewSpec extends AnyFunSuite {
     val sweep = pairs(SpatialJoins.gridJoinSweep(a, b, base))
     val salted = pairs(SpatialJoins.gridJoinSalted(a, b, base, salt = 4))
     assert(adaptive == sweep && adaptive == salted && adaptive.nonEmpty)
-  }
-
-  test("declarative adaptive replication == AdaptiveScheme.keysOf (random boundary sweep)") {
-    import org.apache.spark.sql.functions.col
-    val base = CellScheme(Extent(0, 100, 0, 100), 4, 4)
-    val scheme = AdaptiveScheme(base, Map(0L -> 3, 5L -> 2, 10L -> 7))
-    val rnd = new scala.util.Random(17)
-    val gs = (0 until 4000).map { i =>
-      // mix of tiny/large rects, some snapped to cell/subcell boundaries
-      def coord() = {
-        val v = rnd.nextDouble() * 100
-        if (rnd.nextInt(4) == 0) math.floor(v / 25.0 / 3) * 25.0 / 3 else v
-      }
-      val x = coord(); val y = coord()
-      val w = if (rnd.nextBoolean()) rnd.nextDouble() * 2 else rnd.nextDouble() * 40
-      Geom(i.toLong, x, math.min(100, x + w), y, math.min(100, y + w))
-    }
-    import spark.implicits._
-    val df = spark.createDataset(gs).toDF(
-      "a_id", "a_xmin", "a_xmax", "a_ymin", "a_ymax")
-    val declarative = SpatialJoins.withAdaptiveKeys(df, scheme, "a")
-      .select(col("a_id"), col("key"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val want = gs.flatMap(g => scheme.keysOf(g).map(k => (g.id, k))).toSet
-    assert(declarative == want)
   }
 
   test("concentration gate: evenly dense cells plan ZERO splits even far over budget") {
@@ -174,20 +149,6 @@ class SkewSpec extends AnyFunSuite {
     val want = pairs(SpatialJoins.broadcastNL(a, b))
     assert(pairs(SpatialJoins.gridJoinAdaptive(a, b, large, budgetPairs = 100000)) == want)
     assert(want.nonEmpty)
-  }
-
-  test("withAdaptiveKeys is total on an empty split table (slot-0 keys)") {
-    import org.apache.spark.sql.functions.col
-    val base = CellScheme(Extent(0, 100, 0, 100), 4, 4)
-    val scheme = AdaptiveScheme(base, Map.empty)
-    import spark.implicits._
-    val gs = Seq(Geom(1, 5, 30, 5, 30), Geom(2, 80, 99, 80, 99), Geom(3, 0, 0, 0, 0))
-    val df = spark.createDataset(gs).toDF("a_id", "a_xmin", "a_xmax", "a_ymin", "a_ymax")
-    val got = SpatialJoins.withAdaptiveKeys(df, scheme, "a")
-      .select(col("a_id"), col("key"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val want = gs.flatMap(g => scheme.keysOf(g).map(k => (g.id, k))).toSet
-    assert(got == want)
   }
 
   test("zero-splits gate: even-density input routes to the plain-grid plan") {

@@ -170,7 +170,7 @@ class SpatialJoinSpec extends AnyFunSuite {
     assert(pairs(gridJoinPIP(rects, b, s)) == pairs(gridJoin(corners, b, s)))
   }
 
-  test("intersectJoin auto-routes a point side to the PIP plan (2 generators, not 4)") {
+  test("intersectJoin auto-routes a point side to the PIP plan (1 generator, not 2)") {
     val pts = randomSet(14, 30000, 0.0)
     val polys = randomSet(15, 30000, 4.0)
     def generates(df: org.apache.spark.sql.DataFrame): Int =
@@ -178,19 +178,19 @@ class SpatialJoinSpec extends AnyFunSuite {
         case g: org.apache.spark.sql.catalyst.plans.logical.Generate => g
       }.size
     val viaA = intersectJoin(pts, polys, broadcastThreshold = 100)
-    assert(generates(viaA) == 2, "point a-side must skip the a-side explode pair")
+    assert(generates(viaA) == 1, "point a-side must skip the a-side explode")
     val viaB = intersectJoin(polys, pts, broadcastThreshold = 100)
-    assert(generates(viaB) == 2, "point b-side must route through the swapped PIP plan")
+    assert(generates(viaB) == 1, "point b-side must route through the swapped PIP plan")
     val oracle = pairs(broadcastNL(pts, polys))
     assert(pairs(viaA) == oracle)
     assert(pairs(viaB) == oracle.map { case (x, y) => (y, x) })
     // no point side → generic replicate+own plan (both sides exploded)
     assert(generates(intersectJoin(polys, randomSet(16, 30000, 4.0),
-      broadcastThreshold = 100)) == 4)
+      broadcastThreshold = 100)) == 2)
   }
 
   test("sweep point specialization: projection-only point side, identical pairs (grid + stripes)") {
-    // exercises gridJoinSweepHinted directly: the public gridJoinSweep gates
+    // exercises the keyed reduce directly: the public gridJoinSweep gates
     // its detection aggregation on ~1M estimated rows, so spec-sized inputs
     // would keep the generic map side
     val pts = randomSet(24, 2000, 0.0)
@@ -204,17 +204,17 @@ class SpatialJoinSpec extends AnyFunSuite {
       }.size
     for (s <- Seq(CellScheme(ext, 9, 9), CellScheme.stripesY(ext, 11),
                   CellScheme.stripesX(ext, 7))) {
-      val hinted = SpatialJoins.gridJoinSweepHinted(pts, polys, s,
+      val hinted = SpatialJoins.keyedPartitionJoin(pts, polys, s,
         aPts = true, bPts = false)
-      assert(generates(hinted) == 2,
-        s"point side must be a projection (only the poly side's generator pair remains), scheme $s")
+      assert(generates(hinted) == 1,
+        s"point side must be a projection (only the poly side's generator remains), scheme $s")
       assert(pairs(hinted) == oracle, s"hinted pair set, scheme $s")
-      val swapped = SpatialJoins.gridJoinSweepHinted(polys, pts, s,
+      val swapped = SpatialJoins.keyedPartitionJoin(polys, pts, s,
         aPts = false, bPts = true)
       assert(pairs(swapped) == oracle.map(_.swap), s"swapped hinted pair set, scheme $s")
     }
     // a lying hint is the caller's bug, but the generic form must stay exact
-    assert(pairs(SpatialJoins.gridJoinSweepHinted(pts, polys,
+    assert(pairs(SpatialJoins.keyedPartitionJoin(pts, polys,
       CellScheme(ext, 9, 9), aPts = false, bPts = false)) == oracle)
   }
 

@@ -3,7 +3,7 @@ package graft
 import graft.cells.CellScheme
 import graft.geom.Geom
 import graft.join.{Route, SpatialJoins}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions.{col, lit, pmod}
 import org.scalatest.funsuite.AnyFunSuite
@@ -126,15 +126,28 @@ class StatsPlanningSpec extends AnyFunSuite {
   }
 
   test("bsp scheme build small estimate: bounded confirm only (≤ 3 jobs)") {
-    val a = mk(300, 0); val b = mk(300, 1000)
-    a.count(); b.count()
-    var bsp: graft.cells.BinarySplitScheme = null
-    val jobs = jobsDuring {
-      // large maxSample → est ≤ 4·maxSample → ONE bounded limit-confirm job
-      // (reads ≤ 4·maxSample+1 rows however big the input) + the sample head
-      bsp = graft.cells.BinarySplitScheme.build(a, b, graft.geom.Extent(0, 100, 0, 100), 4)
+    // parquet inputs, so the scans report the rows they read
+    val dir = java.nio.file.Files.createTempDirectory("bsp-sample").toString
+    mk(300, 0).write.parquet(s"$dir/a"); mk(300, 1000).write.parquet(s"$dir/b")
+    import spark.implicits._
+    val a = spark.read.parquet(s"$dir/a").as[Geom]
+    val b = spark.read.parquet(s"$dir/b").as[Geom]
+    val read = new java.util.concurrent.atomic.AtomicLong(0)
+    val l = new SparkListener {
+      override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
+        if (te.taskMetrics != null) read.addAndGet(te.taskMetrics.inputMetrics.recordsRead)
     }
+    var bsp: graft.cells.BinarySplitScheme = null
+    spark.sparkContext.addSparkListener(l)
+    val jobs = try jobsDuring {
+      // large maxSample → est ≤ 4·maxSample → ONE bounded read
+      // (≤ 4·maxSample+1 rows however big the input), subsampled on the
+      // driver
+      bsp = graft.cells.BinarySplitScheme.build(a, b, graft.geom.Extent(0, 100, 0, 100), 4)
+    } finally spark.sparkContext.removeSparkListener(l)
     assert(jobs <= 3, s"bsp build must be bounded-confirm + sample, got $jobs jobs")
+    // the bounded read IS the sample: no input row is read twice
+    assert(read.get > 0 && read.get <= 600, s"planning read ${read.get} rows of 600")
     val got = SpatialJoins.binarySplitJoin(a, b, bsp)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val want = SpatialJoins.broadcastNL(a, b)

@@ -28,13 +28,13 @@ class StreamSpatialSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got == batch)
     // PIP plan shape: the geocoded point side must NOT be exploded — only
-    // the static rect side carries the two cell generators, and no
+    // the static rect side carries the cell generator, and no
     // reference-point ownership recompute survives in the join condition
     val opt = PagesStream.geoJoinStream(pages, rects, SparkEntry.grid)
       .queryExecution.optimizedPlan
     val gens = opt.collect {
       case g: org.apache.spark.sql.catalyst.plans.logical.Generate => g }.size
-    assert(gens == 2, s"stream point side must not be exploded (got $gens)")
+    assert(gens == 1, s"stream point side must not be exploded (got $gens)")
   }
 
   test("intersectJoin auto-picks a strategy and stays oracle-equal") {
