@@ -421,8 +421,6 @@ object SparkEntry {
     // refinement rides on the cell candidate phase)
     "spatial_sql_within_join" -> ((s, dir) => {
       graft.plans.GraftSql.install(s)
-      s.conf.set(graft.plans.SpatialJoinRule.ExtentKey, "0,1000,0,1000")
-      s.conf.set(graft.plans.SpatialJoinRule.GridKey, "64")
       partRects.load(s, dir).createOrReplaceTempView("graft_wa")
       ordersRects.load(s, dir).createOrReplaceTempView("graft_wb")
       s.sql("""SELECT a.id AS a_id, b.id AS b_id FROM graft_wa a JOIN graft_wb b
@@ -431,8 +429,6 @@ object SparkEntry {
     }),
     "spatial_sql_dwithin_join" -> ((s, dir) => {
       graft.plans.GraftSql.install(s)
-      s.conf.set(graft.plans.SpatialJoinRule.ExtentKey, "0,1000,0,1000")
-      s.conf.set(graft.plans.SpatialJoinRule.GridKey, "64")
       customerPoints.load(s, dir).createOrReplaceTempView("graft_da")
       partRects.load(s, dir).createOrReplaceTempView("graft_db")
       s.sql("""SELECT a.id AS a_id, b.id AS b_id FROM graft_da a JOIN graft_db b
@@ -443,21 +439,17 @@ object SparkEntry {
     // cell-partitioned equi-join (no cartesian product in the physical plan)
     "spatial_sql_join" -> ((s, dir) => {
       graft.plans.GraftSql.install(s)
-      s.conf.set(graft.plans.SpatialJoinRule.ExtentKey, "0,1000,0,1000")
-      s.conf.set(graft.plans.SpatialJoinRule.GridKey, "64")
       partRects.load(s, dir).createOrReplaceTempView("graft_a")
       ordersRects.load(s, dir).createOrReplaceTempView("graft_b")
       s.sql("""SELECT a.id AS a_id, b.id AS b_id FROM graft_a a JOIN graft_b b
               | ON st_intersects(a.xmin, a.xmax, a.ymin, a.ymax,
               |                  b.xmin, b.xmax, b.ymin, b.ymax)""".stripMargin)
     }),
-    // SQL surface over a raw (x, y) POINT table: the rule detects the
-    // repeated min/max expression structurally and plans PIP-style (no
-    // point-side generators, no ownership conjunct)
+    // SQL surface over a raw (x, y) POINT table: the evidence job finds the
+    // point side by value and plans PIP-style (no point-side generator, no
+    // ownership conjunct)
     "spatial_sql_pip_join" -> ((s, dir) => {
       graft.plans.GraftSql.install(s)
-      s.conf.set(graft.plans.SpatialJoinRule.ExtentKey, "0,1000,0,1000")
-      s.conf.set(graft.plans.SpatialJoinRule.GridKey, "64")
       customerPoints.load(s, dir).toDF()
         .selectExpr("id", "xmin AS x", "ymin AS y")
         .createOrReplaceTempView("graft_p")

@@ -115,6 +115,32 @@ object JoinEvidence {
     Greatest(Seq(Abs(Subtract(xmax, xmin)), Abs(Subtract(ymax, ymin))))
 }
 
+/** One input of a cell join: its rows and the four MBR coordinate columns of
+  * each row, any double expressions over `df` (the distance joins' are the
+  * MBR grown by r). A POINT side is read as the point `(xmin, ymin)`: it
+  * maps to its one cell, and no plan over it reads `xmax` or `ymax`.
+  */
+private[graft] final case class Side(df: DataFrame, xmin: Column, xmax: Column,
+                                     ymin: Column, ymax: Column, points: Boolean = false) {
+  /** The MBR every plan reads; a point side's is the point itself. */
+  def coords: Seq[Column] =
+    if (points) Seq(xmin, xmin, ymin, ymin) else Seq(xmin, xmax, ymin, ymax)
+
+  /** This side with its MBR grown by `r` on every edge. */
+  def expanded(r: Double): Side =
+    copy(xmin = xmin - r, xmax = xmax + r, ymin = ymin - r, ymax = ymax + r)
+}
+
+private[graft] object Side {
+  /** The side whose coordinates are the columns `p_xmin` … `p_ymax` of `df`. */
+  def prefixed(df: DataFrame, p: String): Side =
+    Side(df, col(s"${p}_xmin"), col(s"${p}_xmax"), col(s"${p}_ymin"), col(s"${p}_ymax"))
+
+  /** `d` with its columns prefixed `p_`. */
+  def of(d: Dataset[Geom], p: String): Side =
+    prefixed(d.toDF(Seq("id", "xmin", "xmax", "ymin", "ymax").map(c => s"${p}_$c"): _*), p)
+}
+
 /** The physical plan of one cell-partitioned join, chosen from the evidence
   * by [[SpatialJoins.route]]. Every route emits the identical pair set.
   */
@@ -125,9 +151,11 @@ object Route {
   case object Broadcast extends Route
   /** The declarative cell equi-join ([[SpatialJoins.gridJoin]]). */
   case object Grid extends Route
-  /** The a side is all points: [[SpatialJoins.gridJoinPIP]]. */
+  /** The a side is all points: the cell equi-join over a point a side
+    * ([[SpatialJoins.gridJoinPIP]]).
+    */
   case object PointsA extends Route
-  /** The b side is all points: [[SpatialJoins.gridJoinPIP]] with the sides swapped. */
+  /** The b side is all points: the cell equi-join over a point b side. */
   case object PointsB extends Route
   /** Dense cells: the keyed repartition+sort reduce with the sweep/STR inner
     * loop ([[SpatialJoins.gridJoinSweep]]); a point side maps as a plain
@@ -195,8 +223,7 @@ object SpatialJoins {
   val containsSql =
     "b.xmin >= a.xmin AND b.xmax <= a.xmax AND b.ymin >= a.ymin AND b.ymax <= a.ymax"
 
-  private def prefixed(ds: Dataset[Geom], p: String): DataFrame =
-    ds.toDF(s"${p}_id", s"${p}_xmin", s"${p}_xmax", s"${p}_ymin", s"${p}_ymax")
+  private def prefixed(ds: Dataset[Geom], p: String): DataFrame = Side.of(ds, p).df
 
   /** A join's pairs with the a/b roles swapped back (for plans run b-first). */
   private def swapSides(df: DataFrame): DataFrame =
@@ -222,7 +249,10 @@ object SpatialJoins {
     * correctness.
     */
   private[graft] def estRowsFromStats(d: Dataset[Geom]): Double =
-    d.queryExecution.optimizedPlan.stats.sizeInBytes.toDouble / GeomRowBytes
+    statsBytes(d.toDF()) / GeomRowBytes
+
+  private def statsBytes(df: DataFrame): Double =
+    df.queryExecution.optimizedPlan.stats.sizeInBytes.toDouble
 
   // ---- evidence → route → plan ----------------------------------------------
 
@@ -238,23 +268,23 @@ object SpatialJoins {
     * no exchange.
     */
   def evidenceOf(a: Dataset[Geom], b: Dataset[Geom]): JoinEvidence =
-    measure(a, b, rasterA = false, rasterB = false)
+    measure(Side.of(a, "a"), Side.of(b, "b"), rasterA = false, rasterB = false)
 
-  /** [[evidenceOf]] that also maps the occupied cells ([[Occupancy]]) of
-    * the side Catalyst stats estimate smaller, in the same job.
+  /** [[evidenceOf]] over two sides that also maps the occupied cells
+    * ([[Occupancy]]) of the side Catalyst stats estimate smaller, in the
+    * same job.
     */
-  private[graft] def evidenceWithOccupancy(a: Dataset[Geom], b: Dataset[Geom]): JoinEvidence = {
-    val aSmaller = estRowsFromStats(a) <= estRowsFromStats(b)
+  private[graft] def evidenceWithOccupancy(a: Side, b: Side): JoinEvidence = {
+    val aSmaller = statsBytes(a.df) <= statsBytes(b.df)
     measure(a, b, rasterA = aSmaller, rasterB = !aSmaller)
   }
 
-  private def measure(a: Dataset[Geom], b: Dataset[Geom], rasterA: Boolean,
-                      rasterB: Boolean): JoinEvidence = {
-    val Seq(x0, x1, y0, y1) =
-      Seq("xmin", "xmax", "ymin", "ymax").map(c => Bridge.expression(col(c)))
-    def parts(d: Dataset[Geom], side: Int, raster: Boolean) = {
-      val rows = d.toDF().select(col("xmin"), col("xmax"), col("ymin"), col("ymax"),
-        Bridge.column(JoinEvidence.edge(x0, x1, y0, y1))).queryExecution.toRdd
+  private def measure(a: Side, b: Side, rasterA: Boolean, rasterB: Boolean): JoinEvidence = {
+    def parts(d: Side, side: Int, raster: Boolean) = {
+      val c = Seq(d.xmin, d.xmax, d.ymin, d.ymax)
+      val Seq(x0, x1, y0, y1) = c.map(Bridge.expression)
+      val rows = d.df.select(c :+ Bridge.column(JoinEvidence.edge(x0, x1, y0, y1)): _*)
+        .queryExecution.toRdd
       val n = if (raster) rows.getNumPartitions else 0
       rows.mapPartitions(it => Iterator(JoinEvidence.Part.of(it, side, n)))
     }
@@ -293,30 +323,75 @@ object SpatialJoins {
     else if (ev.bPoints) Route.PointsB
     else Route.Grid
 
-  /** The plan of one route over scheme `s`. */
-  private def planRoute(a: Dataset[Geom], b: Dataset[Geom], s: CellScheme,
-                        r: Route): DataFrame = r match {
-    case Route.Broadcast => broadcastNL(a, b)
-    case Route.Grid => gridJoin(a, b, s)
-    case Route.PointsA => gridJoinPIP(a, b, s)
-    case Route.PointsB => swapSides(gridJoinPIP(b, a, s))
-    case Route.Sweep(aPts, bPts) => keyedPartitionJoin(a, b, s, aPts, bPts)
+  /** The id columns of [[Side.of]]'s sides. */
+  private val GeomIds = Some(col("a_id") -> col("b_id"))
+
+  /** The plan of route `r` over scheme `s`; None for the broadcast. With
+    * `ids` (the sides' id columns) the caller wants only the id pairs, and
+    * dense cells take the keyed reduce, which carries only ids. Without
+    * them every column of both sides survives, so dense cells take the
+    * declarative body.
+    */
+  private def planSides(a: Side, b: Side, s: CellScheme, r: Route,
+                        ids: Option[(Column, Column)]): Option[DataFrame] = r match {
+    case Route.Broadcast => None
+    case Route.Grid => Some(cellJoin(a, b, s))
+    case Route.PointsA => Some(cellJoin(a.copy(points = true), b, s))
+    case Route.PointsB => Some(cellJoin(a, b.copy(points = true), s))
+    case Route.Sweep(aPts, bPts) =>
+      val (ap, bp) = (a.copy(points = aPts), b.copy(points = bPts))
+      Some(ids.fold(cellJoin(ap, bp, s)) { case (aId, bId) => keyedJoin(ap, bp, s, aId, bId) })
+  }
+
+  /** The pairs `(a_id, b_id)` of a plan over [[Side.of]]'s sides;
+    * `broadcastNL` for the broadcast route.
+    */
+  private def idPairs(a: Dataset[Geom], b: Dataset[Geom], plan: Option[DataFrame]): DataFrame =
+    plan.fold(broadcastNL(a, b))(_.select(col("a_id"), col("b_id")))
+
+  /** The pairs of route `r` over scheme `s`. */
+  private def planRoute(a: Dataset[Geom], b: Dataset[Geom], s: CellScheme, r: Route): DataFrame =
+    idPairs(a, b, planSides(Side.of(a, "a"), Side.of(b, "b"), s, r, GeomIds))
+
+  /** The ONE planner of [[intersectJoin]] and of SQL's st_* joins
+    * ([[graft.plans.SpatialJoinRule]]), past intersectJoin's broadcast
+    * check: the ONE evidence job, which also maps the occupied cells of the
+    * side stats estimate smaller ([[evidenceWithOccupancy]]) → a grid of
+    * about 16 rows of the larger side per cell → [[route]] → the other side
+    * drops its rows that touch none ([[dropUnoccupied]]) → the route's plan
+    * ([[planSides]]). The pair set is that of every route. One INFO line
+    * logs the route, the counts and the occupancy.
+    */
+  private[graft] def planJoin(a: Side, b: Side,
+                              ids: Option[(Column, Column)]): Option[DataFrame] = {
+    val ev = evidenceWithOccupancy(a, b)
+    // when the grid cap binds (rows ≫ 16·maxN²) cells run dense and the
+    // route turns to the sweep
+    val s = CellScheme.forSize(ev.extent.getOrElse(Extent(0, 0, 0, 0)),
+      math.max(ev.countA, ev.countB), targetPerCell = 16, maxN = 8192)
+    val r = route(ev, s)
+    if (log.isInfoEnabled) {
+      val occ = Seq("a" -> ev.occupiedA, "b" -> ev.occupiedB).collectFirst {
+        case (side, Some(o)) =>
+          f"occupancy of $side ${o.cells} cells, fill ${o.fill}%.4f, filter ${if (o.selective) "on" else "off"}"
+      }
+      log.info(s"spatial join: route $r, rows ${ev.countA} x ${ev.countB}, " +
+        occ.getOrElse("no occupancy, filter off"))
+    }
+    planSides(dropUnoccupied(a, ev.occupiedB, ev.aPoints),
+      dropUnoccupied(b, ev.occupiedA, ev.bPoints), s, r, ids)
   }
 
   /** Single entry point with automatic physical-strategy choice (the
     * reference's join-direction / index-side heuristics, SURVEY §4): tiny
     * side → broadcast nested loop (built on the smaller side); otherwise
-    * [[route]] over a grid sized from the larger side's row count.
+    * the one planner, [[planJoin]].
     *
     * Planning cost (the r2 verdict flagged an eager `a.count(); b.count()`
     * here — two full input passes before any join work): the broadcast
     * decision reads Catalyst statistics (no job at all); only the grid
     * path runs the ONE evidence job, which also gives the joint extent the
-    * grid needs and maps the occupied cells of the side stats estimate
-    * smaller. The other side then drops its rows that touch none
-    * ([[dropUnoccupied]]) before any route replicates or shuffles it; the
-    * pair set is unchanged. One INFO line logs the route, the counts and
-    * the occupancy.
+    * grid needs.
     */
   def intersectJoin(a: Dataset[Geom], b: Dataset[Geom],
                     broadcastThreshold: Long = 10000L): DataFrame = {
@@ -331,26 +406,9 @@ object SpatialJoins {
         d.limit((broadcastThreshold + 1).toInt).count() <= broadcastThreshold
     if (small(b)) broadcastNL(a, b)
     else if (small(a)) swapSides(broadcastNL(b, a))
-    else {
-      // stats can OVER-estimate filtered scans, so both inputs may be empty
-      // here: the evidence then has no extent and routes to broadcastNL
-      val ev = evidenceWithOccupancy(a, b)
-      // when the grid cap binds (rows ≫ 16·maxN²) cells run dense and the
-      // route turns to the sweep
-      val s = CellScheme.forSize(ev.extent.getOrElse(Extent(0, 0, 0, 0)),
-        math.max(ev.countA, ev.countB), targetPerCell = 16, maxN = 8192)
-      val r = route(ev, s)
-      if (log.isInfoEnabled) {
-        val occ = Seq("a" -> ev.occupiedA, "b" -> ev.occupiedB).collectFirst {
-          case (side, Some(o)) =>
-            f"occupancy of $side ${o.cells} cells, fill ${o.fill}%.4f, filter ${if (o.selective) "on" else "off"}"
-        }
-        log.info(s"intersectJoin: route $r, rows ${ev.countA} x ${ev.countB}, " +
-          occ.getOrElse("no occupancy, filter off"))
-      }
-      planRoute(dropUnoccupied(a, ev.occupiedB, ev.aPoints),
-        dropUnoccupied(b, ev.occupiedA, ev.bPoints), s, r)
-    }
+    // stats can OVER-estimate filtered scans, so both inputs may be empty
+    // here: the evidence then has no extent and routes to broadcastNL
+    else idPairs(a, b, planJoin(Side.of(a, "a"), Side.of(b, "b"), GeomIds))
   }
 
   /** The rows of `d` that touch some occupied cell of the other side; all
@@ -358,11 +416,10 @@ object SpatialJoins {
     * at `(xmin, ymin)`, the point every route takes it for, so the scan
     * reads no `xmax`/`ymax`.
     */
-  private[graft] def dropUnoccupied(d: Dataset[Geom], occ: Option[Occupancy],
-                                    points: Boolean): Dataset[Geom] =
+  private[graft] def dropUnoccupied(d: Side, occ: Option[Occupancy], points: Boolean): Side =
     occ.filter(_.selective).fold(d) { o =>
-      val cols = if (points) Seq("xmin", "xmin", "ymin", "ymin") else Seq("xmin", "xmax", "ymin", "ymax")
-      d.filter(Bridge.column(OccupancyProbe(o, cols.map(c => Bridge.expression(col(c))))))
+      val probe = OccupancyProbe(o, d.copy(points = points).coords.map(Bridge.expression))
+      d.copy(df = d.df.filter(Bridge.column(probe)))
     }
 
   // ---- declarative grid PBSM ------------------------------------------------
@@ -371,75 +428,88 @@ object SpatialJoins {
   def cellOfCol(m: CellMapping, x: Column, y: Column): Column =
     Bridge.column(CellOf(m, Seq(x, y).map(Bridge.expression)))
 
+  /** The key columns of the cell-join body's a and b sides. */
+  private val CellA = "__graft_cell_a"
+  private val CellB = "__graft_cell_b"
+
+  /** `d`'s rows keyed by `m` in the new column `key`: replicated to every
+    * key their MBR overlaps (one `explode` over [[CellsOf]], which streams a
+    * row's keys in generated code), or, for a point side, projected to the
+    * point's one key ([[CellOf]]).
+    */
+  private def keyed(d: Side, m: CellMapping, key: String): DataFrame =
+    d.df.withColumn(key,
+      if (d.points) cellOfCol(m, d.xmin, d.ymin)
+      else explode(Bridge.column(CellsOf(m, d.coords.map(Bridge.expression)))))
+
   /** Replicate the `p`-prefixed rows into every key of `m` they overlap,
-    * keyed `cell`: one `explode` over [[CellsOf]], which streams a row's
-    * keys in generated code.
+    * keyed `cell`.
     */
   def withCells(df: DataFrame, m: CellMapping, p: String): DataFrame =
-    df.withColumn("cell", explode(Bridge.column(CellsOf(m,
-      Seq("xmin", "xmax", "ymin", "ymax").map(c => Bridge.expression(col(s"${p}_$c")))))))
+    keyed(Side.prefixed(df, p), m, "cell")
 
-  /** Reference-point dedup as a column predicate: the joined cell must be the
-    * owner of the intersection's bottom-left corner.
+  /** Reference-point dedup as a column predicate: the joined `cell` must be
+    * the owner of the bottom-left corner of the pair's intersection
+    * (`join.hpp:56-71`).
     */
-  private def ownsPred(s: CellScheme, cell: Column): Column =
-    cellOfCol(s, greatest(col("a_xmin"), col("b_xmin")),
-                 greatest(col("a_ymin"), col("b_ymin"))) === cell
+  private def ownsPred(a: Side, b: Side, s: CellScheme, cell: Column): Column =
+    cellOfCol(s, greatest(a.xmin, b.xmin), greatest(a.ymin, b.ymin)) === cell
 
-  /** The b side replicated to its cells, keyed `b_cell` — split out so
-    * iterating callers ([[knnJoinWithRounds]]) can build it ONCE per scheme,
-    * pre-partition it on the join key and cache it across rounds.
+  /** The b side replicated to its cells — split out so iterating callers
+    * ([[knnJoinWithRounds]]) can build it ONCE per scheme, pre-partition it
+    * on the join key and cache it across rounds.
     */
   private[graft] def bReplicated(b: Dataset[Geom], s: CellScheme): DataFrame =
-    withCells(prefixed(b, "b"), s, "b").withColumnRenamed("cell", "b_cell")
+    keyed(Side.of(b, "b"), s, CellB)
 
-  /** The ONE declarative cell-join body: replicate the `a_`-prefixed side,
-    * equi-join it on `cell === b_cell` with the replicated b side `bc`, keep
-    * intersecting candidates owned by the joined cell. Every column of both
-    * sides survives, so callers select, filter or hint on top.
+  /** The ONE declarative cell-join body: both sides keyed by `s`
+    * ([[keyed]]), equi-joined on the key, keeping the intersecting pairs
+    * owned by the joined cell. Every column of both sides survives, so
+    * callers select, filter or group on top.
     */
-  private def cellJoin(ap: DataFrame, bc: DataFrame, s: CellScheme): DataFrame =
-    withCells(ap, s, "a").join(bc,
-      col("cell") === col("b_cell") && intersectPred && ownsPred(s, col("cell")))
+  private[graft] def cellJoin(a: Side, b: Side, s: CellScheme): DataFrame =
+    cellJoinKeyed(a, keyed(a, s, CellA), b, keyed(b, s, CellB), s)
+
+  /** [[cellJoin]] over sides already keyed: `ak` is `a.df` keyed in `CellA`,
+    * `bk` is `b.df` keyed in `CellB`. A pair with a POINT side can meet only
+    * in the point's own cell (cell coordinates are monotone in the
+    * coordinate, so a rectangle holding the point covers that cell), which
+    * makes it exactly-once with no ownership test.
+    */
+  private def cellJoinKeyed(a: Side, ak: DataFrame, b: Side, bk: DataFrame,
+                            s: CellScheme): DataFrame = {
+    val Seq(ax0, ax1, ay0, ay1) = a.coords
+    val Seq(bx0, bx1, by0, by1) = b.coords
+    val owns = if (a.points || b.points) Nil else Seq(ownsPred(a, b, s, col(CellA)))
+    ak.join(bk, (Seq(col(CellA) === col(CellB),
+      ax0 <= bx1 && ax1 >= bx0 && ay0 <= by1 && ay1 >= by0) ++ owns).reduce(_ && _))
+  }
 
   /** PBSM grid join as a pure Catalyst plan (equi-join on cell). */
   def gridJoin(a: Dataset[Geom], b: Dataset[Geom], s: CellScheme): DataFrame =
-    cellJoin(prefixed(a, "a"), bReplicated(b, s), s).select(col("a_id"), col("b_id"))
+    cellJoin(Side.of(a, "a"), Side.of(b, "b"), s).select(col("a_id"), col("b_id"))
 
   /** Per-cell result-pair counts (the north rule's per-cell result metrics —
     * the candidate-side counterpart is `spatial_cell_stats`): each pair
     * appears exactly once, in its owner cell, so the counts need no dedup.
     */
   def cellResultStats(a: Dataset[Geom], b: Dataset[Geom], s: CellScheme): DataFrame =
-    cellJoin(prefixed(a, "a"), bReplicated(b, s), s)
-      .groupBy(col("cell")).agg(count(lit(1)).as("n_pairs"))
+    cellJoin(Side.of(a, "a"), Side.of(b, "b"), s)
+      .groupBy(col(CellA).as("cell")).agg(count(lit(1)).as("n_pairs"))
 
   /** Point-in-polygon specialization of [[gridJoin]] (the reference's PIP
     * workload reads its point side as native points, `cpp/join.hpp` /
-    * `data_gen` point files — this is the Spark-plan analogue). Each a-side
-    * row is treated as the POINT `(xmin, ymin)`; for genuine point rows
-    * (`xmin == xmax ∧ ymin == ymax`, e.g. `Workloads.uniformPoints`) the pair
-    * set is identical to [[gridJoin]]'s. Three structural savings over the
-    * generic plan:
-    *
-    *  - no a-side replication: a point overlaps exactly one cell, so the cell
-    *    id is a plain projection (`cellOfCol`) instead of an `explode`
-    *    generator;
-    *  - no reference-point ownership filter: a (point, polygon) pair can meet
-    *    only in the point's own cell (cell coords are monotone in the
-    *    coordinate, so a polygon containing the point always covers that
-    *    cell), making the join exactly-once by construction;
-    *  - a narrower shuffle row: `(id, x, y)` instead of the 4-double MBR.
+    * `data_gen` point files — this is the Spark-plan analogue): the cell join
+    * over a POINT a side. Each a-side row is treated as the point
+    * `(xmin, ymin)`; for genuine point rows (`xmin == xmax ∧ ymin == ymax`,
+    * e.g. `Workloads.uniformPoints`) the pair set is identical to
+    * [[gridJoin]]'s. Three structural savings over the generic plan: no
+    * a-side replication (the cell id is a projection, not an `explode`), no
+    * ownership filter, and a narrower shuffle row (`id, xmin, ymin, cell`).
     */
-  def gridJoinPIP(pts: Dataset[Geom], polys: Dataset[Geom], s: CellScheme): DataFrame = {
-    val a = pts.toDF().select(col("id").as("a_id"),
-      col("xmin").as("a_x"), col("ymin").as("a_y"),
-      cellOfCol(s, col("xmin"), col("ymin")).as("cell"))
-    a.join(bReplicated(polys, s), col("cell") === col("b_cell") &&
-        col("a_x") >= col("b_xmin") && col("a_x") <= col("b_xmax") &&
-        col("a_y") >= col("b_ymin") && col("a_y") <= col("b_ymax"))
+  def gridJoinPIP(pts: Dataset[Geom], polys: Dataset[Geom], s: CellScheme): DataFrame =
+    cellJoin(Side.of(pts, "a").copy(points = true), Side.of(polys, "b"), s)
       .select(col("a_id"), col("b_id"))
-  }
 
   /** [[gridJoin]] restricted by an additional predicate variant (within /
     * contains / overlaps). The candidate phase and dedup are those of the
@@ -447,7 +517,7 @@ object SpatialJoins {
     */
   def gridJoinPred(a: Dataset[Geom], b: Dataset[Geom], s: CellScheme,
                    pred: Column): DataFrame =
-    cellJoin(prefixed(a, "a"), bReplicated(b, s), s).filter(pred)
+    cellJoin(Side.of(a, "a"), Side.of(b, "b"), s).filter(pred)
       .select(col("a_id"), col("b_id"))
 
   /** Salted grid join for degenerate hot cells (e.g. many identical points):
@@ -459,12 +529,13 @@ object SpatialJoins {
   def gridJoinSalted(a: Dataset[Geom], b: Dataset[Geom], s: CellScheme,
                      salt: Int): DataFrame = {
     require(salt >= 1)
-    val ac = withCells(prefixed(a, "a"), s, "a")
-      .withColumn("skey", col("cell") * salt + pmod(xxhash64(col("a_id")), lit(salt.toLong)))
-    val bc = bReplicated(b, s)
+    val (as, bs) = (Side.of(a, "a"), Side.of(b, "b"))
+    val ac = keyed(as, s, CellA)
+      .withColumn("skey", col(CellA) * salt + pmod(xxhash64(col("a_id")), lit(salt.toLong)))
+    val bc = keyed(bs, s, CellB)
       .withColumn("bucket", explode(sequence(lit(0L), lit(salt - 1L))))
-      .withColumn("b_skey", col("b_cell") * salt + col("bucket"))
-    ac.join(bc, col("skey") === col("b_skey") && intersectPred && ownsPred(s, col("cell")))
+      .withColumn("b_skey", col(CellB) * salt + col("bucket"))
+    ac.join(bc, col("skey") === col("b_skey") && intersectPred && ownsPred(as, bs, s, col(CellA)))
       .select(col("a_id"), col("b_id"))
   }
 
@@ -589,27 +660,30 @@ object SpatialJoins {
   }
 
   /** The ONE reduce body, shared by the sweep, adaptive, sort-tile and
-    * binary-split joins. Each side is keyed by `m` — replicated to its keys
-    * ([[withCells]]), or, for a POINT side, projected to its one key — and
-    * the union of the `key`ed `a_`/`b_`-prefixed MBR rows is
-    * hash-partitioned on the key, sorted partition-locally, and consumed by a
-    * run-grouping iterator that feeds each key's two sides to the sweep/STR
-    * inner loop. `m.cellOf` maps a reference point to its owning key — pairs
-    * are kept exactly once, in their owner key's run.
+    * binary-split joins. Each side is keyed by `m` — replicated to its keys,
+    * or, for a POINT side, projected to its one key ([[keyed]]) — and the
+    * union of the keyed MBR rows is hash-partitioned on the key, sorted
+    * partition-locally, and consumed by a run-grouping iterator that feeds
+    * each key's two sides to the sweep/STR inner loop. `m.cellOf` maps a
+    * reference point to its owning key — pairs are kept exactly once, in
+    * their owner key's run.
     */
   private[graft] def keyedPartitionJoin(a: Dataset[Geom], b: Dataset[Geom], m: CellMapping,
                                          aPts: Boolean = false,
-                                         bPts: Boolean = false): DataFrame = {
-    val spark = a.sparkSession
+                                         bPts: Boolean = false): DataFrame =
+    keyedJoin(Side.of(a, "a").copy(points = aPts), Side.of(b, "b").copy(points = bPts), m,
+      col("a_id"), col("b_id"))
+
+  /** [[keyedPartitionJoin]] over two sides and their id columns. */
+  private def keyedJoin(a: Side, b: Side, m: CellMapping, aId: Column, bId: Column): DataFrame = {
+    val spark = a.df.sparkSession
     import spark.implicits._
-    def keyed(ds: Dataset[Geom], p: String, pts: Boolean): DataFrame =
-      if (pts) prefixed(ds, p).withColumn("key", cellOfCol(m, col(s"${p}_xmin"), col(s"${p}_ymin")))
-      else withCells(prefixed(ds, p), m, p).withColumnRenamed("cell", "key")
-    def side(df: DataFrame, p: String, i: Int): DataFrame =
-      df.select(col("key"), lit(i).as("side"), col(s"${p}_id").as("id"),
-        col(s"${p}_xmin").as("xmin"), col(s"${p}_xmax").as("xmax"),
-        col(s"${p}_ymin").as("ymin"), col(s"${p}_ymax").as("ymax"))
-    val u = side(keyed(a, "a", aPts), "a", 0).unionByName(side(keyed(b, "b", bPts), "b", 1))
+    def side(d: Side, id: Column, i: Int): DataFrame = {
+      val Seq(x0, x1, y0, y1) = d.coords
+      keyed(d, m, "key").select(col("key"), lit(i).as("side"), id.as("id"),
+        x0.as("xmin"), x1.as("xmax"), y0.as("ymin"), y1.as("ymax"))
+    }
+    val u = side(a, aId, 0).unionByName(side(b, bId, 1))
       .repartition(col("key")).sortWithinPartitions("key", "side")
       .as[KeyedGeom]
     u.mapPartitions { rows =>
@@ -757,19 +831,12 @@ object SpatialJoins {
 
   private[graft] def distanceJoinPre(a: Dataset[Geom], bc: DataFrame,
                                      s: CellScheme, r: Double): DataFrame = {
-    // expand the a-side MBR only for the candidate phase; the ORIGINAL
-    // coordinates ride along untouched for the exact distance check —
-    // restoring them arithmetically ((x - r) + r) would perturb them by ulps
-    // and flip boundary dist == r decisions vs the oracle
-    val ac0 = prefixed(a, "a")
-      .withColumn("a_oxmin", col("a_xmin")).withColumn("a_oxmax", col("a_xmax"))
-      .withColumn("a_oymin", col("a_ymin")).withColumn("a_oymax", col("a_ymax"))
-      .withColumn("a_xmin", col("a_xmin") - lit(r)).withColumn("a_xmax", col("a_xmax") + lit(r))
-      .withColumn("a_ymin", col("a_ymin") - lit(r)).withColumn("a_ymax", col("a_ymax") + lit(r))
-    // candidate = expanded-MBR intersect; dedup by ownership on the expanded pair
-    cellJoin(ac0, bc, s)
-      .withColumn("a_xmin", col("a_oxmin")).withColumn("a_xmax", col("a_oxmax"))
-      .withColumn("a_ymin", col("a_oymin")).withColumn("a_ymax", col("a_oymax"))
+    // the candidate phase (cells, intersect, ownership) reads a's MBR grown
+    // by r; a's own columns ride along untouched for the exact distance
+    // check — restoring them arithmetically ((x - r) + r) would perturb them
+    // by ulps and flip boundary dist == r decisions vs the oracle
+    val ax = Side.of(a, "a").expanded(r)
+    cellJoinKeyed(ax, keyed(ax, s, CellA), Side.prefixed(bc, "b"), bc, s)
       .withColumn("dist", minDistCol)
       .filter(col("dist") <= lit(r))
       .select(col("a_id"), col("b_id"), col("dist"))
@@ -805,7 +872,7 @@ object SpatialJoins {
     val bCached =
       if (bOwned) b.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) else b
     // the REPLICATED corpus is also cached, per scheme, PRE-PARTITIONED on
-    // the join key: `repartition(b_cell)` gives the cached frame the hash
+    // the join key: `repartition` on its cell gives the cached frame the hash
     // partitioning the cell equi-join requires, so every round ≥ 2 under the
     // same scheme (schemes repeat as soon as the ring-driven maxN cap stops
     // binding) reads the b side exchange-FREE — without this each round
@@ -823,7 +890,7 @@ object SpatialJoins {
       if (s != bRepScheme) {
         if (bRepCached != null) bRepCached.unpersist(blocking = false)
         bRepScheme = s
-        bRepCached = bReplicated(bCached, s).repartition(col("b_cell"))
+        bRepCached = bReplicated(bCached, s).repartition(col(CellB))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       }
       bRepCached

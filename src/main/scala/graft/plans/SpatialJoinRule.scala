@@ -1,70 +1,35 @@
 package graft.plans
 
-import graft.cells.{CellOf, CellScheme, CellsOf}
 import graft.functions.{STContains, STDWithin, STIntersects, STWithin, SimHash64}
-import graft.geom.Extent
+import graft.join.{Side, SpatialJoins}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types.DoubleType
 
-/** Catalyst optimizer rule: rewrites
+/** Catalyst optimizer rule: recognizes
   * `a JOIN b ON st_intersects(ax0, ax1, ay0, ay1, bx0, bx1, by0, by1) [AND …]`
-  * — which Catalyst would otherwise plan as a broadcast-nested-loop /
-  * cartesian θ-join — into the PBSM cell plan: both sides are exploded into
-  * grid cells (`Generate(Explode(CellsOf(...)))`), equi-joined on the cell
-  * id, re-filtered with the intersect predicate, and deduplicated with the
-  * reference-point ownership test (`CellOf`) — the same two expressions over
-  * the same `CellScheme` arithmetic as the DataFrame plans. Identical
-  * semantics, shuffle-partitioned execution.
+  * (or `st_within` / `st_contains` / `st_dwithin`), which Catalyst would
+  * otherwise plan as a broadcast-nested-loop / cartesian θ-join, and hands it
+  * to the planner of `SpatialJoins.intersectJoin` ([[SpatialJoins.planJoin]]).
+  * One evidence job over the two children sizes the grid from the data,
+  * picks the route (point sides are detected by value) and maps the occupied
+  * cells that filter the other side; the plan is the DataFrame API's
+  * cell-join body. The predicate's refinement and the remaining conjuncts go
+  * on top. Identical semantics, shuffle-partitioned execution.
   *
-  * The grid is a *fixed global scheme* (the H3/S2-style index of this engine)
-  * read from session conf:
-  *   `spark.graft.extent = "xmin,xmax,ymin,ymax"` (default 0,10000,0,10000)
-  *   `spark.graft.grid.n = <cells per axis>`       (default 128)
+  * The evidence job runs when the query is optimized, so `explain()` runs it
+  * too. No evidence is cached across queries: stale point flags or a stale
+  * occupancy filter would give wrong pairs, not only a slower plan. A join
+  * with a streaming child is left to Spark (a batch job cannot read one), as
+  * is one with no coordinate on either side (the broadcast route).
   */
 object SpatialJoinRule extends Rule[LogicalPlan] with PredicateHelper {
 
-  val ExtentKey = "spark.graft.extent"
-  val GridKey = "spark.graft.grid.n"
-
-  private def scheme: CellScheme = {
-    val c = SparkSession.active.conf
-    val ext = c.get(ExtentKey, "0,10000,0,10000").split(',').map(_.trim.toDouble)
-    val n = c.get(GridKey, "128").toInt
-    CellScheme(Extent(ext(0), ext(1), ext(2), ext(3)), n, n)
-  }
-
   private def lit(d: Double): Expression = Literal(d)
-
-  /** Explode a side into its overlapped cells; returns (plan, cellAttr). */
-  private def withCells(s: CellScheme, child: LogicalPlan,
-                        coords: Seq[Expression]): (LogicalPlan, Attribute) = {
-    val cell = AttributeReference("__graft_cell", LongType, nullable = false)()
-    (Generate(Explode(CellsOf(s, coords)), Nil, outer = false, None, Seq(cell), child), cell)
-  }
-
-  /** Point-side cell assignment: a single projection, no generators (the
-    * plan-time analogue of `SpatialJoins.gridJoinPIP` — a point overlaps
-    * exactly one cell).
-    */
-  private def withCellPoint(s: CellScheme, child: LogicalPlan,
-                            x: Expression, y: Expression): (LogicalPlan, Attribute) = {
-    val cell = Alias(CellOf(s, Seq(x, y)), "__graft_cell")()
-    (Project(child.output :+ cell, child), cell.toAttribute)
-  }
-
-  /** Structural point detection — ZERO data passes: the side is a point set
-    * when the query passes the SAME expression for its min and max on both
-    * axes (`st_intersects(p.x, p.x, p.y, p.y, …)`, the natural call shape
-    * for a raw (x, y) point table). Distinct min/max columns that happen to
-    * hold equal values are NOT detected (value equality is a data property;
-    * `intersectJoin`'s aggregation-based detection covers that path).
-    */
-  private def isPointSide(c: Seq[Expression]): Boolean =
-    c(0).semanticEquals(c(1)) && c(2).semanticEquals(c(3))
 
   /** Matched spatial predicate, normalized: 8 coordinate args (predicate-a
     * first), the candidate-phase expansion radius (st_dwithin), and the
@@ -109,7 +74,7 @@ object SpatialJoinRule extends Rule[LogicalPlan] with PredicateHelper {
   }
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
-    case j @ Join(left, right, Inner, Some(cond), hint) =>
+    case j @ Join(left, right, Inner, Some(cond), hint) if !left.isStreaming && !right.isStreaming =>
       val conjuncts = splitConjunctivePredicates(cond)
       conjuncts.flatMap(matchSpatial(_)).headOption match {
         case Some((st, args, r)) =>
@@ -123,44 +88,34 @@ object SpatialJoinRule extends Rule[LogicalPlan] with PredicateHelper {
             // post-analysis: no implicit casts are inserted for us — coerce
             // non-double coordinate expressions (FLOAT/DECIMAL columns) here
             def dbl(e: Expression): Expression =
-              if (e.dataType == org.apache.spark.sql.types.DoubleType) e
-              else Cast(e, org.apache.spark.sql.types.DoubleType)
+              if (e.dataType == DoubleType) e else Cast(e, DoubleType)
             val pa = args.take(4).map(dbl) // predicate-a coords
             val pb = args.drop(4).map(dbl)
-            // candidate phase: expand predicate-a's MBR by r (st_dwithin);
-            // everything downstream (cells, intersect, ownership) uses the
-            // expanded coords, mirroring SpatialJoins.distanceJoin
-            val ca =
-              if (r == 0.0) pa
-              else Seq(Subtract(pa(0), lit(r)), Add(pa(1), lit(r)),
-                       Subtract(pa(2), lit(r)), Add(pa(3), lit(r)))
-            // map candidate coords onto plan sides
-            val (la, ra) = if (firstLeft) (ca, pb) else (pb, ca)
-            val Seq(ax0, ax1, ay0, ay1) = la
-            val Seq(bx0, bx1, by0, by1) = ra
-            val s = scheme
-            // a structural point side needs no replication (one cell) and —
-            // because a pair can then only meet in the point's own cell —
-            // no reference-point ownership dedup either. st_dwithin's
-            // expanded side is Subtract/Add expressions, so it can never
-            // false-positive here; its UNexpanded opposite side still can.
-            val lPt = isPointSide(la)
-            val rPt = isPointSide(ra)
-            val (lp, lcell) =
-              if (lPt) withCellPoint(s, left, ax0, ay0)
-              else withCells(s, left, la)
-            val (rp, rcell) =
-              if (rPt) withCellPoint(s, right, bx0, by0)
-              else withCells(s, right, ra)
-            val intersect = And(And(LessThanOrEqual(ax0, bx1), GreaterThanOrEqual(ax1, bx0)),
-                                And(LessThanOrEqual(ay0, by1), GreaterThanOrEqual(ay1, by0)))
-            val owns =
-              if (lPt || rPt) Nil
-              else Seq(EqualTo(
-                CellOf(s, Seq(Greatest(Seq(ax0, bx0)), Greatest(Seq(ay0, by0)))), lcell))
-            val newCond = (Seq(EqualTo(lcell, rcell), intersect) ++ owns ++
-              refinement(st, pa, pb, r) ++ rest).reduce(And)
-            Project(j.output, Join(lp, rp, Inner, Some(newCond), hint))
+            def side(child: LogicalPlan, c: Seq[Expression]): Side = {
+              val Seq(x0, x1, y0, y1) = c.map(Bridge.column)
+              Side(Bridge.dataFrame(SparkSession.active, child), x0, x1, y0, y1)
+            }
+            // a join hint rides on its child down to the cell equi-join
+            def hinted(p: LogicalPlan, h: Option[HintInfo]) = h.fold(p)(ResolvedHint(p, _))
+            val (l, rt) = (hinted(left, hint.leftHint), hinted(right, hint.rightHint))
+            val (aChild, bChild) = if (firstLeft) (l, rt) else (rt, l)
+            // candidate phase: predicate-a's MBR grown by r (st_dwithin), as
+            // in SpatialJoins.distanceJoin; the refinement reads the originals
+            val sa = if (r == 0.0) side(aChild, pa) else side(aChild, pa).expanded(r)
+            val sb = side(bChild, pb)
+            val (ls, rs) = if (firstLeft) (sa, sb) else (sb, sa)
+            // intersectJoin's planner past its broadcast check (as at
+            // broadcastThreshold = 0), with no id columns: every column of
+            // both children survives for the refinement, the other conjuncts
+            // and the join's output. Dense cells therefore take the
+            // declarative body, not the keyed reduce (which carries only
+            // ids); at 16 rows per cell and at most 8192² cells the sweep
+            // route needs more than ~1.7·10¹⁰ rows.
+            SpatialJoins.planJoin(ls, rs, ids = None).fold(j: LogicalPlan) { df =>
+              val planned = df.queryExecution.optimizedPlan
+              Project(j.output, (refinement(st, pa, pb, r) ++ rest).reduceOption(And)
+                .fold(planned)(Filter(_, planned)))
+            }
           }
         case None => j
       }

@@ -1,7 +1,8 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.ExpressionUtils
 
 /** Column ↔ Expression bridge for Spark 4 (where the converters are
@@ -11,6 +12,11 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** A DataFrame over a resolved logical plan (`Dataset.ofRows`). */
+  def dataFrame(spark: SparkSession, plan: LogicalPlan): DataFrame =
+    org.apache.spark.sql.classic.Dataset.ofRows(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
   /** Register a builder in the session's function registry (SQL surface). */
   def registerFunction(spark: SparkSession, name: String,

@@ -2,7 +2,8 @@ package graft
 
 import graft.cells.CellScheme
 import graft.geom.{Extent, Geom}
-import graft.join.SpatialJoins
+import graft.join.{Side, SpatialJoins}
+import graft.plans.GraftSql
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,7 +14,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * straddling the extent, sparse squares over dense points and one far
   * outlier. `intersectJoin` runs with `broadcastThreshold = 0`, so it
   * always takes its evidence → route path, and with it the occupancy
-  * filter.
+  * filter; the `sql` route is an `st_intersects` join through the same
+  * planner.
   */
 class HostileInputSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -52,7 +54,21 @@ class HostileInputSpec extends AnyFunSuite {
       "binarySplitJoin" -> (() => binarySplitJoin(a, b, ext, 3)),
       // a 16-pair budget splits the hot cells of these inputs into sub-cells
       "gridJoinAdaptive" -> (() => gridJoinAdaptive(a, b, CellScheme(ext, 4, 4),
-        budgetPairs = 16)))
+        budgetPairs = 16)),
+      // SQL plans through intersectJoin's planner, over the whole rows
+      "sql" -> (() => {
+        GraftSql.install(spark)
+        a.createOrReplaceTempView("hostile_a")
+        b.createOrReplaceTempView("hostile_b")
+        val df = spark.sql(
+          """SELECT a.id AS a_id, b.id AS b_id FROM hostile_a a JOIN hostile_b b
+            | ON st_intersects(a.xmin, a.xmax, a.ymin, a.ymax,
+            |                  b.xmin, b.xmax, b.ymin, b.ymax)""".stripMargin)
+        // only two empty sides leave the join to Spark's nested loop
+        assert(!df.queryExecution.executedPlan.toString.contains("NestedLoopJoin") ||
+          a.isEmpty && b.isEmpty, "sql: the rewrite did not fire")
+        df
+      }))
     routes.foreach { case (name, run) =>
       val got = pairs(run())
       assert(got == want, s"$name: ${diff(got, want)}")
@@ -159,10 +175,10 @@ class HostileInputSpec extends AnyFunSuite {
     assert(allRoutesMatch(pts, squares) > 0)
     assert(allRoutesMatch(squares, pts) > 0)
     for ((a, b) <- Seq((pts, squares), (squares, pts))) {
-      val ev = evidenceWithOccupancy(a, b)
+      val ev = evidenceWithOccupancy(Side.of(a, "a"), Side.of(b, "b"))
       val occ = ev.occupiedA.orElse(ev.occupiedB)
       assert(occ.exists(_.selective), s"squares' occupancy: $occ")
-      val kept = dropUnoccupied(pts, occ, points = true).count()
+      val kept = dropUnoccupied(Side.of(pts, "a"), occ, points = true).df.count()
       assert(kept <= 2000, s"the filter kept $kept of 20000 points ($occ)")
     }
   }
@@ -170,7 +186,7 @@ class HostileInputSpec extends AnyFunSuite {
   test("one far outlier in the smaller side matches the oracle on every route") {
     val a = ds(rects(17, 1000, 0, 8.0))
     val b = ds(rects(18, 100, 1000, 8.0) :+ Geom(1900, 1e12, 1e12 + 1, 1e12, 1e12 + 1))
-    val ev = evidenceWithOccupancy(a, b)
+    val ev = evidenceWithOccupancy(Side.of(a, "a"), Side.of(b, "b"))
     assert(ev.occupiedB.isDefined, "b is the side estimated smaller")
     assert(allRoutesMatch(a, b) > 0)
     assert(allRoutesMatch(b, a) > 0)

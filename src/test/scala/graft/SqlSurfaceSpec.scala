@@ -1,6 +1,6 @@
 package graft
 
-import graft.plans.{GraftSql, SpatialJoinRule}
+import graft.plans.GraftSql
 import org.scalatest.funsuite.AnyFunSuite
 
 class SqlSurfaceSpec extends AnyFunSuite {
@@ -8,8 +8,6 @@ class SqlSurfaceSpec extends AnyFunSuite {
 
   test("st_intersects join is rewritten to the cell plan and matches the oracle") {
     GraftSql.install(spark)
-    spark.conf.set(SpatialJoinRule.ExtentKey, "0,1000,0,1000")
-    spark.conf.set(SpatialJoinRule.GridKey, "32")
     val dir = "/root/testdata/sf0.001"
     val a = graft.api.Derived.partRects.load(spark, dir)
     val b = graft.api.Derived.ordersRects.load(spark, dir)
@@ -27,12 +25,18 @@ class SqlSurfaceSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got == want)
     assert(want.nonEmpty)
+    // a join hint reaches the cell equi-join
+    val hinted = spark.sql(
+      """SELECT /*+ SHUFFLE_HASH(b) */ a.id AS a_id, b.id AS b_id FROM sql_a a JOIN sql_b b
+        | ON st_intersects(a.xmin, a.xmax, a.ymin, a.ymax,
+        |                  b.xmin, b.xmax, b.ymin, b.ymax)""".stripMargin)
+    val hPhys = hinted.queryExecution.executedPlan.toString
+    assert(hPhys.contains("ShuffledHashJoin") && !phys.contains("ShuffledHashJoin"), hPhys)
+    assert(hinted.collect().map(r => (r.getLong(0), r.getLong(1))).toSet == want)
   }
 
   test("st_within / st_contains / st_dwithin joins rewrite and match brute force") {
     GraftSql.install(spark)
-    spark.conf.set(SpatialJoinRule.ExtentKey, "0,1000,0,1000")
-    spark.conf.set(SpatialJoinRule.GridKey, "32")
     val dir = "/root/testdata/sf0.001"
     val a = graft.api.Derived.partRects.load(spark, dir)
     val b = graft.api.Derived.ordersRects.load(spark, dir)
@@ -63,13 +67,11 @@ class SqlSurfaceSpec extends AnyFunSuite {
 
   test("structural point side: PIP rewrite (no point-side generator, no ownership), oracle-equal") {
     GraftSql.install(spark)
-    spark.conf.set(SpatialJoinRule.ExtentKey, "0,1000,0,1000")
-    spark.conf.set(SpatialJoinRule.GridKey, "32")
     val dir = "/root/testdata/sf0.001"
     val p = graft.api.Derived.customerPoints.load(spark, dir)
     val b = graft.api.Derived.partRects.load(spark, dir)
     // a raw (x, y) point table — the min/max coordinate args are the SAME
-    // column, which the rule detects structurally (zero data passes)
+    // column; the evidence job finds the point side by value
     p.toDF().selectExpr("id", "xmin AS x", "ymin AS y").createOrReplaceTempView("sqlp_p")
     b.createOrReplaceTempView("sqlp_b")
     val df = spark.sql(
@@ -86,8 +88,8 @@ class SqlSurfaceSpec extends AnyFunSuite {
     val want = graft.join.SpatialJoins.broadcastNL(p, b)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got == want && want.nonEmpty)
-    // distinct min/max COLUMNS (equal values) are NOT structurally points —
-    // the conservative path keeps the generic replicate+own plan
+    // distinct min/max COLUMNS holding equal values are points too: the
+    // evidence reads values, not the shape of the call
     p.toDF().createOrReplaceTempView("sqlp_p4")
     val generic = spark.sql(
       """SELECT p.id FROM sqlp_p4 p JOIN sqlp_b b
@@ -95,8 +97,39 @@ class SqlSurfaceSpec extends AnyFunSuite {
         |                  b.xmin, b.xmax, b.ymin, b.ymax)""".stripMargin)
     val gGens = generic.queryExecution.optimizedPlan.collect {
       case g: org.apache.spark.sql.catalyst.plans.logical.Generate => g }.size
-    assert(gGens == 2, "distinct columns must stay on the generic plan")
+    assert(gGens == 1, "equal min/max values must take the point plan")
     assert(generic.count() == want.size)
+  }
+
+  test("data far outside 0..10000 plans on intersectJoin's grid and matches the oracle") {
+    GraftSql.install(spark)
+    import spark.implicits._
+    val rnd = new scala.util.Random(31)
+    def side(idBase: Long) = (0 until 2000).map { i =>
+      val x = 1e6 + rnd.nextDouble() * 1000; val y = 1e6 + rnd.nextDouble() * 1000
+      graft.geom.Geom(idBase + i, x, x + rnd.nextDouble() * 4, y, y + rnd.nextDouble() * 4)
+    }.toDS()
+    val (a, b) = (side(0L), side(10000L))
+    a.createOrReplaceTempView("far_a"); b.createOrReplaceTempView("far_b")
+    val df = spark.sql(
+      """SELECT a.id AS a_id, b.id AS b_id FROM far_a a JOIN far_b b
+        | ON st_intersects(a.xmin, a.xmax, a.ymin, a.ymax,
+        |                  b.xmin, b.xmax, b.ymin, b.ymax)""".stripMargin)
+    // every cell mapping the plan keys rows through: one planner means the
+    // SQL plan's is the one intersectJoin picks on the same frames
+    def mappings(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.optimizedPlan.flatMap(_.expressions.flatMap(_.collect {
+        case c: graft.cells.CellsOf => c.mapping
+        case c: graft.cells.CellOf => c.mapping
+      })).toSet
+    val api = mappings(graft.join.SpatialJoins.intersectJoin(a, b, broadcastThreshold = 0L))
+    assert(mappings(df) == api && api.size == 1, s"SQL ${mappings(df)} vs intersectJoin $api")
+    val grid = api.head.asInstanceOf[graft.cells.CellScheme]
+    assert(grid.nx > 1 && grid.ny > 1 && grid.extent.xmin >= 1e6, s"grid $grid")
+    val got = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val want = graft.join.SpatialJoins.broadcastNL(a, b)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(got == want && want.nonEmpty)
   }
 
   test("st_intersects evaluates standalone (marker expression fallback)") {

@@ -100,6 +100,21 @@ class StatsPlanningSpec extends AnyFunSuite {
     onePlanningJob(pts, rects)
   }
 
+  test("optimizing a SQL st_intersects join runs exactly ONE job, the evidence") {
+    graft.plans.GraftSql.install(spark)
+    val a = mk(400, 0); val b = mk(400, 1000)
+    a.createOrReplaceTempView("stats_sql_a"); b.createOrReplaceTempView("stats_sql_b")
+    val df = spark.sql(
+      """SELECT a.id AS a_id, b.id AS b_id FROM stats_sql_a a JOIN stats_sql_b b
+        | ON st_intersects(a.xmin, a.xmax, a.ymin, a.ymax,
+        |                  b.xmin, b.xmax, b.ymin, b.ymax)""".stripMargin)
+    val jobs = jobsDuring { df.queryExecution.optimizedPlan }
+    assert(jobs == 1, s"optimizing must run exactly one job, got $jobs jobs")
+    val want = SpatialJoins.broadcastNL(a, b)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet == want && want.nonEmpty)
+  }
+
   test("scheme sampling plans from stats: no full count() pass before the sample") {
     // r4 ran u.count() — a FULL read of both inputs — before sizing the
     // sample fraction for STP/BSP boundary building. The estimate now comes
