@@ -95,40 +95,49 @@ private[graft] final class KeysArray(keys: CellKeys) extends ArrayData {
 }
 
 /** A call of one [[CellMapping]] method on double children, as a Catalyst
-  * expression: null when a coordinate is null (such a row meets no row);
-  * its generated code calls the mapping with the primitive doubles
-  * (the [[graft.join.OccupancyProbe]] pattern).
+  * expression; its generated code calls the mapping with the primitive
+  * doubles (the [[graft.join.OccupancyProbe]] pattern). A null coordinate
+  * makes the call null, or, where `nullAsNaN`, reads as NaN.
   */
 private[graft] sealed abstract class MappingCall extends Expression {
   def mapping: CellMapping
+  protected def nullAsNaN: Boolean
   protected def call(v: Seq[Double]): Any
   /** The generated call on `m` with the children's value terms. */
   protected def callCode(m: String, v: Seq[String]): String
 
-  override def nullable: Boolean = children.exists(_.nullable)
+  override def nullable: Boolean = !nullAsNaN && children.exists(_.nullable)
 
   override def eval(input: InternalRow): Any = {
     val v = children.map(_.eval(input))
-    if (v.contains(null)) null else call(v.map(_.asInstanceOf[Double]))
+    if (v.contains(null) && !nullAsNaN) null
+    else call(v.map(e => if (e == null) Double.NaN else e.asInstanceOf[Double]))
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val m = ctx.addReferenceObj("mapping", mapping, classOf[CellMapping].getName)
     val cs = children.map(_.genCode(ctx))
-    val anyNull = cs.map(_.isNull.toString).mkString(" || ")
+    val anyNull = if (nullAsNaN) "false" else cs.map(_.isNull.toString).mkString(" || ")
+    val vs = cs.map(c => if (nullAsNaN) s"(${c.isNull} ? Double.NaN : ${c.value})" else c.value.toString)
     ev.copy(code = code"""
       |${cs.map(_.code.toString).mkString("\n")}
       |boolean ${ev.isNull} = $anyNull;
       |${CodeGenerator.javaType(dataType)} ${ev.value} = ${ev.isNull} ?
-      |  ${CodeGenerator.defaultValue(dataType)} : ${callCode(m, cs.map(_.value.toString))};
+      |  ${CodeGenerator.defaultValue(dataType)} : ${callCode(m, vs)};
       |""".stripMargin)
   }
 }
 
-/** [[CellMapping.cellOf]] over `x, y`: the owner key, as a long column. */
+/** [[CellMapping.cellOf]] over `x, y`: the owner key, as a long column that
+  * is never null. A null coordinate keys like NaN, to the last cell; such a
+  * row meets no row there, since every join over the key also compares the
+  * coordinates. Being total, it adds no `isnotnull(cell_of(…))` to a point
+  * side's scan filter, which would compute the key twice per row.
+  */
 private[graft] final case class CellOf(mapping: CellMapping, children: Seq[Expression])
     extends MappingCall {
   require(children.size == 2)
+  protected def nullAsNaN: Boolean = true
   override def dataType: DataType = LongType
   override def prettyName: String = "cell_of"
   protected def call(v: Seq[Double]): Any = mapping.cellOf(v(0), v(1))
@@ -139,11 +148,13 @@ private[graft] final case class CellOf(mapping: CellMapping, children: Seq[Expre
 
 /** [[CellMapping.cellsOf]] over `xmin, xmax, ymin, ymax`: the replication
   * keys, as an array column that is indexed on demand ([[KeysArray]]), so
-  * `explode(CellsOf)` streams a row's keys in generated code.
+  * `explode(CellsOf)` streams a row's keys in generated code. Null when a
+  * coordinate is null: such a row meets no row, so it is keyed nowhere.
   */
 private[graft] final case class CellsOf(mapping: CellMapping, children: Seq[Expression])
     extends MappingCall {
   require(children.size == 4)
+  protected def nullAsNaN: Boolean = false
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "cells_of"
   protected def call(v: Seq[Double]): Any = new KeysArray(mapping.cellsOf(v(0), v(1), v(2), v(3)))

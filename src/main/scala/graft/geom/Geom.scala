@@ -52,6 +52,11 @@ object Geom {
   */
 object SqlOrder {
   @inline def le(x: Double, y: Double): Boolean = x <= y || y != y
+
+  /** Box a meets box b, inclusive: [[graft.functions.Mbr.intersects]] in Scala. */
+  @inline def intersects(ax0: Double, ax1: Double, ay0: Double, ay1: Double,
+                         bx0: Double, bx1: Double, by0: Double, by1: Double): Boolean =
+    le(ax0, bx1) && le(bx0, ax1) && le(ay0, by1) && le(by0, ay1)
 }
 
 /** Global bounding box of a dataset (the reference tracks this inline during

@@ -1,5 +1,6 @@
 package graft.join
 
+import graft.geom.SqlOrder
 import graft.geom.SqlOrder.le
 
 /** Array-packed STR R-tree over one cell's rectangles — the Spark-side
@@ -47,13 +48,13 @@ final class STRTree private (
     while (top > 0) {
       top -= 1
       val n = stack(top)
-      if (le(qx0, nx1(n)) && le(nx0(n), qx1) && le(qy0, ny1(n)) && le(ny0(n), qy1)) {
+      if (SqlOrder.intersects(qx0, qx1, qy0, qy1, nx0(n), nx1(n), ny0(n), ny1(n))) {
         var i = childStart(n)
         val end = childEnd(n)
         if (leafNode(n)) {
           while (i < end) {
             val g = items(i)
-            if (le(qx0, g.xmax) && le(g.xmin, qx1) && le(qy0, g.ymax) && le(g.ymin, qy1)) f(g)
+            if (SqlOrder.intersects(qx0, qx1, qy0, qy1, g.xmin, g.xmax, g.ymin, g.ymax)) f(g)
             i += 1
           }
         } else {

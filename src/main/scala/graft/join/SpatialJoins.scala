@@ -1,11 +1,12 @@
 package graft.join
 
 import graft.cells.{CellMapping, CellOf, CellScheme, CellsOf}
-import graft.geom.{Extent, Geom}
+import graft.functions.Mbr
+import graft.geom.{Extent, Geom, SqlOrder}
 import graft.geom.SqlOrder.le
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Abs, Expression, Greatest, Subtract}
+import org.apache.spark.sql.catalyst.expressions.{Abs, Expression, Greatest, Literal, Subtract}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
 
@@ -126,15 +127,23 @@ private[graft] final case class Side(df: DataFrame, xmin: Column, xmax: Column,
   def coords: Seq[Column] =
     if (points) Seq(xmin, xmin, ymin, ymin) else Seq(xmin, xmax, ymin, ymax)
 
-  /** This side with its MBR grown by `r` on every edge. */
-  def expanded(r: Double): Side =
-    copy(xmin = xmin - r, xmax = xmax + r, ymin = ymin - r, ymax = ymax + r)
+  /** This side with its MBR grown by `r` on every edge ([[Mbr.grown]]). */
+  def expanded(r: Double): Side = {
+    val box = Seq(xmin, xmax, ymin, ymax).map(Bridge.expression)
+    val Seq(x0, x1, y0, y1) = Mbr.grown(box, Literal(r)).map(Bridge.column)
+    copy(xmin = x0, xmax = x1, ymin = y0, ymax = y1)
+  }
 }
 
 private[graft] object Side {
+  /** The columns `p_xmin` … `p_ymax`. */
+  def box(p: String): Seq[Column] = Seq("xmin", "xmax", "ymin", "ymax").map(c => col(s"${p}_$c"))
+
   /** The side whose coordinates are the columns `p_xmin` … `p_ymax` of `df`. */
-  def prefixed(df: DataFrame, p: String): Side =
-    Side(df, col(s"${p}_xmin"), col(s"${p}_xmax"), col(s"${p}_ymin"), col(s"${p}_ymax"))
+  def prefixed(df: DataFrame, p: String): Side = {
+    val Seq(x0, x1, y0, y1) = box(p)
+    Side(df, x0, x1, y0, y1)
+  }
 
   /** `d` with its columns prefixed `p_`. */
   def of(d: Dataset[Geom], p: String): Side =
@@ -197,23 +206,19 @@ object SpatialJoins {
 
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass.getName.stripSuffix("$"))
 
-  val intersectPred: Column =
-    col("a_xmin") <= col("b_xmax") && col("a_xmax") >= col("b_xmin") &&
-    col("a_ymin") <= col("b_ymax") && col("a_ymax") >= col("b_ymin")
+  /** The [[Mbr]] predicates over the columns `a_xmin` … `b_ymax`. */
+  val intersectPred: Column = Mbr.column(Mbr.intersects)(Side.box("a"), Side.box("b"))
 
   /** Predicate variants over MBRs (the reference's SpatialSpark surface,
     * `SpatialJoinApp.scala:128-136`): `within` = a inside b (inclusive),
     * `contains` = b inside a, `overlaps` = intersect but neither contains
-    * the other. All are refinements of intersect, so they run as a post-join
-    * filter on the same cell-partitioned plan with unchanged dedup.
+    * the other. All are refinements of intersect on rows with ordered ends,
+    * so they run as a post-join filter on the same cell-partitioned plan
+    * with unchanged dedup.
     */
-  val withinPred: Column =
-    col("a_xmin") >= col("b_xmin") && col("a_xmax") <= col("b_xmax") &&
-    col("a_ymin") >= col("b_ymin") && col("a_ymax") <= col("b_ymax")
+  val withinPred: Column = Mbr.column(Mbr.within)(Side.box("a"), Side.box("b"))
 
-  val containsPred: Column =
-    col("b_xmin") >= col("a_xmin") && col("b_xmax") <= col("a_xmax") &&
-    col("b_ymin") >= col("a_ymin") && col("b_ymax") <= col("a_ymax")
+  val containsPred: Column = Mbr.column(Mbr.within)(Side.box("b"), Side.box("a"))
 
   val overlapsPred: Column = intersectPred && !withinPred && !containsPred
 
@@ -478,11 +483,9 @@ object SpatialJoins {
     */
   private def cellJoinKeyed(a: Side, ak: DataFrame, b: Side, bk: DataFrame,
                             s: CellScheme): DataFrame = {
-    val Seq(ax0, ax1, ay0, ay1) = a.coords
-    val Seq(bx0, bx1, by0, by1) = b.coords
     val owns = if (a.points || b.points) Nil else Seq(ownsPred(a, b, s, col(CellA)))
     ak.join(bk, (Seq(col(CellA) === col(CellB),
-      ax0 <= bx1 && ax1 >= bx0 && ay0 <= by1 && ay1 >= by0) ++ owns).reduce(_ && _))
+      Mbr.column(Mbr.intersects)(a.coords, b.coords)) ++ owns).reduce(_ && _))
   }
 
   /** PBSM grid join as a pure Catalyst plan (equi-join on cell). */
@@ -629,7 +632,7 @@ object SpatialJoins {
       private var k = 0                    // scan cursor on the opposite side
       private var pending: Pair = null
       private def hitOwned(a: CellGeom, b: CellGeom): Boolean =
-        le(a.xmin, b.xmax) && le(b.xmin, a.xmax) && le(a.ymin, b.ymax) && le(b.ymin, a.ymax) &&
+        SqlOrder.intersects(a.xmin, a.xmax, a.ymin, a.ymax, b.xmin, b.xmax, b.ymin, b.ymax) &&
           ownsRef(math.max(a.xmin, b.xmin), math.max(a.ymin, b.ymin))
       private def advance(): Unit = {
         while (pending == null && i < as.length && j < bs.length) {
@@ -817,11 +820,7 @@ object SpatialJoins {
   // ---- distance join --------------------------------------------------------
 
   /** Minimum Euclidean distance between two MBRs as a column. */
-  val minDistCol: Column = {
-    val dx = greatest(col("b_xmin") - col("a_xmax"), col("a_xmin") - col("b_xmax"), lit(0.0))
-    val dy = greatest(col("b_ymin") - col("a_ymax"), col("a_ymin") - col("b_ymax"), lit(0.0))
-    sqrt(dx * dx + dy * dy)
-  }
+  val minDistCol: Column = Mbr.column(Mbr.minDist)(Side.box("a"), Side.box("b"))
 
   /** "within distance r" join (reference J10 `withind`): expand the a-side MBR
     * by r for the grid candidate phase, then exact distance filter.

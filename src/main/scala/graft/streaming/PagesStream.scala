@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.cells.CellScheme
 import graft.geom.Geom
-import graft.join.SpatialJoins
+import graft.join.{Side, SpatialJoins}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -28,23 +28,18 @@ object PagesStream {
     * matched page/rect pair. Works identically on a batch frame (the
     * transformation is engine-agnostic — write-once semantics).
     *
-    * The stream side is geocoded POINTS, so it gets the PIP plan shape
+    * The stream side is geocoded POINTS, so it is the cell join's point side
     * (see `SpatialJoins.gridJoinPIP`): the cell id is a plain projection
     * (no per-micro-batch explode), the pair can only meet in the point's
     * own cell (no reference-point ownership filter), and each batch
-    * shuffles `(id, x, y, cell)` skeleton rows, not a replicated MBR.
+    * shuffles `(id, url, text_md5, x, y, cell)` rows, not a replicated MBR.
     */
   def geoJoinStream(pages: DataFrame, rects: Dataset[Geom], s: CellScheme): DataFrame = {
     val (x, y) = graft.pipeline.Pages.geocode(col("doc_id"))
-    val skeleton = pages.select(col("doc_id").as("a_id"), col("url"),
-        md5(col("text")).as("text_md5"), x.as("a_x"), y.as("a_y"),
-        SpatialJoins.cellOfCol(s, x, y).as("cell"))
-    val bC = SpatialJoins.withCells(
-        rects.toDF("b_id", "b_xmin", "b_xmax", "b_ymin", "b_ymax"), s, "b")
-      .withColumnRenamed("cell", "b_cell")
-    skeleton.join(bC, col("cell") === col("b_cell") &&
-        col("a_x") >= col("b_xmin") && col("a_x") <= col("b_xmax") &&
-        col("a_y") >= col("b_ymin") && col("a_y") <= col("b_ymax"))
+    val pts = pages.select(col("doc_id").as("a_id"), col("url"),
+      md5(col("text")).as("text_md5"), x.as("a_x"), y.as("a_y"))
+    SpatialJoins.cellJoin(Side(pts, col("a_x"), col("a_x"), col("a_y"), col("a_y"), points = true),
+        Side.of(rects, "b"), s)
       .select(col("a_id"), col("b_id"), col("url"), col("text_md5"))
   }
 }

@@ -65,6 +65,43 @@ class SqlSurfaceSpec extends AnyFunSuite {
     assert(run("st_within").nonEmpty && run("st_contains").nonEmpty)
   }
 
+  test("FLOAT, DECIMAL and INT coordinates and a non-double radius rewrite and match the oracle") {
+    GraftSql.install(spark)
+    import spark.implicits._
+    val rnd = new scala.util.Random(41)
+    def side(idBase: Long) = (0 until 1000).map { i =>
+      val x = rnd.nextDouble() * 95; val y = rnd.nextDouble() * 95
+      graft.geom.Geom(idBase + i, x, x + rnd.nextDouble() * 8, y, y + rnd.nextDouble() * 8)
+    }.toDS()
+    val (a, b) = (side(0L), side(10000L))
+    import graft.join.SpatialJoins.{containsPred, intersectPred, minDistCol, withinPred}
+    import org.apache.spark.sql.functions._
+    def typed(df: org.apache.spark.sql.DataFrame, t: String) =
+      df.select(col("id") +: Seq("xmin", "xmax", "ymin", "ymax").map(c => col(c).cast(t).as(c)): _*)
+    def pref(df: org.apache.spark.sql.DataFrame, p: String) = df.toDF(df.columns.map(c => s"${p}_$c"): _*)
+    for ((t, r) <- Seq("FLOAT" -> "CAST(8 AS FLOAT)", "DECIMAL(10,2)" -> "CAST(8 AS DECIMAL(10,2))",
+        "INT" -> "8")) {
+      val (ta, tb) = (typed(a.toDF(), t), typed(b.toDF(), t))
+      ta.createOrReplaceTempView("typed_a"); tb.createOrReplaceTempView("typed_b")
+      // the st_* args are cast to double, so the oracle reads the typed
+      // coordinates as doubles too
+      val (da, db) = (pref(typed(ta, "double"), "a"), pref(typed(tb, "double"), "b"))
+      for ((fn, extra, oracle) <- Seq(("st_intersects", "", intersectPred),
+          ("st_within", "", withinPred), ("st_contains", "", containsPred),
+          ("st_dwithin", s", $r", minDistCol <= 8.0))) {
+        val df = spark.sql(s"SELECT a.id, b.id FROM typed_a a JOIN typed_b b ON $fn(" +
+          s"a.xmin, a.xmax, a.ymin, a.ymax, b.xmin, b.xmax, b.ymin, b.ymax$extra)")
+        val phys = df.queryExecution.executedPlan.toString
+        assert(!phys.contains("NestedLoopJoin") && !phys.contains("CartesianProduct"),
+          s"$fn over $t: the rewrite did not fire\n$phys")
+        val want = da.join(broadcast(db), oracle).select("a_id", "b_id")
+          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+        assert(df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet == want, s"$fn over $t")
+        assert(want.nonEmpty || fn != "st_intersects", s"$fn over $t: no pairs")
+      }
+    }
+  }
+
   test("structural point side: PIP rewrite (no point-side generator, no ownership), oracle-equal") {
     GraftSql.install(spark)
     val dir = "/root/testdata/sf0.001"

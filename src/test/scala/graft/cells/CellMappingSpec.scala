@@ -66,18 +66,20 @@ class CellMappingSpec extends AnyFunSuite {
     }
   }
 
-  test("a null coordinate maps to no key (a null row meets no row)") {
+  test("a null coordinate: no CellsOf keys; CellOf keys it as NaN") {
     for ((name, m) <- schemes) {
       val unsafe = GenerateUnsafeProjection.generate(exprs(m))
       for (i <- 0 until 4) {
         val in = new GenericInternalRow(Array[Any](1.0, 2.0, 3.0, 4.0))
         in.setNullAt(i)
+        val nan = row(Array(1.0, 2.0, 3.0, 4.0).updated(i, Double.NaN))
+        val owner = exprs(m)(1).eval(nan)
         val Seq(cs, c) = exprs(m).map(_.eval(in))
         assert(cs == null, s"$name interpreted cells, null at $i")
-        assert((c == null) == (i == 0 || i == 2), s"$name interpreted cell, null at $i")
+        assert(c == owner, s"$name interpreted cell, null at $i")
         val u = unsafe(in)
         assert(u.isNullAt(0), s"$name generated cells, null at $i")
-        assert(u.isNullAt(1) == (i == 0 || i == 2), s"$name generated cell, null at $i")
+        assert(!u.isNullAt(1) && u.getLong(1) == owner, s"$name generated cell, null at $i")
       }
     }
   }
