@@ -371,7 +371,7 @@ object SparkEntry {
     // format itself.)
     "source_tree_scan" -> ((s, dir) => {
       val g = partRects.load(s, dir).collect() // index build is per-static-side, bounded
-      val tree = graft.sources.TreeBin.buildTree(g)
+      val tree = graft.join.STRTree.build(g)
       val path = s"${System.getProperty("java.io.tmpdir")}/graft_treebin_${dir.hashCode}.bin"
       graft.sources.TreeBin.writeTreeBin(s, tree, path)
       graft.sources.TreeBin.readTreeBinObjects(s, path).toDF()

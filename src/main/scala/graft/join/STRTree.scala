@@ -1,6 +1,6 @@
 package graft.join
 
-import graft.geom.SqlOrder
+import graft.geom.{Geom, SqlOrder}
 import graft.geom.SqlOrder.le
 
 /** Array-packed STR R-tree over one cell's rectangles — the Spark-side
@@ -18,7 +18,7 @@ import graft.geom.SqlOrder.le
   * probes, zero allocation per query.
   */
 final class STRTree private (
-    val items: Array[CellGeom],
+    val items: Array[Geom],
     nx0: Array[Double], nx1: Array[Double], ny0: Array[Double], ny1: Array[Double],
     childStart: Array[Int], childEnd: Array[Int], leafNode: Array[Boolean],
     root: Int) {
@@ -41,7 +41,7 @@ final class STRTree private (
     * compared in SQL order ([[graft.geom.SqlOrder]]).
     */
   def foreachIntersecting(qx0: Double, qx1: Double, qy0: Double, qy1: Double)
-                         (f: CellGeom => Unit): Unit = {
+                         (f: Geom => Unit): Unit = {
     if (items.isEmpty) return
     var top = 0
     stack(top) = root; top += 1
@@ -71,7 +71,7 @@ final class STRTree private (
 
 object STRTree {
 
-  def build(input: Array[CellGeom], leafSize: Int = 16): STRTree = {
+  def build(input: Array[Geom], leafSize: Int = 16): STRTree = {
     val items = input.clone()
     val n = items.length
     if (n == 0)
@@ -83,12 +83,12 @@ object STRTree {
     val sliceLen = slices * leafSize
     // primitive comparators (Ordering.by boxes a Double per comparison —
     // these sorts run once per dense cell on the hot path)
-    val byXc = new java.util.Comparator[CellGeom] {
-      def compare(a: CellGeom, b: CellGeom): Int =
+    val byXc = new java.util.Comparator[Geom] {
+      def compare(a: Geom, b: Geom): Int =
         java.lang.Double.compare(a.xmin + a.xmax, b.xmin + b.xmax)
     }
-    val byYc = new java.util.Comparator[CellGeom] {
-      def compare(a: CellGeom, b: CellGeom): Int =
+    val byYc = new java.util.Comparator[Geom] {
+      def compare(a: Geom, b: Geom): Int =
         java.lang.Double.compare(a.ymin + a.ymax, b.ymin + b.ymax)
     }
     java.util.Arrays.sort(items, byXc)

@@ -1,7 +1,7 @@
 package graft.join
 
 import graft.cells.{CellMapping, CellOf, CellScheme, CellsOf}
-import graft.functions.Mbr
+import graft.functions.{Mbr, STContains, STWithin}
 import graft.geom.{Extent, Geom, SqlOrder}
 import graft.geom.SqlOrder.le
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
@@ -14,9 +14,6 @@ import org.apache.spark.sql.graftbridge.Bridge
   * (`cpp/RTree.h:114`, `designs/pbsm/dynamic/16/src/types.hpp:27-31`).
   */
 final case class Pair(a_id: Long, b_id: Long)
-
-private[graft] final case class CellGeom(cell: Long, id: Long, xmin: Double,
-                                         xmax: Double, ymin: Double, ymax: Double)
 
 /** Reduce-side row of the repartition+sort join — all-primitive fields so the
   * codegen'd Dataset deserializer constructs it with ONE allocation per row
@@ -53,8 +50,15 @@ final case class JoinEvidence(extent: Option[Extent], countA: Long, countB: Long
                               occupiedB: Option[Occupancy] = None) {
   def aPoints: Boolean = aMaxEdge == 0.0
   def bPoints: Boolean = bMaxEdge == 0.0
-  /** Rows of the larger side per cell of `s`. */
-  def rowsPerCell(s: CellScheme): Double = math.max(countA, countB).toDouble / s.numCells
+  /** Rows of the larger side per cell of `s`, each counted in the cells it
+    * is expected to overlap: `1 + mean edge / cell edge` per axis, the
+    * replication [[SpatialJoins.chooseStripeAxis]] also reads. A cell's
+    * nested loop runs over its replicas, not only the rows it owns.
+    */
+  def rowsPerCell(s: CellScheme): Double = {
+    def replicas(edge: Double, cell: Double) = { val r = edge / cell; if (r > 0) 1 + r else 1.0 }
+    math.max(countA, countB) * replicas(meanW, s.cellW) * replicas(meanH, s.cellH) / s.numCells
+  }
 }
 
 object JoinEvidence {
@@ -128,9 +132,12 @@ private[graft] final case class Side(df: DataFrame, xmin: Column, xmax: Column,
     if (points) Seq(xmin, xmin, ymin, ymin) else Seq(xmin, xmax, ymin, ymax)
 
   /** This side with its MBR grown by `r` on every edge ([[Mbr.grown]]). */
-  def expanded(r: Double): Side = {
-    val box = Seq(xmin, xmax, ymin, ymax).map(Bridge.expression)
-    val Seq(x0, x1, y0, y1) = Mbr.grown(box, Literal(r)).map(Bridge.column)
+  def expanded(r: Double): Side =
+    boxed(Mbr.grown(Seq(xmin, xmax, ymin, ymax).map(Bridge.expression), Literal(r)))
+
+  /** This side with the MBR `box`, four expressions over `df`. */
+  def boxed(box: Seq[Expression]): Side = {
+    val Seq(x0, x1, y0, y1) = box.map(Bridge.column)
     copy(xmin = x0, xmax = x1, ymin = y0, ymax = y1)
   }
 }
@@ -192,10 +199,13 @@ object Route {
   *                      |A|·|B| to sorted-overlap. Used when cells are dense.
   *  - `stripesJoin`   — 1-D stripes = `n × 1` grid (reference J5).
   *
-  * Planning is evidence → route → plan: ONE fused aggregation
-  * ([[evidenceOf]]), a pure route choice ([[route]]) and one planner per
-  * route ([[planRoute]]). There are two join bodies: the declarative cell
-  * equi-join ([[cellJoin]]) and the keyed reduce ([[keyedPartitionJoin]]).
+  * Planning is evidence → scheme → route → plan, in ONE planner
+  * ([[planJoin]]) behind `intersectJoin`, SQL's st_* joins, both stripes
+  * joins and `gridJoinAdaptive`'s zero-split case: ONE fused aggregation
+  * ([[evidenceOf]]), the caller's cell scheme as a function of it, and a
+  * pure route choice ([[route]]). There are two join bodies: the
+  * declarative cell equi-join ([[cellJoin]]) and the keyed reduce
+  * ([[keyedPartitionJoin]]).
   *
   * Exactly-once semantics: a pair is emitted only in the cell that contains
   * the bottom-left corner of its intersection (`join.hpp:56-71`), so no
@@ -209,6 +219,15 @@ object SpatialJoins {
   /** The [[Mbr]] predicates over the columns `a_xmin` … `b_ymax`. */
   val intersectPred: Column = Mbr.column(Mbr.intersects)(Side.box("a"), Side.box("b"))
 
+  /** st_within and st_contains over the columns `a_xmin` … `b_ymax`, whose
+    * bodies are [[withinPred]] and [[containsPred]]: [[gridJoinPred]] knows
+    * these two predicates by their body, and keys their candidate boxes.
+    */
+  private val (within, contains) = {
+    val ab = (Side.box("a") ++ Side.box("b")).map(Bridge.expression)
+    (STWithin(ab), STContains(ab))
+  }
+
   /** Predicate variants over MBRs (the reference's SpatialSpark surface,
     * `SpatialJoinApp.scala:128-136`): `within` = a inside b (inclusive),
     * `contains` = b inside a, `overlaps` = intersect but neither contains
@@ -216,9 +235,9 @@ object SpatialJoins {
     * so they run as a post-join filter on the same cell-partitioned plan
     * with unchanged dedup.
     */
-  val withinPred: Column = Mbr.column(Mbr.within)(Side.box("a"), Side.box("b"))
+  val withinPred: Column = Bridge.column(within.body)
 
-  val containsPred: Column = Mbr.column(Mbr.within)(Side.box("b"), Side.box("a"))
+  val containsPred: Column = Bridge.column(contains.body)
 
   val overlapsPred: Column = intersectPred && !withinPred && !containsPred
 
@@ -268,9 +287,9 @@ object SpatialJoins {
   private[graft] val DenseCellRows = 256.0
 
   /** The ONE planning job: extent, per-side counts, per-side max edge and
-    * per-axis mean edge of both inputs. Each input partition folds its rows
-    * into a [[JoinEvidence.Part]] and the driver merges them — one stage,
-    * no exchange.
+    * per-axis mean edge of both inputs. Each input's partitions, coalesced
+    * to one group per core, fold their rows into a [[JoinEvidence.Part]] per
+    * group and the driver merges them — one stage, no exchange.
     */
   def evidenceOf(a: Dataset[Geom], b: Dataset[Geom]): JoinEvidence =
     measure(Side.of(a, "a"), Side.of(b, "b"), rasterA = false, rasterB = false)
@@ -288,8 +307,11 @@ object SpatialJoins {
     def parts(d: Side, side: Int, raster: Boolean) = {
       val c = Seq(d.xmin, d.xmax, d.ymin, d.ymax)
       val Seq(x0, x1, y0, y1) = c.map(Bridge.expression)
-      val rows = d.df.select(c :+ Bridge.column(JoinEvidence.edge(x0, x1, y0, y1)): _*)
+      val scan = d.df.select(c :+ Bridge.column(JoinEvidence.edge(x0, x1, y0, y1)): _*)
         .queryExecution.toRdd
+      // a task per core, not per input partition: on inputs of many small
+      // partitions the job's time is mostly per-task overhead
+      val rows = scan.coalesce(scan.sparkContext.defaultParallelism)
       val n = if (raster) rows.getNumPartitions else 0
       rows.mapPartitions(it => Iterator(JoinEvidence.Part.of(it, side, n)))
     }
@@ -310,15 +332,6 @@ object SpatialJoins {
       if (all.nH == 0) 0.0 else all.sumH / all.nH,
       occupied(0, rasterA), occupied(1, rasterB))
   }
-
-  /** [[evidenceOf]] for inputs of ≳1M estimated rows (Catalyst stats, no
-    * job); None below, where the pass would cost more than the point and
-    * dense routes save, so small inputs keep the generic plan with zero
-    * extra jobs.
-    */
-  private def evidenceIfLarge(a: Dataset[Geom], b: Dataset[Geom]): Option[JoinEvidence] =
-    if (math.max(estRowsFromStats(a), estRowsFromStats(b)) < 1e6) None
-    else Some(evidenceOf(a, b))
 
   /** Route choice — a pure function of the evidence and the cell scheme. */
   def route(ev: JoinEvidence, s: CellScheme): Route =
@@ -348,32 +361,30 @@ object SpatialJoins {
       Some(ids.fold(cellJoin(ap, bp, s)) { case (aId, bId) => keyedJoin(ap, bp, s, aId, bId) })
   }
 
-  /** The pairs `(a_id, b_id)` of a plan over [[Side.of]]'s sides;
-    * `broadcastNL` for the broadcast route.
+  /** The grid of about 16 rows of the larger side per cell over the
+    * evidence's extent. When its cap binds (rows ≫ 16·maxN²) cells run dense
+    * and the route turns to the sweep.
     */
-  private def idPairs(a: Dataset[Geom], b: Dataset[Geom], plan: Option[DataFrame]): DataFrame =
-    plan.fold(broadcastNL(a, b))(_.select(col("a_id"), col("b_id")))
-
-  /** The pairs of route `r` over scheme `s`. */
-  private def planRoute(a: Dataset[Geom], b: Dataset[Geom], s: CellScheme, r: Route): DataFrame =
-    idPairs(a, b, planSides(Side.of(a, "a"), Side.of(b, "b"), s, r, GeomIds))
-
-  /** The ONE planner of [[intersectJoin]] and of SQL's st_* joins
-    * ([[graft.plans.SpatialJoinRule]]), past intersectJoin's broadcast
-    * check: the ONE evidence job, which also maps the occupied cells of the
-    * side stats estimate smaller ([[evidenceWithOccupancy]]) → a grid of
-    * about 16 rows of the larger side per cell → [[route]] → the other side
-    * drops its rows that touch none ([[dropUnoccupied]]) → the route's plan
-    * ([[planSides]]). The pair set is that of every route. One INFO line
-    * logs the route, the counts and the occupancy.
-    */
-  private[graft] def planJoin(a: Side, b: Side,
-                              ids: Option[(Column, Column)]): Option[DataFrame] = {
-    val ev = evidenceWithOccupancy(a, b)
-    // when the grid cap binds (rows ≫ 16·maxN²) cells run dense and the
-    // route turns to the sweep
-    val s = CellScheme.forSize(ev.extent.getOrElse(Extent(0, 0, 0, 0)),
+  private val SizedGrid: JoinEvidence => CellScheme = ev =>
+    CellScheme.forSize(ev.extent.getOrElse(Extent(0, 0, 0, 0)),
       math.max(ev.countA, ev.countB), targetPerCell = 16, maxN = 8192)
+
+  /** The ONE planner of every cell-partitioned entry point that picks its
+    * own route: [[intersectJoin]] and SQL's st_* joins
+    * ([[graft.plans.SpatialJoinRule]]) past the broadcast check, both
+    * stripes joins and [[gridJoinAdaptive]] when it plans no split. The ONE
+    * evidence job, which also maps the occupied cells of the side stats
+    * estimate smaller ([[evidenceWithOccupancy]]) → the caller's cell
+    * scheme, a function of that evidence (by default [[SizedGrid]]) →
+    * [[route]] → the other side drops its rows that touch none
+    * ([[dropUnoccupied]]) → the route's plan ([[planSides]]). The pair set
+    * is that of every route. One INFO line logs the route, the counts and
+    * the occupancy.
+    */
+  private[graft] def planJoin(a: Side, b: Side, ids: Option[(Column, Column)],
+                              scheme: JoinEvidence => CellScheme = SizedGrid): Option[DataFrame] = {
+    val ev = evidenceWithOccupancy(a, b)
+    val s = scheme(ev)
     val r = route(ev, s)
     if (log.isInfoEnabled) {
       val occ = Seq("a" -> ev.occupiedA, "b" -> ev.occupiedB).collectFirst {
@@ -386,6 +397,14 @@ object SpatialJoins {
     planSides(dropUnoccupied(a, ev.occupiedB, ev.aPoints),
       dropUnoccupied(b, ev.occupiedA, ev.bPoints), s, r, ids)
   }
+
+  /** The pairs `(a_id, b_id)` of [[planJoin]] over `a` and `b` under
+    * `scheme`; `broadcastNL` for the broadcast route.
+    */
+  private def planPairs(a: Dataset[Geom], b: Dataset[Geom],
+                        scheme: JoinEvidence => CellScheme): DataFrame =
+    planJoin(Side.of(a, "a"), Side.of(b, "b"), GeomIds, scheme)
+      .fold(broadcastNL(a, b))(_.select(col("a_id"), col("b_id")))
 
   /** Single entry point with automatic physical-strategy choice (the
     * reference's join-direction / index-side heuristics, SURVEY §4): tiny
@@ -413,7 +432,7 @@ object SpatialJoins {
     else if (small(a)) swapSides(broadcastNL(b, a))
     // stats can OVER-estimate filtered scans, so both inputs may be empty
     // here: the evidence then has no extent and routes to broadcastNL
-    else idPairs(a, b, planJoin(Side.of(a, "a"), Side.of(b, "b"), GeomIds))
+    else planPairs(a, b, SizedGrid)
   }
 
   /** The rows of `d` that touch some occupied cell of the other side; all
@@ -515,13 +534,21 @@ object SpatialJoins {
       .select(col("a_id"), col("b_id"))
 
   /** [[gridJoin]] restricted by an additional predicate variant (within /
-    * contains / overlaps). The candidate phase and dedup are those of the
-    * intersect join; the variant is a refinement filter.
+    * contains / overlaps), a refinement filter on top of the cell join.
+    * The candidate phase keys the variant's candidate boxes, as SQL's
+    * st_within / st_contains do ([[STPredicate.candidates]]): the ordered
+    * box of the inner side for [[withinPred]] and [[containsPred]], so an
+    * inverted or NaN-min row still meets the box it lies within; the raw
+    * boxes of the intersect join for any other predicate.
     */
   def gridJoinPred(a: Dataset[Geom], b: Dataset[Geom], s: CellScheme,
-                   pred: Column): DataFrame =
-    cellJoin(Side.of(a, "a"), Side.of(b, "b"), s).filter(pred)
+                   pred: Column): DataFrame = {
+    val (sa, sb) = (Side.of(a, "a"), Side.of(b, "b"))
+    val (ca, cb) = Seq(within, contains).find(_.body == Bridge.expression(pred))
+      .fold((sa, sb)) { st => val (x, y) = st.candidates; (sa.boxed(x), sb.boxed(y)) }
+    cellJoin(ca, cb, s).filter(pred)
       .select(col("a_id"), col("b_id"))
+  }
 
   /** Salted grid join for degenerate hot cells (e.g. many identical points):
     * the a-side of every cell is hashed into `salt` buckets; the b-side is
@@ -555,7 +582,7 @@ object SpatialJoins {
   private[graft] val IndexMinRows = 512
 
   /** Dispatch between the sweep and the STR-indexed loop. */
-  private[graft] def joinCellOwned(as: Array[CellGeom], bs: Array[CellGeom],
+  private[graft] def joinCellOwned(as: Array[Geom], bs: Array[Geom],
                                    ownsRef: (Double, Double) => Boolean): Iterator[Pair] =
     if (math.min(as.length, bs.length) >= IndexMinRows) strOwned(as, bs, ownsRef)
     else sweepOwned(as, bs, ownsRef)
@@ -563,7 +590,7 @@ object SpatialJoins {
   /** STR-indexed per-cell join: build on the smaller side, probe with the
     * larger; emits the same (intersect ∧ owns) pair set as [[sweepOwned]].
     */
-  private[graft] def strOwned(as: Array[CellGeom], bs: Array[CellGeom],
+  private[graft] def strOwned(as: Array[Geom], bs: Array[Geom],
                               ownsRef: (Double, Double) => Boolean): Iterator[Pair] =
     if (as.isEmpty || bs.isEmpty) Iterator.empty else new StrProbes(as, bs, ownsRef)
 
@@ -574,17 +601,17 @@ object SpatialJoins {
     * 10M+ allocations in a dense-stripe task), and refills the buffer only
     * after handing out every pair in it, so no consumer can see it reused.
     */
-  private final class StrProbes(as: Array[CellGeom], bs: Array[CellGeom],
+  private final class StrProbes(as: Array[Geom], bs: Array[Geom],
                                 ownsRef: (Double, Double) => Boolean) extends Iterator[Pair] {
     private val buildA = as.length <= bs.length
     private val tree = STRTree.build(if (buildA) as else bs)
     private val probes = if (buildA) bs else as
     private var nextProbe = 0
-    private var probe: CellGeom = null
+    private var probe: Geom = null
     private var buf = new Array[Pair](16)
     private var n = 0
     private var i = 0
-    private val sink: CellGeom => Unit = { g =>
+    private val sink: Geom => Unit = { g =>
       val p = probe
       if (ownsRef(math.max(p.xmin, g.xmin), math.max(p.ymin, g.ymin))) {
         if (n == buf.length) buf = java.util.Arrays.copyOf(buf, 2 * n)
@@ -616,13 +643,13 @@ object SpatialJoins {
     * on both axes, so NaN coordinates and inverted rows give the SQL
     * predicate's pairs.
     */
-  private[graft] def sweepOwned(as: Array[CellGeom], bs: Array[CellGeom],
+  private[graft] def sweepOwned(as: Array[Geom], bs: Array[Geom],
                                 ownsRef: (Double, Double) => Boolean): Iterator[Pair] = {
     if (as.isEmpty || bs.isEmpty) return Iterator.empty
     // primitive comparator: Ordering.by boxes a Double per comparison —
     // pure overhead in a sort that runs once per cell on the hot path
-    val byYmin = new java.util.Comparator[CellGeom] {
-      def compare(a: CellGeom, b: CellGeom): Int = java.lang.Double.compare(a.ymin, b.ymin)
+    val byYmin = new java.util.Comparator[Geom] {
+      def compare(a: Geom, b: Geom): Int = java.lang.Double.compare(a.ymin, b.ymin)
     }
     java.util.Arrays.sort(as, byYmin)
     java.util.Arrays.sort(bs, byYmin)
@@ -631,7 +658,7 @@ object SpatialJoins {
       private var anchorA = true          // which side the current anchor is on
       private var k = 0                    // scan cursor on the opposite side
       private var pending: Pair = null
-      private def hitOwned(a: CellGeom, b: CellGeom): Boolean =
+      private def hitOwned(a: Geom, b: Geom): Boolean =
         SqlOrder.intersects(a.xmin, a.xmax, a.ymin, a.ymax, b.xmin, b.xmax, b.ymin, b.ymax) &&
           ownsRef(math.max(a.xmin, b.xmin), math.max(a.ymin, b.ymin))
       private def advance(): Unit = {
@@ -698,10 +725,10 @@ object SpatialJoins {
           if (!started) { started = true; cur = if (rows.hasNext) rows.next() else null }
           while (!inner.hasNext && cur != null) {
             val cellKey = cur.key
-            val as = scala.collection.mutable.ArrayBuffer.empty[CellGeom]
-            val bs = scala.collection.mutable.ArrayBuffer.empty[CellGeom]
+            val as = scala.collection.mutable.ArrayBuffer.empty[Geom]
+            val bs = scala.collection.mutable.ArrayBuffer.empty[Geom]
             while (cur != null && cur.key == cellKey) {
-              val g = CellGeom(cellKey, cur.id, cur.xmin, cur.xmax, cur.ymin, cur.ymax)
+              val g = Geom(cur.id, cur.xmin, cur.xmax, cur.ymin, cur.ymax)
               if (cur.side == 0) as += g else bs += g
               cur = if (rows.hasNext) rows.next() else null
             }
@@ -715,33 +742,31 @@ object SpatialJoins {
     }.toDF("a_id", "b_id")
   }
 
-  /** PBSM grid join with the plane-sweep/STR inner loop. The replication is
+  /** PBSM grid join with the plane-sweep/STR inner loop: the forced keyed
+    * reduce over `s`, with no route choice and no occupancy filter, so it
+    * stays an independent check on the planned routes. The replication is
     * DECLARATIVE (the same codegen'd `explode` generator as [[gridJoin]]),
     * followed by the keyed reduce — object construction happens ONCE per
     * row, on the reduce side.
     *
     * A POINT side (the stripes/dense twin of [[gridJoinPIP]]) overlaps
     * exactly one cell, so its map side is a plain projection with no
-    * generator. Point evidence costs a data pass, so it is measured
-    * only for inputs of ≳1M estimated rows ([[evidenceIfLarge]]). Every
-    * branch emits the identical pair set: a point's pair can only meet in
-    * the point's own cell, where its reference point — the point itself —
-    * trivially owns.
+    * generator; the point flags come from the ONE evidence job
+    * ([[evidenceOf]]). Every branch emits the identical pair set: a point's
+    * pair can only meet in the point's own cell, where its reference point
+    * — the point itself — trivially owns.
     */
   def gridJoinSweep(a: Dataset[Geom], b: Dataset[Geom], s: CellScheme): DataFrame = {
-    val ev = evidenceIfLarge(a, b)
-    keyedPartitionJoin(a, b, s, ev.exists(_.aPoints), ev.exists(_.bPoints))
+    val ev = evidenceOf(a, b)
+    keyedPartitionJoin(a, b, s, ev.aPoints, ev.bPoints)
   }
 
-  /** 1-D stripes plan (reference J5): an `n × 1` grid. Small inputs (Catalyst
-    * stats, no job) keep the declarative grid plan; large ones pay the ONE
-    * evidence aggregation and take its [[route]] — the point plan, or the
-    * sweep when stripes run dense.
+  /** 1-D stripes plan (reference J5): [[planJoin]] over an `n × 1` grid —
+    * the point plan, the sweep when stripes run dense, and the occupancy
+    * filter, as [[intersectJoin]] plans its own grid.
     */
-  def stripesJoin(a: Dataset[Geom], b: Dataset[Geom], extent: Extent, n: Int): DataFrame = {
-    val s = CellScheme.stripesX(extent, n)
-    evidenceIfLarge(a, b).fold(gridJoin(a, b, s))(ev => planRoute(a, b, s, route(ev, s)))
-  }
+  def stripesJoin(a: Dataset[Geom], b: Dataset[Geom], extent: Extent, n: Int): DataFrame =
+    planPairs(a, b, _ => CellScheme.stripesX(extent, n))
 
   /** Stripe-direction choice (the reference records `best_join_direction` per
     * workload and picks the better of partition-dim0 vs the transpose,
@@ -756,15 +781,13 @@ object SpatialJoins {
   }
 
   /** [[stripesJoin]] with the axis chosen by [[chooseStripeAxis]]; the one
-    * evidence aggregation serves both the axis and the route.
+    * evidence aggregation serves the axis, the route and the occupancy
+    * filter.
     */
-  def stripesJoinAuto(a: Dataset[Geom], b: Dataset[Geom], extent: Extent, n: Int): DataFrame = {
-    val ev = evidenceOf(a, b)
-    val s =
+  def stripesJoinAuto(a: Dataset[Geom], b: Dataset[Geom], extent: Extent, n: Int): DataFrame =
+    planPairs(a, b, ev =>
       if (chooseStripeAxis(ev, extent, n) == 'x') CellScheme.stripesX(extent, n)
-      else CellScheme.stripesY(extent, n)
-    planRoute(a, b, s, route(ev, s))
-  }
+      else CellScheme.stripesY(extent, n))
 
   /** Sort-tile-partitioned join (the reference's SpatialSpark STP method,
     * `PartitionedSpatialJoin.scala:151-165`): data-quantile tile boundaries
@@ -799,22 +822,14 @@ object SpatialJoins {
   /** PBSM with adaptive hot-cell refinement (reference J6's quadtree budget
     * rule, see [[graft.skew.AdaptiveCells]]): plan splits from per-cell
     * counts of one bounded sample, then one keyed reduce on the packed
-    * two-level key.
+    * two-level key. With no hot cell the two-level key is the plain grid,
+    * so the join is [[planJoin]] over `base`.
     */
   def gridJoinAdaptive(a: Dataset[Geom], b: Dataset[Geom], base: CellScheme,
                        budgetPairs: Long = 4L * 1024 * 1024): DataFrame = {
     val scheme = graft.skew.AdaptiveCells.plan(a, b, base, budgetPairs)
-    if (scheme.splits.isEmpty) {
-      // zero hot cells → the two-level key degenerates to the plain grid, so
-      // return the plain-grid PLAN (on even density the insurance premium is
-      // just the bounded planning sample). Inner-loop routing uses the
-      // occupied-cell mean the split rule MEASURED from that sample (the
-      // Catalyst byte-stats estimate sits exactly on the dense-cell boundary
-      // for the bench workloads and routes dense cells into the quadratic
-      // SMJ loop). Every branch emits the identical pair set.
-      if (scheme.perCellMean > DenseCellRows) gridJoinSweep(a, b, base)
-      else gridJoin(a, b, base)
-    } else keyedPartitionJoin(a, b, scheme)
+    if (scheme.splits.isEmpty) planPairs(a, b, _ => base)
+    else keyedPartitionJoin(a, b, scheme)
   }
 
   // ---- distance join --------------------------------------------------------

@@ -17,15 +17,7 @@ import org.apache.spark.sql.Dataset
   * shuffle. Min subcell size is clamped to the sampled median object extent
   * (`partition_utils.hpp:226-277` semantics) to bound replication blow-up.
   */
-/** `perCellMean`: mean occupied-cell population of the larger side,
-  * measured by the split rule. [[AdaptiveCells.plan]] always sets
-  * it (≥ 0); the zero-splits fallthrough of `gridJoinAdaptive` routes its
-  * inner loop on it (sweep/STR for dense cells, declarative SMJ otherwise),
-  * never on Catalyst statistics. Schemes built by hand keep the unused
-  * default.
-  */
-final case class AdaptiveScheme(base: CellScheme, splits: Map[Long, Int],
-                                perCellMean: Double = -1.0) extends CellMapping {
+final case class AdaptiveScheme(base: CellScheme, splits: Map[Long, Int]) extends CellMapping {
   import AdaptiveScheme.SubBits
   require(splits.values.forall(s => s * s < (1 << SubBits) - 1), "split factor too large")
 
@@ -164,13 +156,7 @@ object AdaptiveCells {
     // products in double: at scale they overflow int64 and would silently
     // skip hot cells
     def prod(c: Int): Double = ca(c) * scale * (cb(c) * scale)
-    var totA, totB, sumProd = 0.0
-    var occupied = 0
-    for (c <- ca.indices) {
-      totA += ca(c); totB += cb(c); sumProd += prod(c)
-      if (ca(c) + cb(c) > 0) occupied += 1
-    }
-    val perCellMean = math.max(totA, totB) * scale / math.max(1, occupied)
+    val sumProd = ca.indices.iterator.map(prod).sum
     // split threshold: the larger of the absolute budget and the balanced
     // per-worker share of total candidate work — a cell below the share can
     // never be the straggler, so splitting it buys nothing. At most
@@ -203,6 +189,6 @@ object AdaptiveCells {
       val s = math.ceil(math.pow(prod(c) / budgetPairs, 0.25)).toInt + 1
       c.toLong -> math.min(s, sCap)
     }.filter(_._2 >= 2).toMap
-    AdaptiveScheme(base, splits, perCellMean)
+    AdaptiveScheme(base, splits)
   }
 }

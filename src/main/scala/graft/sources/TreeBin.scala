@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.geom.Geom
-import graft.join.{CellGeom, STRTree}
+import graft.join.STRTree
 import org.apache.spark.sql.{Dataset, SparkSession}
 
 /** The reference's serialized R-tree format (`tree_A.bin`) — reference S3.
@@ -136,11 +136,4 @@ object TreeBin {
         Geom(n.entryIds(j).toLong, n.ex0(j), n.ex1(j), n.ey0(j), n.ey1(j)))
     }.toDS()
   }
-
-  /** Build a packed STR tree from collected geometries (helper for
-    * serialization of a static side / a cell's contents).
-    */
-  def buildTree(geoms: Array[Geom], leafSize: Int = 16): STRTree =
-    STRTree.build(geoms.map(g => CellGeom(0L, g.id, g.xmin, g.xmax, g.ymin, g.ymax)),
-      leafSize)
 }

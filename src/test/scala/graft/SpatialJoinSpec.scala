@@ -190,9 +190,9 @@ class SpatialJoinSpec extends AnyFunSuite {
   }
 
   test("sweep point specialization: projection-only point side, identical pairs (grid + stripes)") {
-    // exercises the keyed reduce directly: the public gridJoinSweep gates
-    // its detection aggregation on ~1M estimated rows, so spec-sized inputs
-    // would keep the generic map side
+    // exercises the keyed reduce directly, with the point flags set by hand
+    // on every scheme; the public gridJoinSweep reads them off its one
+    // evidence job
     val pts = randomSet(24, 2000, 0.0)
     val polys = randomSet(25, 1500, 5.0)
     val ext = Extent(0, 106, 0, 106)

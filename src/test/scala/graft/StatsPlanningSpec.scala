@@ -171,7 +171,8 @@ class StatsPlanningSpec extends AnyFunSuite {
   }
 
   /** A Filter keeps its child's sizeInBytes: millions of estimated rows,
-    * 400 real ones — past the stats gate that turns on route evidence.
+    * 400 real ones. Planning must not read the estimate's size: small and
+    * large estimates run the same one evidence job.
     */
   private def big(off: Long, mx: Long, my: Long): Dataset[Geom] = {
     import spark.implicits._
@@ -184,29 +185,38 @@ class StatsPlanningSpec extends AnyFunSuite {
       .as[Geom]
   }
 
+  private val ext = graft.geom.Extent(0, 100, 0, 100)
+
+  /** The entry points that plan from the one evidence job besides intersectJoin. */
+  private val evidencePlanned: Seq[(String, (Dataset[Geom], Dataset[Geom]) => DataFrame)] = Seq(
+    "stripesJoin" -> (SpatialJoins.stripesJoin(_, _, ext, 16)),
+    "stripesJoinAuto" -> (SpatialJoins.stripesJoinAuto(_, _, ext, 16)),
+    "gridJoinSweep" -> (SpatialJoins.gridJoinSweep(_, _, CellScheme(ext, 8, 8))))
+
+  test("stripesJoin, stripesJoinAuto and gridJoinSweep run exactly ONE planning job on small inputs") {
+    val a = mk(400, 0); val b = mk(400, 1000)
+    for ((name, join) <- evidencePlanned) withClue(s"$name: ")(onePlanningJob(a, b, join))
+  }
+
+  test("stripesJoin on a large estimate runs exactly ONE planning job") {
+    val a = big(0, 37, 53); val b = big(1000, 29, 61)
+    assert(SpatialJoins.estRowsFromStats(a) >= 1e6)
+    onePlanningJob(a, b, SpatialJoins.stripesJoin(_, _, ext, 16))
+  }
+
   test("stripesJoinAuto on a large estimate measures ONCE for both axis and route") {
     val a = big(0, 37, 53); val b = big(1000, 29, 61)
     assert(SpatialJoins.estRowsFromStats(a) >= 1e6)
-    val oneAggregation = jobsDuring { SpatialJoins.evidenceOf(a, b) }
-    var planned: org.apache.spark.sql.DataFrame = null
-    val jobs = jobsDuring {
-      planned = SpatialJoins.stripesJoinAuto(a, b, graft.geom.Extent(0, 100, 0, 100), 16)
-    }
-    // the axis choice and the route read the same single aggregation
-    assert(oneAggregation >= 1 && jobs == oneAggregation,
-      s"stripesJoinAuto planning ran $jobs job(s); one aggregation is $oneAggregation")
-    val want = SpatialJoins.broadcastNL(a, b)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val got = planned.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(got == want && want.nonEmpty)
+    // the axis choice, the route and the occupancy filter read the same
+    // single aggregation
+    onePlanningJob(a, b, SpatialJoins.stripesJoinAuto(_, _, ext, 16))
   }
 
   test("gridJoinSweep on a large estimate runs exactly ONE planning job") {
     val a = big(0, 37, 53); val b = big(1000, 29, 61)
     assert(SpatialJoins.estRowsFromStats(a) >= 1e6)
     // the point-side detection reads the one evidence job, nothing else
-    onePlanningJob(a, b,
-      SpatialJoins.gridJoinSweep(_, _, CellScheme(graft.geom.Extent(0, 100, 0, 100), 8, 8)))
+    onePlanningJob(a, b, SpatialJoins.gridJoinSweep(_, _, CellScheme(ext, 8, 8)))
   }
 
   test("gridJoinAdaptive on a large estimate plans from the bounded sample") {
@@ -215,15 +225,14 @@ class StatsPlanningSpec extends AnyFunSuite {
     val persisted = spark.sparkContext.getPersistentRDDs.keySet
     var planned: DataFrame = null
     val jobs = jobsDuring {
-      planned = SpatialJoins.gridJoinAdaptive(a, b,
-        CellScheme(graft.geom.Extent(0, 100, 0, 100), 8, 8), budgetPairs = 1000)
+      planned = SpatialJoins.gridJoinAdaptive(a, b, CellScheme(ext, 8, 8), budgetPairs = 1000)
     }
-    // a large estimate skips the bounded confirm, so planning is the
-    // sample's head(): three partition probes (1, 4, then the last 3 of the
-    // union's 8 partitions), then the split rule on the driver. The sparse
-    // sample plans no splits and a small cell mean, so the zero-splits route
-    // is the plain grid, which needs no evidence job. Nothing is persisted.
-    assert(jobs == 3, s"adaptive planning ran $jobs job(s)")
+    // a large estimate skips the bounded confirm, so the sample is its
+    // head(): three partition probes (1, 4, then the last 3 of the union's
+    // 8 partitions), then the split rule on the driver. The sparse sample
+    // plans no splits, so the base grid's route comes from the one evidence
+    // job, as every planned route's does. Nothing is persisted.
+    assert(jobs == 4, s"adaptive planning ran $jobs job(s)")
     assert(spark.sparkContext.getPersistentRDDs.keySet == persisted)
     val want = SpatialJoins.broadcastNL(a, b)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet

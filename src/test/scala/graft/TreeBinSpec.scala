@@ -1,6 +1,7 @@
 package graft
 
 import graft.geom.Geom
+import graft.join.STRTree
 import graft.sources.TreeBin
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -27,7 +28,7 @@ class TreeBinSpec extends AnyFunSuite {
   test("round-trip: leaf objects == input set (float32), 4096-B page framing") {
     val geoms = mk(3000)
     val path = java.nio.file.Files.createTempDirectory("treebin").toString + "/tree_A.bin"
-    TreeBin.writeTreeBin(spark, TreeBin.buildTree(geoms), path)
+    TreeBin.writeTreeBin(spark, STRTree.build(geoms), path)
     val len = new java.io.File(path).length()
     assert(len > 0 && len % TreeBin.NodeBytes == 0, s"file length $len not page-aligned")
     val back = TreeBin.readTreeBinObjects(spark, path).collect()
@@ -39,7 +40,7 @@ class TreeBinSpec extends AnyFunSuite {
     val geoms = mk(500)
     for (leafSize <- Seq(3, 5, 64, 150)) {
       val path = java.nio.file.Files.createTempDirectory("treebin").toString + "/t.bin"
-      TreeBin.writeTreeBin(spark, TreeBin.buildTree(geoms, leafSize), path)
+      TreeBin.writeTreeBin(spark, STRTree.build(geoms, leafSize), path)
       val back = TreeBin.readTreeBinObjects(spark, path).collect()
       assert(back.map(f32).toSet == geoms.map(f32).toSet, s"leafSize=$leafSize")
     }
@@ -48,7 +49,7 @@ class TreeBinSpec extends AnyFunSuite {
   test("structure: root is page 0, level-order ids, directory MBR = union of children") {
     val geoms = mk(3000)
     val path = java.nio.file.Files.createTempDirectory("treebin").toString + "/tree_A.bin"
-    TreeBin.writeTreeBin(spark, TreeBin.buildTree(geoms), path)
+    TreeBin.writeTreeBin(spark, STRTree.build(geoms), path)
     val nodes = TreeBin.readTreeBinNodes(spark, path).collect().sortBy(_.nodeId)
     assert(nodes.map(_.nodeId).toSeq == nodes.indices.toSeq, "node ids must be 0..n-1")
     val byId = nodes.map(n => n.nodeId -> n).toMap
@@ -71,7 +72,7 @@ class TreeBinSpec extends AnyFunSuite {
   test("query over the DESERIALIZED tree == brute force (reference loader semantics)") {
     val geoms = mk(2000)
     val path = java.nio.file.Files.createTempDirectory("treebin").toString + "/tree_A.bin"
-    TreeBin.writeTreeBin(spark, TreeBin.buildTree(geoms), path)
+    TreeBin.writeTreeBin(spark, STRTree.build(geoms), path)
     val byId = TreeBin.readTreeBinNodes(spark, path).collect().map(n => n.nodeId -> n).toMap
     // recursive traversal exactly like RTree.h sync traversal on loaded nodes
     def query(q: (Float, Float, Float, Float)): Set[Long] = {

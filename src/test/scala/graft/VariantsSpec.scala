@@ -2,7 +2,8 @@ package graft
 
 import graft.cells.CellScheme
 import graft.geom.{Extent, Geom}
-import graft.join.SpatialJoins
+import graft.join.{Side, SpatialJoins}
+import org.apache.spark.sql.{Column, Dataset}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -36,6 +37,32 @@ class VariantsSpec extends AnyFunSuite {
     assert(pairs(SpatialJoins.gridJoinPred(a, b, s, SpatialJoins.overlapsPred)) ==
       inter -- within -- contains)
     assert(within.nonEmpty && contains.nonEmpty)
+  }
+
+  /** `gridJoinPred` with within, and with contains on the sides swapped,
+    * gives the broadcast nested loop's pairs on the rows `inner` within
+    * `outer`, among random rows.
+    */
+  private def withinMatchesOracle(inner: Geom, outer: Geom): Unit = {
+    val a = spark.createDataset(randomSet(23, 200, 8.0).collect() :+ inner).repartition(3)
+    val b = spark.createDataset(randomSet(24, 200, 8.0).collect() :+ outer).repartition(3)
+    def oracle(x: Dataset[Geom], y: Dataset[Geom], pred: Column) =
+      pairs(Side.of(x, "a").df.join(broadcast(Side.of(y, "b").df), pred).select("a_id", "b_id"))
+    val s = CellScheme(Extent(0, 108, 0, 108), 7, 7)
+    val within = oracle(a, b, SpatialJoins.withinPred)
+    assert(within.contains((inner.id, outer.id)))
+    assert(pairs(SpatialJoins.gridJoinPred(a, b, s, SpatialJoins.withinPred)) == within)
+    assert(oracle(b, a, SpatialJoins.containsPred) == within.map(_.swap))
+    assert(pairs(SpatialJoins.gridJoinPred(b, a, s, SpatialJoins.containsPred)) ==
+      within.map(_.swap))
+  }
+
+  test("within / contains: an inverted row within a box it does not meet as it stands") {
+    withinMatchesOracle(Geom(900, 50, 45, 40, 60), Geom(1900, 40, 48, 35, 65))
+  }
+
+  test("within / contains: a NaN-min row within a box") {
+    withinMatchesOracle(Geom(900, Double.NaN, 50, 40, 60), Geom(1900, 0, 100, 0, 100))
   }
 
   test("salted join: identical results on a degenerate hot cell (all-same point)") {

@@ -14,9 +14,10 @@ class RouteSpec extends AnyFunSuite {
   private val ext = Extent(0, 100, 0, 100)
   private val s = CellScheme(ext, 10, 10) // 100 cells
 
+  /** Evidence with mean edges of 0, so a row is one replica. */
   private def ev(countA: Long, countB: Long, aEdge: Double = 2.0,
                  bEdge: Double = 2.0): JoinEvidence =
-    JoinEvidence(Some(ext), countA, countB, aEdge, bEdge, meanW = 2.0, meanH = 2.0)
+    JoinEvidence(Some(ext), countA, countB, aEdge, bEdge, meanW = 0.0, meanH = 0.0)
 
   /** A side's max edge, through the aggregation's own edge expression. */
   private def maxEdge(rows: Seq[Geom]): Double = rows.map { g =>
@@ -29,6 +30,15 @@ class RouteSpec extends AnyFunSuite {
     assert(route(ev(10, 25600), s) == Route.Grid)
     assert(route(ev(25700, 10), s) == Route.Sweep(aPoints = false, bPoints = false))
     assert(route(ev(10, 25700), s) == Route.Sweep(aPoints = false, bPoints = false))
+  }
+
+  test("rows count in every cell they are expected to overlap") {
+    // mean edges of 2 on 10-wide cells: 1.2 replicas per axis, 1.44 per row
+    def wide(countA: Long) = ev(countA, 10).copy(meanW = 2.0, meanH = 2.0)
+    assert(route(wide(17700), s) == Route.Grid)   // 254.9 replicas per cell
+    assert(route(wide(17800), s) == Route.Sweep(aPoints = false, bPoints = false)) // 256.3
+    // NaN or negative (inverted) mean edges count a row once
+    assert(route(ev(25600, 10).copy(meanW = Double.NaN, meanH = -3.0), s) == Route.Grid)
   }
 
   test("a point side on a or on b takes the point plan") {

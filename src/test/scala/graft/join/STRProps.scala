@@ -1,5 +1,6 @@
 package graft.join
 
+import graft.geom.Geom
 import org.scalacheck.{Gen, Prop, Properties, Test}
 
 /** STR-packed per-cell index vs brute force, and the STR-indexed owned join
@@ -12,12 +13,12 @@ object STRProps extends Properties("str") {
   override def overrideParameters(p: Test.Parameters): Test.Parameters =
     p.withMinSuccessfulTests(150)
 
-  private val geomGen: Gen[CellGeom] = for {
+  private val geomGen: Gen[Geom] = for {
     x <- Gen.chooseNum(0.0, 50.0); y <- Gen.chooseNum(0.0, 50.0)
     w <- Gen.oneOf(Gen.const(0.0), Gen.chooseNum(0.0, 25.0))
     h <- Gen.oneOf(Gen.const(0.0), Gen.chooseNum(0.0, 25.0))
     id <- Gen.chooseNum(0L, 1000000L)
-  } yield CellGeom(0L, id, x, x + w, y, y + h)
+  } yield Geom(id, x, x + w, y, y + h)
 
   property("query == brute-force intersect set") =
     Prop.forAll(Gen.listOfN(150, geomGen), Gen.listOfN(40, geomGen)) { (items, probes) =>
@@ -45,7 +46,7 @@ object STRProps extends Properties("str") {
     Prop.forAll(Gen.listOfN(100, geomGen), Gen.listOfN(100, geomGen), Gen.listOfN(100, geomGen)) {
       (as, bs, cs) =>
         val owns = (rx: Double, ry: Double) => (rx + ry) % 2.0 < 1.0
-        def sweep(xs: List[CellGeom], ys: List[CellGeom]) =
+        def sweep(xs: List[Geom], ys: List[Geom]) =
           SpatialJoins.sweepOwned(xs.toArray, ys.toArray, owns).map(p => (p.a_id, p.b_id)).toVector.sorted
         val (i1, i2) = (SpatialJoins.strOwned(as.toArray, bs.toArray, owns),
                         SpatialJoins.strOwned(as.toArray, cs.toArray, owns))

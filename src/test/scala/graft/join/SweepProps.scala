@@ -1,5 +1,6 @@
 package graft.join
 
+import graft.geom.Geom
 import org.scalacheck.{Gen, Prop, Properties, Test}
 
 /** Direct property check of the hand-written plane-sweep inner loop against
@@ -11,16 +12,16 @@ object SweepProps extends Properties("sweep") {
   override def overrideParameters(p: Test.Parameters): Test.Parameters =
     p.withMinSuccessfulTests(300)
 
-  private val geomGen: Gen[CellGeom] = for {
+  private val geomGen: Gen[Geom] = for {
     x <- Gen.chooseNum(0.0, 50.0); y <- Gen.chooseNum(0.0, 50.0)
     w <- Gen.oneOf(Gen.const(0.0), Gen.chooseNum(0.0, 25.0))
     h <- Gen.oneOf(Gen.const(0.0), Gen.chooseNum(0.0, 25.0))
     id <- Gen.chooseNum(0L, 1000000L)
-  } yield CellGeom(0L, id, x, x + w, y, y + h)
+  } yield Geom(id, x, x + w, y, y + h)
 
-  private val sideGen: Gen[List[CellGeom]] = Gen.listOfN(40, geomGen)
+  private val sideGen: Gen[List[Geom]] = Gen.listOfN(40, geomGen)
 
-  private def intersects(a: CellGeom, b: CellGeom): Boolean =
+  private def intersects(a: Geom, b: Geom): Boolean =
     a.xmin <= b.xmax && a.xmax >= b.xmin && a.ymin <= b.ymax && a.ymax >= b.ymin
 
   property("emits exactly the intersecting pairs, each exactly once") =
