@@ -78,9 +78,13 @@ private[graft] object SchemeSampling {
   /** The default `maxSample`: rows the sample aims for. */
   val MaxSample = 100000
 
-  /** Each side's sampled rows and the fraction both were sampled at. */
-  def sample(a: Dataset[Geom], b: Dataset[Geom], maxSample: Int,
-             seed: Long): (Array[Geom], Array[Geom], Double) = {
+  /** Each side's sampled rows and the fraction both were sampled at.
+    * `rows`, when the caller knows it (else -1), is both inputs' exact row
+    * count: the fraction is then sized from it, and the sample is one
+    * collect of at most about `1.2·maxSample` rows.
+    */
+  def sample(a: Dataset[Geom], b: Dataset[Geom], maxSample: Int, seed: Long,
+             rows: Long = -1L): (Array[Geom], Array[Geom], Double) = {
     import a.sparkSession.implicits._
     def tagged(d: Dataset[Geom], side: Int) =
       d.select($"id", $"xmin", $"xmax", $"ymin", $"ymax", lit(side).as("side"))
@@ -96,30 +100,33 @@ private[graft] object SchemeSampling {
     // needs to be large, not exact: the fraction is a sampling heuristic and
     // the plan is a performance choice, never a correctness input
     // (reference-point ownership dedups identically under any boundaries or
-    // splits).
-    val est = math.max(1.0, graft.join.SpatialJoins.estRowsFromStats(a) +
-      graft.join.SpatialJoins.estRowsFromStats(b))
+    // splits). An exact `rows` replaces both the estimate and its confirm.
+    val exact = rows >= 0
+    val est = if (exact) rows.toDouble else math.max(1.0,
+      graft.join.SpatialJoins.estRowsFromStats(a) + graft.join.SpatialJoins.estRowsFromStats(b))
     val cap = 4 * maxSample + 1
     val large = est > 4.0 * maxSample
-    val all = if (large) None else Some(u.limit(cap).collect()).filter(_.length < cap)
+    val all = if (large || exact) None else Some(u.limit(cap).collect()).filter(_.length < cap)
     // a SATURATED bounded read means the stats estimate lied small and the
     // true size is unknown — sizing the fraction from the cap would
     // oversample and re-introduce the first-partitions head() bias (the
     // exact failure mode this sampler exists to avoid). Only in that
     // contradiction case pay one exact count.
-    val n = all.fold(if (large) est else u.count().toDouble)(_.length.toDouble)
+    val n = all.fold(if (large || exact) est else u.count().toDouble)(_.length.toDouble)
     val fraction = math.min(1.0, 1.2 * maxSample / math.max(1.0, n))
-    val rows = all match {
+    val picked = all match {
       case Some(rs) =>
         val rnd = new scala.util.Random(seed)
         if (fraction >= 1.0) rs else rs.filter(_ => rnd.nextDouble() < fraction)
+      // an exact count bounds the collect
+      case None if exact => (if (fraction >= 1.0) u else u.sample(fraction, seed)).collect()
       // head() keeps 4× headroom over the expected sample so a stats
       // UNDER-estimate (compressed column-pruned scans) must be off by >3× of
       // the 1.2× margin before the first-partitions bias can appear; a bigger
       // sample than maxSample only sharpens the plan.
       case None => u.sample(fraction, seed).head(4 * maxSample)
     }
-    def side(s: Int) = rows.collect { case (id, x0, x1, y0, y1, `s`) => Geom(id, x0, x1, y0, y1) }
+    def side(s: Int) = picked.collect { case (id, x0, x1, y0, y1, `s`) => Geom(id, x0, x1, y0, y1) }
     (side(0), side(1), fraction)
   }
 }

@@ -1,7 +1,7 @@
 package graft.join
 
 import graft.cells.{CellMapping, CellOf, CellScheme, CellsOf}
-import graft.functions.{Mbr, STContains, STWithin}
+import graft.functions.Mbr
 import graft.geom.{Extent, Geom, SqlOrder}
 import graft.geom.SqlOrder.le
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
@@ -37,27 +37,30 @@ private[graft] final case class KeyedGeom(key: Long, side: Int, id: Long,
   *    other edge and smuggle its side into the point plan, which would treat
   *    it as its (xmin, ymin) corner and emit pairs the generic plan never
   *    would.
-  *  - `meanW` / `meanH`: mean signed edge per axis over both sides (0 when
-  *    both are empty).
+  *  - `aMeanW` / `aMeanH`, `bMeanW` / `bMeanH`: the side's mean signed edge
+  *    per axis (0 for an empty side).
   *  - `occupiedA` / `occupiedB`: the side's occupied cells ([[Occupancy]]:
   *    size and fill of its bitmap F), when the pass was asked to rasterize
   *    that side and every row of it is finite.
   */
 final case class JoinEvidence(extent: Option[Extent], countA: Long, countB: Long,
                               aMaxEdge: Double, bMaxEdge: Double,
-                              meanW: Double, meanH: Double,
+                              aMeanW: Double, aMeanH: Double,
+                              bMeanW: Double, bMeanH: Double,
                               occupiedA: Option[Occupancy] = None,
                               occupiedB: Option[Occupancy] = None) {
   def aPoints: Boolean = aMaxEdge == 0.0
   def bPoints: Boolean = bMaxEdge == 0.0
+
   /** Rows of the larger side per cell of `s`, each counted in the cells it
-    * is expected to overlap: `1 + mean edge / cell edge` per axis, the
-    * replication [[SpatialJoins.chooseStripeAxis]] also reads. A cell's
-    * nested loop runs over its replicas, not only the rows it owns.
+    * is expected to overlap: `1 + its side's mean edge / cell edge` per
+    * axis (NaN or negative mean edges count once). A cell's nested loop
+    * runs over its replicas, not only the rows it owns.
     */
   def rowsPerCell(s: CellScheme): Double = {
     def replicas(edge: Double, cell: Double) = { val r = edge / cell; if (r > 0) 1 + r else 1.0 }
-    math.max(countA, countB) * replicas(meanW, s.cellW) * replicas(meanH, s.cellH) / s.numCells
+    val (n, w, h) = if (countA >= countB) (countA, aMeanW, aMeanH) else (countB, bMeanW, bMeanH)
+    n * replicas(w, s.cellW) * replicas(h, s.cellH) / s.numCells
   }
 }
 
@@ -131,9 +134,13 @@ private[graft] final case class Side(df: DataFrame, xmin: Column, xmax: Column,
   def coords: Seq[Column] =
     if (points) Seq(xmin, xmin, ymin, ymin) else Seq(xmin, xmax, ymin, ymax)
 
+  private def box: Seq[Expression] = Seq(xmin, xmax, ymin, ymax).map(Bridge.expression)
+
   /** This side with its MBR grown by `r` on every edge ([[Mbr.grown]]). */
-  def expanded(r: Double): Side =
-    boxed(Mbr.grown(Seq(xmin, xmax, ymin, ymax).map(Bridge.expression), Literal(r)))
+  def expanded(r: Double): Side = boxed(Mbr.grown(box, Literal(r)))
+
+  /** This side with each axis's ends in order ([[Mbr.ordered]]). */
+  def ordered: Side = boxed(Mbr.ordered(box))
 
   /** This side with the MBR `box`, four expressions over `df`. */
   def boxed(box: Seq[Expression]): Side = {
@@ -219,15 +226,6 @@ object SpatialJoins {
   /** The [[Mbr]] predicates over the columns `a_xmin` … `b_ymax`. */
   val intersectPred: Column = Mbr.column(Mbr.intersects)(Side.box("a"), Side.box("b"))
 
-  /** st_within and st_contains over the columns `a_xmin` … `b_ymax`, whose
-    * bodies are [[withinPred]] and [[containsPred]]: [[gridJoinPred]] knows
-    * these two predicates by their body, and keys their candidate boxes.
-    */
-  private val (within, contains) = {
-    val ab = (Side.box("a") ++ Side.box("b")).map(Bridge.expression)
-    (STWithin(ab), STContains(ab))
-  }
-
   /** Predicate variants over MBRs (the reference's SpatialSpark surface,
     * `SpatialJoinApp.scala:128-136`): `within` = a inside b (inclusive),
     * `contains` = b inside a, `overlaps` = intersect but neither contains
@@ -235,9 +233,9 @@ object SpatialJoins {
     * so they run as a post-join filter on the same cell-partitioned plan
     * with unchanged dedup.
     */
-  val withinPred: Column = Bridge.column(within.body)
+  val withinPred: Column = Mbr.column(Mbr.within)(Side.box("a"), Side.box("b"))
 
-  val containsPred: Column = Bridge.column(contains.body)
+  val containsPred: Column = Mbr.column(Mbr.within)(Side.box("b"), Side.box("a"))
 
   val overlapsPred: Column = intersectPred && !withinPred && !containsPred
 
@@ -324,12 +322,12 @@ object SpatialJoins {
     val (pa, pb, all) = (merged(_.side == 0), merged(_.side == 1), merged(_ => true))
     def occupied(side: Int, asked: Boolean) =
       if (asked) Occupancy.merge(ps.filter(_.side == side).map(_.raster).toSeq) else None
+    def mean(sum: Double, n: Long) = if (n == 0) 0.0 else sum / n
     JoinEvidence(
       if (all.seen.take(4).contains(false)) None
       else Some(Extent(all.ext(0), all.ext(1), all.ext(2), all.ext(3))),
       pa.rows, pb.rows, pa.maxEdge, pb.maxEdge,
-      if (all.nW == 0) 0.0 else all.sumW / all.nW,
-      if (all.nH == 0) 0.0 else all.sumH / all.nH,
+      mean(pa.sumW, pa.nW), mean(pa.sumH, pa.nH), mean(pb.sumW, pb.nW), mean(pb.sumH, pb.nH),
       occupied(0, rasterA), occupied(1, rasterB))
   }
 
@@ -372,18 +370,17 @@ object SpatialJoins {
   /** The ONE planner of every cell-partitioned entry point that picks its
     * own route: [[intersectJoin]] and SQL's st_* joins
     * ([[graft.plans.SpatialJoinRule]]) past the broadcast check, both
-    * stripes joins and [[gridJoinAdaptive]] when it plans no split. The ONE
-    * evidence job, which also maps the occupied cells of the side stats
-    * estimate smaller ([[evidenceWithOccupancy]]) → the caller's cell
-    * scheme, a function of that evidence (by default [[SizedGrid]]) →
-    * [[route]] → the other side drops its rows that touch none
-    * ([[dropUnoccupied]]) → the route's plan ([[planSides]]). The pair set
-    * is that of every route. One INFO line logs the route, the counts and
-    * the occupancy.
+    * stripes joins and [[gridJoinAdaptive]] when it plans no split. `ev`,
+    * the ONE evidence job over `a` and `b`, which also maps the occupied
+    * cells of the side stats estimate smaller ([[evidenceWithOccupancy]]) → the
+    * caller's cell scheme, a function of that evidence (by default
+    * [[SizedGrid]]) → [[route]] → the other side drops its rows that touch
+    * none ([[dropUnoccupied]]) → the route's plan ([[planSides]]). The pair
+    * set is that of every route. One INFO line logs the route, the counts
+    * and the occupancy.
     */
-  private[graft] def planJoin(a: Side, b: Side, ids: Option[(Column, Column)],
+  private[graft] def planJoin(a: Side, b: Side, ev: JoinEvidence, ids: Option[(Column, Column)],
                               scheme: JoinEvidence => CellScheme = SizedGrid): Option[DataFrame] = {
-    val ev = evidenceWithOccupancy(a, b)
     val s = scheme(ev)
     val r = route(ev, s)
     if (log.isInfoEnabled) {
@@ -399,12 +396,16 @@ object SpatialJoins {
   }
 
   /** The pairs `(a_id, b_id)` of [[planJoin]] over `a` and `b` under
-    * `scheme`; `broadcastNL` for the broadcast route.
+    * `scheme`; `broadcastNL` for the broadcast route. `ev` is the one
+    * evidence job over them, when the caller has already run it.
     */
   private def planPairs(a: Dataset[Geom], b: Dataset[Geom],
-                        scheme: JoinEvidence => CellScheme): DataFrame =
-    planJoin(Side.of(a, "a"), Side.of(b, "b"), GeomIds, scheme)
+                        scheme: JoinEvidence => CellScheme,
+                        ev: Option[JoinEvidence] = None): DataFrame = {
+    val (sa, sb) = (Side.of(a, "a"), Side.of(b, "b"))
+    planJoin(sa, sb, ev.getOrElse(evidenceWithOccupancy(sa, sb)), GeomIds, scheme)
       .fold(broadcastNL(a, b))(_.select(col("a_id"), col("b_id")))
+  }
 
   /** Single entry point with automatic physical-strategy choice (the
     * reference's join-direction / index-side heuristics, SURVEY §4): tiny
@@ -535,20 +536,15 @@ object SpatialJoins {
 
   /** [[gridJoin]] restricted by an additional predicate variant (within /
     * contains / overlaps), a refinement filter on top of the cell join.
-    * The candidate phase keys the variant's candidate boxes, as SQL's
-    * st_within / st_contains do ([[STPredicate.candidates]]): the ordered
-    * box of the inner side for [[withinPred]] and [[containsPred]], so an
-    * inverted or NaN-min row still meets the box it lies within; the raw
-    * boxes of the intersect join for any other predicate.
+    * The candidate phase keys both sides' ordered boxes ([[Mbr.ordered]]):
+    * in SQL order an ordered box contains the raw one, so its candidates
+    * cover every intersecting pair, and every pair one of whose rows lies
+    * within the other, inverted or NaN-min rows included.
     */
   def gridJoinPred(a: Dataset[Geom], b: Dataset[Geom], s: CellScheme,
-                   pred: Column): DataFrame = {
-    val (sa, sb) = (Side.of(a, "a"), Side.of(b, "b"))
-    val (ca, cb) = Seq(within, contains).find(_.body == Bridge.expression(pred))
-      .fold((sa, sb)) { st => val (x, y) = st.candidates; (sa.boxed(x), sb.boxed(y)) }
-    cellJoin(ca, cb, s).filter(pred)
+                   pred: Column): DataFrame =
+    cellJoin(Side.of(a, "a").ordered, Side.of(b, "b").ordered, s).filter(pred)
       .select(col("a_id"), col("b_id"))
-  }
 
   /** Salted grid join for degenerate hot cells (e.g. many identical points):
     * the a-side of every cell is hashed into `salt` buckets; the b-side is
@@ -771,13 +767,14 @@ object SpatialJoins {
   /** Stripe-direction choice (the reference records `best_join_direction` per
     * workload and picks the better of partition-dim0 vs the transpose,
     * `cpp/1d_multithread.cpp:168-174`): the axis with the smaller expected
-    * replication factor, `1 + mean edge / stripe width`, read off the
-    * evidence.
+    * replication of both sides' rows, `1 + mean edge / stripe width` each,
+    * read off the evidence.
     */
   def chooseStripeAxis(ev: JoinEvidence, extent: Extent, n: Int): Char = {
-    val repX = ev.meanW / math.max(extent.width / n, 1e-12)
-    val repY = ev.meanH / math.max(extent.height / n, 1e-12)
-    if (repX <= repY) 'x' else 'y'
+    def extra(a: Double, b: Double, len: Double) =
+      (ev.countA * a + ev.countB * b) / math.max(len / n, 1e-12)
+    if (extra(ev.aMeanW, ev.bMeanW, extent.width) <= extra(ev.aMeanH, ev.bMeanH, extent.height)) 'x'
+    else 'y'
   }
 
   /** [[stripesJoin]] with the axis chosen by [[chooseStripeAxis]]; the one
@@ -820,15 +817,18 @@ object SpatialJoins {
     binarySplitJoin(a, b, graft.cells.BinarySplitScheme.build(a, b, extent, depth))
 
   /** PBSM with adaptive hot-cell refinement (reference J6's quadtree budget
-    * rule, see [[graft.skew.AdaptiveCells]]): plan splits from per-cell
-    * counts of one bounded sample, then one keyed reduce on the packed
-    * two-level key. With no hot cell the two-level key is the plain grid,
-    * so the join is [[planJoin]] over `base`.
+    * rule, see [[graft.skew.AdaptiveCells]]): the one evidence job, then
+    * splits planned from per-cell counts of one bounded sample sized by the
+    * evidence's exact row counts, then one keyed reduce on the packed
+    * two-level key.
+    * With no hot cell the two-level key is the plain grid, so the join is
+    * [[planJoin]] over `base` and the same evidence.
     */
   def gridJoinAdaptive(a: Dataset[Geom], b: Dataset[Geom], base: CellScheme,
                        budgetPairs: Long = 4L * 1024 * 1024): DataFrame = {
-    val scheme = graft.skew.AdaptiveCells.plan(a, b, base, budgetPairs)
-    if (scheme.splits.isEmpty) planPairs(a, b, _ => base)
+    val ev = evidenceWithOccupancy(Side.of(a, "a"), Side.of(b, "b"))
+    val scheme = graft.skew.AdaptiveCells.plan(a, b, base, budgetPairs, ev.countA + ev.countB)
+    if (scheme.splits.isEmpty) planPairs(a, b, _ => base, Some(ev))
     else keyedPartitionJoin(a, b, scheme)
   }
 

@@ -55,7 +55,8 @@ object SpatialJoinRule extends Rule[LogicalPlan] with PredicateHelper {
         // output. Dense cells therefore take the declarative body, not the
         // keyed reduce (which carries only ids); at 16 rows per cell and at
         // most 8192² cells the sweep route needs more than ~1.7·10¹⁰ rows.
-        SpatialJoins.planJoin(ls, rs, ids = None).map { df =>
+        val ev = SpatialJoins.evidenceWithOccupancy(ls, rs)
+        SpatialJoins.planJoin(ls, rs, ev, ids = None).map { df =>
           Project(j.output, Filter((st.body +: conjuncts.filterNot(_ eq st)).reduce(And),
             df.queryExecution.optimizedPlan))
         }

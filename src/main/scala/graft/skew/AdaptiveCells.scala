@@ -106,8 +106,15 @@ object AdaptiveCells {
     * on the estimate (reference-point ownership is local arithmetic).
     */
   def plan(a: Dataset[Geom], b: Dataset[Geom], base: CellScheme,
-           budgetPairs: Long = 4L * 1024 * 1024): AdaptiveScheme = {
-    val (sa, sb, fraction) = SchemeSampling.sample(a, b, SchemeSampling.MaxSample, Seed)
+           budgetPairs: Long = 4L * 1024 * 1024): AdaptiveScheme =
+    plan(a, b, base, budgetPairs, rows = -1L)
+
+  /** [[plan]] given both inputs' exact row count `rows` (-1: unknown), which
+    * sizes the sample with no estimate.
+    */
+  private[graft] def plan(a: Dataset[Geom], b: Dataset[Geom], base: CellScheme,
+                          budgetPairs: Long, rows: Long): AdaptiveScheme = {
+    val (sa, sb, fraction) = SchemeSampling.sample(a, b, SchemeSampling.MaxSample, Seed, rows)
     splitsOf(base, sa, sb, 1.0 / fraction,
       math.max(1, a.sparkSession.sparkContext.defaultParallelism), budgetPairs)
   }

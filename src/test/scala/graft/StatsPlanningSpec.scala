@@ -227,12 +227,12 @@ class StatsPlanningSpec extends AnyFunSuite {
     val jobs = jobsDuring {
       planned = SpatialJoins.gridJoinAdaptive(a, b, CellScheme(ext, 8, 8), budgetPairs = 1000)
     }
-    // a large estimate skips the bounded confirm, so the sample is its
-    // head(): three partition probes (1, 4, then the last 3 of the union's
-    // 8 partitions), then the split rule on the driver. The sparse sample
-    // plans no splits, so the base grid's route comes from the one evidence
-    // job, as every planned route's does. Nothing is persisted.
-    assert(jobs == 4, s"adaptive planning ran $jobs job(s)")
+    // the one evidence job first: its exact counts size the sample, which
+    // is then one collect (no estimate, no bounded confirm, no head()
+    // probes), and the split rule runs on the driver. The sparse sample
+    // plans no splits, so the base grid's route comes from the same
+    // evidence, as every planned route's does. Nothing is persisted.
+    assert(jobs == 2, s"adaptive planning ran $jobs job(s)")
     assert(spark.sparkContext.getPersistentRDDs.keySet == persisted)
     val want = SpatialJoins.broadcastNL(a, b)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet

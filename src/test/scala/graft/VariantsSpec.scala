@@ -39,9 +39,10 @@ class VariantsSpec extends AnyFunSuite {
     assert(within.nonEmpty && contains.nonEmpty)
   }
 
-  /** `gridJoinPred` with within, and with contains on the sides swapped,
-    * gives the broadcast nested loop's pairs on the rows `inner` within
-    * `outer`, among random rows.
+  /** `gridJoinPred` with within (also inside a compound predicate), with
+    * contains on the sides swapped, and with overlaps gives the broadcast
+    * nested loop's pairs on the rows `inner` within `outer`, among random
+    * rows.
     */
   private def withinMatchesOracle(inner: Geom, outer: Geom): Unit = {
     val a = spark.createDataset(randomSet(23, 200, 8.0).collect() :+ inner).repartition(3)
@@ -55,6 +56,10 @@ class VariantsSpec extends AnyFunSuite {
     assert(oracle(b, a, SpatialJoins.containsPred) == within.map(_.swap))
     assert(pairs(SpatialJoins.gridJoinPred(b, a, s, SpatialJoins.containsPred)) ==
       within.map(_.swap))
+    assert(pairs(SpatialJoins.gridJoinPred(a, b, s, SpatialJoins.withinPred && lit(true))) ==
+      within)
+    assert(pairs(SpatialJoins.gridJoinPred(a, b, s, SpatialJoins.overlapsPred)) ==
+      oracle(a, b, SpatialJoins.overlapsPred))
   }
 
   test("within / contains: an inverted row within a box it does not meet as it stands") {

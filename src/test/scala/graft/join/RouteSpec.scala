@@ -17,7 +17,7 @@ class RouteSpec extends AnyFunSuite {
   /** Evidence with mean edges of 0, so a row is one replica. */
   private def ev(countA: Long, countB: Long, aEdge: Double = 2.0,
                  bEdge: Double = 2.0): JoinEvidence =
-    JoinEvidence(Some(ext), countA, countB, aEdge, bEdge, meanW = 0.0, meanH = 0.0)
+    JoinEvidence(Some(ext), countA, countB, aEdge, bEdge, 0.0, 0.0, 0.0, 0.0)
 
   /** A side's max edge, through the aggregation's own edge expression. */
   private def maxEdge(rows: Seq[Geom]): Double = rows.map { g =>
@@ -34,11 +34,21 @@ class RouteSpec extends AnyFunSuite {
 
   test("rows count in every cell they are expected to overlap") {
     // mean edges of 2 on 10-wide cells: 1.2 replicas per axis, 1.44 per row
-    def wide(countA: Long) = ev(countA, 10).copy(meanW = 2.0, meanH = 2.0)
+    def wide(countA: Long) = ev(countA, 10).copy(aMeanW = 2.0, aMeanH = 2.0)
     assert(route(wide(17700), s) == Route.Grid)   // 254.9 replicas per cell
     assert(route(wide(17800), s) == Route.Sweep(aPoints = false, bPoints = false)) // 256.3
     // NaN or negative (inverted) mean edges count a row once
-    assert(route(ev(25600, 10).copy(meanW = Double.NaN, meanH = -3.0), s) == Route.Grid)
+    assert(route(ev(25600, 10).copy(aMeanW = Double.NaN, aMeanH = -3.0), s) == Route.Grid)
+  }
+
+  test("the larger side's rows replicate by its own mean edges, not the other side's") {
+    // points (a, the larger side) under wide boxes (b): a point is one replica
+    val pts = ev(25600, 1000, aEdge = 0.0).copy(bMeanW = 50.0, bMeanH = 50.0)
+    assert(route(pts, s) == Route.PointsA)
+    assert(route(pts.copy(countA = 25700), s) == Route.Sweep(aPoints = true, bPoints = false))
+    // the same boxes on the larger side do replicate: 25,600 rows × 36 replicas
+    assert(route(pts.copy(countA = 1000, countB = 25600), s) ==
+      Route.Sweep(aPoints = true, bPoints = false))
   }
 
   test("a point side on a or on b takes the point plan") {
@@ -68,12 +78,13 @@ class RouteSpec extends AnyFunSuite {
   }
 
   test("no extent (both inputs empty) falls back to broadcastNL") {
-    val empty = JoinEvidence(None, 0, 0, Double.NaN, Double.NaN, 0.0, 0.0)
+    val empty = JoinEvidence(None, 0, 0, Double.NaN, Double.NaN, 0.0, 0.0, 0.0, 0.0)
     assert(route(empty, s) == Route.Broadcast)
   }
 
   test("stripe axis: the smaller expected replication wins, ties go to x") {
-    def withMeans(w: Double, h: Double) = ev(10, 10).copy(meanW = w, meanH = h)
+    def withMeans(w: Double, h: Double) =
+      ev(10, 10).copy(aMeanW = w, aMeanH = h, bMeanW = w, bMeanH = h)
     assert(chooseStripeAxis(withMeans(1.0, 5.0), ext, 10) == 'x')
     assert(chooseStripeAxis(withMeans(5.0, 1.0), ext, 10) == 'y')
     assert(chooseStripeAxis(withMeans(2.0, 2.0), ext, 10) == 'x')
