@@ -57,17 +57,18 @@ final case class BinarySplitScheme(extent: Extent, depth: Int,
 object BinarySplitScheme {
   private val Seed = 19L
 
-  /** Build from a bounded sample of both inputs' centers: at each node split
-    * the current point set at the median of its wider spread axis.
+  /** Build from the one bounded uniform sample of both inputs' centers
+    * (`SchemeSampling.sample`: a Bernoulli draw from the stats estimate,
+    * checked by its own size): at each node split the current point set at
+    * the median of its wider spread axis.
     */
-  def build(a: Dataset[Geom], b: Dataset[Geom], extent: Extent, depth: Int,
-            maxSample: Int = SchemeSampling.MaxSample): BinarySplitScheme = {
-    val (sa, sb, _) = SchemeSampling.sample(a, b, maxSample, Seed)
+  def build(a: Dataset[Geom], b: Dataset[Geom], extent: Extent, depth: Int): BinarySplitScheme = {
+    val (sa, sb, _) = SchemeSampling.sample(a, b, Seed)
     val nNodes = (1 << depth) - 1
     val axisX = new Array[Boolean](nNodes)
     val at = new Array[Double](nNodes)
     def median(vs: Array[Double]): Double = {
-      val s = vs.sorted; s(s.length / 2)
+      java.util.Arrays.sort(vs); vs(vs.length / 2) // unboxed, in Double.compare's order like `sorted`
     }
     def fill(node: Int, level: Int, ps: Array[Geom],
              ext: Extent): Unit = if (level < depth) {

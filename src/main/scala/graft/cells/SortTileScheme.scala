@@ -1,6 +1,7 @@
 package graft.cells
 
 import graft.geom.{Extent, Geom, SqlOrder}
+import graft.join.SpatialJoins
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions.lit
 
@@ -68,63 +69,52 @@ final case class SortTileScheme(extent: Extent, xBounds: Array[Double],
 }
 
 /** The shared bounded-uniform sample of both inputs, for every planner that
-  * plans from a sample (STP, BSP, [[graft.skew.AdaptiveCells]]): the
-  * fraction is sized from a count so the expected sample fits `maxSample` —
-  * `sample(f).head(max)` would keep the FIRST partitions' rows and bias the
-  * plan spatially on range-partitioned/clustered inputs (exactly the skew
-  * these planners exist to absorb).
+  * plans from a sample (STP, BSP, [[graft.skew.AdaptiveCells]]): ONE
+  * Bernoulli draw at `f = min(1, 1.2·MaxSample / n)`, sized from a row
+  * count `n` so the expected sample fits `MaxSample`. A plain
+  * `head(max)` of the inputs would keep the FIRST partitions' rows and
+  * bias the plan spatially on range-partitioned/clustered inputs (exactly
+  * the skew these planners exist to absorb); a Bernoulli draw keeps every
+  * row with the same probability wherever it sits.
   */
 private[graft] object SchemeSampling {
-  /** The default `maxSample`: rows the sample aims for. */
+  /** Rows the sample aims for. */
   val MaxSample = 100000
 
   /** Each side's sampled rows and the fraction both were sampled at.
     * `rows`, when the caller knows it (else -1), is both inputs' exact row
-    * count: the fraction is then sized from it, and the sample is one
-    * collect of at most about `1.2·maxSample` rows.
+    * count: the draw is then one collect, bounded by it to about
+    * `1.2·MaxSample` rows.
+    *
+    * Otherwise `n` is the Catalyst-stats estimate (zero jobs) and the draw
+    * is one `head(4·MaxSample)`, which checks the estimate itself. `head`
+    * scans partitions in order until it holds the cap, so a draw that
+    * returns FEWER rows than the cap has read every partition: it is the
+    * complete Bernoulli sample, unbiased, and is the result. A draw that
+    * fills the cap (the estimate was at least ~3× too small), or at `f < 1`
+    * returns under a quarter of the expected `f·n` rows (the estimate was
+    * ~4× too large, e.g. a filter the stats do not see through), contradicts
+    * the estimate: one `count()` replaces it and the exact-count collect
+    * follows. The fraction is a sampling heuristic and the plan a
+    * performance choice, never a correctness input (reference-point
+    * ownership dedups identically under any boundaries or splits).
     */
-  def sample(a: Dataset[Geom], b: Dataset[Geom], maxSample: Int, seed: Long,
+  def sample(a: Dataset[Geom], b: Dataset[Geom], seed: Long,
              rows: Long = -1L): (Array[Geom], Array[Geom], Double) = {
     import a.sparkSession.implicits._
     def tagged(d: Dataset[Geom], side: Int) =
       d.select($"id", $"xmin", $"xmax", $"ymin", $"ymax", lit(side).as("side"))
     val u = tagged(a, 0).unionByName(tagged(b, 1))
       .as[(Long, Double, Double, Double, Double, Int)]
-    // Row count from Catalyst plan statistics — ZERO jobs (the r4 version ran
-    // a full `u.count()` before sampling: a complete read of both inputs at
-    // 100× scale just to size a boundary sample). A small estimate is
-    // CONFIRMED by a bounded read (`limit(4·maxSample+1)` reads at most that
-    // many rows however large the input — the intersectJoin pattern); when
-    // it does not saturate, that read IS both inputs, so it is subsampled
-    // here on the driver and nothing is read twice. A large estimate only
-    // needs to be large, not exact: the fraction is a sampling heuristic and
-    // the plan is a performance choice, never a correctness input
-    // (reference-point ownership dedups identically under any boundaries or
-    // splits). An exact `rows` replaces both the estimate and its confirm.
-    val exact = rows >= 0
-    val est = if (exact) rows.toDouble else math.max(1.0,
-      graft.join.SpatialJoins.estRowsFromStats(a) + graft.join.SpatialJoins.estRowsFromStats(b))
-    val cap = 4 * maxSample + 1
-    val large = est > 4.0 * maxSample
-    val all = if (large || exact) None else Some(u.limit(cap).collect()).filter(_.length < cap)
-    // a SATURATED bounded read means the stats estimate lied small and the
-    // true size is unknown — sizing the fraction from the cap would
-    // oversample and re-introduce the first-partitions head() bias (the
-    // exact failure mode this sampler exists to avoid). Only in that
-    // contradiction case pay one exact count.
-    val n = all.fold(if (large || exact) est else u.count().toDouble)(_.length.toDouble)
-    val fraction = math.min(1.0, 1.2 * maxSample / math.max(1.0, n))
-    val picked = all match {
-      case Some(rs) =>
-        val rnd = new scala.util.Random(seed)
-        if (fraction >= 1.0) rs else rs.filter(_ => rnd.nextDouble() < fraction)
-      // an exact count bounds the collect
-      case None if exact => (if (fraction >= 1.0) u else u.sample(fraction, seed)).collect()
-      // head() keeps 4× headroom over the expected sample so a stats
-      // UNDER-estimate (compressed column-pruned scans) must be off by >3× of
-      // the 1.2× margin before the first-partitions bias can appear; a bigger
-      // sample than maxSample only sharpens the plan.
-      case None => u.sample(fraction, seed).head(4 * maxSample)
+    def fractionOf(n: Double) = math.min(1.0, 1.2 * MaxSample / math.max(1.0, n))
+    def draw(f: Double) = if (f >= 1.0) u else u.sample(f, seed)
+    def exact(n: Long) = { val f = fractionOf(n.toDouble); (draw(f).collect(), f) }
+    val (picked, fraction) = if (rows >= 0) exact(rows) else {
+      val est = SpatialJoins.estRowsFromStats(a) + SpatialJoins.estRowsFromStats(b)
+      val f = fractionOf(est)
+      val got = draw(f).head(4 * MaxSample)
+      if (got.length == 4 * MaxSample || (f < 1.0 && got.length < f * est / 4)) exact(u.count())
+      else (got, f)
     }
     def side(s: Int) = picked.collect { case (id, x0, x1, y0, y1, `s`) => Geom(id, x0, x1, y0, y1) }
     (side(0), side(1), fraction)
@@ -134,33 +124,33 @@ private[graft] object SchemeSampling {
 object SortTileScheme {
   private val Seed = 17L
 
-  /** Build boundaries from a bounded uniform sample of both inputs: sort the
-    * sampled x centers, cut into sx equal-count slabs; within each slab sort
-    * the y centers and cut into sy tiles (`SortTilePartition`'s shape). The
-    * sample is collected — it is bounded (`maxSample`) and the scheme must be
-    * a broadcastable value anyway.
+  /** Build boundaries from the one bounded uniform sample of both inputs
+    * (`SchemeSampling.sample`: a Bernoulli draw from the stats estimate,
+    * checked by its own size): sort the sampled x centers, cut into sx
+    * equal-count slabs; within each slab sort the y centers and cut into sy
+    * tiles (`SortTilePartition`'s shape). The sample is collected — it is
+    * bounded (at most `4·SchemeSampling.MaxSample` rows) and the scheme must
+    * be a broadcastable value anyway.
     */
-  def build(a: Dataset[Geom], b: Dataset[Geom], extent: Extent, sx: Int, sy: Int,
-            maxSample: Int = SchemeSampling.MaxSample): SortTileScheme = {
-    val (sa, sb, _) = SchemeSampling.sample(a, b, maxSample, Seed)
+  def build(a: Dataset[Geom], b: Dataset[Geom], extent: Extent, sx: Int, sy: Int): SortTileScheme = {
+    val (sa, sb, _) = SchemeSampling.sample(a, b, Seed)
     val pts = sa ++ sb
     if (pts.isEmpty)
       return SortTileScheme(extent, Array.tabulate(sx - 1)(i =>
           extent.xmin + (i + 1) * extent.width / sx),
         Array.fill(sx)(Array.tabulate(sy - 1)(j => extent.ymin + (j + 1) * extent.height / sy)))
-    val xs = pts.map(_.centerX).sorted
-    def cuts(sorted: Array[Double], n: Int): Array[Double] =
-      Array.tabulate(n - 1) { i =>
-        sorted(math.min(sorted.length - 1, ((i + 1).toLong * sorted.length / n).toInt))
-      }
-    val xb = cuts(xs, sx)
+    def cuts(vs: Array[Double], n: Int): Array[Double] = {
+      java.util.Arrays.sort(vs) // unboxed, in Double.compare's order like `sorted`
+      Array.tabulate(n - 1)(i => vs(math.min(vs.length - 1, ((i + 1).toLong * vs.length / n).toInt)))
+    }
+    val xb = cuts(pts.map(_.centerX), sx)
     // per-slab y cuts from the same sample
     val bySlab = Array.fill(sx)(scala.collection.mutable.ArrayBuffer.empty[Double])
     val probe = SortTileScheme(extent, xb, Array.fill(sx)(Array.empty[Double]))
     pts.foreach(g => bySlab(probe.slabOf(g.centerX)) += g.centerY)
     val yb = bySlab.map { ys =>
       if (ys.isEmpty) Array.tabulate(sy - 1)(j => extent.ymin + (j + 1) * extent.height / sy)
-      else cuts(ys.toArray.sorted, sy)
+      else cuts(ys.toArray, sy)
     }
     SortTileScheme(extent, xb, yb)
   }

@@ -99,22 +99,25 @@ object AdaptiveCells {
   private val Seed = 42L
 
   /** Plan splits from the one bounded sample of both inputs that the STP
-    * and BSP planners also take (`SchemeSampling.sample`): inputs of up to
+    * and BSP planners also take (`SchemeSampling.sample`): one Bernoulli
+    * draw sized from the stats estimate, whose own size confirms it (an
+    * unfilled `head` has read every partition, so it is the whole unbiased
+    * sample) or replaces it by one exact count. Inputs of up to
     * 1.2·`SchemeSampling.MaxSample` rows are read whole, so their counts are
-    * exact; larger ones are Bernoulli-sampled and scaled back up. Splits are
-    * a performance heuristic only; exactly-once correctness never depends
-    * on the estimate (reference-point ownership is local arithmetic).
+    * exact; larger ones are sampled and scaled back up. Splits are a
+    * performance heuristic only; exactly-once correctness never depends on
+    * the estimate (reference-point ownership is local arithmetic).
     */
   def plan(a: Dataset[Geom], b: Dataset[Geom], base: CellScheme,
            budgetPairs: Long = 4L * 1024 * 1024): AdaptiveScheme =
     plan(a, b, base, budgetPairs, rows = -1L)
 
   /** [[plan]] given both inputs' exact row count `rows` (-1: unknown), which
-    * sizes the sample with no estimate.
+    * sizes the sample with no estimate: the draw is one bounded collect.
     */
   private[graft] def plan(a: Dataset[Geom], b: Dataset[Geom], base: CellScheme,
                           budgetPairs: Long, rows: Long): AdaptiveScheme = {
-    val (sa, sb, fraction) = SchemeSampling.sample(a, b, SchemeSampling.MaxSample, Seed, rows)
+    val (sa, sb, fraction) = SchemeSampling.sample(a, b, Seed, rows)
     splitsOf(base, sa, sb, 1.0 / fraction,
       math.max(1, a.sparkSession.sparkContext.defaultParallelism), budgetPairs)
   }

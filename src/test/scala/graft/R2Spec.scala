@@ -254,6 +254,24 @@ class R2OpsSpec extends AnyFunSuite {
     }
   }
 
+  test("sortTileJoin and binarySplitJoin == gridJoin pair set from a strict subsample") {
+    // 160k rows in all, above 1.2·MaxSample: the schemes are planned from a
+    // Bernoulli draw at fraction < 1, not from every row
+    val ext = graft.geom.Extent(0, 10000, 0, 10000)
+    def gen(seed: Long) = graft.ingest.Workloads.gaussianPolygons(spark, 80000L, seed).cache()
+    val a = gen(71L); val b = gen(72L)
+    try {
+      a.count(); b.count()
+      assert(graft.cells.SchemeSampling.sample(a, b, seed = 17L)._3 < 1.0)
+      def pairs(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      val grid = pairs(SpatialJoins.gridJoin(a, b, graft.cells.CellScheme(ext, 64, 64)))
+      assert(grid.nonEmpty)
+      assert(pairs(SpatialJoins.sortTileJoin(a, b, ext, 8, 8)) == grid)
+      assert(pairs(SpatialJoins.binarySplitJoin(a, b, ext, 6)) == grid)
+    } finally { a.unpersist(); b.unpersist() }
+  }
+
   test("stripesJoinAuto matches stripesX output and picks a direction") {
     import spark.implicits._
     val ext = graft.geom.Extent(0, 100, 0, 100)

@@ -10,10 +10,14 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Strategy choice must not pay data passes (r2 verdict: `intersectJoin`
   * eagerly ran `a.count(); b.count()` — two full input scans before any join
-  * work). The broadcast decision now reads Catalyst plan statistics (ZERO
-  * Spark jobs); only the grid path runs ONE evidence job that computes the
-  * joint extent (needed to size the grid anyway) together with both row
-  * counts. This spec counts actual jobs via a SparkListener.
+  * work). The broadcast decision reads Catalyst plan statistics (ZERO Spark
+  * jobs); every cell-partitioned entry point that plans a route
+  * (`intersectJoin`, SQL `st_*` joins, `stripesJoin`, `stripesJoinAuto`,
+  * `gridJoinSweep`, `gridJoinAdaptive`) runs ONE evidence job for the joint
+  * extent, both row counts and the edges. The STP and BSP planners run no
+  * evidence job: they take the one bounded sample (`SchemeSampling.sample`),
+  * sized from the stats estimate and checked by its own size. This spec
+  * counts actual jobs via a SparkListener.
   */
 class StatsPlanningSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -118,14 +122,13 @@ class StatsPlanningSpec extends AnyFunSuite {
   test("scheme sampling plans from stats: no full count() pass before the sample") {
     // r4 ran u.count() — a FULL read of both inputs — before sizing the
     // sample fraction for STP/BSP boundary building. The estimate now comes
-    // from Catalyst stats (zero jobs); a LARGE estimate skips even the
-    // bounded confirm, so scheme build is exactly the one sample+head action.
+    // from Catalyst stats (zero jobs) and the draw checks it, so scheme
+    // build is exactly the one sample+head action.
     val a = mk(400, 0); val b = mk(400, 1000)
     a.count(); b.count() // settle any lazy session init outside the window
     var stp: graft.cells.SortTileScheme = null
     val jobs = jobsDuring {
-      stp = graft.cells.SortTileScheme.build(a, b, graft.geom.Extent(0, 100, 0, 100),
-        4, 4, maxSample = 16)
+      stp = graft.cells.SortTileScheme.build(a, b, graft.geom.Extent(0, 100, 0, 100), 4, 4)
     }
     // head() escalates through up to ~3 incremental partition-probe jobs;
     // the r4 count()-first version added a full-scan job on top of these
@@ -140,7 +143,7 @@ class StatsPlanningSpec extends AnyFunSuite {
     assert(got == want && want.nonEmpty)
   }
 
-  test("bsp scheme build small estimate: bounded confirm only (≤ 3 jobs)") {
+  test("bsp scheme build small estimate: one unfilled head draw is the sample (≤ 3 jobs)") {
     // parquet inputs, so the scans report the rows they read
     val dir = java.nio.file.Files.createTempDirectory("bsp-sample").toString
     mk(300, 0).write.parquet(s"$dir/a"); mk(300, 1000).write.parquet(s"$dir/b")
@@ -155,13 +158,13 @@ class StatsPlanningSpec extends AnyFunSuite {
     var bsp: graft.cells.BinarySplitScheme = null
     spark.sparkContext.addSparkListener(l)
     val jobs = try jobsDuring {
-      // large maxSample → est ≤ 4·maxSample → ONE bounded read
-      // (≤ 4·maxSample+1 rows however big the input), subsampled on the
-      // driver
+      // a small estimate → fraction 1 → ONE head(4·MaxSample) draw, which
+      // returns fewer rows than its cap: it read every partition once, and
+      // its rows are the sample
       bsp = graft.cells.BinarySplitScheme.build(a, b, graft.geom.Extent(0, 100, 0, 100), 4)
     } finally spark.sparkContext.removeSparkListener(l)
-    assert(jobs <= 3, s"bsp build must be bounded-confirm + sample, got $jobs jobs")
-    // the bounded read IS the sample: no input row is read twice
+    assert(jobs <= 3, s"bsp build must be one bounded draw, got $jobs jobs")
+    // the draw IS the sample: no input row is read twice
     assert(read.get > 0 && read.get <= 600, s"planning read ${read.get} rows of 600")
     val got = SpatialJoins.binarySplitJoin(a, b, bsp)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -217,6 +220,18 @@ class StatsPlanningSpec extends AnyFunSuite {
     assert(SpatialJoins.estRowsFromStats(a) >= 1e6)
     // the point-side detection reads the one evidence job, nothing else
     onePlanningJob(a, b, SpatialJoins.gridJoinSweep(_, _, CellScheme(ext, 8, 8)))
+  }
+
+  test("a draw far under the estimate's expected size re-counts: the sample is all 800 rows") {
+    val a = big(0, 37, 53); val b = big(1000, 29, 61)
+    assert(SpatialJoins.estRowsFromStats(a) >= 1e6)
+    // the estimate's fraction would keep about ten of the 800 real rows, so
+    // the plan would be cut from ten points; the draw's own size shows the
+    // estimate wrong and one count sizes the sample instead
+    val (sa, sb, fraction) = graft.cells.SchemeSampling.sample(a, b, seed = 17L)
+    assert(fraction == 1.0)
+    assert(sa.map(_.id).toSet == (0L until 400L).toSet)
+    assert(sb.map(_.id).toSet == (1000L until 1400L).toSet)
   }
 
   test("gridJoinAdaptive on a large estimate plans from the bounded sample") {
