@@ -143,7 +143,7 @@ class StatsPlanningSpec extends AnyFunSuite {
     assert(got == want && want.nonEmpty)
   }
 
-  test("bsp scheme build small estimate: one unfilled head draw is the sample (≤ 3 jobs)") {
+  test("bsp scheme build small estimate: bounded confirm only (≤ 3 jobs)") {
     // parquet inputs, so the scans report the rows they read
     val dir = java.nio.file.Files.createTempDirectory("bsp-sample").toString
     mk(300, 0).write.parquet(s"$dir/a"); mk(300, 1000).write.parquet(s"$dir/b")
