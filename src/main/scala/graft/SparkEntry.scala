@@ -155,7 +155,7 @@ object SparkEntry {
     // multi-probe LSH (1-bit bucket flips: recall knob without index growth)
     "embed_lsh_multiprobe" -> ((s, dir) => {
       val e = embs(s, dir)
-      Similarity.lshTopKMultiProbe(e.filter(col("vec_id") < 20), e, 5, 64)
+      Similarity.lshTopK(e.filter(col("vec_id") < 20), e, 5, 64, multiProbe = true)
     }),
     // deterministic hash-based corpus downsampling (reproducible 30% sample
     // — the split every training-data pipeline needs to be restart-stable)
@@ -163,9 +163,10 @@ object SparkEntry {
       docs(s, dir).select(col("doc_id"))
         .filter(pmod(graft.functions.OracleHash.hash60(col("doc_id").cast("string")), lit(100L)) < 30)),
     // IVF inverted-list ANN (coarse-quantizer buckets + nProbe re-rank)
+    // under the untrained quantizer: the first 16 corpus vectors
     "embed_ivf_topk" -> ((s, dir) => {
       val e = embs(s, dir)
-      Similarity.ivfTopK(e.filter(col("vec_id") < 20), e, 5, 64)
+      Similarity.ivfTopKTrained(e.filter(col("vec_id") < 20), e, 5, iters = 0)
     }),
     // IVF with a TRAINED (2-iteration Lloyd) coarse quantizer — the oracle
     // replays the training itself (unrolled CTE chain), not just the probe
@@ -586,7 +587,7 @@ object SparkEntry {
     "embed_ivf_topk" -> Similarity.ivfTopKSql(20, 5, 64),
     "embed_ivf_trained" -> Similarity.ivfTopKTrainedSql(20, 5, 64,
       nCentroids = 16, nProbe = 4, iters = 2),
-    "embed_lsh_multiprobe" -> Similarity.lshTopKMultiProbeSql(20, 5, 64),
+    "embed_lsh_multiprobe" -> Similarity.lshTopKSql(20, 5, 64, multiProbe = true),
     "corpus_sample" ->
       (s"SELECT doc_id FROM documents WHERE " +
         s"${graft.functions.OracleHash.hash60Sql("CAST(doc_id AS VARCHAR)")} % 100 < 30"),

@@ -342,22 +342,29 @@ object SpatialJoins {
   /** The id columns of [[Side.of]]'s sides. */
   private val GeomIds = Some(col("a_id") -> col("b_id"))
 
-  /** The plan of route `r` over scheme `s`; None for the broadcast. With
-    * `ids` (the sides' id columns) the caller wants only the id pairs, and
-    * dense cells take the keyed reduce, which carries only ids. Without
-    * them every column of both sides survives, so dense cells take the
-    * declarative body.
+  /** The plan of route `r` over scheme `s` and the [[evidenced]] sides;
+    * None for the broadcast. With `ids` (the sides' id columns) the caller
+    * wants only the id pairs, and dense cells take the keyed reduce, which
+    * carries only ids. Without them every column of both sides survives, so
+    * dense cells take the declarative body.
     */
   private def planSides(a: Side, b: Side, s: CellScheme, r: Route,
                         ids: Option[(Column, Column)]): Option[DataFrame] = r match {
     case Route.Broadcast => None
-    case Route.Grid => Some(cellJoin(a, b, s))
-    case Route.PointsA => Some(cellJoin(a.copy(points = true), b, s))
-    case Route.PointsB => Some(cellJoin(a, b.copy(points = true), s))
-    case Route.Sweep(aPts, bPts) =>
-      val (ap, bp) = (a.copy(points = aPts), b.copy(points = bPts))
-      Some(ids.fold(cellJoin(ap, bp, s)) { case (aId, bId) => keyedJoin(ap, bp, s, aId, bId) })
+    case Route.Sweep(_, _) =>
+      Some(ids.fold(cellJoin(a, b, s)) { case (aId, bId) => keyedJoin(a, b, s, aId, bId) })
+    case _ => Some(cellJoin(a, b, s))
   }
+
+  /** `a` and `b` as the evidence finds them: each takes the evidence's
+    * point flag and drops its rows that touch no occupied cell of the other
+    * side ([[dropUnoccupied]]). A point side maps to its one cell under any
+    * [[CellMapping]]: `cellsOf` of a zero-extent row is the one key
+    * `cellOf` gives.
+    */
+  private def evidenced(a: Side, b: Side, ev: JoinEvidence): (Side, Side) =
+    (dropUnoccupied(a, ev.occupiedB, ev.aPoints).copy(points = ev.aPoints),
+      dropUnoccupied(b, ev.occupiedA, ev.bPoints).copy(points = ev.bPoints))
 
   /** The grid of about 16 rows of the larger side per cell over the
     * evidence's extent. When its cap binds (rows ≫ 16·maxN²) cells run dense
@@ -374,8 +381,9 @@ object SpatialJoins {
     * the ONE evidence job over `a` and `b`, which also maps the occupied
     * cells of the side stats estimate smaller ([[evidenceWithOccupancy]]) → the
     * caller's cell scheme, a function of that evidence (by default
-    * [[SizedGrid]]) → [[route]] → the other side drops its rows that touch
-    * none ([[dropUnoccupied]]) → the route's plan ([[planSides]]). The pair
+    * [[SizedGrid]]) → [[route]] → each side takes its point flag and drops
+    * its rows that touch no occupied cell of the other ([[evidenced]]) →
+    * the route's plan ([[planSides]]). The pair
     * set is that of every route. One INFO line logs the route, the counts
     * and the occupancy.
     */
@@ -391,8 +399,8 @@ object SpatialJoins {
       log.info(s"spatial join: route $r, rows ${ev.countA} x ${ev.countB}, " +
         occ.getOrElse("no occupancy, filter off"))
     }
-    planSides(dropUnoccupied(a, ev.occupiedB, ev.aPoints),
-      dropUnoccupied(b, ev.occupiedA, ev.bPoints), s, r, ids)
+    val (ea, eb) = evidenced(a, b, ev)
+    planSides(ea, eb, s, r, ids)
   }
 
   /** The pairs `(a_id, b_id)` of [[planJoin]] over `a` and `b` under
@@ -425,10 +433,12 @@ object SpatialJoins {
     // false "small" is catastrophic (a 20k×150k misroute measured 30 s where
     // the grid join takes 0.6 s). So a small estimate is CONFIRMED by a
     // bounded count: limit(t+1).count() reads at most t+1 rows no matter how
-    // large the input — never a full scan.
+    // large the input — never a full scan. The confirm's threshold is
+    // clamped to the Int range: past it, (t+1).toInt wraps to a negative or
+    // tiny limit.
+    val t = math.min(broadcastThreshold, Int.MaxValue - 1L)
     def small(d: Dataset[Geom]): Boolean =
-      estRowsFromStats(d) <= broadcastThreshold &&
-        d.limit((broadcastThreshold + 1).toInt).count() <= broadcastThreshold
+      estRowsFromStats(d) <= broadcastThreshold && d.limit((t + 1).toInt).count() <= t
     if (small(b)) broadcastNL(a, b)
     else if (small(a)) swapSides(broadcastNL(b, a))
     // stats can OVER-estimate filtered scans, so both inputs may be empty
@@ -820,16 +830,21 @@ object SpatialJoins {
     * rule, see [[graft.skew.AdaptiveCells]]): the one evidence job, then
     * splits planned from per-cell counts of one bounded sample sized by the
     * evidence's exact row counts, then one keyed reduce on the packed
-    * two-level key.
-    * With no hot cell the two-level key is the plain grid, so the join is
-    * [[planJoin]] over `base` and the same evidence.
+    * two-level key over the sides as [[planJoin]] takes them
+    * ([[evidenced]]: point flags and occupancy filter from the same
+    * evidence). With no hot cell the two-level key is the plain grid, so
+    * the join is [[planJoin]] over `base` and the same evidence.
     */
   def gridJoinAdaptive(a: Dataset[Geom], b: Dataset[Geom], base: CellScheme,
                        budgetPairs: Long = 4L * 1024 * 1024): DataFrame = {
-    val ev = evidenceWithOccupancy(Side.of(a, "a"), Side.of(b, "b"))
+    val (sa, sb) = (Side.of(a, "a"), Side.of(b, "b"))
+    val ev = evidenceWithOccupancy(sa, sb)
     val scheme = graft.skew.AdaptiveCells.plan(a, b, base, budgetPairs, ev.countA + ev.countB)
     if (scheme.splits.isEmpty) planPairs(a, b, _ => base, Some(ev))
-    else keyedPartitionJoin(a, b, scheme)
+    else {
+      val (ea, eb) = evidenced(sa, sb, ev)
+      keyedJoin(ea, eb, scheme, col("a_id"), col("b_id"))
+    }
   }
 
   // ---- distance join --------------------------------------------------------

@@ -32,8 +32,15 @@ object Similarity {
   def bruteForceTopK(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
     val q = queries.select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
     val c = corpus.select(col("vec_id").as("c_id"), col("embedding").as("c_emb"))
-    val scored = broadcast(q).crossJoin(c)
-      .select(col("q_id"), col("c_id"), qdot(col("q_emb"), col("c_emb")).as("dot"))
+    topK(broadcast(q).crossJoin(c)
+      .select(col("q_id"), col("c_id"), qdot(col("q_emb"), col("c_emb")).as("dot")), k)
+  }
+
+  /** The `k` best rows `(q_id, c_id, dot, rank)` per query of `scored`
+    * `(q_id, c_id, dot)`: dot descending, ties → smaller corpus id — the one
+    * tail of every top-k plan here.
+    */
+  private def topK(scored: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy(col("q_id")).orderBy(col("dot").desc, col("c_id"))
     scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
       .select(col("q_id"), col("c_id"), col("dot"), col("rank").cast("long").as("rank"))
@@ -77,9 +84,16 @@ object Similarity {
     * native codegen'd pass ([[graft.functions.HyperplaneBands]]) — the
     * round-1 `aggregate(zip_with(...))` chain cost 33.6 s for 100 vectors on
     * expression-tree overhead alone.
+    *
+    * `multiProbe`: each query also probes the buckets at Hamming distance 1
+    * from its band piece ([[bandProbes]]) — the standard recall knob that
+    * multiplies candidate coverage by (1 + rowsPerBand) WITHOUT growing the
+    * table-side index (the corpus stays bucketed exactly once; only query
+    * fan-out grows). Its candidates are a superset of the single probe's.
     */
   def lshTopK(queries: DataFrame, corpus: DataFrame, k: Int, dim: Int,
-              numPlanes: Int = 16, bands: Int = 4, seed: Long = 7L): DataFrame = {
+              numPlanes: Int = 16, bands: Int = 4, seed: Long = 7L,
+              multiProbe: Boolean = false): DataFrame = {
     require(numPlanes % bands == 0)
     val rowsPerBand = numPlanes / bands
     val planes = hyperplanes(numPlanes, dim, seed)
@@ -92,62 +106,40 @@ object Similarity {
     // shuffles 2×dim doubles per banded collision (measured 87 s for 2 000
     // queries × 20 k corpus). Dedup 16-byte id pairs instead, then attach
     // embeddings once: queries by broadcast, corpus by one equi-join.
-    val cand = banded(queries, "q_id").join(banded(corpus, "c_id"), Seq("band", "piece"))
+    val cand = bandProbes(banded(queries, "q_id"), rowsPerBand, multiProbe)
+      .join(banded(corpus, "c_id"), Seq("band", "piece"))
       .select(col("q_id"), col("c_id")).distinct()
-    val scored = cand
+    topK(cand
       .join(broadcast(queries.select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))),
         "q_id")
       .join(corpus.select(col("vec_id").as("c_id"), col("embedding").as("c_emb")), "c_id")
-      .select(col("q_id"), col("c_id"), qdot(col("q_emb"), col("c_emb")).as("dot"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("dot").desc, col("c_id"))
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-      .select(col("q_id"), col("c_id"), col("dot"), col("rank").cast("long").as("rank"))
+      .select(col("q_id"), col("c_id"), qdot(col("q_emb"), col("c_emb")).as("dot")), k)
   }
 
-  /** Multi-probe variant of [[lshTopK]]: each query additionally probes the
-    * buckets at Hamming distance 1 from its band piece (flip one sign bit
-    * per probe) — the standard recall knob that multiplies candidate
-    * coverage by (1 + rowsPerBand) WITHOUT growing the table-side index
-    * (the corpus stays bucketed exactly once; only query fan-out grows).
+  /** The probe side `(id, band, piece)` of a band join: as is, or with
+    * `multiProbe` fanned out to the exact piece plus its `rowsPerBand`
+    * 1-bit flips. XOR is symmetric, so fanning out one side of a join
+    * covers a flip on either side.
     */
-  def lshTopKMultiProbe(queries: DataFrame, corpus: DataFrame, k: Int, dim: Int,
-                        numPlanes: Int = 16, bands: Int = 4, seed: Long = 7L): DataFrame = {
-    require(numPlanes % bands == 0)
-    val rowsPerBand = numPlanes / bands
-    val planes = hyperplanes(numPlanes, dim, seed)
-    def banded(df: DataFrame, idName: String): DataFrame =
-      df.select(col("vec_id").as(idName),
-          posexplode(graft.functions.HyperplaneBands(col("embedding"), planes, dim, rowsPerBand)))
-        .toDF(idName, "band", "piece")
-    // query side fans out to the exact piece plus its 1-bit flips
-    val qb = banded(queries, "q_id")
+  private def bandProbes(banded: DataFrame, rowsPerBand: Int, multiProbe: Boolean): DataFrame =
+    if (!multiProbe) banded
+    else banded
       .withColumn("flip", explode(array((-1 until rowsPerBand).map(lit(_)): _*)))
       // dynamic shift distance needs the SQL form (the Scala shiftleft
       // builder only takes a literal Int bit count)
       .withColumn("piece",
         expr("CASE WHEN flip < 0 THEN piece ELSE piece ^ shiftleft(CAST(1 AS BIGINT), flip) END"))
       .drop("flip")
-    // id-pair candidates + one embedding attach (see lshTopK)
-    val cand = qb.join(banded(corpus, "c_id"), Seq("band", "piece"))
-      .select(col("q_id"), col("c_id")).distinct()
-    val scored = cand
-      .join(broadcast(queries.select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))),
-        "q_id")
-      .join(corpus.select(col("vec_id").as("c_id"), col("embedding").as("c_emb")), "c_id")
-      .select(col("q_id"), col("c_id"), qdot(col("q_emb"), col("c_emb")).as("dot"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("dot").desc, col("c_id"))
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-      .select(col("q_id"), col("c_id"), col("dot"), col("rank").cast("long").as("rank"))
-  }
 
-  /** DuckDB oracle replaying [[lshTopK]] / [[lshTopKMultiProbe]] end-to-end:
-    * the seeded hyperplanes are spliced in as a VALUES literal
-    * (`planes(pl, i, w)`, `i` 1-based to match DuckDB list indexing), sign
-    * bits packed per band exactly like the native expression; multi-probe
-    * expands query pieces through the same 1-bit flips.
+  /** DuckDB oracle replaying [[lshTopK]] end-to-end: the seeded hyperplanes
+    * are spliced in as a VALUES literal (`planes(pl, i, w)`, `i` 1-based to
+    * match DuckDB list indexing), sign bits packed per band exactly like the
+    * native expression; multi-probe expands query pieces through the same
+    * 1-bit flips.
     */
-  private def lshSqlBody(nQueries: Int, k: Int, dim: Int, numPlanes: Int,
-                         bands: Int, seed: Long, multiProbe: Boolean): String = {
+  def lshTopKSql(nQueries: Int, k: Int, dim: Int,
+                 numPlanes: Int = 16, bands: Int = 4, seed: Long = 7L,
+                 multiProbe: Boolean = false): String = {
     val rowsPerBand = numPlanes / bands
     val planes = hyperplanes(numPlanes, dim, seed)
     val planeRows = (for (pl <- 0 until numPlanes; i <- 0 until dim)
@@ -189,53 +181,14 @@ object Similarity {
        |) WHERE rank <= $k""".stripMargin.replace("\n", " ")
   }
 
-  def lshTopKSql(nQueries: Int, k: Int, dim: Int,
-                 numPlanes: Int = 16, bands: Int = 4, seed: Long = 7L): String =
-    lshSqlBody(nQueries, k, dim, numPlanes, bands, seed, multiProbe = false)
+  // ---- IVF (inverted lists under a Lloyd k-means coarse quantizer) ----------
 
-  def lshTopKMultiProbeSql(nQueries: Int, k: Int, dim: Int,
-                           numPlanes: Int = 16, bands: Int = 4, seed: Long = 7L): String =
-    lshSqlBody(nQueries, k, dim, numPlanes, bands, seed, multiProbe = true)
-
-  /** IVF-style ANN (the second scale path besides [[lshTopK]]): a small
-    * coarse-quantizer table of `nCentroids` vectors partitions the corpus
-    * into inverted lists (bucket = argmax quantized dot, ties → smaller
-    * centroid id); each query probes its `nProbe` best centroids and is
-    * exactly re-ranked within those lists only. The centroid table here is
-    * the first `nCentroids` corpus vectors — the training-free stand-in for
-    * a k-means quantizer (pluggable; the engine semantics are the inverted
-    * lists, not the training). Scale shape: centroids broadcast (tiny by
-    * construction), corpus scored once (one broadcast join + 16-row window),
-    * candidates ∝ corpus/nCentroids · nProbe instead of the full scan.
-    */
-  def ivfTopK(queries: DataFrame, corpus: DataFrame, k: Int, dim: Int,
-              nCentroids: Int = 16, nProbe: Int = 4): DataFrame = {
-    val cents = broadcast(corpus.filter(col("vec_id") < nCentroids)
-      .select(col("vec_id").as("cent_id"), col("embedding").as("cent_emb")))
-    def scored(df: DataFrame, idName: String) = df
-      .select(col("vec_id").as(idName), col("embedding").as(s"${idName}_emb"))
-      .crossJoin(cents)
-      .select(col(idName), col(s"${idName}_emb"), col("cent_id"),
-        qdot(col(s"${idName}_emb"), col("cent_emb")).as("cdot"))
-    val wAssign = Window.partitionBy(col("c_id")).orderBy(col("cdot").desc, col("cent_id"))
-    val lists = scored(corpus, "c_id")
-      .withColumn("r", row_number().over(wAssign)).filter(col("r") === 1)
-      .select(col("c_id"), col("c_id_emb"), col("cent_id"))
-    val wProbe = Window.partitionBy(col("q_id")).orderBy(col("cdot").desc, col("cent_id"))
-    val probes = scored(queries, "q_id")
-      .withColumn("r", row_number().over(wProbe)).filter(col("r") <= nProbe)
-      .select(col("q_id"), col("q_id_emb"), col("cent_id"))
-    val cand = probes.join(lists, "cent_id")
-      .select(col("q_id"), col("c_id"),
-        qdot(col("q_id_emb"), col("c_id_emb")).as("dot"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("dot").desc, col("c_id"))
-    cand.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-      .select(col("q_id"), col("c_id"), col("dot"), col("rank").cast("long").as("rank"))
-  }
-
-  /** DuckDB oracle replaying [[ivfTopK]] exactly (assignment, probing and
-    * re-rank included — the oracle checks IVF's own semantics, recall is a
-    * property of the quantizer, not a correctness gate).
+  /** DuckDB oracle for IVF-style ANN over the first `nCentroids` corpus
+    * vectors as the coarse quantizer: it replays [[ivfTopKTrained]] at
+    * `iters = 0` exactly (assignment, probing and re-rank included — the
+    * oracle checks IVF's own semantics, recall is a property of the
+    * quantizer, not a correctness gate), written independently of the
+    * trained oracle's CTE chain.
     */
   def ivfTopKSql(nQueries: Int, k: Int, dim: Int,
                  nCentroids: Int = 16, nProbe: Int = 4): String =
@@ -271,8 +224,6 @@ object Similarity {
        |  FROM cand
        |) WHERE rank <= $k""".stripMargin.replace("\n", " ")
 
-  // ---- trained IVF (Lloyd k-means coarse quantizer) -------------------------
-
   /** `argmax_k dot(embedding, cent_k)`, ties → smaller k — ONE native
     * expression over the flattened centroid table
     * ([[graft.functions.BestCentroid]]), so corpus-to-list assignment is a
@@ -281,11 +232,8 @@ object Similarity {
     * `struct(dot, -k)` columns re-quantized the vector per centroid and fell
     * out of codegen — measured 118 s vs ~2 s per 1M-row pass.)
     */
-  private def bestCentroidCol(cents: Array[Array[Long]]): Column = {
-    require(cents.length >= 2, "need at least two centroids")
-    graft.functions.BestCentroid(col("embedding"),
-      cents.flatten.toSeq, cents.head.length)
-  }
+  private def bestCentroidCol(cents: Array[Array[Long]]): Column =
+    graft.functions.BestCentroid(col("embedding"), cents.flatten.toSeq, cents.head.length)
 
   /** Deterministic Lloyd training of the IVF coarse quantizer (the r3
     * verdict's "train the IVF quantizer" item). Init = the first
@@ -303,7 +251,8 @@ object Similarity {
   def ivfTrainCentroids(corpus: DataFrame, nCentroids: Int,
                         iters: Int): Array[Array[Long]] = {
     val base = corpus.select(col("vec_id"), col("embedding"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // only the iterations rescan the corpus
+    if (iters > 0) base.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // init = the first nCentroids rows by vec_id (works on sampled corpora
     // too; on a dense-id corpus this is exactly `vec_id < nCentroids`, which
     // is what the oracle replays)
@@ -340,8 +289,13 @@ object Similarity {
     cents
   }
 
-  /** IVF ANN with a TRAINED coarse quantizer ([[ivfTrainCentroids]]; the
-    * untrained [[ivfTopK]] remains the training-free plan-shape baseline).
+  /** IVF-style ANN (the second scale path besides [[lshTopK]]): a small
+    * coarse-quantizer table of `nCentroids` vectors partitions the corpus
+    * into inverted lists (bucket = argmax quantized dot, ties → smaller
+    * centroid id); each query probes its `nProbe` best centroids and is
+    * exactly re-ranked within those lists only. The quantizer is
+    * [[ivfTrainCentroids]]: `iters` Lloyd iterations from the first
+    * `nCentroids` corpus vectors, so `iters = 0` is the training-free IVF.
     * List assignment and query probing evaluate the centroid table as plan
     * LITERALS — the corpus is scored in one scan projection with no
     * crossJoin and no shuffle; candidates ∝ corpus/nCentroids · nProbe.
@@ -350,31 +304,23 @@ object Similarity {
                      nCentroids: Int = 16, nProbe: Int = 4,
                      iters: Int = 2): DataFrame = {
     val cents = ivfTrainCentroids(corpus, nCentroids, iters)
-    ivfTopKWithCentroids(queries, corpus, k, cents, nProbe)
+    ivfTopKWithLists(queries, k, cents, nProbe, ivfLists(corpus, cents))
   }
 
-  /** Inverted-list top-k under an explicit centroid table (shared by the
-    * trained path and any externally-supplied quantizer).
-    */
   /** The inverted-list table `(c_id, cent_id, c_emb)` — one scan projection,
     * the persistable IVF index (the reference's tree_A.bin-style build/probe
     * split). At large nCentroids the assignment is the expensive pass
     * (nCentroids·dim madds per row); build once, cache, query many times.
     */
   def ivfLists(corpus: DataFrame, cents: Array[Array[Long]]): DataFrame =
-    corpus.select(col("vec_id").as("c_id"),
-      graft.functions.BestCentroid(col("embedding"),
-        cents.flatten.toSeq, cents.head.length).as("cent_id"),
+    corpus.select(col("vec_id").as("c_id"), bestCentroidCol(cents).as("cent_id"),
       col("embedding").as("c_emb"))
 
-  def ivfTopKWithCentroids(queries: DataFrame, corpus: DataFrame, k: Int,
-                           cents: Array[Array[Long]], nProbe: Int): DataFrame =
-    ivfTopKWithLists(queries, k, cents, nProbe, ivfLists(corpus, cents))
-
-  /** [[ivfTopKWithCentroids]] against a prebuilt (typically cached)
-    * [[ivfLists]] index. Probes (with their query vectors — a nProbe·|Q| row
-    * table) BROADCAST onto the list scan, so scoring is ONE streaming stage
-    * over the cached index with no candidate shuffle at all; only the slim
+  /** IVF top-k under the centroid table `cents` against its prebuilt
+    * (typically cached) [[ivfLists]] index. Probes (with their query
+    * vectors — a nProbe·|Q| row table) BROADCAST onto the list scan, so
+    * scoring is ONE streaming stage over the cached index with no candidate
+    * shuffle at all; only the slim
     * `(q_id, c_id, dot)` rows reach the top-k window. (The r4 first cut
     * attached embeddings via two shuffled equi-joins + a wide window —
     * 75 s → 8 s at 2000 queries × 1M vectors × 1024 centroids.)
@@ -400,11 +346,8 @@ object Similarity {
       BigInt(nProbe)
     val probes =
       if (probeBytes <= BigInt(256L << 20)) broadcast(probes0) else probes0
-    val scored = lists.join(probes, "cent_id")
-      .select(col("q_id"), col("c_id"), qdot(col("q_emb"), col("c_emb")).as("dot"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("dot").desc, col("c_id"))
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-      .select(col("q_id"), col("c_id"), col("dot"), col("rank").cast("long").as("rank"))
+    topK(lists.join(probes, "cent_id")
+      .select(col("q_id"), col("c_id"), qdot(col("q_emb"), col("c_emb")).as("dot")), k)
   }
 
   /** DuckDB oracle replaying [[ivfTopKTrained]] END-TO-END — the Lloyd
@@ -544,24 +487,14 @@ object Similarity {
     def banded(p: String) = sigs
       .select(col("vec_id").as(s"${p}_id"), posexplode(col("sig")))
       .toDF(s"${p}_id", "band", "piece")
-    // multi-probe (the same 1-bit-flip fan-out as lshTopKMultiProbe, applied
-    // to the self-join): the a-side additionally probes every piece at
-    // Hamming distance 1, so a pair whose band signatures differ by ONE sign
-    // bit in some band still collides — a per-band collision probability of
-    // p^r becomes p^r + r·p^(r-1)(1-p), the boundary-recall knob at scale
-    // where the exact route is unavailable. XOR is symmetric, so fanning out
-    // only one side covers the flip in either direction; the b-side (the
-    // "index") stays bucketed exactly once — candidate volume grows with
-    // query fan-out (×(1+r)), never with index size.
-    val aSide =
-      if (!multiProbe) banded("a")
-      else banded("a")
-        .withColumn("flip", explode(array((-1 until rowsPerBand).map(lit(_)): _*)))
-        .withColumn("piece",
-          expr("CASE WHEN flip < 0 THEN piece ELSE piece ^ shiftleft(CAST(1 AS BIGINT), flip) END"))
-        .drop("flip")
-    val candRaw = aSide.join(banded("b").withColumnRenamed("band", "band_b")
-        .withColumnRenamed("piece", "piece_b"),
+    // multi-probe (lshTopK's 1-bit-flip fan-out on the a-side): a pair whose
+    // band signatures differ by ONE sign bit in some band still collides — a
+    // per-band collision probability of p^r becomes p^r + r·p^(r-1)(1-p), the
+    // boundary-recall knob at scale where the exact route is unavailable. The
+    // b-side (the "index") stays bucketed exactly once — candidate volume
+    // grows with query fan-out (×(1+r)), never with index size.
+    val candRaw = bandProbes(banded("a"), rowsPerBand, multiProbe)
+      .join(banded("b").withColumnRenamed("band", "band_b").withColumnRenamed("piece", "piece_b"),
         col("band") === col("band_b") && col("piece") === col("piece_b") &&
           col("a_id") < col("b_id"))
       .select("a_id", "b_id")
@@ -601,8 +534,8 @@ object Similarity {
     // lesser evil), then a shuffle attach of compact sigs, still ~40×
     // slimmer than the embedding arrays it replaces.
     // the broadcast gate bounds BYTES, not rows: a sig row is 8 + 8·bands B
-    // and the recall knob escalates bands up to 8× — a fixed row cap would
-    // let the broadcast grow with it (500k rows at 96 bands ≈ 390 MB)
+    // and the caller picks bands — a fixed row cap would let the broadcast
+    // grow with them (500k rows at 96 bands ≈ 390 MB)
     val maxBcRows = math.max(1L, (48L << 20) / (8L + 8L * bands))
     val slimPlan =
       if (hdCut >= m) candRaw.distinct()  // cutoff beyond the signature width
@@ -635,8 +568,7 @@ object Similarity {
   def nearDupPairsAuto(embs: DataFrame, tMilli: Int, dim: Int,
                        bands: Int = 12, rowsPerBand: Int = 16,
                        seed: Long = 11L,
-                       exactBytesThreshold: Long = 32L << 20,
-                       minBoundaryRecall: Double = 0.0): DataFrame = {
+                       exactBytesThreshold: Long = 32L << 20): DataFrame = {
     // a false "small" puts an O(n²) crossJoin on a large corpus — and stats
     // UNDER-count compressed column-pruned scans (the intersectJoin lesson:
     // 30 s vs 0.6 s on a 20k×150k misroute there). So the small estimate is
@@ -664,37 +596,7 @@ object Similarity {
       embs.queryExecution.optimizedPlan.stats.sizeInBytes <= BigInt(exactBytesThreshold) &&
         embs.limit((maxRows + 1).toInt).count() <= maxRows
     if (small) cosineNearDupPairs(embs, tMilli)
-    else {
-      // the recall knob at the scale route (exact recall is unavailable
-      // there): pick the cheapest banding whose PREDICTED recall for a pair
-      // sitting exactly at the cosine threshold — the worst qualifying pair —
-      // meets `minBoundaryRecall`. Collision probability of one sign bit is
-      // p = 1 − acos(t)/π; a band of r bits collides with p^r (single-probe)
-      // or p^r + r·p^(r−1)(1−p) (1-bit-flip multi-probe, either direction —
-      // XOR is symmetric); recall over B independent bands = 1 − (1−P)^B.
-      // Escalation order: given bands single-probe → given bands multi-probe
-      // → more multi-probe bands (capped at 8× — candidate volume and the
-      // signature pass scale with bands, so a recall target close to 1 at a
-      // low threshold must widen bands, not loop forever). 0 keeps r5's
-      // single-probe default.
-      val t = math.min(1.0, math.max(-1.0, tMilli / 1000.0))
-      val p = 1.0 - math.acos(t) / math.Pi
-      val pSingle = math.pow(p, rowsPerBand)
-      val pMulti = pSingle + rowsPerBand * math.pow(p, rowsPerBand - 1) * (1.0 - p)
-      def recall(pBand: Double, nb: Int) = 1.0 - math.pow(1.0 - pBand, nb)
-      val target = math.min(minBoundaryRecall, 0.999999)
-      val (useMulti, useBands) =
-        if (target <= 0.0 || recall(pSingle, bands) >= target) (false, bands)
-        else if (recall(pMulti, bands) >= target) (true, bands)
-        else {
-          val need =
-            if (pMulti >= 1.0) 1
-            else math.ceil(math.log1p(-target) / math.log1p(-pMulti)).toInt
-          (true, math.min(math.max(bands, need), bands * 8))
-        }
-      lshNearDupPairs(embs, tMilli, dim, useBands, rowsPerBand, seed,
-        multiProbe = useMulti)
-    }
+    else lshNearDupPairs(embs, tMilli, dim, bands, rowsPerBand, seed)
   }
 
   /** Deterministic planted near-duplicates: every 5th vector is duplicated

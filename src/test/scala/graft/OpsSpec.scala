@@ -168,6 +168,42 @@ class SimilaritySpec extends AnyFunSuite {
     assert(got.map(_._1).contains(100L))
   }
 
+  test("multi-probe lshTopK finds the identical vector and ranks at least as high as single-probe") {
+    val queries = df.filter($"vec_id" < 5 || $"vec_id" === 100L)
+    def run(multi: Boolean): Map[(Long, Long), (Long, Long)] =
+      Similarity.lshTopK(queries, df, 3, dim, multiProbe = multi).collect()
+        .map(r => (r.getLong(0), r.getLong(3)) -> (r.getLong(1), r.getLong(2))).toMap
+    val single = run(multi = false)
+    val multi = run(multi = true)
+    assert(multi.exists { case ((qi, _), (ci, _)) => qi == 100L && ci == 101L })
+    // the flip fan-out keeps every exact-bucket candidate, so the top-k of
+    // the superset is at least as good at every (query, rank)
+    single.foreach { case (key, (_, dot)) =>
+      assert(multi.get(key).exists(_._2 >= dot), s"$key: single $dot, multi ${multi.get(key)}")
+    }
+  }
+
+  test("ivfTopKTrained at iters = 0 == local first-nCentroids IVF replay") {
+    val (nCentroids, nProbe, k) = (6, 2, 4)
+    val got = Similarity.ivfTopKTrained(df.filter($"vec_id" < 5 || $"vec_id" === 100L), df, k,
+        nCentroids = nCentroids, nProbe = nProbe, iters = 0)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
+    def qv(v: Array[Float]) = v.map(x => graft.functions.QuantizedDot.q(x.toDouble * 1000))
+    val cents = vecs.sortBy(_._1).take(nCentroids).map(c => qv(c._2))
+    def cdots(v: Array[Float]) = cents.map(c => (qv(v) zip c).map { case (x, y) => x * y }.sum)
+    // argmax with ties -> smaller centroid id; probes: dot desc, then id
+    def byDot(ds: Seq[Long]) = ds.zipWithIndex.sortBy { case (d, i) => (-d, i) }.map(_._2)
+    val listOf = vecs.map { case (ci, cv) => ci -> byDot(cdots(cv)).head }.toMap
+    val want = (for ((qi, qvec) <- vecs if qi < 5 || qi == 100L) yield {
+      val probes = byDot(cdots(qvec)).take(nProbe).toSet
+      vecs.filter { case (ci, _) => probes(listOf(ci)) }
+        .map { case (ci, cv) => (ci, qdotLocal(qvec, cv)) }
+        .sortBy(t => (-t._2, t._1)).take(k).zipWithIndex
+        .map { case ((ci, d), r) => (qi, ci, d, (r + 1).toLong) }
+    }).flatten.toSet
+    assert(got == want)
+  }
+
   /** Planted boundary corpus: 300 pairs at cosine exactly 0.96 (orthogonal-
     * complement construction), just above the 0.95 threshold — the regime
     * where banding recall < 1 and the probe/band knobs matter.
@@ -216,26 +252,6 @@ class SimilaritySpec extends AnyFunSuite {
     val multi = recall(gotMulti)
     assert(multi >= single + 0.1,
       s"expected a measurable boundary-recall uplift: single=$single multi=$multi")
-  }
-
-  test("nearDupPairsAuto recall knob selects the banding at the scale route (planted 0.96)") {
-    // force the SCALE route (threshold 0 → never "small") and exercise the
-    // knob both ways: the default keeps r5's single-probe banding; a recall
-    // target the single-probe prediction misses must select multi-probe and
-    // lift the measured planted-boundary recall
-    val d = 64
-    val (embs, planted) = boundaryCorpus
-    def recallOf(minRecall: Double): Double = {
-      val got = Similarity.nearDupPairsAuto(embs, 950, d, bands = 4,
-          rowsPerBand = 16, exactBytesThreshold = 0L, minBoundaryRecall = minRecall)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      planted.count(got.contains).toDouble / planted.size
-    }
-    val default = recallOf(0.0)   // single-probe, 4×16 (documented ~0.63)
-    val chased = recallOf(0.9)    // predicted single ≈ 0.63 < 0.9 → multi-probe
-    assert(chased >= default + 0.1,
-      s"recall knob had no effect at the scale route: default=$default chased=$chased")
-    assert(chased >= 0.85, s"multi-probe scale route under target: $chased")
   }
 
   test("cosineNearDupPairs finds the planted identical pair") {

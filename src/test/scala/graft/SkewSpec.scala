@@ -59,6 +59,29 @@ class SkewSpec extends AnyFunSuite {
     assert(adaptive == sweep && adaptive == salted && adaptive.nonEmpty)
   }
 
+  test("split plan reads its evidence: point side projected, occupancy filter on") {
+    // 20k points (half in the hot corner) x 2k small squares: the hot cell
+    // splits, the points are a point side and the squares' occupancy is
+    // selective, so the keyed reduce must key the points by projection (the
+    // squares' explode is the one generator) and drop the points that touch
+    // no occupied cell of the squares
+    val a = Workloads.hotspotPolygons(spark, 20000, seed = 61, mapEdge = 1000.0,
+      hotFrac = 0.5, hotX = 100, hotY = 100, hotW = 2.0, meanEdge = 0.0)
+    val b = Workloads.hotspotPolygons(spark, 2000, seed = 62, mapEdge = 1000.0,
+      hotFrac = 0.5, hotX = 100, hotY = 100, hotW = 2.0, meanEdge = 0.05)
+    val base = CellScheme(Extent(0, 1001, 0, 1001), 10, 10)
+    val planned = AdaptiveCells.plan(a, b, base, budgetPairs = 100000)
+    assert(planned.splits.nonEmpty, "the hot corner must exceed the pair budget")
+    val joined = SpatialJoins.gridJoinAdaptive(a, b, base, budgetPairs = 100000)
+    val gens = joined.queryExecution.optimizedPlan.collect {
+      case g: org.apache.spark.sql.catalyst.plans.logical.Generate => g }.size
+    assert(gens == 1, s"the point side must not be exploded (got $gens generators)")
+    val analyzed = joined.queryExecution.analyzed.toString
+    assert(analyzed.contains("occupied("), analyzed)
+    val want = pairs(SpatialJoins.broadcastNL(a, b))
+    assert(pairs(joined) == want && want.nonEmpty)
+  }
+
   test("concentration gate: evenly dense cells plan ZERO splits even far over budget") {
     // every cell's |A|·|B| (~312² ≈ 97k) is ~100× the budget — the r4 rule
     // split them all (measured 8× slower than the plain sweep on the

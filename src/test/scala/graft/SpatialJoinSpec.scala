@@ -170,6 +170,16 @@ class SpatialJoinSpec extends AnyFunSuite {
     assert(pairs(gridJoinPIP(rects, b, s)) == pairs(gridJoin(corners, b, s)))
   }
 
+  test("intersectJoin broadcast threshold past the Int range confirms, not overflows") {
+    // limit(t + 1) at t = 3e9 wrapped to a negative limit and threw
+    val a = randomSet(26, 300, 8.0)
+    val b = randomSet(27, 200, 8.0)
+    val want = pairs(broadcastNL(a, b))
+    assert(want.nonEmpty)
+    for (t <- Seq(10000L, 3000000000L, 5000000000L, Long.MaxValue))
+      assert(pairs(intersectJoin(a, b, broadcastThreshold = t)) == want, s"threshold $t")
+  }
+
   test("intersectJoin auto-routes a point side to the PIP plan (1 generator, not 2)") {
     val pts = randomSet(14, 30000, 0.0)
     val polys = randomSet(15, 30000, 4.0)
