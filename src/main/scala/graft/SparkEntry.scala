@@ -711,20 +711,7 @@ object SparkEntry {
     s"SELECT cell, cell % ${grid.nx} AS cx, cell // ${grid.nx} AS cy, " +
       s"count(*) AS value FROM (${cellRepSql(spec)}) GROUP BY 1, 2, 3"
 
-  /** Cell replication as SQL: cross join with the two cell-range sequences.
-    * Must mirror `SpatialJoins.withCells` (clamped floor arithmetic).
-    */
-  private def cellStatsOracle: String = {
-    val w = grid.cellW; val h = grid.cellH; val n = grid.nx
-    def cc(v: String, lo: Double, len: Double, nn: Int): String =
-      s"least(greatest(CAST(floor(($v - $lo) / $len) AS BIGINT), 0), ${nn - 1})"
-    s"""SELECT cy * $n + cx AS cell, count(*) AS n_objs FROM (
-       | SELECT unnest(range(${cc("xmin", 0.0, w, n)}, ${cc("xmax", 0.0, w, n)} + 1)) AS cx,
-       |        cy
-       | FROM (
-       |   SELECT xmin, xmax, unnest(range(${cc("ymin", 0.0, h, n)}, ${cc("ymax", 0.0, h, n)} + 1)) AS cy
-       |   FROM (${partRects.sqlSelect})
-       | )
-       |) GROUP BY 1""".stripMargin.replace("\n", "")
-  }
+  /** Objects per cell: [[cellRepSql]]'s replication, counted. */
+  private def cellStatsOracle: String =
+    s"SELECT cell, count(*) AS n_objs FROM (${cellRepSql(partRects)}) GROUP BY 1"
 }

@@ -94,17 +94,21 @@ private[graft] final class KeysArray(keys: CellKeys) extends ArrayData {
   def getMap(i: Int): MapData = readOnly
 }
 
-/** A call of one [[CellMapping]] method on double children, as a Catalyst
-  * expression; its generated code calls the mapping with the primitive
-  * doubles (the [[graft.join.OccupancyProbe]] pattern). A null coordinate
-  * makes the call null, or, where `nullAsNaN`, reads as NaN.
+/** A call of one Scala method of `target` on double children, as a
+  * Catalyst expression; its generated code calls the method with the
+  * primitive doubles. The ONE such expression: [[CellOf]] and [[CellsOf]]
+  * call a [[CellMapping]], [[graft.join.OccupancyProbe]] an occupancy
+  * bitmap. A null coordinate makes the call null, or, where `nullAsNaN`,
+  * reads as NaN. Serializable itself, so Java serialization of a task
+  * restores the subclasses through Expression's no-argument constructor.
   */
-private[graft] sealed abstract class MappingCall extends Expression {
-  def mapping: CellMapping
+private[graft] abstract class MappingCall(targetClass: Class[_]) extends Expression with Serializable {
+  /** The object whose method the call runs, referenced from generated code. */
+  protected def target: AnyRef
   protected def nullAsNaN: Boolean
   protected def call(v: Seq[Double]): Any
-  /** The generated call on `m` with the children's value terms. */
-  protected def callCode(m: String, v: Seq[String]): String
+  /** The generated call on `t` with the children's value terms. */
+  protected def callCode(t: String, v: Seq[String]): String
 
   override def nullable: Boolean = !nullAsNaN && children.exists(_.nullable)
 
@@ -115,7 +119,7 @@ private[graft] sealed abstract class MappingCall extends Expression {
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val m = ctx.addReferenceObj("mapping", mapping, classOf[CellMapping].getName)
+    val t = ctx.addReferenceObj("target", target, targetClass.getName)
     val cs = children.map(_.genCode(ctx))
     val anyNull = if (nullAsNaN) "false" else cs.map(_.isNull.toString).mkString(" || ")
     val vs = cs.map(c => if (nullAsNaN) s"(${c.isNull} ? Double.NaN : ${c.value})" else c.value.toString)
@@ -123,7 +127,7 @@ private[graft] sealed abstract class MappingCall extends Expression {
       |${cs.map(_.code.toString).mkString("\n")}
       |boolean ${ev.isNull} = $anyNull;
       |${CodeGenerator.javaType(dataType)} ${ev.value} = ${ev.isNull} ?
-      |  ${CodeGenerator.defaultValue(dataType)} : ${callCode(m, vs)};
+      |  ${CodeGenerator.defaultValue(dataType)} : ${callCode(t, vs)};
       |""".stripMargin)
   }
 }
@@ -135,13 +139,14 @@ private[graft] sealed abstract class MappingCall extends Expression {
   * side's scan filter, which would compute the key twice per row.
   */
 private[graft] final case class CellOf(mapping: CellMapping, children: Seq[Expression])
-    extends MappingCall {
+    extends MappingCall(classOf[CellMapping]) {
   require(children.size == 2)
+  protected def target: AnyRef = mapping
   protected def nullAsNaN: Boolean = true
   override def dataType: DataType = LongType
   override def prettyName: String = "cell_of"
   protected def call(v: Seq[Double]): Any = mapping.cellOf(v(0), v(1))
-  protected def callCode(m: String, v: Seq[String]): String = s"$m.cellOf(${v.mkString(", ")})"
+  protected def callCode(t: String, v: Seq[String]): String = s"$t.cellOf(${v.mkString(", ")})"
   override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): Expression =
     copy(children = newChildren)
 }
@@ -152,14 +157,15 @@ private[graft] final case class CellOf(mapping: CellMapping, children: Seq[Expre
   * coordinate is null: such a row meets no row, so it is keyed nowhere.
   */
 private[graft] final case class CellsOf(mapping: CellMapping, children: Seq[Expression])
-    extends MappingCall {
+    extends MappingCall(classOf[CellMapping]) {
   require(children.size == 4)
+  protected def target: AnyRef = mapping
   protected def nullAsNaN: Boolean = false
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "cells_of"
   protected def call(v: Seq[Double]): Any = new KeysArray(mapping.cellsOf(v(0), v(1), v(2), v(3)))
-  protected def callCode(m: String, v: Seq[String]): String =
-    s"new ${classOf[KeysArray].getName}($m.cellsOf(${v.mkString(", ")}))"
+  protected def callCode(t: String, v: Seq[String]): String =
+    s"new ${classOf[KeysArray].getName}($t.cellsOf(${v.mkString(", ")}))"
   override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): Expression =
     copy(children = newChildren)
 }

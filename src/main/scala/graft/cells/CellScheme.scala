@@ -81,9 +81,9 @@ object CellScheme {
     * tasks" granularity rule (`cpp/RTree.h:506-508`): #cells ≫ #cores.
     */
   def forSize(extent: Extent, rowsLarger: Long, targetPerCell: Long = 512L,
-              minN: Int = 1, maxN: Int = 4096): CellScheme = {
+              maxN: Int = 4096): CellScheme = {
     val cells = math.max(1L, rowsLarger / math.max(1L, targetPerCell))
-    val n = math.min(maxN, math.max(minN, math.ceil(math.sqrt(cells.toDouble)).toInt))
+    val n = math.min(maxN, math.ceil(math.sqrt(cells.toDouble)).toInt)
     CellScheme(extent, n, n)
   }
 

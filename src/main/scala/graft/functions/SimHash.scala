@@ -94,11 +94,6 @@ object SimHash {
        |  FROM (SELECT DISTINCT doc_id FROM $from) d
        |)""".stripMargin.replace("\n", " ")
   }
-
-  def hammingDist(a: Column, b: Column): Column = {
-    import org.apache.spark.sql.functions.bit_count
-    bit_count(a.bitwiseXOR(b))
-  }
 }
 
 case class SimHash64(child: Expression, md5Tokens: Boolean = false)

@@ -1,13 +1,10 @@
 package graft.join
 
-import graft.cells.CellScheme
+import graft.cells.{CellScheme, MappingCall}
 import graft.geom.Extent
 import java.lang.Double.isFinite
 import java.util.BitSet
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.types.{BooleanType, DataType}
 
 /** A dyadic grid: square cells of side `2^k` whose edges sit on the
@@ -265,35 +262,20 @@ private[graft] object Occupancy {
 }
 
 /** [[Occupancy.keeps]] over `xmin, xmax, ymin, ymax` as a Catalyst
-  * predicate; its generated code calls `keeps` with the four primitive
-  * doubles. A row with a null coordinate is kept (it meets no row anyway).
+  * predicate, a [[MappingCall]]: its generated code calls `keeps` with the
+  * four primitive doubles. A null coordinate makes it null, as it makes
+  * [[graft.cells.CellsOf]], so a filter on it drops the row (such a row
+  * meets no row anyway).
   */
 private[graft] final case class OccupancyProbe(occupancy: Occupancy, children: Seq[Expression])
-    extends Expression {
+    extends MappingCall(classOf[Occupancy]) {
   require(children.size == 4)
-  override def nullable: Boolean = false
+  protected def target: AnyRef = occupancy
+  protected def nullAsNaN: Boolean = false
   override def dataType: DataType = BooleanType
   override def prettyName: String = "occupied"
-
-  override def eval(input: InternalRow): Any = {
-    val v = children.map(_.eval(input))
-    v.contains(null) || occupancy.keeps(v(0).asInstanceOf[Double], v(1).asInstanceOf[Double],
-      v(2).asInstanceOf[Double], v(3).asInstanceOf[Double])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val occ = ctx.addReferenceObj("occupancy", occupancy)
-    val Seq(x0, x1, y0, y1) = children.map(_.genCode(ctx))
-    ev.copy(code = code"""
-      |${x0.code}
-      |${x1.code}
-      |${y0.code}
-      |${y1.code}
-      |boolean ${ev.value} = ${x0.isNull} || ${x1.isNull} || ${y0.isNull} || ${y1.isNull} ||
-      |  $occ.keeps(${x0.value}, ${x1.value}, ${y0.value}, ${y1.value});
-      |""".stripMargin, isNull = FalseLiteral)
-  }
-
+  protected def call(v: Seq[Double]): Any = occupancy.keeps(v(0), v(1), v(2), v(3))
+  protected def callCode(t: String, v: Seq[String]): String = s"$t.keeps(${v.mkString(", ")})"
   override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): Expression =
     copy(children = newChildren)
 }

@@ -181,7 +181,8 @@ object Route {
   /** The b side is all points: the cell equi-join over a point b side. */
   case object PointsB extends Route
   /** Dense cells: the keyed repartition+sort reduce with the sweep/STR inner
-    * loop ([[SpatialJoins.gridJoinSweep]]); a point side maps as a plain
+    * loop ([[SpatialJoins.keyedPartitionJoin]]) when the caller wants only
+    * the id pairs, else the declarative body; a point side maps as a plain
     * projection instead of a generator.
     */
   final case class Sweep(aPoints: Boolean, bPoints: Boolean) extends Route
@@ -339,22 +340,18 @@ object SpatialJoins {
     else if (ev.bPoints) Route.PointsB
     else Route.Grid
 
-  /** The id columns of [[Side.of]]'s sides. */
-  private val GeomIds = Some(col("a_id") -> col("b_id"))
-
   /** The plan of route `r` over scheme `s` and the [[evidenced]] sides;
-    * None for the broadcast. With `ids` (the sides' id columns) the caller
-    * wants only the id pairs, and dense cells take the keyed reduce, which
-    * carries only ids. Without them every column of both sides survives, so
-    * dense cells take the declarative body.
+    * None for the broadcast. With `ids` the sides are [[Side.of]]'s and the
+    * caller wants only the id pairs, so dense cells take the keyed reduce,
+    * which carries only ids. Without it every column of both sides
+    * survives, so dense cells take the declarative body.
     */
-  private def planSides(a: Side, b: Side, s: CellScheme, r: Route,
-                        ids: Option[(Column, Column)]): Option[DataFrame] = r match {
-    case Route.Broadcast => None
-    case Route.Sweep(_, _) =>
-      Some(ids.fold(cellJoin(a, b, s)) { case (aId, bId) => keyedJoin(a, b, s, aId, bId) })
-    case _ => Some(cellJoin(a, b, s))
-  }
+  private def planSides(a: Side, b: Side, s: CellScheme, r: Route, ids: Boolean): Option[DataFrame] =
+    r match {
+      case Route.Broadcast => None
+      case Route.Sweep(_, _) if ids => Some(keyedJoin(a, b, s))
+      case _ => Some(cellJoin(a, b, s))
+    }
 
   /** `a` and `b` as the evidence finds them: each takes the evidence's
     * point flag and drops its rows that touch no occupied cell of the other
@@ -383,11 +380,13 @@ object SpatialJoins {
     * caller's cell scheme, a function of that evidence (by default
     * [[SizedGrid]]) → [[route]] → each side takes its point flag and drops
     * its rows that touch no occupied cell of the other ([[evidenced]]) →
-    * the route's plan ([[planSides]]). The pair
-    * set is that of every route. One INFO line logs the route, the counts
-    * and the occupancy.
+    * the route's plan ([[planSides]]; `ids`: the sides are [[Side.of]]'s
+    * and only their id pairs are wanted). The pair set is that of every
+    * route. One INFO line logs the route, the body a Sweep route runs on
+    * sides with every column (the declarative one), the counts and the
+    * occupancy.
     */
-  private[graft] def planJoin(a: Side, b: Side, ev: JoinEvidence, ids: Option[(Column, Column)],
+  private[graft] def planJoin(a: Side, b: Side, ev: JoinEvidence, ids: Boolean,
                               scheme: JoinEvidence => CellScheme = SizedGrid): Option[DataFrame] = {
     val s = scheme(ev)
     val r = route(ev, s)
@@ -396,7 +395,8 @@ object SpatialJoins {
         case (side, Some(o)) =>
           f"occupancy of $side ${o.cells} cells, fill ${o.fill}%.4f, filter ${if (o.selective) "on" else "off"}"
       }
-      log.info(s"spatial join: route $r, rows ${ev.countA} x ${ev.countB}, " +
+      val body = r match { case Route.Sweep(_, _) if !ids => " on the declarative body"; case _ => "" }
+      log.info(s"spatial join: route $r$body, rows ${ev.countA} x ${ev.countB}, " +
         occ.getOrElse("no occupancy, filter off"))
     }
     val (ea, eb) = evidenced(a, b, ev)
@@ -411,7 +411,7 @@ object SpatialJoins {
                         scheme: JoinEvidence => CellScheme,
                         ev: Option[JoinEvidence] = None): DataFrame = {
     val (sa, sb) = (Side.of(a, "a"), Side.of(b, "b"))
-    planJoin(sa, sb, ev.getOrElse(evidenceWithOccupancy(sa, sb)), GeomIds, scheme)
+    planJoin(sa, sb, ev.getOrElse(evidenceWithOccupancy(sa, sb)), ids = true, scheme)
       .fold(broadcastNL(a, b))(_.select(col("a_id"), col("b_id")))
   }
 
@@ -696,31 +696,32 @@ object SpatialJoins {
   }
 
   /** The ONE reduce body, shared by the sweep, adaptive, sort-tile and
-    * binary-split joins. Each side is keyed by `m` — replicated to its keys,
-    * or, for a POINT side, projected to its one key ([[keyed]]) — and the
-    * union of the keyed MBR rows is hash-partitioned on the key, sorted
-    * partition-locally, and consumed by a run-grouping iterator that feeds
-    * each key's two sides to the sweep/STR inner loop. `m.cellOf` maps a
-    * reference point to its owning key — pairs are kept exactly once, in
-    * their owner key's run.
+    * binary-split joins: every row of `a` and `b` replicated to the keys of
+    * `m` its MBR overlaps (a point row's `cellsOf` is its one `cellOf` key),
+    * then [[keyedJoin]]. A pure function of the scheme: no planning job.
     */
-  private[graft] def keyedPartitionJoin(a: Dataset[Geom], b: Dataset[Geom], m: CellMapping,
-                                         aPts: Boolean = false,
-                                         bPts: Boolean = false): DataFrame =
-    keyedJoin(Side.of(a, "a").copy(points = aPts), Side.of(b, "b").copy(points = bPts), m,
-      col("a_id"), col("b_id"))
+  private[graft] def keyedPartitionJoin(a: Dataset[Geom], b: Dataset[Geom], m: CellMapping): DataFrame =
+    keyedJoin(Side.of(a, "a"), Side.of(b, "b"), m)
 
-  /** [[keyedPartitionJoin]] over two sides and their id columns. */
-  private def keyedJoin(a: Side, b: Side, m: CellMapping, aId: Column, bId: Column): DataFrame = {
+  /** The keyed reduce over two of [[Side.of]]'s sides (their `a_id` and
+    * `b_id` columns ride along). Each side is keyed by `m` — replicated to
+    * its keys, or, for a POINT side, projected to its one key ([[keyed]]) —
+    * and the union of the keyed MBR rows is hash-partitioned on the key,
+    * sorted partition-locally on it, and consumed by a run-grouping
+    * iterator that splits each key's run into its two sides for the
+    * sweep/STR inner loop. `m.cellOf` maps a reference point to its owning
+    * key — pairs are kept exactly once, in their owner key's run.
+    */
+  private def keyedJoin(a: Side, b: Side, m: CellMapping): DataFrame = {
     val spark = a.df.sparkSession
     import spark.implicits._
-    def side(d: Side, id: Column, i: Int): DataFrame = {
+    def side(d: Side, id: String, i: Int): DataFrame = {
       val Seq(x0, x1, y0, y1) = d.coords
-      keyed(d, m, "key").select(col("key"), lit(i).as("side"), id.as("id"),
+      keyed(d, m, "key").select(col("key"), lit(i).as("side"), col(id).as("id"),
         x0.as("xmin"), x1.as("xmax"), y0.as("ymin"), y1.as("ymax"))
     }
-    val u = side(a, aId, 0).unionByName(side(b, bId, 1))
-      .repartition(col("key")).sortWithinPartitions("key", "side")
+    val u = side(a, "a_id", 0).unionByName(side(b, "b_id", 1))
+      .repartition(col("key")).sortWithinPartitions("key")
       .as[KeyedGeom]
     u.mapPartitions { rows =>
       new Iterator[Pair] {
@@ -749,23 +750,16 @@ object SpatialJoins {
   }
 
   /** PBSM grid join with the plane-sweep/STR inner loop: the forced keyed
-    * reduce over `s`, with no route choice and no occupancy filter, so it
-    * stays an independent check on the planned routes. The replication is
-    * DECLARATIVE (the same codegen'd `explode` generator as [[gridJoin]]),
-    * followed by the keyed reduce — object construction happens ONCE per
-    * row, on the reduce side.
-    *
-    * A POINT side (the stripes/dense twin of [[gridJoinPIP]]) overlaps
-    * exactly one cell, so its map side is a plain projection with no
-    * generator; the point flags come from the ONE evidence job
-    * ([[evidenceOf]]). Every branch emits the identical pair set: a point's
-    * pair can only meet in the point's own cell, where its reference point
-    * — the point itself — trivially owns.
+    * reduce over `s` ([[keyedPartitionJoin]]), with no planning job, no
+    * route choice and no occupancy filter, so it stays an independent check
+    * on the planned routes. The replication is DECLARATIVE (the same
+    * codegen'd `explode` generator as [[gridJoin]]), followed by the keyed
+    * reduce — object construction happens ONCE per row, on the reduce side.
+    * A point row explodes to its one key; only [[planJoin]]'s Sweep route
+    * maps a point side as a plain projection.
     */
-  def gridJoinSweep(a: Dataset[Geom], b: Dataset[Geom], s: CellScheme): DataFrame = {
-    val ev = evidenceOf(a, b)
-    keyedPartitionJoin(a, b, s, ev.aPoints, ev.bPoints)
-  }
+  def gridJoinSweep(a: Dataset[Geom], b: Dataset[Geom], s: CellScheme): DataFrame =
+    keyedPartitionJoin(a, b, s)
 
   /** 1-D stripes plan (reference J5): [[planJoin]] over an `n × 1` grid —
     * the point plan, the sweep when stripes run dense, and the occupancy
@@ -843,7 +837,7 @@ object SpatialJoins {
     if (scheme.splits.isEmpty) planPairs(a, b, _ => base, Some(ev))
     else {
       val (ea, eb) = evidenced(sa, sb, ev)
-      keyedJoin(ea, eb, scheme, col("a_id"), col("b_id"))
+      keyedJoin(ea, eb, scheme)
     }
   }
 

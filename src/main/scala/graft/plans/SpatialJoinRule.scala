@@ -52,11 +52,11 @@ object SpatialJoinRule extends Rule[LogicalPlan] with PredicateHelper {
         // intersectJoin's planner past its broadcast check (as at
         // broadcastThreshold = 0), with no id columns: every column of both
         // children survives for the body, the other conjuncts and the join's
-        // output. Dense cells therefore take the declarative body, not the
-        // keyed reduce (which carries only ids); at 16 rows per cell and at
-        // most 8192² cells the sweep route needs more than ~1.7·10¹⁰ rows.
+        // output. A Sweep route (dense cells: many rows, or wide rows that
+        // replicate into many cells, at any size) therefore runs on the
+        // declarative body, not on the keyed reduce (which carries only ids)
         val ev = SpatialJoins.evidenceWithOccupancy(ls, rs)
-        SpatialJoins.planJoin(ls, rs, ev, ids = None).map { df =>
+        SpatialJoins.planJoin(ls, rs, ev, ids = false).map { df =>
           Project(j.output, Filter((st.body +: conjuncts.filterNot(_ eq st)).reduce(And),
             df.queryExecution.optimizedPlan))
         }

@@ -200,9 +200,8 @@ class SpatialJoinSpec extends AnyFunSuite {
   }
 
   test("sweep point specialization: projection-only point side, identical pairs (grid + stripes)") {
-    // exercises the keyed reduce directly, with the point flags set by hand
-    // on every scheme; the public gridJoinSweep reads them off its one
-    // evidence job
+    // the planner's Sweep route reads the point flag off its evidence: 2,000
+    // points on 3 or 7 stripes make dense cells (over 256 rows per stripe)
     val pts = randomSet(24, 2000, 0.0)
     val polys = randomSet(25, 1500, 5.0)
     val ext = Extent(0, 106, 0, 106)
@@ -212,20 +211,25 @@ class SpatialJoinSpec extends AnyFunSuite {
       df.queryExecution.optimizedPlan.collect {
         case g: org.apache.spark.sql.catalyst.plans.logical.Generate => g
       }.size
+    for (n <- Seq(3, 7)) {
+      val viaA = stripesJoin(pts, polys, ext, n)
+      val viaB = stripesJoin(polys, pts, ext, n)
+      for ((df, order) <- Seq(viaA -> "points on a", viaB -> "points on b")) {
+        val phys = df.queryExecution.executedPlan.toString
+        assert(phys.contains("KeyedGeom"), s"$order, $n stripes: the keyed reduce\n$phys")
+        assert(generates(df) == 1,
+          s"$order, $n stripes: point side must be a projection (only the poly side's generator remains)")
+      }
+      assert(pairs(viaA) == oracle, s"$n stripes, points on a")
+      assert(pairs(viaB) == oracle.map(_.swap), s"$n stripes, points on b")
+    }
+    // the forced keyed reduce plans nothing: each point explodes to its one key
     for (s <- Seq(CellScheme(ext, 9, 9), CellScheme.stripesY(ext, 11),
                   CellScheme.stripesX(ext, 7))) {
-      val hinted = SpatialJoins.keyedPartitionJoin(pts, polys, s,
-        aPts = true, bPts = false)
-      assert(generates(hinted) == 1,
-        s"point side must be a projection (only the poly side's generator remains), scheme $s")
-      assert(pairs(hinted) == oracle, s"hinted pair set, scheme $s")
-      val swapped = SpatialJoins.keyedPartitionJoin(polys, pts, s,
-        aPts = false, bPts = true)
-      assert(pairs(swapped) == oracle.map(_.swap), s"swapped hinted pair set, scheme $s")
+      val forced = gridJoinSweep(pts, polys, s)
+      assert(generates(forced) == 2, s"gridJoinSweep explodes both sides, scheme $s")
+      assert(pairs(forced) == oracle, s"gridJoinSweep pair set, scheme $s")
     }
-    // a lying hint is the caller's bug, but the generic form must stay exact
-    assert(pairs(SpatialJoins.keyedPartitionJoin(pts, polys,
-      CellScheme(ext, 9, 9), aPts = false, bPts = false)) == oracle)
   }
 
   test("distanceJoin matches brute force") {

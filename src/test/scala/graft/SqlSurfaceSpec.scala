@@ -1,5 +1,6 @@
 package graft
 
+import graft.cells.CellScheme
 import graft.plans.GraftSql
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -167,6 +168,34 @@ class SqlSurfaceSpec extends AnyFunSuite {
     val want = graft.join.SpatialJoins.broadcastNL(a, b)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got == want && want.nonEmpty)
+  }
+
+  test("wide rectangles take the Sweep route at any size: SQL on the declarative body, oracle-equal") {
+    GraftSql.install(spark)
+    import graft.join.{Route, SpatialJoins}
+    // 1,000 rows whose edges reach 700 on a 1000-wide map: each replicates
+    // into many cells, so even an 8 x 8 grid has dense cells
+    val a = graft.ingest.Workloads.uniformPolygons(spark, 1000, seed = 1, mapEdge = 1000.0, objEdge = 700.0)
+    val b = graft.ingest.Workloads.uniformPolygons(spark, 1000, seed = 2, mapEdge = 1000.0, objEdge = 700.0)
+    val ev = SpatialJoins.evidenceOf(a, b)
+    val grid = CellScheme.forSize(ev.extent.get, math.max(ev.countA, ev.countB), 16, maxN = 8192)
+    assert(SpatialJoins.route(ev, grid).isInstanceOf[Route.Sweep], s"route on $grid")
+    a.createOrReplaceTempView("wide_a"); b.createOrReplaceTempView("wide_b")
+    val df = spark.sql(
+      """SELECT a.id AS a_id, b.id AS b_id FROM wide_a a JOIN wide_b b
+        | ON st_intersects(a.xmin, a.xmax, a.ymin, a.ymax,
+        |                  b.xmin, b.xmax, b.ymin, b.ymax)""".stripMargin)
+    // the SQL sides carry every column, so the Sweep route runs on the
+    // declarative body; the DataFrame API's id pairs take the keyed reduce
+    val phys = df.queryExecution.executedPlan.toString
+    assert(phys.contains("cells_of") && !phys.contains("KeyedGeom"), phys)
+    val want = SpatialJoins.broadcastNL(a, b)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet == want && want.nonEmpty)
+    val api = SpatialJoins.intersectJoin(a, b, broadcastThreshold = 0L)
+    val apiPhys = api.queryExecution.executedPlan.toString
+    assert(apiPhys.contains("KeyedGeom"), apiPhys)
+    assert(api.collect().map(r => (r.getLong(0), r.getLong(1))).toSet == want)
   }
 
   test("st_intersects evaluates standalone (marker expression fallback)") {

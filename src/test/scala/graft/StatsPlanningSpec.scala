@@ -13,11 +13,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * work). The broadcast decision reads Catalyst plan statistics (ZERO Spark
   * jobs); every cell-partitioned entry point that plans a route
   * (`intersectJoin`, SQL `st_*` joins, `stripesJoin`, `stripesJoinAuto`,
-  * `gridJoinSweep`, `gridJoinAdaptive`) runs ONE evidence job for the joint
-  * extent, both row counts and the edges. The STP and BSP planners run no
-  * evidence job: they take the one bounded sample (`SchemeSampling.sample`),
-  * sized from the stats estimate and checked by its own size. This spec
-  * counts actual jobs via a SparkListener.
+  * `gridJoinAdaptive`) runs ONE evidence job for the joint extent, both row
+  * counts and the edges. The STP and BSP planners run no evidence job: they
+  * take the one bounded sample (`SchemeSampling.sample`), sized from the
+  * stats estimate and checked by its own size. `gridJoinSweep`, the forced
+  * keyed reduce over the caller's grid, plans nothing and runs no job. This
+  * spec counts actual jobs via a SparkListener.
   */
 class StatsPlanningSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -193,10 +194,9 @@ class StatsPlanningSpec extends AnyFunSuite {
   /** The entry points that plan from the one evidence job besides intersectJoin. */
   private val evidencePlanned: Seq[(String, (Dataset[Geom], Dataset[Geom]) => DataFrame)] = Seq(
     "stripesJoin" -> (SpatialJoins.stripesJoin(_, _, ext, 16)),
-    "stripesJoinAuto" -> (SpatialJoins.stripesJoinAuto(_, _, ext, 16)),
-    "gridJoinSweep" -> (SpatialJoins.gridJoinSweep(_, _, CellScheme(ext, 8, 8))))
+    "stripesJoinAuto" -> (SpatialJoins.stripesJoinAuto(_, _, ext, 16)))
 
-  test("stripesJoin, stripesJoinAuto and gridJoinSweep run exactly ONE planning job on small inputs") {
+  test("stripes joins run exactly ONE planning job on small inputs") {
     val a = mk(400, 0); val b = mk(400, 1000)
     for ((name, join) <- evidencePlanned) withClue(s"$name: ")(onePlanningJob(a, b, join))
   }
@@ -215,11 +215,18 @@ class StatsPlanningSpec extends AnyFunSuite {
     onePlanningJob(a, b, SpatialJoins.stripesJoinAuto(_, _, ext, 16))
   }
 
-  test("gridJoinSweep on a large estimate runs exactly ONE planning job") {
-    val a = big(0, 37, 53); val b = big(1000, 29, 61)
-    assert(SpatialJoins.estRowsFromStats(a) >= 1e6)
-    // the point-side detection reads the one evidence job, nothing else
-    onePlanningJob(a, b, SpatialJoins.gridJoinSweep(_, _, CellScheme(ext, 8, 8)))
+  test("gridJoinSweep runs NO planning job") {
+    // the forced keyed reduce is a pure function of its grid: building it
+    // reads no input, on small and on large estimates alike
+    for ((a, b) <- Seq(mk(400, 0) -> mk(400, 1000), big(0, 37, 53) -> big(1000, 29, 61))) {
+      var planned: DataFrame = null
+      val jobs = jobsDuring { planned = SpatialJoins.gridJoinSweep(a, b, CellScheme(ext, 8, 8)) }
+      assert(jobs == 0, s"gridJoinSweep ran $jobs planning job(s)")
+      val want = SpatialJoins.broadcastNL(a, b)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      val got = planned.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(got == want && want.nonEmpty)
+    }
   }
 
   test("a draw far under the estimate's expected size re-counts: the sample is all 800 rows") {
